@@ -106,10 +106,25 @@ object Dedup {
     * signatures are bit-identical by construction.
     */
   def shingleSets(df: DataFrame, id: String, text: String, shingleLen: Int): DataFrame =
+    shingled(df, id, text, shingleLen, Nil)
+
+  /** [[shingleSets]] plus the `keep` columns passed through and the
+    * content fingerprint `fp` ([[TextOps.fingerprint]] of `text`), all
+    * from the SAME normalize pass: (id, keep…, fp, sh). Docs too short to
+    * shingle are dropped here too, so they carry no fingerprint.
+    */
+  private[graft] def shingleSetsFp(df: DataFrame, id: String, text: String,
+                                    shingleLen: Int, keep: Seq[String]): DataFrame =
+    shingled(df, id, text, shingleLen, keep.map(col) :+
+      TextOps.fingerprintOfNorm(col("__norm"), col(text)).as("fp"))
+
+  private def shingled(df: DataFrame, id: String, text: String, shingleLen: Int,
+                       extra: Seq[Column]): DataFrame =
     df.withColumn("__norm", TextOps.normalizedText(col(text)))
       .filter(length(col("__norm")) >= shingleLen) // = size(sh) > 0, but
       // checkable per row without inlining the shingle expression
-      .select(col(id), TextOps.hashedCharShingles(col("__norm"), shingleLen).as("sh"))
+      .select((col(id) +: extra) :+
+        TextOps.hashedCharShingles(col("__norm"), shingleLen).as("sh"): _*)
 
   /** Exact Jaccard verification of candidate pairs: join the two shingle
     * sets back and intersect. This is the scale-correct verify stage —
@@ -177,11 +192,15 @@ object Dedup {
     * of [[minhashCandidates]], exposed on its own for INCREMENTAL dedup
     * (a new doc collides with a stored corpus iff any (band, bucket)
     * matches the corpus's stored buckets — see
-    * [[graft.streaming.Streams.ingestDedupNearDup]]).
+    * [[graft.streaming.Streams.ingestDedupNearDup]]). Every column of
+    * `sh` other than `sh` itself passes through: (id, others…, band,
+    * bucket).
     */
   def bandBucketsSh(sh: DataFrame, id: String,
                     bands: Int, rowsPerBand: Int): DataFrame = {
     val k = bands * rowsPerBand
+    val keep = col(id) +:
+      sh.columns.toSeq.filter(c => c != "sh" && c != id).map(c => col(s"`$c`"))
     // one fused codegen pass per doc (hash each shingle once, fold into
     // all k lane minima) — the HOF form (minhashBase + k array_min lanes)
     // rescans the shingle array k+1 times; same construction, so the
@@ -191,16 +210,16 @@ object Dedup {
       .withColumn("sig", call_function("cs_minhash", col("sh"), lit(k)))
     // (id, band) is unique by construction — one row per band per doc —
     // so no distinct is needed before the bucket self-join
-    withSig.select(
-      col(id),
+    withSig.select(keep :+
       posexplode(
         transform(sequence(lit(0), lit(bands - 1)),
-          b => struct(b.as("band"), slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)).as("bh")))))
+          b => struct(b.as("band"), slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)).as("bh")))): _*)
       // xxhash64 over the band array DIRECTLY: a 32-bit hash of the
       // stringified slice collides constantly at corpus scale (billions of
       // (doc, band) rows vs 2^32 values), emitting candidate pairs that
       // share NO band — and the per-row string build was pure waste
-      .select(col(id), col("col.band").as("band"), xxhash64(col("col.bh")).as("bucket"))
+      .select(keep :+ col("col.band").as("band") :+
+        xxhash64(col("col.bh")).as("bucket"): _*)
   }
 
   /** [[bandBucketsSh]] from raw text (normalize → shingle → minhash →

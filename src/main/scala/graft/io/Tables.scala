@@ -730,9 +730,8 @@ object Tables {
                                      ts: String = "ts"): DataFrame = {
     val till = if (tillNs == Long.MaxValue) Long.MaxValue else tillNs + 1
     liveFileNames(spark, path).filter(_.nonEmpty).flatMap { live =>
-      val schema = spark.read
-        .parquet(new Path(path, live.head).toString).schema
-      manifestPrunedRead(spark, path, schema, fromNs, till, ts)
+      manifestPrunedRead(spark, path, fileSchema(spark, new Path(path, live.head)),
+        fromNs, till, ts)
     }.getOrElse(snapshot(spark, path))
   }
 
@@ -749,6 +748,34 @@ object Tables {
       colName: String): (Option[(Long, Long)], Option[Long]) =
     scala.util.Try(tsFileFooterNs(p, conf, colName))
       .getOrElse((None, None))
+
+  /** The schema `spark.read.parquet(file)` infers for one data file, read
+    * from its footer on the driver: Spark-written files carry their row
+    * schema as footer metadata, which is what the inference uses too
+    * (made nullable, as file reads always are) — without the
+    * schema-inference Spark job that read launches per call. Files with
+    * no such metadata (foreign writers) take the inferring read.
+    */
+  private[graft] def fileSchema(spark: SparkSession, file: Path): StructType = {
+    import org.apache.spark.sql.types.{ArrayType, MapType}
+    def nullable(t: DataType): DataType = t match {
+      case st: StructType => StructType(st.fields.map(f =>
+        f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+        valueContainsNull = true)
+      case other => other
+    }
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file,
+        spark.sparkContext.hadoopConfiguration))
+    val json = try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+      .get("org.apache.spark.sql.parquet.row.metadata"))
+    finally reader.close()
+    json.flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption)
+      .collect { case st: StructType => nullable(st).asInstanceOf[StructType] }
+      .getOrElse(spark.read.parquet(file.toString).schema)
+  }
 
   private implicit val jsonFormats: org.json4s.Formats = org.json4s.DefaultFormats
 
@@ -1260,6 +1287,39 @@ object Tables {
     val needed = (estBytes + (targetBytes - 1)) / targetBytes
     if (!needed.isValidLong || needed >= inputParts) math.max(1, inputParts)
     else math.max(1, needed.toInt)
+  }
+
+  /** `df`'s partition count read from its PLAN, launching no Spark job.
+    * `queryExecution.toRdd` on an adaptive plan runs every shuffle stage
+    * to reach the final plan — outside any SQL execution, and again in
+    * the write that follows — so an adaptive plan is walked instead:
+    * exchanges report their planned count (an upper bound on what
+    * coalescing leaves), loaded caches their block count, leaf scans
+    * their split count (RDD construction only, no job). Non-adaptive
+    * plans keep `toRdd`, whose RDD construction runs no shuffle stage.
+    */
+  private[graft] def plannedPartitions(df: DataFrame): Int = {
+    import org.apache.spark.sql.execution.{SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def walk(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case m: InMemoryTableScanExec =>
+        val cache = m.relation.cacheBuilder
+        if (cache.isCachedColumnBuffersLoaded) cache.cachedColumnBuffers.getNumPartitions
+        else walk(cache.cachedPlan)
+      case _ if p.outputPartitioning.numPartitions > 0 => p.outputPartitioning.numPartitions
+      case u: UnionExec => u.children.map(walk).sum
+      case _ if p.children.isEmpty =>
+        if (p.supportsColumnar) p.executeColumnar().getNumPartitions
+        else p.execute().getNumPartitions
+      case _ => p.children.map(walk).max
+    }
+    df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => walk(a)
+      case _ => df.queryExecution.toRdd.getNumPartitions
+    }
   }
 
   private def readAppendMarker(fs: FileSystem, path: String): Option[AppendMarker] = {
@@ -1781,10 +1841,10 @@ object Tables {
                              mode: SaveMode = SaveMode.Overwrite): Unit = {
     // a single-partition frame targeting one file has nothing to cluster;
     // a MULTI-partition frame targeting one file still must fold (compact).
-    // toRdd, not .rdd — the partition-count probe must not build the row
-    // -deserialization plan (ADVICE r17)
+    // The partition-count probe reads the plan and runs no job
+    // (plannedPartitions)
     val clustered =
-      if (parts <= 1 && df.queryExecution.toRdd.getNumPartitions <= 1) df
+      if (parts <= 1 && plannedPartitions(df) <= 1) df
       else df.repartitionByRange(math.max(1, parts), cols: _*)
     clustered.sortWithinPartitions(cols: _*)
       .write.mode(mode).parquet(path)
@@ -2272,12 +2332,11 @@ object Tables {
     // input partition count so an unknown/overblown estimate can never
     // stage more files than the old behavior — and floor 1. A
     // single-partition target also skips the range-sampling pass the
-    // per-batch repartitionByRange otherwise pays. toRdd, not .rdd: the
-    // partition probe must not build the row-deserialization plan
-    // (ADVICE r17 — the same probe-cost note as cpuSplit's).
+    // per-batch repartitionByRange otherwise pays. The partition probe
+    // reads the plan and runs no job (plannedPartitions).
     val appendTargetBytes = sys.props.get("graft.append.file.bytes")
       .flatMap(_.toLongOption).getOrElse(128L << 20)
-    val inputParts = incoming.queryExecution.toRdd.getNumPartitions
+    val inputParts = plannedPartitions(incoming)
     val estBytes = incoming.queryExecution.optimizedPlan.stats.sizeInBytes
     writeClustered(incoming, tmp.toString, Seq(col(ts)),
       stagedPartCount(inputParts, estBytes, appendTargetBytes))

@@ -574,26 +574,25 @@ object Streams {
     * stream — a slow, unbounded driver leak).
     */
   private val fpLayoutCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Option[org.apache.spark.sql.types.StructType])]()
+    String, (String, StructType)]()
 
   /** The bucket table's live-generation SCHEMA, memoized like the fp
-    * answer (one footer read per (table, head generation)). r18: this is
-    * also what lets the probe's pruned verify read pass an EXPLICIT
-    * schema — `spark.read.parquet(files)` without one runs a distributed
+    * answer (one driver-side footer read per (table, head generation)).
+    * r18: this is also what lets the probe's pruned verify read pass an
+    * EXPLICIT schema — `spark.read.parquet(files)` without one runs a distributed
     * schema-inference job (mergeSchemasInParallel), a whole Spark job per
     * micro-batch on the steady-state fp-tier path that reads a handful of
-    * pruned files.
+    * pruned files. Only a successful read is memoized: a failed footer
+    * read answers None for THIS call and the next call reads again.
     */
   private def bucketHeadSchema(spark: SparkSession, bucketPath: String,
-                               liveHead: Option[String])
-      : Option[org.apache.spark.sql.types.StructType] =
+                               liveHead: Option[String]): Option[StructType] =
     liveHead.flatMap { n =>
       Option(fpLayoutCache.get(bucketPath)).filter(_._1 == n).map(_._2)
-        .getOrElse {
-          val schema = scala.util.Try(spark.read.parquet(
-            new org.apache.hadoop.fs.Path(bucketPath, n).toString)
-            .schema).toOption
-          fpLayoutCache.put(bucketPath, (n, schema))
+        .orElse {
+          val schema = scala.util.Try(graft.io.Tables.fileSchema(spark,
+            new org.apache.hadoop.fs.Path(bucketPath, n))).toOption
+          schema.foreach(s => fpLayoutCache.put(bucketPath, (n, s)))
           schema
         }
     }
@@ -603,8 +602,8 @@ object Streams {
     * the memoized head schema — shared by the text and embedding twins
     * (both carry `fp`).
     */
-  private def bucketHeadHasFp(spark: SparkSession, bucketPath: String,
-                              liveHead: Option[String]): Boolean =
+  private[graft] def bucketHeadHasFp(spark: SparkSession, bucketPath: String,
+                                     liveHead: Option[String]): Boolean =
     bucketHeadSchema(spark, bucketPath, liveHead)
       .exists(_.fieldNames.contains("fp"))
 
@@ -991,6 +990,24 @@ object Streams {
     * `retainNs` < Long.MaxValue runs the retention beat after the two
     * appends (see [[dedupRetentionBeat]]); `minJaccard` per the stream
     * wrapper's contract (verified at > 0, raw-collision drop at <= 0).
+    *
+    * Each batch-sized frame is computed ONCE: one normalize pass yields
+    * (id, ts, fp, sh), banding passes ts and fp through, and the bucket
+    * rows are the banded frame restricted to the survivors — no join
+    * re-derives a column the batch already had. Per-batch SQL-execution
+    * budget on a bucket table that exists and has its bloom sidecar (a
+    * steady-state stream):
+    *  - a batch with no band collision runs 7 — the probe's bucket-value
+    *    collect, the fresh-empty check, the in-batch candidate check, the
+    *    doc write, the bucket-value collect, the bucket write and the
+    *    file-bloom build (StreamIngestSpec pins it);
+    *  - an all-drop re-crawl runs 3 — the probe collect, the labeled
+    *    -candidate collect, the fresh-empty check — and writes nothing;
+    *  - colliding candidates add one execution each for the stored
+    *    candidate collect, the tier-2 verify and the in-batch verify, and
+    *    verified in-batch pairs add connected components (~6 more). A
+    *    fresh 1000-doc batch of perfbench's `ingest_mixed`, whose random
+    *    texts still band-collide a little, runs 10 (29 jobs).
     */
   def dedupIngestBatch(batch0: DataFrame, docPath: String, bucketPath: String,
                        ts: String, streamKey: String, id: String, text: String,
@@ -1000,38 +1017,21 @@ object Streams {
     val spark = batch0.sparkSession
     val batch = batch0
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // shingle sets materialize ONCE: banding derives from them, and both
-    // verify paths (corpus candidates + in-batch pairs) re-join them —
+    // ONE normalize/shingle pass per doc: (id, ts, fp, sh). Banding
+    // derives from the shingle sets, both verify paths re-join them, and
+    // the banded frame carries ts and fp through to the bucket rows —
     // same construction as bandBuckets (bandBucketsSh ∘ shingleSets), so
     // the banding math is unchanged
-    val sh = graft.dedup.Dedup.shingleSets(batch, id, text, shingleLen)
+    val sh = graft.dedup.Dedup.shingleSetsFp(batch, id, text, shingleLen, Seq(ts))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bb = graft.dedup.Dedup
       .bandBucketsSh(sh, id, bands, rowsPerBand)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var survivorsCached: Option[DataFrame] = None
-    var freshCached: Option[DataFrame] = None
-    var candCached: Option[DataFrame] = None
+    val caches = scala.collection.mutable.ListBuffer[DataFrame](batch, sh, bb)
     try {
-      // ids colliding with the RETAINED corpus (absent table = empty):
-      // the sublinear probe — broadcast flip + In pushdown + column
-      // pruning (probeStoredBuckets) — then the tiny hit-bucket set
-      // broadcasts back onto the batch
-      val hp = new org.apache.hadoop.fs.Path(bucketPath)
-      val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // fp layout detection (one manifest read per batch; the footer
-      // schema memoizes on the IMMUTABLE head file — a fold/retention
-      // that renames files changes the head name and re-detects): does
-      // the bucket table's live generation carry the content-fingerprint
-      // column (tier-1 shortcut below)? A table with no live files yet
-      // is "new" — the prop decides its layout.
-      val liveHead =
-        if (fs.exists(hp))
-          graft.io.Tables.liveFileNames(spark, bucketPath).flatMap(_.headOption)
-        else None
-      val hasFp = bucketHeadHasFp(spark, bucketPath, liveHead)
+      val (exists, liveHead, hasFp) = bucketLayout(spark, bucketPath)
       val fresh =
-        if (!fs.exists(hp)) batch
+        if (!exists) batch
         else if (minJaccard <= 0) {
           // legacy banding-aggressive mode: ANY (band, bucket) collision
           // drops the doc, zero verify I/O
@@ -1039,285 +1039,308 @@ object Streams {
             Seq("band", "bucket")).distinct()
           val hit = bb.join(broadcast(hitBuckets), Seq("band", "bucket"),
             "left_semi").select(col(id)).distinct()
-          val f = batch.join(hit, Seq(id), "left_anti")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          freshCached = Some(f)
-          f
+          cached(caches, batch.join(hit, Seq(id), "left_anti"))
         } else {
-          // VERIFIED: the probe carries the stored id, so the hits ARE
-          // the candidate (batch-id, stored-id) pairs. Two-tier verify:
-          //  1. FINGERPRINT SHORTCUT — bucket rows written by this
-          //     version carry the stored doc's content fingerprint
-          //     (`fp`, the exact-dedup key), so a candidate whose batch
-          //     fingerprint MATCHES is an exact duplicate (jaccard 1 ≥
-          //     any sane threshold) and drops with ZERO doc-table I/O.
-          //     A re-crawl of identical pages — THE steady state when a
-          //     crawler revisits its corpus — never touches the doc
-          //     table at all. The comparison happens INSIDE the
-          //     candidate job itself: the batch side of the broadcast
-          //     join carries each doc's fingerprint, so candidates
-          //     arrive pre-labeled exact/not and the separate tier-1
-          //     join (one more shuffle-stage job per batch on the
-          //     all-exact steady state, VERDICT r16 wrong #2) is gone.
-          //     Tables written before fp existed take the jaccard tier
-          //     for everything (hasFp detection above).
-          //  2. EXACT JACCARD for the rest — fetched from the doc table
-          //     bounded in BOTH dimensions: the candidates' ts SPAN
-          //     file-prunes the read to the overlapping manifest slice
-          //     (the layout is ts-clustered, never id-clustered, so an
-          //     In alone cannot file-prune at 100 TB) and the id set
-          //     bounds the shingling. The labeled candidate set is
-          //     COLLECTED once under a cap (graft.dedup.verify.collect
-          //     .max, default 20000 — collisions only, ~40 B/row): the
-          //     driver then decides tier 1 outright, builds tier 2's
-          //     pair set as a local frame (no probe recomputation, no
-          //     cand persist), and an all-exact batch skips every
-          //     tier-2 job. Past the cap the frame-based shape takes
-          //     over (persisted cand, span agg + broadcast semi-join —
-          //     a giant re-crawl must not revert to O(corpus) work or
-          //     an unbounded collect).
-          val tier1 = hasFp && minJaccard <= 1.0
-          val probeCols = Seq("band", "bucket", id, ts) ++
-            (if (hasFp) Seq("fp") else Nil)
-          val storedHits = probeStoredBuckets(spark, bucketPath, bb, probeCols)
-            .withColumnRenamed(id, "__oldId").withColumnRenamed(ts, "__oldTs")
-            .withColumnsRenamed(Map("fp" -> "__oldFp"))
-          val bbB =
-            if (tier1) bb.join(batch.select(col(id),
-              graft.text.TextOps.fingerprint(col(text)).as("__bfp")), Seq(id))
-            else bb
-          val exactCol =
-            if (tier1) coalesce(col("__oldFp") === col("__bfp"), lit(false))
-            else lit(false)
-          val cand = storedHits.join(broadcast(bbB), Seq("band", "bucket"))
-            .select(col(id), col("__oldId"), col("__oldTs"),
-              exactCol.as("__exact"))
-            .distinct()
-          val candCap = sys.props.get("graft.dedup.verify.collect.max")
-            .flatMap(_.toIntOption).getOrElse(20000)
-          val candRows = cand.limit(candCap + 1).collect()
-          // a local single-column id frame for broadcast anti-joins —
-          // typed from the batch's own schema, so the join key resolves
-          // whatever the id type is
-          def idFrame(vals: Array[Any], name: String): DataFrame =
-            spark.createDataFrame(
-              new java.util.ArrayList[Row](java.util.Arrays.asList(
-                vals.map(v => Row(v)): _*)),
-              org.apache.spark.sql.types.StructType(
-                Seq(batch.schema(id).copy(name = name))))
-          // tier-2 jaccard verify of a (batch-id, stored-id) pair frame
-          // against a bounded doc-table fetch; `oldDocs` is already
-          // confined to the colliding stored docs
-          def jaccardHits(pairs: DataFrame, oldDocs: DataFrame): DataFrame = {
-            // shingle only the colliding stored docs (∝ candidates); the
-            // intersect arithmetic is verifyJaccard's, inlined because
-            // the two sides come from different frames
-            val oldSh = graft.dedup.Dedup
-              .shingleSets(oldDocs, "__oid", "__otxt", shingleLen)
-              .select(col("__oid").as("__oldId"), col("sh").as("__osh"))
-            pairs
-              .join(sh.select(col(id), col("sh")), Seq(id))
-              .join(oldSh, Seq("__oldId"))
-              .withColumn("__inter",
-                size(array_intersect(col("sh"), col("__osh"))).cast("long"))
-              .filter(col("__inter") /
-                (size(col("sh")) + size(col("__osh")) - col("__inter"))
-                >= minJaccard)
-              .select(col(id)).distinct()
-          }
-          val f = (if (candRows.length <= candCap) {
-            // DRIVER-DECIDED: every labeled candidate is on the driver
-            val exactIds = candRows.filter(_.getBoolean(3)).map(_.get(0)).distinct
-            val exactSet = exactIds.toSet
-            // pairs still undecided: their batch id survived tier 1
-            val restRows = candRows.filterNot(r => exactSet.contains(r.get(0)))
-            if (restRows.isEmpty) {
-              // the all-exact re-crawl steady state: zero doc-table I/O,
-              // zero tier-2 jobs — one broadcast anti-join over the
-              // persisted batch decides the whole micro-batch
-              if (exactIds.isEmpty) batch
-              else batch.join(broadcast(idFrame(exactIds, id)), Seq(id),
-                "left_anti")
-            } else {
-              val ns = restRows.flatMap(r => tsValueNs(r.get(2)))
-              val bounds =
-                if (ns.length == restRows.length) Some((ns.min, ns.max))
-                else None
-              val oldDocs0 = bounds.map { case (lo, hi) =>
-                graft.io.Tables.snapshotSliceNs(spark, docPath, lo, hi, ts)
-              }.getOrElse(graft.io.Tables.snapshot(spark, docPath))
-                .select(col(id).as("__oid"), col(text).as("__otxt"))
-              val oldIds = restRows.map(_.get(1)).distinct
-              val oldDocs =
-                if (oldIds.length <= 1000)
-                  // isin additionally pushes row-group pruning inside
-                  // the ts-sliced files
-                  oldDocs0.filter(col("__oid").isin(oldIds: _*))
-                else oldDocs0.join(broadcast(idFrame(oldIds, "__oid")),
-                  Seq("__oid"), "left_semi")
-              // the pair set is a LOCAL frame (it was just collected) —
-              // tier 2 never recomputes the probe
-              val pairs = spark.createDataFrame(
-                new java.util.ArrayList[Row](java.util.Arrays.asList(
-                  restRows.map(r => Row(r.get(0), r.get(1))): _*)),
-                org.apache.spark.sql.types.StructType(Seq(
-                  batch.schema(id).copy(name = id),
-                  batch.schema(id).copy(name = "__oldId"))))
-              val hit = jaccardHits(pairs, oldDocs)
-              val drops =
-                if (exactIds.isEmpty) hit
-                else hit.unionByName(idFrame(exactIds, id)).distinct()
-              batch.join(drops, Seq(id), "left_anti")
-            }
-          } else {
-            // OVER-CAP fallback: the frame-based shape (persisted cand,
-            // exact span agg, broadcast semi-join fetch)
-            val candDf = cand
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            candCached = Some(candDf)
-            val exactIds = candDf.filter(col("__exact"))
-              .select(col(id)).distinct()
-            val rest = candDf.join(exactIds, Seq(id), "left_anti")
-              .select(col("__oldId"), col("__oldTs")).distinct()
-            val span = rest.agg(min(col("__oldTs")), max(col("__oldTs")),
-              count(lit(1))).head()
-            if (span.getLong(2) == 0L)
-              batch.join(exactIds, Seq(id), "left_anti")
-            else {
-              val bounds = for {
-                lo <- tsValueNs(span.get(0)); hi <- tsValueNs(span.get(1))
-              } yield (lo, hi)
-              val oldDocs0 = bounds.map { case (lo, hi) =>
-                graft.io.Tables.snapshotSliceNs(spark, docPath, lo, hi, ts)
-              }.getOrElse(graft.io.Tables.snapshot(spark, docPath))
-                .select(col(id).as("__oid"), col(text).as("__otxt"))
-              val oldDocs = oldDocs0.join(
-                broadcast(rest.select(col("__oldId").as("__oid"))),
-                Seq("__oid"), "left_semi")
-              val hit = jaccardHits(
-                candDf.filter(!col("__exact"))
-                  .select(col(id), col("__oldId")), oldDocs)
-              batch.join(hit.unionByName(exactIds).distinct(), Seq(id),
-                "left_anti")
-            }
-          }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          freshCached = Some(f)
-          f
+          // tier 2 is EXACT JACCARD against the colliding stored docs:
+          // shingle only those (∝ candidates); the intersect arithmetic
+          // is verifyJaccard's, inlined because the two sides come from
+          // different frames
+          val shB = sh.select(col(id), col("sh"))
+          cached(caches, storedSurvivors(spark, batch, bb, docPath, bucketPath,
+            id, ts, hasFp, tier1 = hasFp && minJaccard <= 1.0, caches)(
+            _.select(col(id).as("__oldId"), col(text).as("__otxt"))) {
+            (pairs, oldDocs) =>
+              val oldSh = graft.dedup.Dedup
+                .shingleSets(oldDocs, "__oldId", "__otxt", shingleLen)
+                .select(col("__oldId"), col("sh").as("__osh"))
+              pairs.join(shB, Seq(id)).join(oldSh, Seq("__oldId"))
+                .withColumn("__inter",
+                  size(array_intersect(col("sh"), col("__osh"))).cast("long"))
+                .filter(col("__inter") /
+                  (size(col("sh")) + size(col("__osh")) - col("__inter"))
+                  >= minJaccard)
+                .select(col(id)).distinct()
+          })
         }
-      // in-batch collisions among the remaining docs: candidate pairs
-      // from the bucket-collision graph (verified at minJaccard > 0 —
-      // exact Jaccard over the batch's own shingle sets, work ∝ pairs),
-      // connected components, min id per cluster survives (docs too
-      // short to shingle have no buckets, collide with nothing, and
-      // always survive). An ALL-DROP batch (a re-crawl — the steady
-      // state when a crawler revisits its corpus) short-circuits: no
-      // survivors means no pairs, and the pair self-join + component
-      // machinery costs whole shuffle stages of task-launch floor even
-      // on empty inputs (measured ~3.5 s at bench scale before this
-      // guard).
-      // an ALL-DROP batch (a re-crawl — the steady state) is KNOWN empty
-      // on the driver after this check: every later stage that would
-      // launch a job over it (in-batch components, bucket-value collect,
-      // the two appends' writes) short-circuits to empty local relations
-      // — the appends still run for their commit records, but over
-      // limit(0) frames the optimizer folds to zero-task writes
-      val freshEmpty = freshCached.isDefined && fresh.isEmpty
+      // an ALL-DROP batch (a re-crawl — the steady state when a crawler
+      // revisits its corpus) is KNOWN empty on the driver after this
+      // check: the in-batch machinery, the bucket-value collect and both
+      // staging writes are skipped (landSurvivors)
+      val freshEmpty = exists && fresh.isEmpty
       val survivors =
         if (freshEmpty) fresh
-        else {
-          val freshBB = bb.join(fresh.select(col(id)), Seq(id), "left_semi")
-          val cand = graft.dedup.Dedup.bandedPairs(freshBB, id)
-          val pairs =
-            if (minJaccard <= 0) cand
-            else graft.dedup.Dedup.verifyJaccard(cand, sh, id, minJaccard)
-              .select(col("id1"), col("id2"))
-          val losers = graft.dedup.Dedup.connectedComponents(pairs)
-            .filter(col("id") =!= col("cluster_id"))
-            .select(col("id").as(id))
-          fresh.join(losers, Seq(id), "left_anti")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        else inBatchSurvivors(batch, fresh, bb, id, caches) { cand =>
+          if (minJaccard <= 0) cand
+          else graft.dedup.Dedup.verifyJaccard(cand, sh, id, minJaccard)
+            .select(col("id1"), col("id2"))
         }
-      survivorsCached = Some(survivors)
-      // doc table first, bucket table second (see crash-consistency
-      // note); distinct stream ids keep the two commit logs separate.
-      // An ALL-DROP batch (driver-known empty) advances the commit log
-      // WITHOUT the staging write: commitEmptyStreamBatch is the same
-      // exactly-once transition minus the 0-row Spark write job + marker
-      // + manifest rewrite the limit(0) append used to pay (r18).
-      if (freshEmpty)
-        graft.io.Tables.commitEmptyStreamBatch(spark, docPath,
-          streamKey + "#docs", batchId)
-      else
-        graft.io.Tables.appendStreamBatch(survivors, docPath, ts,
-          streamKey + "#docs", batchId)
-      // bucket rows carry the doc's content FINGERPRINT so future
-      // batches' exact-duplicate candidates drop at the probe with zero
-      // doc-table I/O (the verified path's tier 1). New tables write it
-      // when `graft.dedup.fp.enabled` allows (the default); an EXISTING
-      // table always keeps its own layout whatever the prop says —
-      // narrowing a 5-column table to 4-column appends would tear the
-      // probe's schema (ADVICE r16 medium), and a pre-fp table widening
-      // would do the same in reverse. Legacy tables' probes stay on the
-      // jaccard tier.
-      val writeFp = shouldWriteFp(liveHead, hasFp)
-      val bucketRows0 = bb
-        .join(survivors.select(col(id), col(ts)), Seq(id))
-      val bucketRows = {
-        val full =
-          if (writeFp) bucketRows0
-            .join(batch.select(col(id),
-              graft.text.TextOps.fingerprint(col(text)).as("fp")), Seq(id))
-            .select(col(id), col("band"), col("bucket"), col(ts), col("fp"))
-          else bucketRows0
-            .select(col(id), col("band"), col("bucket"), col(ts))
-        if (freshEmpty) full.limit(0) else full
-      }
-      // sidecar BEFORE the bucket append: a crash between the two leaves
-      // the bloom a superset of the stored table — the invariant the
-      // probe's correctness contract rests on (see DedupBloom); a
-      // replayed batch re-ORs the same bits, a skipped append changes
-      // nothing the superset cares about. ONE writer-lease span covers
-      // update AND append (ADVICE r15 high): an un-leased window between
-      // them lets a concurrent rebuild snapshot the table WITHOUT this
-      // batch's rows and install a bloom missing its bits — after which
-      // the append lands anyway and the sidecar is a strict SUBSET of
-      // the table (silent false negatives = duplicates admitted
-      // forever). The lease is thread-re-entrant, so the nested
-      // acquisitions inside DedupBloom.update and appendStreamBatch are
-      // no-ops; a rebuild attempted mid-span fails loudly instead.
-      val newBucketVals =
-        if (freshEmpty) Array.empty[Long] // no survivors — no new buckets
-        else bucketRows.select(col("bucket"))
-          .distinct().collect().map(_.getLong(0)) // the Spark job runs OUTSIDE the lease
-      graft.io.Tables.withWriterLease(fs, hp, "dedupIngestBuckets") {
-        DedupBloom.update(spark, bucketPath, newBucketVals)
-        if (freshEmpty)
-          graft.io.Tables.commitEmptyStreamBatch(spark, bucketPath,
-            streamKey + "#buckets", batchId)
-        else
-          graft.io.Tables.appendStreamBatch(bucketRows, bucketPath, ts,
-            streamKey + "#buckets", batchId)
-      }
-      // per-file blooms for the batch's new file(s) — OUTSIDE the lease
-      // (it only reads committed live files) and best-effort: a missing
-      // file bloom degrades the probe's file pruning, never its answer
-      scala.util.Try(FileBlooms.sync(spark, bucketPath)).failed.foreach(e =>
-        System.err.println(s"[dedup-ingest] file-bloom sync skipped: ${e.getMessage}"))
-      // retention LAST, after both appends committed: a replayed batch
-      // re-runs the beat (idempotent — the re-cut range is empty), and a
-      // crash inside either delete recovers through the standard delete
-      // recovery at the next op's entry
-      if (retainNs != Long.MaxValue)
-        dedupRetentionBeat(spark, docPath, bucketPath, ts, retainNs)
+      landSurvivors(spark, batch, survivors, freshEmpty, bb,
+        shouldWriteFp(liveHead, hasFp), docPath, bucketPath, ts, id,
+        streamKey, batchId, retainNs)
     } finally {
       // every persist released on EVERY path — a throw from either append
       // (lease contention, ordered-ingest reject, crash injection) must
-      // not pin survivor blocks for the session's lifetime
-      survivorsCached.foreach(_.unpersist())
-      freshCached.foreach(_.unpersist())
-      candCached.foreach(_.unpersist())
-      bb.unpersist(); sh.unpersist(); batch.unpersist()
+      // not pin batch blocks for the session's lifetime. Dependents
+      // first: un-caching a parent first would re-plan them.
+      caches.reverseIterator.foreach(c => scala.util.Try(c.unpersist()))
     }
+  }
+
+  /** Persist `df` and register it for the caller's `finally`. */
+  private def cached(caches: scala.collection.mutable.ListBuffer[DataFrame],
+                     df: DataFrame): DataFrame =
+    if (caches.exists(_ eq df)) df
+    else {
+      caches += df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      df
+    }
+
+  /** The bucket table's state as the landing twins see it: whether it
+    * exists, its live head file (one manifest read; the footer schema
+    * memoizes on that IMMUTABLE file — a fold/retention that renames
+    * files changes the head name and re-detects), and whether that
+    * generation carries the content-fingerprint column. A table with no
+    * live files yet is "new" — the prop decides its layout
+    * ([[shouldWriteFp]]).
+    */
+  private def bucketLayout(spark: SparkSession, bucketPath: String)
+      : (Boolean, Option[String], Boolean) = {
+    val hp = new org.apache.hadoop.fs.Path(bucketPath)
+    val exists = hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
+    val liveHead =
+      if (exists)
+        graft.io.Tables.liveFileNames(spark, bucketPath).flatMap(_.headOption)
+      else None
+    (exists, liveHead, bucketHeadHasFp(spark, bucketPath, liveHead))
+  }
+
+  /** The VERIFIED stored-corpus check shared by the landing twins: the
+    * batch minus the docs that near-duplicate a RETAINED doc. `bb` is the
+    * batch's banded frame (id, band, bucket, fp — fp is the text
+    * fingerprint or the vector fingerprint). The probe carries the
+    * stored id, so its hits ARE the candidate (batch-id, stored-id)
+    * pairs. Two-tier verify:
+    *  1. FINGERPRINT SHORTCUT (`tier1`) — bucket rows written with `fp`
+    *     carry the stored doc's fingerprint, so a candidate whose batch
+    *     fingerprint MATCHES is an exact duplicate and drops with ZERO
+    *     doc-table I/O. The comparison happens inside the candidate job
+    *     itself (the broadcast batch side carries its fp), so candidates
+    *     arrive pre-labeled exact/not. A re-crawl of identical pages —
+    *     THE steady state when a crawler revisits its corpus — never
+    *     touches the doc table. Tables written before fp existed take
+    *     tier 2 for everything.
+    *  2. `hits` for the rest — (pairs (id, __oldId), colliding stored
+    *     docs) → dropped batch ids, over a doc-table fetch bounded in
+    *     BOTH dimensions: the candidates' ts SPAN file-prunes the read to
+    *     the overlapping manifest slice (the layout is ts-clustered,
+    *     never id-clustered, so an In alone cannot file-prune at 100 TB)
+    *     and the id set bounds the verify. `oldSide` projects the slice
+    *     to (__oldId, payload…).
+    * The labeled candidate set is COLLECTED once under a cap
+    * (graft.dedup.verify.collect.max, default 20000 — collisions only,
+    * ~40 B/row): the driver decides tier 1 outright, tier 2's pair set
+    * becomes a local frame (no probe recomputation), and an all-exact
+    * batch runs no tier-2 job. Past the cap a frame-based shape takes
+    * over (persisted candidates, span agg, broadcast semi-join fetch) —
+    * a giant re-crawl must not revert to O(corpus) work or an unbounded
+    * collect.
+    */
+  private def storedSurvivors(spark: SparkSession, batch: DataFrame,
+                              bb: DataFrame, docPath: String, bucketPath: String,
+                              id: String, ts: String, hasFp: Boolean,
+                              tier1: Boolean,
+                              caches: scala.collection.mutable.ListBuffer[DataFrame])(
+      oldSide: DataFrame => DataFrame)(
+      hits: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val probeCols = Seq("band", "bucket", id, ts) ++
+      (if (hasFp) Seq("fp") else Nil)
+    val storedHits = probeStoredBuckets(spark, bucketPath, bb, probeCols)
+      .withColumnRenamed(id, "__oldId").withColumnRenamed(ts, "__oldTs")
+      .withColumnsRenamed(Map("fp" -> "__oldFp"))
+    val exactCol =
+      if (tier1) coalesce(col("__oldFp") === col("__bfp"), lit(false))
+      else lit(false)
+    val cand = storedHits
+      .join(broadcast(bb.select(col(id), col("band"), col("bucket"),
+        col("fp").as("__bfp"))), Seq("band", "bucket"))
+      .select(col(id), col("__oldId"), col("__oldTs"), exactCol.as("__exact"))
+      .distinct()
+    def fetchOld(bounds: Option[(Long, Long)]): DataFrame = oldSide(
+      bounds.map { case (lo, hi) =>
+        graft.io.Tables.snapshotSliceNs(spark, docPath, lo, hi, ts)
+      }.getOrElse(graft.io.Tables.snapshot(spark, docPath)))
+    // a local single-column id frame for broadcast anti-joins — typed
+    // from the batch's own schema, so the join key resolves whatever the
+    // id type is
+    def localFrame(rows: Array[Row], names: String*): DataFrame =
+      spark.createDataFrame(
+        new java.util.ArrayList[Row](java.util.Arrays.asList(rows: _*)),
+        StructType(names.map(n => batch.schema(id).copy(name = n))))
+    def idFrame(vals: Array[Any], name: String): DataFrame =
+      localFrame(vals.map(v => Row(v)), name)
+    val candCap = sys.props.get("graft.dedup.verify.collect.max")
+      .flatMap(_.toIntOption).getOrElse(20000)
+    val candRows = cand.limit(candCap + 1).collect()
+    if (candRows.length <= candCap) {
+      // DRIVER-DECIDED: every labeled candidate is on the driver
+      val exactIds = candRows.filter(_.getBoolean(3)).map(_.get(0)).distinct
+      val exactSet = exactIds.toSet
+      // pairs still undecided: their batch id survived tier 1
+      val restRows = candRows.filterNot(r => exactSet.contains(r.get(0)))
+      if (restRows.isEmpty) {
+        // the all-exact re-crawl steady state: zero doc-table I/O, zero
+        // tier-2 jobs — one broadcast anti-join decides the batch
+        if (exactIds.isEmpty) batch
+        else batch.join(broadcast(idFrame(exactIds, id)), Seq(id), "left_anti")
+      } else {
+        val ns = restRows.flatMap(r => tsValueNs(r.get(2)))
+        val oldIds = restRows.map(_.get(1)).distinct
+        val old0 = fetchOld(
+          if (ns.length == restRows.length) Some((ns.min, ns.max)) else None)
+        val old =
+          if (oldIds.length <= 1000)
+            // isin additionally pushes row-group pruning inside the
+            // ts-sliced files
+            old0.filter(col("__oldId").isin(oldIds: _*))
+          else old0.join(broadcast(idFrame(oldIds, "__oldId")),
+            Seq("__oldId"), "left_semi")
+        // the pair set is a LOCAL frame (it was just collected) — tier 2
+        // never recomputes the probe — and its verdicts come back to the
+        // driver too (a subset of the collected batch ids): a batch whose
+        // candidates all fail verify stays the batch itself
+        val hitIds = hits(localFrame(restRows.map(r => Row(r.get(0), r.get(1))),
+          id, "__oldId"), old).collect().map(_.get(0))
+        val drops = (exactIds ++ hitIds).distinct
+        if (drops.isEmpty) batch
+        else batch.join(broadcast(idFrame(drops, id)), Seq(id), "left_anti")
+      }
+    } else {
+      // OVER-CAP fallback: the frame-based shape
+      val candDf = cached(caches, cand)
+      val exactIds = candDf.filter(col("__exact")).select(col(id)).distinct()
+      val rest = candDf.join(exactIds, Seq(id), "left_anti")
+      val candOld = rest.select(col("__oldId"), col("__oldTs")).distinct()
+      val span = candOld.agg(min(col("__oldTs")), max(col("__oldTs")),
+        count(lit(1))).head()
+      if (span.getLong(2) == 0L) batch.join(exactIds, Seq(id), "left_anti")
+      else {
+        val old = fetchOld(for {
+          lo <- tsValueNs(span.get(0)); hi <- tsValueNs(span.get(1))
+        } yield (lo, hi)).join(broadcast(candOld.select(col("__oldId"))),
+          Seq("__oldId"), "left_semi")
+        val hit = hits(rest.select(col(id), col("__oldId")), old)
+        batch.join(hit.unionByName(exactIds).distinct(), Seq(id), "left_anti")
+      }
+    }
+  }
+
+  /** In-batch collisions among the docs that survived the stored corpus
+    * (`fresh`), shared by the landing twins: candidate pairs from the
+    * bucket-collision graph of the ALREADY-BANDED frame, `verify` (an
+    * exact similarity filter over (id1, id2), or identity), connected
+    * components, min id per cluster survives. Docs with no buckets
+    * collide with nothing and always survive. The UNVERIFIED candidate
+    * set is checked first, then the verified one: a batch with no
+    * candidates — the steady state of fresh crawls — skips verify, and
+    * one whose candidates all fail verify skips the component machinery's
+    * whole shuffle stages of task-launch floor; both return `fresh`
+    * itself.
+    */
+  private def inBatchSurvivors(batch: DataFrame, fresh: DataFrame, bb: DataFrame,
+                               id: String,
+                               caches: scala.collection.mutable.ListBuffer[DataFrame])(
+      verify: DataFrame => DataFrame): DataFrame = {
+    val freshBB =
+      if (fresh eq batch) bb
+      else bb.join(fresh.select(col(id)), Seq(id), "left_semi")
+    val cand = cached(caches, graft.dedup.Dedup.bandedPairs(freshBB, id))
+    lazy val pairs = cached(caches, verify(cand))
+    if (cand.isEmpty || pairs.isEmpty) fresh
+    else {
+      val losers = graft.dedup.Dedup.connectedComponents(pairs)
+        .filter(col("id") =!= col("cluster_id"))
+        .select(col("id").as(id))
+      cached(caches, fresh.join(losers, Seq(id), "left_anti"))
+    }
+  }
+
+  /** The landing tail shared by the dedup twins: the survivors' doc rows,
+    * then their bucket rows — `bb` (id, ts, fp, band, bucket) restricted
+    * to the survivor ids, (id, band, bucket, ts[, fp]) per the table's
+    * layout — then the per-file bloom sync and the retention beat.
+    *
+    * Doc table first, bucket table second: survivors are a pure function
+    * of the batch and the PRE-batch bucket table, so a crash between the
+    * two appends replays the batch, recomputes the same survivors, skips
+    * the committed doc append and applies the bucket append. Distinct
+    * stream ids keep the two commit logs separate. An ALL-DROP batch (`freshEmpty`) advances both commit
+    * logs WITHOUT staging writes ([[graft.io.Tables.commitEmptyStreamBatch]]
+    * — the same exactly-once transition minus the 0-row write job, marker
+    * and manifest rewrite).
+    *
+    * The bucket rows are built ONCE (persisted): the distinct-bucket
+    * collect that feeds the sidecar and the append both read that copy.
+    * Sidecar BEFORE the bucket append: a crash between the two leaves the
+    * bloom a superset of the stored table — the invariant the probe's
+    * correctness rests on (see DedupBloom); a replayed batch re-ORs the
+    * same bits. ONE writer-lease span covers update AND append (ADVICE
+    * r15 high): an un-leased window between them lets a concurrent
+    * rebuild snapshot the table WITHOUT this batch's rows and install a
+    * bloom missing its bits — after which the append lands anyway and the
+    * sidecar is a strict SUBSET of the table (silent false negatives =
+    * duplicates admitted forever). The lease is thread-re-entrant, so the
+    * nested acquisitions inside DedupBloom.update and appendStreamBatch
+    * are no-ops; a rebuild attempted mid-span fails loudly instead.
+    */
+  private def landSurvivors(spark: SparkSession, batch: DataFrame,
+                            survivors: DataFrame, freshEmpty: Boolean,
+                            bb: DataFrame, writeFp: Boolean, docPath: String,
+                            bucketPath: String, ts: String, id: String,
+                            streamKey: String, batchId: Long,
+                            retainNs: Long): Unit = {
+    val hp = new org.apache.hadoop.fs.Path(bucketPath)
+    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (freshEmpty)
+      graft.io.Tables.commitEmptyStreamBatch(spark, docPath,
+        streamKey + "#docs", batchId)
+    else
+      graft.io.Tables.appendStreamBatch(survivors, docPath, ts,
+        streamKey + "#docs", batchId)
+    // bucket rows carry the doc's fingerprint so future batches' exact
+    // duplicates drop at the probe with zero doc-table I/O. An EXISTING
+    // table always keeps its own layout (shouldWriteFp)
+    val bucketRows =
+      if (freshEmpty) None
+      else Some((if (survivors eq batch) bb
+        else bb.join(survivors.select(col(id)), Seq(id), "left_semi"))
+        .select(Seq(col(id), col("band"), col("bucket"), col(ts)) ++
+          (if (writeFp) Seq(col("fp")) else Nil): _*)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    try {
+      // the Spark job runs OUTSIDE the lease
+      val newBucketVals = bucketRows.map(_.select(col("bucket")).distinct()
+        .collect().map(_.getLong(0))).getOrElse(Array.empty[Long])
+      graft.io.Tables.withWriterLease(fs, hp, "dedupIngestBuckets") {
+        DedupBloom.update(spark, bucketPath, newBucketVals)
+        bucketRows match {
+          case Some(rows) => graft.io.Tables.appendStreamBatch(rows, bucketPath,
+            ts, streamKey + "#buckets", batchId)
+          case None => graft.io.Tables.commitEmptyStreamBatch(spark, bucketPath,
+            streamKey + "#buckets", batchId)
+        }
+      }
+    } finally bucketRows.foreach(_.unpersist())
+    // per-file blooms for the batch's new file(s) — OUTSIDE the lease (it
+    // only reads committed live files) and best-effort: a missing file
+    // bloom degrades the probe's file pruning, never its answer
+    scala.util.Try(FileBlooms.sync(spark, bucketPath)).failed.foreach(e =>
+      System.err.println(s"[dedup-ingest] file-bloom sync skipped: ${e.getMessage}"))
+    // retention LAST, after both appends committed: a replayed batch
+    // re-runs the beat (idempotent — the re-cut range is empty), and a
+    // crash inside either delete recovers through the standard delete
+    // recovery at the next op's entry
+    if (retainNs != Long.MaxValue)
+      dedupRetentionBeat(spark, docPath, bucketPath, ts, retainNs)
   }
 
   /** The EMBEDDING twin of [[ingestDedupNearDup]]: semantic dedup at
@@ -1369,7 +1392,8 @@ object Streams {
       .start()
 
   /** One micro-batch of [[ingestDedupEmbedding]] — public for crash tests
-    * and batch backfills, like [[dedupIngestBatch]].
+    * and batch backfills, like [[dedupIngestBatch]] (same single-pass
+    * frames and the same landing tail).
     */
   def dedupIngestEmbeddingBatch(batch0: DataFrame, docPath: String,
                                 bucketPath: String, ts: String,
@@ -1386,37 +1410,36 @@ object Streams {
     val batch = batch0
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val withNorm = batch
-      .select(col(id), col(vec).cast("array<double>").as("__v"))
+      .select(col(id), col(ts), col(vec).cast("array<double>").as("__v"))
       .withColumn("__nrm", sqrt(dot(col("__v"), col("__v"))))
       .filter(col("__nrm") > 0)
       // the vector FINGERPRINT (xxhash64 over the cast array) — the
       // embedding analog of the text twin's content fingerprint: an
       // exact re-upload of an identical vector hashes identically, so
-      // tier 1 below drops it at the probe with ZERO doc-table I/O
+      // tier 1 drops it at the probe with ZERO doc-table I/O
       // (cos(v, v) = 1 ≥ any sane minCos). Same accepted 2^-64
       // collision risk as the text fingerprint.
       .withColumn("__vfp", xxhash64(col("__v")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // ONE plane-hashing pass per doc: bb serves BOTH the stored-corpus
-    // candidate join and the in-batch pair join — the same reuse the text
-    // twin gets from bandBuckets + bandedPairs. The pass is the FUSED
-    // cs_rhp_sig expression (all tables×bits plane dots in one compiled
-    // loop, bit-exact with the composed per-table rhpBucket form existing
-    // bucket tables persist): the composed form's 32k interpreted HOF
-    // lambda steps per row dominated the whole ingest batch at the
-    // defaults (32×16×dim 64 — q_emb_ingest measured it ~7× the rest of
-    // the batch put together).
-    val bb = withNorm.select(col(id),
+    // ONE plane-hashing pass per doc: bb (id, ts, fp, band, bucket) serves
+    // the stored-corpus candidate join, the in-batch pair join AND the
+    // bucket rows — the same reuse the text twin gets from its banded
+    // frame. The pass is the FUSED cs_rhp_sig expression (all tables×bits
+    // plane dots in one compiled loop, bit-exact with the composed
+    // per-table rhpBucket form existing bucket tables persist): the
+    // composed form's 32k interpreted HOF lambda steps per row dominated
+    // the whole ingest batch at the defaults (32×16×dim 64 — q_emb_ingest
+    // measured it ~7× the rest of the batch put together).
+    val bb = withNorm.select(col(id), col(ts), col("__vfp").as("fp"),
         posexplode(call_function("cs_rhp_sig", col("__v"),
           lit(dim), lit(bits), lit(tables))))
-      .select(col(id), col("pos").as("band"), col("col").as("bucket"))
+      .select(col(id), col(ts), col("fp"), col("pos").as("band"),
+        col("col").as("bucket"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val caches = scala.collection.mutable.ListBuffer[DataFrame](withNorm, bb)
+    val caches = scala.collection.mutable.ListBuffer[DataFrame](batch, withNorm, bb)
     try {
-      val hp = new org.apache.hadoop.fs.Path(bucketPath)
-      val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // exact-cosine verify of a candidate set against `side` vectors —
-      // RHP buckets alone are not near-dup evidence
+      // exact-cosine verify of a candidate set against `otherVecs`
+      // (__oldId, __ov) — RHP buckets alone are not near-dup evidence
       def verified(cand: DataFrame, otherVecs: DataFrame): DataFrame = cand
         .join(withNorm.select(col(id), col("__v"), col("__nrm")), Seq(id))
         .join(otherVecs, Seq("__oldId"))
@@ -1424,205 +1447,30 @@ object Streams {
         .filter(col("__on") > 0)
         .filter(dot(col("__v"), col("__ov")) / (col("__nrm") * col("__on"))
           >= minCos)
-      val liveHead =
-        if (fs.exists(hp))
-          graft.io.Tables.liveFileNames(spark, bucketPath).flatMap(_.headOption)
-        else None
-      val hasFp = bucketHeadHasFp(spark, bucketPath, liveHead)
-      val tier1 = hasFp && minCos <= 1.0
-      val fresh = (
-        if (!fs.exists(hp)) batch
-        else {
-          // the same sublinear probe as the text twin (broadcast flip +
-          // In pushdown + column pruning), carrying the stored id so the
-          // hits ARE the candidate (batch-id, stored-id) pairs; the hit
-          // set is tiny, so the batch side broadcasts onto it. On fp
-          // layouts the batch side also carries the VECTOR FINGERPRINT,
-          // so candidates arrive pre-labeled exact/not (tier 1, VERDICT
-          // r16 item 5) — an exact re-upload drops with zero vector I/O.
-          val probeCols = Seq("band", "bucket", id, ts) ++
-            (if (hasFp) Seq("fp") else Nil)
-          val storedHits = probeStoredBuckets(spark, bucketPath, bb, probeCols)
-            .withColumnRenamed(id, "__oldId").withColumnRenamed(ts, "__oldTs")
-            .withColumnsRenamed(Map("fp" -> "__oldFp"))
-          val bbB =
-            if (tier1) bb.join(withNorm.select(col(id), col("__vfp")), Seq(id))
-            else bb
-          val exactCol =
-            if (tier1) coalesce(col("__oldFp") === col("__vfp"), lit(false))
-            else lit(false)
-          val cand = storedHits
-            .join(broadcast(bbB), Seq("band", "bucket"))
-            .select(col(id), col("__oldId"), col("__oldTs"),
-              exactCol.as("__exact"))
-            .distinct()
-          // DRIVER-DECIDED probe, mirroring the text twin (VERDICT r16
-          // next #2): the labeled candidate set collects once under the
-          // same cap — tier 1 resolves outright, tier 2's pair set
-          // becomes a LOCAL frame, and an all-exact re-upload batch (the
-          // embedding steady state) runs ZERO tier-2 jobs and zero
-          // vector I/O. Past the cap the frame-based shape below takes
-          // over (persisted cand, exact span agg, broadcast semi-join —
-          // a giant re-upload must not revert to O(corpus) vector reads
-          // or an unbounded collect).
-          val candCap = sys.props.get("graft.dedup.verify.collect.max")
-            .flatMap(_.toIntOption).getOrElse(20000)
-          val candRows = cand.limit(candCap + 1).collect()
-          def idFrame(vals: Array[Any], name: String): DataFrame =
-            spark.createDataFrame(
-              new java.util.ArrayList[Row](java.util.Arrays.asList(
-                vals.map(v => Row(v)): _*)),
-              org.apache.spark.sql.types.StructType(
-                Seq(batch.schema(id).copy(name = name))))
-          if (candRows.length <= candCap) {
-            val exactIds = candRows.filter(_.getBoolean(3)).map(_.get(0)).distinct
-            val exactSet = exactIds.toSet
-            val restRows = candRows.filterNot(r => exactSet.contains(r.get(0)))
-            if (restRows.isEmpty) {
-              if (exactIds.isEmpty) batch
-              else batch.join(broadcast(idFrame(exactIds, id)), Seq(id),
-                "left_anti")
-            } else {
-              // candidate pushdown, both dimensions: the colliding
-              // stored docs' ts span file-prunes the vector read to the
-              // overlapping manifest slice (the layout is ts-clustered,
-              // never id-clustered), and the id set bounds the verify
-              val ns = restRows.flatMap(r => tsValueNs(r.get(2)))
-              val bounds =
-                if (ns.length == restRows.length) Some((ns.min, ns.max))
-                else None
-              val oldVecs0 = bounds.map { case (lo, hi) =>
-                graft.io.Tables.snapshotSliceNs(spark, docPath, lo, hi, ts)
-              }.getOrElse(graft.io.Tables.snapshot(spark, docPath))
-                .select(col(id).as("__oldId"),
-                  col(vec).cast("array<double>").as("__ov"))
-              val oldIds = restRows.map(_.get(1)).distinct
-              val oldVecs =
-                if (oldIds.length <= 1000)
-                  // isin additionally pushes row-group pruning inside
-                  // the ts-sliced files
-                  oldVecs0.filter(col("__oldId").isin(oldIds: _*))
-                else oldVecs0.join(broadcast(idFrame(oldIds, "__oldId")),
-                  Seq("__oldId"), "left_semi")
-              // the pair set is a LOCAL frame (it was just collected) —
-              // tier 2 never recomputes the probe
-              val pairs = spark.createDataFrame(
-                new java.util.ArrayList[Row](java.util.Arrays.asList(
-                  restRows.map(r => Row(r.get(0), r.get(1))): _*)),
-                org.apache.spark.sql.types.StructType(Seq(
-                  batch.schema(id).copy(name = id),
-                  batch.schema(id).copy(name = "__oldId"))))
-              val hit = verified(pairs, oldVecs).select(col(id)).distinct()
-              val drops =
-                if (exactIds.isEmpty) hit
-                else hit.unionByName(idFrame(exactIds, id)).distinct()
-              batch.join(drops, Seq(id), "left_anti")
-            }
-          } else {
-            // OVER-CAP fallback: the frame-based shape (persisted cand,
-            // exact span agg, broadcast semi-join fetch)
-            val candDf = cand
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            caches += candDf
-            val exactIds = candDf.filter(col("__exact"))
-              .select(col(id)).distinct()
-            val rest = candDf.join(exactIds, Seq(id), "left_anti")
-            val candOld = rest.select(col("__oldId"), col("__oldTs")).distinct()
-            val span = candOld
-              .agg(min(col("__oldTs")), max(col("__oldTs")), count(lit(1))).head()
-            val nCand = span.getLong(2)
-            if (nCand == 0L) {
-              if (tier1) batch.join(exactIds, Seq(id), "left_anti") else batch
-            } else {
-              val bounds = for {
-                lo <- tsValueNs(span.get(0)); hi <- tsValueNs(span.get(1))
-              } yield (lo, hi)
-              val oldVecs0 = bounds.map { case (lo, hi) =>
-                graft.io.Tables.snapshotSliceNs(spark, docPath, lo, hi, ts)
-              }.getOrElse(graft.io.Tables.snapshot(spark, docPath))
-                .select(col(id).as("__oldId"),
-                  col(vec).cast("array<double>").as("__ov"))
-              val oldVecs = oldVecs0.join(
-                broadcast(candOld.select(col("__oldId"))), Seq("__oldId"),
-                "left_semi")
-              val hit = verified(rest.select(col(id), col("__oldId")), oldVecs)
-                .select(col(id)).distinct()
-              val drops =
-                if (tier1) hit.unionByName(exactIds).distinct() else hit
-              batch.join(drops, Seq(id), "left_anti")
-            }
-          }
-        }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      caches += fresh
-      // in-batch: bucket-collision pairs from the ALREADY-HASHED bb, then
-      // the same exact-cosine verify → components → keep min per cluster.
-      // An all-drop batch short-circuits past the pair/component
-      // machinery entirely (see the text twin — same empty-input floor).
+      val (exists, liveHead, hasFp) = bucketLayout(spark, bucketPath)
+      // the same probe and two-tier verify as the text twin; tier 1 keys
+      // on the VECTOR fingerprint, tier 2 is the exact cosine against the
+      // colliding stored vectors
+      val fresh =
+        if (!exists) batch
+        else cached(caches, storedSurvivors(spark, batch, bb, docPath,
+          bucketPath, id, ts, hasFp, tier1 = hasFp && minCos <= 1.0, caches)(
+          _.select(col(id).as("__oldId"), col(vec).cast("array<double>").as("__ov")))(
+          (pairs, oldVecs) => verified(pairs, oldVecs).select(col(id)).distinct()))
       val freshEmpty = fresh.isEmpty
       val survivors =
         if (freshEmpty) fresh
-        else {
-          val freshBB = bb.join(fresh.select(col(id)), Seq(id), "left_semi")
-          val candPairs = graft.dedup.Dedup.bandedPairs(freshBB, id)
-          val pairs = verified(
-            candPairs.select(col("id1").as(id), col("id2").as("__oldId")),
+        else inBatchSurvivors(batch, fresh, bb, id, caches) { cand =>
+          verified(cand.select(col("id1").as(id), col("id2").as("__oldId")),
             withNorm.select(col(id).as("__oldId"), col("__v").as("__ov")))
             .select(col(id).as("id1"), col("__oldId").as("id2"))
-          val losers = graft.dedup.Dedup.connectedComponents(pairs)
-            .filter(col("id") =!= col("cluster_id"))
-            .select(col("id").as(id))
-          fresh.join(losers, Seq(id), "left_anti")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         }
-      caches += survivors
-      // all-drop batch: advance the commit log without the staging write
-      // (commitEmptyStreamBatch — see the text twin's note)
-      if (freshEmpty)
-        graft.io.Tables.commitEmptyStreamBatch(spark, docPath,
-          streamKey + "#docs", batchId)
-      else
-        graft.io.Tables.appendStreamBatch(survivors, docPath, ts,
-          streamKey + "#docs", batchId)
-      // bucket rows carry the VECTOR fingerprint (tier 1's probe-side
-      // key) under the same creation-governed layout contract as the
-      // text twin (shouldWriteFp): existing tables keep their layout,
-      // legacy tables stay on the cosine tier
-      val writeFp = shouldWriteFp(liveHead, hasFp)
-      val bucketRows = {
-        val base = bb.join(survivors.select(col(id), col(ts)), Seq(id))
-        val full =
-          if (writeFp) base
-            .join(withNorm.select(col(id), col("__vfp").as("fp")), Seq(id))
-            .select(col(id), col("band"), col("bucket"), col(ts), col("fp"))
-          else base.select(col(id), col("band"), col("bucket"), col(ts))
-        if (freshEmpty) full.limit(0) else full
-      }
-      // sidecar BEFORE the bucket append, under ONE writer-lease span —
-      // same crash-consistency and anti-rebuild-race contract as the
-      // text twin (see dedupIngestBatch)
-      val newBucketVals =
-        if (freshEmpty) Array.empty[Long]
-        else bucketRows.select(col("bucket"))
-          .distinct().collect().map(_.getLong(0))
-      graft.io.Tables.withWriterLease(fs, hp, "dedupIngestBuckets") {
-        DedupBloom.update(spark, bucketPath, newBucketVals)
-        if (freshEmpty)
-          graft.io.Tables.commitEmptyStreamBatch(spark, bucketPath,
-            streamKey + "#buckets", batchId)
-        else
-          graft.io.Tables.appendStreamBatch(bucketRows, bucketPath, ts,
-            streamKey + "#buckets", batchId)
-      }
-      // per-file blooms for the batch's files, like the text twin
-      scala.util.Try(FileBlooms.sync(spark, bucketPath)).failed.foreach(e =>
-        System.err.println(s"[dedup-ingest] file-bloom sync skipped: ${e.getMessage}"))
-      // same retention composition as the text twin (see dedupIngestBatch)
-      if (retainNs != Long.MaxValue)
-        dedupRetentionBeat(spark, docPath, bucketPath, ts, retainNs)
-    } finally {
-      caches.foreach(c => scala.util.Try(c.unpersist()))
-      batch.unpersist()
-    }
+      // bucket rows carry the VECTOR fingerprint under the same
+      // creation-governed layout contract as the text twin
+      landSurvivors(spark, batch, survivors, freshEmpty, bb,
+        shouldWriteFp(liveHead, hasFp), docPath, bucketPath, ts, id,
+        streamKey, batchId, retainNs)
+    } finally caches.reverseIterator.foreach(c => scala.util.Try(c.unpersist()))
   }
 
   /** The bucketed twin of [[ingestAppend]]: micro-batches land through the

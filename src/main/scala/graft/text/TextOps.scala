@@ -190,10 +190,14 @@ object TextOps {
     * (xxhash64 skips null args), and '' hashes as '' (nullif fires, the
     * coalesce falls through to the raw empty string).
     */
-  def fingerprint(text: Column): Column = {
-    val norm = normalizedText(text)
+  def fingerprint(text: Column): Column = fingerprintOfNorm(normalizedText(text), text)
+
+  /** [[fingerprint]] over an already-normalized column `norm` (=
+    * `normalizedText(text)`), for passes that materialize the
+    * normalization once for several consumers.
+    */
+  private[graft] def fingerprintOfNorm(norm: Column, text: Column): Column =
     xxhash64(coalesce(nullif(norm, lit("")), text))
-  }
 
   /** Cross-engine-checkable fingerprint: md5 hex of the normalized text
     * (raw text when the normalization is empty — same guard as

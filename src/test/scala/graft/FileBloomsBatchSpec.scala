@@ -65,24 +65,15 @@ class FileBloomsBatchSpec extends AnyFunSuite {
   test("one sync over many missing files launches ONE batched build job set, not 2 per file") {
     val buckets = tmpDir("jobs") + "/buckets.parquet"
     for (w <- 0 until 6) Tables.append(win(w, rows = 120), buckets, "ts", lit(0L))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      graft.streaming.FileBlooms.sync(spark, buckets)
-      Thread.sleep(500) // drain the async bus
+    JobWatch.on(spark) { w =>
+      w.measure(graft.streaming.FileBlooms.sync(spark, buckets))
       // the legacy builder launched ~2 jobs per missing file (12 for the
       // 6 files here); the batched build is one SQL execution — scan +
       // partial agg, shuffle read, collect — tolerating AQE stage-count
       // variation but NOT per-file scaling
-      assert(jobs.get() <= 5,
-        s"batched bloom build launched ${jobs.get()} jobs for 6 files")
-    } finally spark.sparkContext.removeSparkListener(l)
+      assert(w.count <= 5,
+        s"batched bloom build launched ${w.count} jobs for 6 files:${w.describe}")
+    }
     // and all six sidecars landed
     val fbDir = new java.io.File(new java.io.File(buckets).getParent,
       "buckets.parquet.fblooms")

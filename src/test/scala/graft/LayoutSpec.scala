@@ -57,36 +57,20 @@ class LayoutSpec extends AnyFunSuite {
     // (no registration) must count once on first use and hit the memo on
     // every later lookup — a loop of str2code calls over the same
     // dictionary may not run a count job per call (round-7 VERDICT item).
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val hand = spark.createDataFrame(Seq((0L, "a"), (1L, "b"), (2L, "c")))
       .toDF("code", "value")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    def settle(): Int = {
-      // the listener bus is async: wait until the count is stable
-      var prev = -1; var cur = jobs.get()
-      while (cur != prev) { Thread.sleep(200); prev = cur; cur = jobs.get() }
-      cur
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val n1 = graft.text.Dict.trustedRows(hand)
-      assert(n1 == 3L)
-      val afterFirst = settle()
-      assert(afterFirst >= 1, "first sight of an unregistered dictionary must count")
-      val n2 = graft.text.Dict.trustedRows(hand)
-      assert(n2 == 3L)
-      assert(settle() == afterFirst,
-        "repeat lookup over the same dictionary re-ran a count job")
+    JobWatch.on(spark) { w =>
+      assert(w.measure(graft.text.Dict.trustedRows(hand)) == 3L)
+      assert(w.count >= 1, "first sight of an unregistered dictionary must count")
+      assert(w.measure(graft.text.Dict.trustedRows(hand)) == 3L)
+      assert(w.count == 0,
+        s"repeat lookup over the same dictionary re-ran a count job:${w.describe}")
       // a DERIVED frame (more rows) must NOT inherit the memoized count —
       // the round-7 stale-stamp hazard: a union carrying the original
       // (smaller) number could force-broadcast past MaxBroadcastRows
       val grown = hand.union(
         spark.createDataFrame(Seq((3L, "d"))).toDF("code", "value"))
       assert(graft.text.Dict.trustedRows(grown) == 4L)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
   }
 }

@@ -1288,9 +1288,12 @@ class StreamIngestSpec extends AnyFunSuite {
         (from until until).map(i => (i.toLong, 100L + i, text(i)))
           .toDF("id", "ts", "text"),
         docs, buckets, "ts", "ck-fp", "id", "text", 5, 8, 2, bid)
-    run(0L, 0, 20)
-    run(1L, 20, 40)
-    run(2L, 40, 60)
+    // several small files per window (these texts also collide ACROSS
+    // windows, so the hits localize to files, not to whole windows): a
+    // tiny staging target splits each batch into its input partitions
+    sys.props("graft.append.file.bytes") = "1024"
+    try { run(0L, 0, 20); run(1L, 20, 40); run(2L, 40, 60) }
+    finally sys.props.remove("graft.append.file.bytes")
     def names(fs: Iterable[String]): Set[String] = fs.map(_.split("/").last).toSet
     val liveFiles = names(Tables.snapshot(spark, buckets).inputFiles.toSeq)
     assert(liveFiles.size >= 3, s"want one file per window, got $liveFiles")
@@ -1491,32 +1494,17 @@ class StreamIngestSpec extends AnyFunSuite {
       assert(Tables.manifest(spark, p).exists(_.files.forall(_.rows.isDefined)),
         s"write paths must record footer row counts in the manifest: $p")
     // and the stats call launches NO job at all (the one-row result is a
-    // local relation; every field is metadata). The listener is
-    // validated by a positive control first so the zero can't be a
-    // wiring artifact; the bus is async, so the negative gets a drain
-    // window before asserting.
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      Tables.snapshot(spark, docs).count() // positive control
-      val deadline = System.currentTimeMillis() + 5000
-      while (jobs.get() == 0 && System.currentTimeMillis() < deadline)
-        Thread.sleep(50)
-      assert(jobs.get() > 0, "listener wiring: a real count must register")
-      jobs.set(0)
-      val row = Streams.dedupStats(spark, docs, buckets).head()
+    // local relation; every field is metadata). The watch is validated by
+    // a positive control first so the zero can't be a wiring artifact.
+    JobWatch.on(spark) { w =>
+      w.measure(Tables.snapshot(spark, docs).count()) // positive control
+      assert(w.count > 0, "listener wiring: a real count must register")
+      val row = w.measure(Streams.dedupStats(spark, docs, buckets).head())
       assert(row.getAs[Long]("doc_rows") == docRows)
       assert(row.getAs[Long]("bucket_rows") == bktRows)
-      Thread.sleep(1000) // drain the async bus before the negative assert
-      assert(jobs.get() == 0,
-        s"dedupStats on governed tables must not launch Spark jobs, saw ${jobs.get()}")
-    } finally spark.sparkContext.removeSparkListener(l)
+      assert(w.count == 0,
+        s"dedupStats on governed tables must not launch Spark jobs:${w.describe}")
+    }
   }
 
   test("all-drop re-crawl batch: bounded job count, zero staging writes (r18)") {
@@ -1539,44 +1527,198 @@ class StreamIngestSpec extends AnyFunSuite {
     // COUNT, but the first re-crawl also seeds the fp layout cache)
     Streams.dedupIngestBatch(batch(1000), docs, buckets, "ts", "ck-jc",
       "id", "text", 5, 8, 2, 1L)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val writeJobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
-        val site = Option(js.properties.getProperty("callSite.short"))
-          .getOrElse(js.stageInfos.map(_.name.takeWhile(_ != '\n')).mkString("<-"))
-        sites.add(site)
-        if (site.contains("parquet") || site.contains("save")) {
-          writeJobs.incrementAndGet()
-        }
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      Streams.dedupIngestBatch(batch(2000), docs, buckets, "ts", "ck-jc",
-        "id", "text", 5, 8, 2, 2L)
-      Thread.sleep(1000) // drain the async bus
+    JobWatch.on(spark) { w =>
+      w.measure(Streams.dedupIngestBatch(batch(2000), docs, buckets, "ts",
+        "ck-jc", "id", "text", 5, 8, 2, 2L))
       // composition at r18: probe bucket-value collect (1), the labeled
       // -candidate collect with its AQE stage/broadcast sub-jobs (~7),
       // the fresh-empty check (1) — and NOTHING else. r18 removed the
       // two 0-row staging writes (commitEmptyStreamBatch) and the
       // per-batch parquet schema-inference job (memoized head schema);
       // the bound tolerates ±1 of AQE stage-count variation
-      assert(jobs.get() <= 12,
-        s"all-drop batch grew past its r18 job budget, saw ${jobs.get()}:\n  " +
-          sites.toArray.mkString("\n  "))
-      assert(writeJobs.get() == 0,
-        s"all-drop batch must stage NO parquet write, saw ${writeJobs.get()}")
-      // and the commit log still advanced exactly-once (a replay skips)
-      Streams.dedupIngestBatch(batch(2000), docs, buckets, "ts", "ck-jc",
-        "id", "text", 5, 8, 2, 2L)
-      assert(Tables.snapshot(spark, docs).count() == 30,
-        "only batch 0's docs may be retained")
-    } finally spark.sparkContext.removeSparkListener(l)
+      assert(w.count <= 12,
+        s"all-drop batch grew past its r18 job budget, saw ${w.count}:${w.describe}")
+      val writes = w.jobs.filter(j => j.site.contains("parquet") || j.site.contains("save"))
+      assert(writes.isEmpty,
+        s"all-drop batch must stage NO parquet write, saw ${writes.size}:${w.describe}")
+    }
+    // and the commit log still advanced exactly-once (a replay skips)
+    Streams.dedupIngestBatch(batch(2000), docs, buckets, "ts", "ck-jc",
+      "id", "text", 5, 8, 2, 2L)
+    assert(Tables.snapshot(spark, docs).count() == 30,
+      "only batch 0's docs may be retained")
+  }
+
+  /** Twelve random 6-letter words: distinct seeds share no shingles
+    * worth a band collision, so batches of them are collision-free.
+    */
+  private def randomWords(seed: Int): String = {
+    val r = new scala.util.Random(seed)
+    (0 until 12).map(_ => (0 until 6).map(_ => ('a' + r.nextInt(26)).toChar)
+      .mkString).mkString(" ")
+  }
+
+  test("fresh collision-free batch: bounded jobs and SQL executions, no verify") {
+    // the fresh-crawl steady state: each batch-sized frame is built once
+    // (one normalize pass carries ts/fp to the bucket rows, which are
+    // persisted once for the sidecar collect AND the append), the append's
+    // partition probe executes nothing, and an empty unverified in-batch
+    // candidate set skips verify and connected components
+    val docs = tmpDir("cfdoc") + "/docs.parquet"
+    val buckets = tmpDir("cfbkt") + "/buckets.parquet"
+    def batch(from: Int) = (from until from + 30)
+      .map(i => (i.toLong, 100L + i, randomWords(i))).toDF("id", "ts", "text")
+    Streams.dedupIngestBatch(batch(0), docs, buckets, "ts", "ck-cf",
+      "id", "text", 5, 8, 2, 0L)
+    Tables.compactIncremental(spark, buckets, Seq("band", "bucket"), "ts")
+    Streams.dedupIngestBatch(batch(100), docs, buckets, "ts", "ck-cf",
+      "id", "text", 5, 8, 2, 1L)
+    JobWatch.on(spark) { w =>
+      w.measure(Streams.dedupIngestBatch(batch(200), docs, buckets, "ts",
+        "ck-cf", "id", "text", 5, 8, 2, 2L))
+      // probe collect, fresh-empty check, in-batch candidate check, doc
+      // write, bucket-value collect, bucket write, file-bloom build
+      assert(w.executions.size <= 7,
+        s"fresh batch ran ${w.executions.size} SQL executions:${w.describe}")
+      // measured 16 jobs on local[4] (the parent shape ran ~35 in ~11
+      // executions); the bound tolerates ±1 of AQE stage-count variation
+      assert(w.count <= 17, s"fresh batch grew past its job budget:${w.describe}")
+      val writes = w.executions.filter(e =>
+        w.plan(e).exists(_.contains("InsertIntoHadoopFsRelationCommand")))
+      assert(writes.size == 2, s"one doc write + one bucket write:${w.describe}")
+      assert(!w.jobs.exists(_.site.contains("localCheckpoint")),
+        s"no candidates, yet connected components ran:${w.describe}")
+    }
+    assert(Tables.snapshot(spark, docs).count() == 90)
+    assert(Tables.snapshot(spark, buckets).count() == 90 * 8L)
+  }
+
+  test("batch with in-batch near-duplicates: bounded jobs, min id per cluster") {
+    val docs = tmpDir("ibdoc") + "/docs.parquet"
+    val buckets = tmpDir("ibbkt") + "/buckets.parquet"
+    def text(i: Int): String = randomWords(i)
+    def near(i: Int): String = randomWords(i).split(" ").init.mkString(" ") + " zz"
+    Streams.dedupIngestBatch((0 until 30).map(i => (i.toLong, 100L + i, text(i)))
+      .toDF("id", "ts", "text"), docs, buckets, "ts", "ck-ib",
+      "id", "text", 5, 8, 2, 0L)
+    Tables.compactIncremental(spark, buckets, Seq("band", "bucket"), "ts")
+    // one unmeasured batch re-reads the folded head's schema
+    Streams.dedupIngestBatch((30 until 60).map(i => (i.toLong, 100L + i, text(i)))
+      .toDF("id", "ts", "text"), docs, buckets, "ts", "ck-ib",
+      "id", "text", 5, 8, 2, 1L)
+    // 30 fresh docs, the first 5 each with a near-duplicate twin
+    val rows = (100 until 130).map(i => (i.toLong, 200L + i, text(i))) ++
+      (100 until 105).map(i => (i.toLong + 1000, 400L + i, near(i)))
+    JobWatch.on(spark) { w =>
+      w.measure(Streams.dedupIngestBatch(rows.toDF("id", "ts", "text"), docs,
+        buckets, "ts", "ck-ib", "id", "text", 5, 8, 2, 2L))
+      // (measured 46 on local[4]: 16 of them connected components'
+      // two propagation rounds), ±AQE stage-count variation
+      assert(w.count <= 48, s"near-dup batch grew past its job budget:${w.describe}")
+    }
+    assert(Tables.snapshot(spark, docs).select("id").as[Long].collect().toSet ==
+      ((0L until 60L) ++ (100L until 130L)).toSet)
+  }
+
+  test("a failed head-footer read is not memoized: the next read detects fp") {
+    // ADVICE r18: the head-schema memo cached a failed footer read (None)
+    // for the generation's whole life, so one transient read error pinned
+    // the table to the jaccard tier. Failure injected by moving the head
+    // file away for the first read only.
+    val docs = tmpDir("hfdoc") + "/docs.parquet"
+    val buckets = tmpDir("hfbkt") + "/buckets.parquet"
+    Streams.dedupIngestBatch((0 until 5).map(i => (i.toLong, 100L + i,
+      randomWords(500 + i))).toDF("id", "ts", "text"), docs, buckets, "ts",
+      "ck-hf", "id", "text", 5, 8, 2, 0L)
+    val head = Tables.liveFileNames(spark, buckets).flatMap(_.headOption)
+      .getOrElse(fail("the first batch must leave a live bucket file"))
+    val file = new java.io.File(buckets, head)
+    val away = new java.io.File(buckets + ".away")
+    assert(file.renameTo(away))
+    try assert(!Streams.bucketHeadHasFp(spark, buckets, Some(head)),
+      "an unreadable head answers 'no fp' for this call")
+    finally assert(away.renameTo(file))
+    assert(Streams.bucketHeadHasFp(spark, buckets, Some(head)),
+      "the failed read must not be memoized: the fp layout is detected now")
+  }
+
+  /** The pre-change bucket-row composition for the text twin: banding
+    * from raw text plus the fingerprint, over the survivors.
+    */
+  private def composedTextRows(docsDf: org.apache.spark.sql.DataFrame) =
+    graft.dedup.Dedup.bandBuckets(docsDf, "id", "text", 5, 8, 2)
+      .join(docsDf.select(col("id"), col("ts"),
+        graft.text.TextOps.fingerprint(col("text")).as("fp")), Seq("id"))
+      .select("id", "band", "bucket", "ts", "fp")
+
+  private def rowSet(df: org.apache.spark.sql.DataFrame) =
+    df.select("id", "band", "bucket", "ts", "fp").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+      .toSet
+
+  test("text landing twin: docs and bucket rows equal the pre-change composition") {
+    val docs = tmpDir("eqdoc") + "/docs.parquet"
+    val buckets = tmpDir("eqbkt") + "/buckets.parquet"
+    def text(i: Int): String = (0 until 12).map(w => s"e${w}q$i").mkString(" ")
+    def near(i: Int): String = ((0 until 11).map(w => s"e${w}q$i") :+ "zz").mkString(" ")
+    val stored = (0 until 10).map(i => (i.toLong, 100L + i, text(i))) :+
+      ((50L, 150L, "ab")) // too short to shingle: no bucket rows, survives
+    val batch1 = Seq(
+      (1000L, 200L, text(0)), (1001L, 201L, text(1)), // stored exact dups
+      (1002L, 202L, near(2)), (1003L, 203L, near(3)), // stored near-dups
+      (1004L, 204L, text(20)), (1005L, 205L, near(20)), // in-batch pair
+      (1006L, 206L, text(21)), (1007L, 207L, "cd")) // unique, short
+    def land(rows: Seq[(Long, Long, String)], bid: Long): Unit =
+      Streams.dedupIngestBatch(rows.toDF("id", "ts", "text"), docs, buckets,
+        "ts", "ck-eq", "id", "text", 5, 8, 2, bid)
+    land(stored, 0L)
+    land(batch1, 1L)
+    val keep = Set(1004L, 1006L, 1007L)
+    val survivors = (stored ++ batch1.filter(r => keep(r._1))).toDF("id", "ts", "text")
+    assert(Tables.snapshot(spark, docs).select("id").as[Long].collect().toSet ==
+      survivors.select("id").as[Long].collect().toSet)
+    assert(Tables.manifest(spark, buckets).nonEmpty)
+    val got = rowSet(Tables.snapshot(spark, buckets))
+    assert(got == rowSet(composedTextRows(survivors)),
+      "bucket rows diverged from bandBuckets + fingerprint over the survivors")
+    assert(got.map(_._1) == Set(0L, 1L, 2L, 3L, 4L, 5L, 6L, 7L, 8L, 9L, 1004L, 1006L))
+  }
+
+  test("embedding landing twin: docs and bucket rows equal the pre-change composition") {
+    val docs = tmpDir("eedoc") + "/docs.parquet"
+    val buckets = tmpDir("eebkt") + "/buckets.parquet"
+    def v(xs: Double*): Seq[Double] = xs
+    val stored = Seq((1L, 100L, v(1, 0, 0, 0)), (2L, 101L, v(0, 1, 0, 0)),
+      (3L, 102L, v(0, 0, 1, 0)))
+    val batch1 = Seq(
+      (10L, 200L, v(1, 0, 0, 0)), // stored exact dup (tier 1)
+      (11L, 201L, v(0.03, 1, 0, 0)), // stored near-dup (tier 2)
+      (12L, 202L, v(0, 0, 0, 1)), (13L, 203L, v(0, 0.01, 0, 1.02)), // in-batch pair
+      (14L, 204L, v(1, 1, 1, 1)), // unique
+      (15L, 205L, v(0, 0, 0, 0))) // zero norm: no bucket rows, survives
+    def land(rows: Seq[(Long, Long, Seq[Double])], bid: Long): Unit =
+      Streams.dedupIngestEmbeddingBatch(rows.toDF("id", "ts", "emb"), docs,
+        buckets, "ts", "ck-eeq", "id", "emb", dim = 4, minCos = 0.95,
+        tables = 8, bits = 16, batchId = bid)
+    land(stored, 0L)
+    land(batch1, 1L)
+    val keep = Set(12L, 14L, 15L)
+    val survivors = (stored ++ batch1.filter(r => keep(r._1))).toDF("id", "ts", "emb")
+    assert(Tables.snapshot(spark, docs).select("id").as[Long].collect().toSet ==
+      survivors.select("id").as[Long].collect().toSet)
+    graft.sqlext.GraftFunctions.register(spark)
+    val vecs = survivors.select(col("id"), col("ts"),
+      col("emb").cast("array<double>").as("v"))
+      .filter(sqrt(aggregate(transform(col("v"), x => x * x), lit(0.0),
+        (a, x) => a + x)) > 0)
+    val composed = vecs.select(col("id"), col("ts"), xxhash64(col("v")).as("fp"),
+        posexplode(call_function("cs_rhp_sig", col("v"), lit(4), lit(16), lit(8))))
+      .select(col("id"), col("pos").as("band"), col("col").as("bucket"),
+        col("ts"), col("fp"))
+    val got = rowSet(Tables.snapshot(spark, buckets))
+    assert(got == rowSet(composed),
+      "bucket rows diverged from cs_rhp_sig + vector fingerprint over the survivors")
+    assert(got.map(_._1) == Set(1L, 2L, 3L, 12L, 14L))
   }
 
   test("streaming ingest retries through transient lease contention instead of dying") {

@@ -2101,6 +2101,29 @@ class TablesSpec extends AnyFunSuite {
     assert(Tables.stagedPartCount(0, BigInt(1024), target) == 1)
   }
 
+  test("append of an un-persisted shuffle frame runs its jobs only under the write") {
+    // the staged-file-count probe reads the input's PLAN: executing an
+    // adaptive input to count its partitions ran every shuffle stage
+    // outside any SQL execution, and the write then ran them again
+    val path = tmp("shufprobe")
+    val agg = spark.range(0, 4000).select((col("id") % 97).as("k"), col("id"))
+      .groupBy("k").agg(max(col("id")).as("ts"), count(lit(1)).as("n"))
+    JobWatch.on(spark) { w =>
+      w.measure(Tables.append(agg, path, "ts", lit(0L)))
+      assert(w.count > 0, "the write itself must register")
+      val outside = w.jobs.filter(_.execution.isEmpty)
+      assert(outside.isEmpty, s"jobs ran outside any SQL execution:${w.describe}")
+      val nonWrite = w.executions.filterNot(e =>
+        w.plan(e).exists(_.contains("InsertIntoHadoopFsRelationCommand")))
+      assert(nonWrite.isEmpty,
+        s"executions other than the write launched jobs ($nonWrite):${w.describe}")
+    }
+    assert(Tables.snapshot(spark, path).count() == 97)
+    // and the staged files never outnumber the input's partitions
+    assert(Tables.manifest(spark, path).exists(m =>
+      m.files.nonEmpty && m.files.size <= Tables.plannedPartitions(agg)))
+  }
+
   test("commitEmptyStreamBatch reclaims expired retired files (all-drop steady state, r18)") {
     val path = tmp("emptyreclaim")
     Tables.load((0L until 500L).map(i => (i, i * 1.0)).toDF("ts", "v"),
