@@ -444,20 +444,28 @@ object Tables {
     * scan (ntzPrunedRead below). The preferred scale path is still the
     * reference's own model — ingest via Tables.load (normalized int64-ns,
     * time-clustered) and range-scan the loaded table.
+    *
+    * Job budget: on a governed table, constructing the frame launches 0
+    * Spark jobs — one manifest + listing read, the schema from the
+    * memoized head footer ([[liveFrame]]).
     */
   def rangeScan(spark: SparkSession, sfDir: String, name: String,
                 fromNs: Long, tillNs: Long): DataFrame = {
-    val raw = readRaw(spark, sfDir, name)
-    val dt = raw.schema("ts").dataType
+    val path = s"$sfDir/$name.parquet"
     // engine-written layouts carry a ts manifest: file-level pruning from
     // ONE sidecar read instead of O(files) driver footer RPCs — and it
-    // works for every ts encoding, not only the NTZ special case
-    val base = manifestPrunedRead(spark, s"$sfDir/$name.parquet", raw.schema,
-      fromNs, tillNs).getOrElse(dt match {
-      case TimestampNTZType =>
-        ntzPrunedRead(spark, s"$sfDir/$name.parquet", raw.schema, fromNs, tillNs)
-      case _ => raw
-    })
+    // works for every ts encoding, not only the NTZ special case. The
+    // pruned frame is built from that same view (liveFrame), so a
+    // governed range read never builds the whole-table frame
+    val base = governedLive(spark, path, Some("ts")).filter(_.files.nonEmpty) match {
+      case Some(live) => liveFrame(spark, live, live.overlapping(fromNs, tillNs))
+      case None =>
+        val raw = readRaw(spark, sfDir, name)
+        if (raw.schema("ts").dataType == TimestampNTZType)
+          ntzPrunedRead(spark, path, raw.schema, fromNs, tillNs)
+        else raw
+    }
+    val dt = base.schema("ts").dataType
     normalizeNsTs(base.filter(col("ts") >= tsLit(fromNs, dt) &&
       col("ts") < tsLit(tillNs, dt)))
   }
@@ -502,7 +510,7 @@ object Tables {
       import scala.collection.parallel.CollectionConverters._
       parts.toSeq.par.filter(s => overlaps(s.getPath)).seq
     }
-    readKeptFiles(spark, schema, kept.map(_.getPath.toString), kept.map(_.getLen).sum)
+    filesFrame(spark, schema, kept, resize = true)
   }
 
   /** Part-file predicate shared by every direct-listing consumer. */
@@ -658,9 +666,7 @@ object Tables {
     val hp = new Path(path)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = hp.getFileSystem(conf)
-    if (!scala.util.Try(fs.getFileStatus(hp)).toOption.exists(_.isDirectory))
-      return None
-    liveEntries(fs, hp, None).flatMap { m =>
+    governedLive(spark, path).flatMap { m =>
       // the manifest carries each file's footer row count (recorded at
       // write time, review r16) — the common case is ZERO per-file RPCs;
       // entries from pre-r16 manifests or stat-less writes fall back to
@@ -729,10 +735,9 @@ object Tables {
                                      fromNs: Long, tillNs: Long,
                                      ts: String = "ts"): DataFrame = {
     val till = if (tillNs == Long.MaxValue) Long.MaxValue else tillNs + 1
-    liveFileNames(spark, path).filter(_.nonEmpty).flatMap { live =>
-      manifestPrunedRead(spark, path, fileSchema(spark, new Path(path, live.head)),
-        fromNs, till, ts)
-    }.getOrElse(snapshot(spark, path))
+    governedLive(spark, path, Some(ts)).filter(_.files.nonEmpty)
+      .map(live => liveFrame(spark, live, live.overlapping(fromNs, till)))
+      .getOrElse(snapshot(spark, path))
   }
 
   /** One data file's int64-column min/max plus its footer row count, from
@@ -851,20 +856,6 @@ object Tables {
     try scala.io.Source.fromInputStream(in, "UTF-8").mkString
     finally in.close()
   }
-
-  /** Read exactly `paths` under `schema`, with readRaw's undersized-source
-    * re-split applied to the KEPT bytes; no paths (everything pruned) is
-    * an empty frame. Shared tail of both file-pruning readers.
-    */
-  private def readKeptFiles(spark: SparkSession, schema: StructType,
-                            paths: Seq[String], bytes: Long): DataFrame =
-    if (paths.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else {
-      val df = spark.read.schema(schema).parquet(paths: _*)
-      val target = sizedPartsForBytes(spark, bytes)
-      if (df.rdd.getNumPartitions < target) df.repartition(target) else df
-    }
 
   /** A partition subdirectory (non-hidden child dir) means the layout is
     * nested: per-file reads would drop directory-encoded columns and
@@ -1218,13 +1209,8 @@ object Tables {
     * sidecars, [[graft.streaming.FileBlooms]]) key on these names.
     */
   private[graft] def liveFileNames(spark: SparkSession,
-                                   path: String): Option[Seq[String]] = {
-    val hp = new Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (scala.util.Try(fs.getFileStatus(hp)).toOption.exists(_.isDirectory))
-      liveEntries(fs, hp, None).map(_.files.map(_.name))
-    else None
-  }
+                                   path: String): Option[Seq[String]] =
+    governedLive(spark, path).map(_.names)
 
   private def readManifest(fs: FileSystem, dir: Path): Option[TsManifest] = {
     val p = new Path(dir, ManifestName)
@@ -1358,7 +1344,7 @@ object Tables {
     * only a STABLE mismatch is a real foreign modification.
     */
   private def liveEntries(fs: FileSystem, hp: Path,
-                          tsName: Option[String]): Option[TsManifest] = {
+                          tsName: Option[String]): Option[LiveSet] = {
     val maxRetries = 5
     var attempt = 0
     while (true) {
@@ -1405,7 +1391,7 @@ object Tables {
             scala.util.Try(org.json4s.jackson.Serialization.read[AppendMarker](
               readSmallText(fs, appendMarkerPath(hp.toString)))).toOption
               .map(_.files.toSet).getOrElse(Set.empty)
-          if (manifestConsistent(m, files, genNames ++ appendNames))
+          if (manifestConsistent(m, files, genNames ++ appendNames)) {
             // an IN-FLIGHT append batch's files may already be in the
             // manifest (the extension lands before a stream batch's
             // commit record, and a crash in between rolls the batch
@@ -1416,9 +1402,13 @@ object Tables {
             // the commit record / the plain append's completion. The gen
             // marker is the OPPOSITE case — its manifest is written only
             // AFTER the move, and rolls FORWARD — so its names stay.
-            return Some(
+            val live =
               if (!m.files.exists(e => appendNames(e.name))) m
-              else m.copy(files = m.files.filterNot(e => appendNames(e.name))))
+              else m.copy(files = m.files.filterNot(e => appendNames(e.name)))
+            val byName = files.map(s => s.getPath.getName -> s).toMap
+            return Some(LiveSet(hp, live,
+              live.files.map(e => e.name -> byName(e.name)).toMap))
+          }
           val mNow = readManifest(fs, hp)
           if (mNow == mOpt || attempt >= maxRetries) {
             if (m.retired.nonEmpty) sys.error(
@@ -1435,6 +1425,127 @@ object Tables {
     None // unreachable
   }
 
+  /** A governed table's live generation as ONE [[liveEntries]] evaluation
+    * saw it: the consistency-checked manifest plus the listing's status of
+    * every live file, so a frame built from it ([[liveFrame]]) lists
+    * nothing again.
+    */
+  private[graft] final case class LiveSet(dir: Path, manifest: TsManifest,
+                                          status: Map[String, FileStatus]) {
+    def files: Seq[TsFileEntry] = manifest.files
+    def retired: Seq[RetiredEntry] = manifest.retired
+    def names: Seq[String] = files.map(_.name)
+    /** Live files whose recorded ts range can overlap [fromNs, tillNs);
+      * stat-less entries are kept (pruning never changes results).
+      */
+    def overlapping(fromNs: Long, tillNs: Long): Seq[String] =
+      files.filter { e =>
+        (e.minNs, e.maxNs) match {
+          case (Some(mn), Some(mx)) => mx >= fromNs && mn < tillNs
+          case _ => true
+        }
+      }.map(_.name)
+  }
+
+  /** The live view of `path` when it is a manifest-governed directory
+    * (see [[liveEntries]]; `tsName` additionally requires the manifest's ts
+    * column), None for ungoverned or absent paths.
+    */
+  private[graft] def governedLive(spark: SparkSession, path: String,
+                                  tsName: Option[String] = None): Option[LiveSet] = {
+    val hp = new Path(path)
+    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val isDir =
+      try fs.getFileStatus(hp).isDirectory
+      catch { case _: java.io.FileNotFoundException => false }
+    if (isDir) liveEntries(fs, hp, tsName) else None
+  }
+
+  /** The live generation's byte total for a governed dir, None otherwise. */
+  private def governedLiveBytes(spark: SparkSession, path: String): Option[Long] =
+    governedLive(spark, path).map(_.files.map(_.bytes).sum)
+
+  /** Live-generation schema memo: table path → (head file name, schema).
+    * Data files are immutable and uniquely named, so the schema read from
+    * a given head never changes, and any rewrite of the layout changes
+    * the head name — the entry is then REPLACED, never accumulated per
+    * generation. Only successful footer reads are stored.
+    */
+  private val headSchemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]()
+
+  /** The schema of the governed table at `dir` whose live head file is
+    * `head`: one driver-side footer read per (table, head) through
+    * [[fileSchema]], then memoized. Engine layouts keep one schema per
+    * table (an existing table always keeps its own layout), so the head's
+    * schema is the live generation's. An unreadable footer THROWS — a
+    * guessed schema would silently change the layout a writer appends.
+    */
+  private[graft] def headSchema(spark: SparkSession, dir: Path,
+                                head: String): StructType = {
+    val key = dir.toString
+    Option(headSchemas.get(key)).filter(_._1 == head).map(_._2).getOrElse {
+      val s = fileSchema(spark, new Path(dir, head))
+      headSchemas.put(key, (head, s))
+      s
+    }
+  }
+
+  /** Spark's file-status cache, primed with statuses the caller already
+    * listed: the file index built over them finds every root path here
+    * and lists nothing (no driver round-trips, and no distributed listing
+    * job past `parallelPartitionDiscoveryThreshold` files). A refresh
+    * clears it, so a refreshed index lists the filesystem as usual.
+    */
+  private final class KnownStatuses(files: Seq[FileStatus])
+      extends org.apache.spark.sql.execution.datasources.FileStatusCache {
+    private val byPath = new java.util.concurrent.ConcurrentHashMap[Path, Array[FileStatus]]()
+    files.foreach(s => byPath.put(s.getPath, Array(s)))
+    override def getLeafFiles(path: Path): Option[Array[FileStatus]] =
+      Option(byPath.get(path))
+    override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit =
+      byPath.put(path, leafFiles)
+    override def invalidateAll(): Unit = byPath.clear()
+  }
+
+  /** Exactly `files` read under `schema`, with no Spark job at
+    * construction: the relation `spark.read.schema(schema).parquet(files)`
+    * resolves to, over a file index primed with the given statuses.
+    * `resize` applies the byte-proportional re-split of undersized
+    * sources ([[sizedPartsForBytes]]); no files is an empty LOCAL
+    * relation, which the optimizer propagates (a join or aggregate over
+    * it plans no scan and launches no job).
+    */
+  private def filesFrame(spark: SparkSession, schema: StructType,
+                         files: Seq[FileStatus], resize: Boolean): DataFrame =
+    if (files.isEmpty)
+      spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](), schema)
+    else {
+      import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex}
+      val index = new InMemoryFileIndex(spark, files.map(_.getPath), Map.empty,
+        Some(schema), new KnownStatuses(files))
+      val df = spark.baseRelationToDataFrame(HadoopFsRelation(index,
+        index.partitionSchema, schema, None,
+        new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+        Map.empty)(spark))
+      val target = sizedPartsForBytes(spark, files.map(_.getLen).sum)
+      if (resize && df.rdd.getNumPartitions < target) df.repartition(target) else df
+    }
+
+  /** The live files `names` of a governed table as a DataFrame, built from
+    * the manifest view alone: file statuses from `live`'s listing, schema
+    * from the live head's footer ([[headSchema]]) unless `schema` is
+    * given. Launches no Spark job — no listing job, no schema-inference
+    * job. Every governed multi-file read (snapshot, rangeScan, the
+    * compact/delete rewrite inputs, the landing probe) is built here.
+    */
+  private[graft] def liveFrame(spark: SparkSession, live: LiveSet,
+                               names: Seq[String], resize: Boolean = true,
+                               schema: Option[StructType] = None): DataFrame =
+    filesFrame(spark,
+      schema.getOrElse(headSchema(spark, live.dir, live.files.head.name)),
+      names.map(live.status), resize)
+
   /** The live generation of `path` as a DataFrame: manifest-governed
     * directories serve EXACTLY the manifest's live files — grace-retained
     * retired files excluded — so a read taken after a maintenance op
@@ -1443,16 +1554,10 @@ object Tables {
     * contract for managed tables: a plain `spark.read.parquet(dir)`
     * during the grace window sees retired files too (the same rule every
     * table format imposes — read through the engine, not the directory).
+    *
+    * Job budget: constructing the frame of a governed table with live
+    * files launches 0 Spark jobs ([[liveFrame]]).
     */
-  /** The live generation's byte total for a governed dir, None otherwise. */
-  private def governedLiveBytes(spark: SparkSession, path: String): Option[Long] = {
-    val hp = new Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(hp) && fs.getFileStatus(hp).isDirectory)
-      liveEntries(fs, hp, None).map(_.files.map(_.bytes).sum)
-    else None
-  }
-
   def snapshot(spark: SparkSession, path: String): DataFrame =
     snapshotWithBytes(spark, path)._1
 
@@ -1474,36 +1579,24 @@ object Tables {
   private[graft] def snapshotWithBytes(spark: SparkSession,
                                        path: String,
                                        resize: Boolean = true): (DataFrame, Option[Long]) = {
-    val hp = new Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val governed =
-      if (fs.exists(hp) && fs.getFileStatus(hp).isDirectory)
-        liveEntries(fs, hp, None).map { m =>
-          val bytes = m.files.map(_.bytes).sum
-          if (m.files.isEmpty)
-            // an EMPTY live set still needs a schema. Directory inference
-            // covers the common case (grace-retained files still on
-            // disk); a fully-reclaimed empty table has no footer left
-            // anywhere — fail with the table's actual state instead of
-            // AnalysisException's misleading "unable to infer schema"
-            // (ADVICE r12, low)
-            (spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              scala.util.Try(spark.read.parquet(path).schema).getOrElse(
-                sys.error(s"table $path is governed but EMPTY (its live " +
-                  "set has zero files and no parquet footer remains to " +
-                  "derive a schema from) — load data before reading, or " +
-                  "truncate it"))), Some(bytes))
-          else {
-            val df = spark.read.parquet(
-              m.files.map(e => new Path(hp, e.name).toString): _*)
-            val target = sizedPartsForBytes(spark, bytes)
-            (if (resize && df.rdd.getNumPartitions < target) df.repartition(target)
-             else df,
-              Some(bytes))
-          }
-        }
-      else None
+    val governed = governedLive(spark, path).map { live =>
+      val bytes = live.files.map(_.bytes).sum
+      if (live.files.isEmpty)
+        // an EMPTY live set still needs a schema. Directory inference
+        // covers the common case (grace-retained files still on
+        // disk); a fully-reclaimed empty table has no footer left
+        // anywhere — fail with the table's actual state instead of
+        // AnalysisException's misleading "unable to infer schema"
+        // (ADVICE r12, low)
+        (spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          scala.util.Try(spark.read.parquet(path).schema).getOrElse(
+            sys.error(s"table $path is governed but EMPTY (its live " +
+              "set has zero files and no parquet footer remains to " +
+              "derive a schema from) — load data before reading, or " +
+              "truncate it"))), Some(bytes))
+      else (liveFrame(spark, live, live.names, resize), Some(bytes))
+    }
     governed.getOrElse((spark.read.parquet(path), None))
   }
 
@@ -1775,31 +1868,6 @@ object Tables {
     } else if (fs.exists(tmp)) fs.delete(tmp, true)
   }
 
-  /** File-level ts pruning from the manifest sidecar: one small metadata
-    * read replaces the O(files) driver footer pass, for ANY ts encoding.
-    * Returns None when there is no trustworthy manifest (absent, stale,
-    * mismatched ts column, or a nested layout) — callers fall back to
-    * footer- or scan-level pruning. Entries without stats are kept.
-    */
-  private def manifestPrunedRead(spark: SparkSession, path: String,
-                                 schema: StructType,
-                                 fromNs: Long, tillNs: Long,
-                                 tsName: String = "ts"): Option[DataFrame] = {
-    val hp = new Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hp) || fs.getFileStatus(hp).isFile) return None
-    liveEntries(fs, hp, Some(tsName)).map { m =>
-      val kept = m.files.filter { e =>
-        (e.minNs, e.maxNs) match {
-          case (Some(mn), Some(mx)) => mx >= fromNs && mn < tillNs
-          case _ => true
-        }
-      }
-      readKeptFiles(spark, schema,
-        kept.map(e => new Path(hp, e.name).toString), kept.map(_.bytes).sum)
-    }
-  }
-
   /** TABLE_load: ingest range-clustered and sorted by (keys, ts) — the
     * reference's `order by <timestamp>` load (imcs.c:4265), which pays a
     * B-tree build per column at ingest so that range scans descend instead
@@ -1888,25 +1956,24 @@ object Tables {
       writeManifest(spark, path, ts)
       liveEntries(fs, hp, Some(ts))
     }
-    val (liveNames, liveBytes, carryRetired) = mOpt match {
-      case Some(m) => (m.files.map(_.name), m.files.map(_.bytes).sum, m.retired)
-      case None => (listing.map(_.getPath.getName).toSeq,
-        listing.map(_.getLen).sum, Seq.empty[RetiredEntry])
-    }
+    val live = mOpt.getOrElse(LiveSet(hp,
+      TsManifest(1, ts, listing.toSeq.map(s =>
+        TsFileEntry(s.getPath.getName, s.getLen, None, None, loaded = true))),
+      listing.map(s => s.getPath.getName -> s).toMap))
+    val liveNames = live.names
     // an EMPTY live set (every row deleted, retired files reclaimed) has
-    // nothing to fold — and an empty varargs parquet read throws rather
-    // than no-opping (ADVICE r12, low)
+    // nothing to fold (ADVICE r12, low)
     if (liveNames.isEmpty) return (0, 0)
+    val liveBytes = live.files.map(_.bytes).sum
     val parts = math.max(1L, (liveBytes + targetBytes - 1) / targetBytes).toInt
     val tmp = genTmpPath(path)
     if (fs.exists(tmp)) fs.delete(tmp, true)
-    writeClustered(
-      spark.read.parquet(liveNames.map(n => new Path(hp, n).toString): _*),
+    writeClustered(liveFrame(spark, live, liveNames, resize = false),
       tmp.toString, (keys :+ ts).map(col), parts)
     crashPoint("full:staged")
     val after = installGeneration(spark, fs, hp, tmp, ts,
       replaced = liveNames, carryLive = Seq.empty,
-      carryRetired = carryRetired, tag = "full")
+      carryRetired = live.retired, tag = "full")
     reclaimRetired(fs, hp, retireGraceMs)
     invalidateRead(spark, path)
     (liveNames.length, after.length)
@@ -2182,6 +2249,9 @@ object Tables {
     * S3A — viable, unlike the directory renames the pre-r12 swap needed),
     * but on object stores a table format with metadata swaps remains the
     * better host for compaction.
+    *
+    * Job budget: on a governed table, the only Spark jobs are those of
+    * the staged rewrite's write; building its input launches none.
     */
   def compactIncremental(spark: SparkSession, path: String, keys: Seq[String],
                          ts: String, targetBytes: Long = 128L << 20): (Int, Int) = {
@@ -2205,8 +2275,7 @@ object Tables {
     val parts = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
     val tmp = genTmpPath(path)
     if (fs.exists(tmp)) fs.delete(tmp, true)
-    writeClustered(
-      spark.read.parquet(hot.map(e => new Path(hp, e.name).toString): _*),
+    writeClustered(liveFrame(spark, m, hot.map(_.name), resize = false),
       tmp.toString, (keys :+ ts).map(col), parts)
     crashPoint("incr:staged")
     val after = installGeneration(spark, fs, hp, tmp, ts,
@@ -2725,7 +2794,7 @@ object Tables {
     *    rows the filter deletes; r13 review finding #2);
     *  - LTZ → Instant / java.sql.Timestamp epoch ns;
     *  - integral → the engine's int64-ns convention, pass-through.
-    * One local one-row job (literals only, no table scan). None when a
+    * Evaluated on the driver with no Spark job. None when a
     * bound is NULL, not locally evaluable, or of an unhandled type
     * (dates) — the caller falls back to the conservative full rewrite,
     * never to a wrong prune.
@@ -2761,7 +2830,10 @@ object Tables {
       dt match {
         case TimestampType | TimestampNTZType |
              LongType | IntegerType | ShortType | ByteType =>
-          val row = spark.range(1)
+          // over a one-row LOCAL relation the optimizer folds the
+          // projection to a LocalRelation: evaluated on the driver, no job
+          val row = spark.createDataFrame(
+            java.util.List.of(org.apache.spark.sql.Row.empty), new StructType())
             .select(from.cast(dt).as("f"), till.cast(dt).as("t")).head()
           for (f <- toNs(row.get(0)); t <- toNs(row.get(1))) yield (f, t)
         case _ => None
@@ -2780,6 +2852,9 @@ object Tables {
     * Stat-less manifest entries (unreadable footers) conservatively join
     * the rewrite set; non-literal bounds fall back to the full rewrite.
     * A delete touching NOTHING (no file intersects) is a pure no-op.
+    *
+    * Job budget: with literal bounds, the only Spark jobs are those of
+    * the rewrite's write; a delete touching no file launches none.
     */
   def deleteRange(spark: SparkSession, path: String, ts: String,
                   from: Column, till: Column): Unit = {
@@ -2799,29 +2874,26 @@ object Tables {
       writeManifest(spark, path, ts)
       liveEntries(fs, p, Some(ts))
     }
-    def dataFiles: Seq[FileStatus] = fs.listStatus(p)
-      .filter(s => s.isFile && isDataFile(s.getPath.getName)).toSeq
-    val (liveFiles, carryRetired) = mOpt match {
-      case Some(m) => (m.files, m.retired)
-      case None =>
-        (scanEntries(spark.sparkContext.hadoopConfiguration, ts, dataFiles,
-          loaded = true), Seq.empty[RetiredEntry])
+    val live = mOpt.getOrElse {
+      val dataFiles = fs.listStatus(p)
+        .filter(s => s.isFile && isDataFile(s.getPath.getName)).toSeq
+      LiveSet(p, TsManifest(1, ts, scanEntries(spark.sparkContext.hadoopConfiguration,
+        ts, dataFiles, loaded = true)), dataFiles.map(s => s.getPath.getName -> s).toMap)
     }
-    // an EMPTY live set has nothing to delete — and an empty varargs
-    // parquet read throws rather than no-opping (ADVICE r12, low)
+    val liveFiles = live.files
+    // an EMPTY live set has nothing to delete (ADVICE r12, low)
     if (liveFiles.isEmpty) return
     // the manifest-pruned split (O(affected range), see Scaladoc): bounds
     // on the manifest's ns scale come from the ts column's OWN type; a
     // file is carried only when its recorded bounds prove it disjoint
     // from the INCLUSIVE [from, till] — stat-less entries and
-    // unevaluable bounds conservatively rewrite. ONE footer gives the
-    // type (engine layouts are schema-uniform): probing through a read
-    // over every live file would pay an O(files) driver file-index pass
-    // in the op sold as O(range) (r13 review finding #7)
-    val dtTs = scala.util.Try(
-      spark.read.parquet(new Path(p, liveFiles.head.name).toString)
-        .schema.fields.find(_.name.equalsIgnoreCase(ts)).map(_.dataType)
-    ).toOption.flatten
+    // unevaluable bounds conservatively rewrite. The type comes from the
+    // memoized head-footer schema (engine layouts are schema-uniform):
+    // probing through a read over every live file would pay an O(files)
+    // driver file-index pass in the op sold as O(range) (r13 review
+    // finding #7)
+    val dtTs = scala.util.Try(headSchema(spark, p, liveFiles.head.name)).toOption
+      .flatMap(_.fields.find(_.name.equalsIgnoreCase(ts)).map(_.dataType))
     val bounds = dtTs.flatMap(dt => deleteBoundsNs(spark, dt, from, till))
     val (carried, rewrite) = bounds match {
       case Some((fromNs, tillNs)) => liveFiles.partition { e =>
@@ -2841,13 +2913,13 @@ object Tables {
     // negated conjunction is NULL under three-valued logic and filter
     // would silently DELETE them. No pre-materialization needed — the
     // source stays untouched until the install, strictly after this write.
-    spark.read.parquet(rewrite.map(e => new Path(p, e.name).toString): _*)
+    liveFrame(spark, live, rewrite.map(_.name), resize = false)
       .filter(col(ts).isNull || !(col(ts) >= from && col(ts) <= till))
       .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     crashPoint("del:staged")
     installGeneration(spark, fs, p, tmp, ts,
       replaced = rewrite.map(_.name), carryLive = carried,
-      carryRetired = carryRetired, tag = "del")
+      carryRetired = live.retired, tag = "del")
     reclaimRetired(fs, p, retireGraceMs)
     invalidateRead(spark, path)
     }
@@ -3716,8 +3788,10 @@ object Tables {
     val dt = ct.schema.fields.find(_.name.equalsIgnoreCase(ts)).map(_.dataType)
       .getOrElse(sys.error(s"rangeScanBucketed: sort column $ts missing from " +
         s"$table's schema"))
-    val base = manifestPrunedRead(spark, new Path(ct.location).toString,
-      ct.schema, fromNs, tillNs, tsName = ts).getOrElse(spark.table(table))
+    val base = governedLive(spark, new Path(ct.location).toString, Some(ts))
+      .map(live => liveFrame(spark, live, live.overlapping(fromNs, tillNs),
+        schema = Some(ct.schema)))
+      .getOrElse(spark.table(table))
     base.filter(col(ts) >= tsLit(fromNs, dt) && col(ts) < tsLit(tillNs, dt))
   }
 

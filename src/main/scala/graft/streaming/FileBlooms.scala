@@ -453,10 +453,10 @@ private[graft] object FileBlooms {
     lo < sorted.length && sorted(lo) <= mx
   }
 
-  /** The file paths the verify scan must read for `positives`, given the
-    * table's already-resolved LIVE file list (the probe resolves the
-    * manifest once and shares it between this prune pass and its
-    * empty-frame schema): every live file whose RANGE overlaps a positive
+  /** The live file names the verify scan must read for `positives`, given
+    * the table's already-resolved LIVE file list (the probe resolves the
+    * manifest once and builds every stored-side frame from it): every
+    * live file whose RANGE overlaps a positive
     * and whose BLOOM might contain one, plus every live file without a
     * loadable entry at the deciding level (always kept — the safe
     * default). None when pruning cannot run at all (disabled, no sidecar
@@ -499,6 +499,6 @@ private[graft] object FileBlooms {
           case None => true // un-bloomed file: must be read
         }
       }
-    Some(kept.map(n => new Path(hp, n).toString))
+    Some(kept)
   }
 }

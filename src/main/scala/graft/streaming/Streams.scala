@@ -557,55 +557,17 @@ object Streams {
     * doc append, and applies the bucket append — exactly-once for both
     * tables whatever the interleave.
     */
-  /** A collected ts VALUE as epoch-ns, for the candidate-window bounds of
-    * the verified landing-dedup fetch — the dedup tables' ts column is
-    * long epoch-ns by the engine convention, but the ingest accepts
-    * TIMESTAMP/NTZ columns too (same contract as ingestAppendRetained).
-    * None for shapes with no exact ns reading — the caller then skips
-    * the slice and reads the full snapshot (degraded, never wrong).
-    */
-  /** Memoized bucket-table fp-layout answers, keyed by TABLE PATH alone,
-    * holding (head file name, answer): data files are immutable and
-    * uniquely named, so the answer for a given head never changes, and
-    * any maintenance that rewrites the layout changes the head name —
-    * the lookup then REPLACES the entry instead of accumulating one
-    * Boolean per generation forever (ADVICE r16: the old "<path>#<head>"
-    * keying grew with every fold/retention rewrite on a long-running
-    * stream — a slow, unbounded driver leak).
-    */
-  private val fpLayoutCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, StructType)]()
-
-  /** The bucket table's live-generation SCHEMA, memoized like the fp
-    * answer (one driver-side footer read per (table, head generation)).
-    * r18: this is also what lets the probe's pruned verify read pass an
-    * EXPLICIT schema — `spark.read.parquet(files)` without one runs a distributed
-    * schema-inference job (mergeSchemasInParallel), a whole Spark job per
-    * micro-batch on the steady-state fp-tier path that reads a handful of
-    * pruned files. Only a successful read is memoized: a failed footer
-    * read answers None for THIS call and the next call reads again.
-    */
-  private def bucketHeadSchema(spark: SparkSession, bucketPath: String,
-                               liveHead: Option[String]): Option[StructType] =
-    liveHead.flatMap { n =>
-      Option(fpLayoutCache.get(bucketPath)).filter(_._1 == n).map(_._2)
-        .orElse {
-          val schema = scala.util.Try(graft.io.Tables.fileSchema(spark,
-            new org.apache.hadoop.fs.Path(bucketPath, n))).toOption
-          schema.foreach(s => fpLayoutCache.put(bucketPath, (n, s)))
-          schema
-        }
-    }
-
   /** Does the bucket table's live generation carry the content-fingerprint
     * column (the verified landing paths' tier-1 shortcut)? Derived from
-    * the memoized head schema — shared by the text and embedding twins
-    * (both carry `fp`).
+    * the memoized head schema ([[graft.io.Tables.headSchema]]) — shared by
+    * the text and embedding twins (both carry `fp`). An unreadable head
+    * footer THROWS, failing the batch before it writes: answering "no fp"
+    * would append 4-column bucket rows into a 5-column table.
     */
   private[graft] def bucketHeadHasFp(spark: SparkSession, bucketPath: String,
                                      liveHead: Option[String]): Boolean =
-    bucketHeadSchema(spark, bucketPath, liveHead)
-      .exists(_.fieldNames.contains("fp"))
+    liveHead.exists(n => graft.io.Tables.headSchema(spark,
+      new org.apache.hadoop.fs.Path(bucketPath), n).fieldNames.contains("fp"))
 
   /** Whether a dedup ingest batch should WRITE the fp column: the
     * `graft.dedup.fp.enabled` prop governs only table CREATION — an
@@ -618,6 +580,13 @@ object Streams {
       sys.props.get("graft.dedup.fp.enabled").forall(_ != "false")
     else hasFp
 
+  /** A collected ts VALUE as epoch-ns, for the candidate-window bounds of
+    * the verified landing-dedup fetch — the dedup tables' ts column is
+    * long epoch-ns by the engine convention, but the ingest accepts
+    * TIMESTAMP/NTZ columns too (same contract as ingestAppendRetained).
+    * None for shapes with no exact ns reading — the caller then skips
+    * the slice and reads the full snapshot (degraded, never wrong).
+    */
   private def tsValueNs(v: Any): Option[Long] = v match {
     case l: java.lang.Long => Some(l.longValue)
     case t: java.sql.Timestamp =>
@@ -693,36 +662,18 @@ object Streams {
       .flatMap(_.toIntOption).getOrElse(1000000)
     val vals = probe.select(col("bucket")).distinct()
       .limit(collectCap + 1).collect().map(_.getLong(0))
-    // the live-file view is resolved ONCE and shared by the prune pass,
-    // the empty frame's schema, and the pruned read. snapshotUnsized's
-    // DataFrame CONSTRUCTION is O(live files) driver work (file index +
-    // schema resolution — measured ~0.4 s warm over a 100-file table),
-    // so the paths that read nothing or read a pruned subset must never
-    // build it; it stays the fallback for the unpruned scan, lazily.
-    val liveNames = graft.io.Tables.liveFileNames(spark, bucketPath)
-    lazy val storedFull = graft.io.Tables.snapshotUnsized(spark, bucketPath)
-    lazy val stored0 = storedFull.select(cols.map(col): _*)
-    def filePaths(ns: Seq[String]): Seq[String] =
-      ns.map(n => new org.apache.hadoop.fs.Path(bucketPath, n).toString)
-    // the memoized head-file schema (r18): passing it explicitly to the
-    // file-list reads below removes the distributed schema-inference job
-    // `spark.read.parquet(files)` otherwise launches PER MICRO-BATCH on
-    // the pruned verify path (data files are immutable and the layout
-    // contract keeps one schema per generation, so the memo is exact)
-    val headSchema = bucketHeadSchema(spark, bucketPath,
-      liveNames.flatMap(_.headOption))
-    def readFiles(ps: Seq[String]): DataFrame = headSchema match {
-      case Some(s) => spark.read.schema(s).parquet(ps: _*)
-      case None => spark.read.parquet(ps: _*)
-    }
-    // an empty result still needs the scan's schema — one live file's
-    // footer supplies it without the full index
-    def emptyStored: DataFrame = liveNames match {
-      case Some(ns) if ns.nonEmpty =>
-        readFiles(filePaths(ns.take(1)))
-          .select(cols.map(col): _*).limit(0)
-      case _ => stored0.limit(0)
-    }
+    // the live view is resolved ONCE (one manifest + listing read) and
+    // every stored-side frame below is built from it by Tables.liveFrame:
+    // statuses from that listing, schema from the memoized head footer —
+    // no listing and no schema-inference job per micro-batch
+    val live = graft.io.Tables.governedLive(spark, bucketPath).filter(_.files.nonEmpty)
+    def readFiles(names: Seq[String]): DataFrame = (live match {
+      case Some(l) => graft.io.Tables.liveFrame(spark, l, names, resize = false)
+      case None => graft.io.Tables.snapshotUnsized(spark, bucketPath)
+    }).select(cols.map(col): _*)
+    lazy val stored0 = readFiles(live.map(_.names).getOrElse(Nil))
+    def emptyStored: DataFrame =
+      if (live.isDefined) readFiles(Nil) else stored0.limit(0)
     // a bucket-less batch (empty, or all docs too short to shingle)
     // can collide with nothing — skip the scan outright
     if (vals.isEmpty) return emptyStored
@@ -760,19 +711,13 @@ object Streams {
     // probe's answer is scan-identical.
     val verifySet: Option[Array[Long]] =
       if (vals.length > collectCap) None else candidates.orElse(Some(vals))
-    // LAZY like storedFull: the bloom-cleared branch below returns the
-    // empty frame without ever resolving a stored-side scan — a strict
-    // val here would force storedFull's O(files) construction on the
-    // one path that exists to read nothing
-    lazy val stored = (verifySet.filter(_.nonEmpty), liveNames) match {
-      case (Some(pos), Some(live)) =>
-        FileBlooms.pruneKnown(spark, bucketPath, pos, live) match {
+    // LAZY: the bloom-cleared branch below returns the empty frame
+    // without resolving a stored-side scan
+    lazy val stored = (verifySet.filter(_.nonEmpty), live) match {
+      case (Some(pos), Some(l)) =>
+        FileBlooms.pruneKnown(spark, bucketPath, pos, l.names) match {
           case Some(keep) if keep.isEmpty => emptyStored
-          // schema from the memoized head footer (the table's own live
-          // generation) — never the full-index storedFull, and since r18
-          // never a per-batch inference job either
           case Some(keep) => readFiles(keep)
-            .select(cols.map(col): _*)
           case None => stored0
         }
       case _ => stored0

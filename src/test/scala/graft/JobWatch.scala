@@ -29,10 +29,14 @@ final class JobWatch private () extends SparkFirehoseListener {
     e match {
       case _: SparkListenerExecutorMetricsUpdate => return
       case j: SparkListenerJobStart =>
-        val props = Option(j.properties)
-        val site = props.flatMap(p => Option(p.getProperty("callSite.short")))
-          .getOrElse(j.stageInfos.map(_.name.takeWhile(_ != '\n')).mkString("<-"))
-        val exec = props.flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+        // the call site is the name of the job's result stage (the newest
+        // stage: a job creates its parent stages first) — e.g.
+        // "parquet at Tables.scala:123"; older stages a job reuses carry
+        // the call sites of the jobs that created them
+        val site = j.stageInfos.sortBy(_.stageId).lastOption
+          .map(_.name.takeWhile(_ != '\n')).getOrElse("")
+        val exec = Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
           .map(_.toLong)
         jobQ.add(Job(j.jobId, site, exec))
         open.add(j.jobId)
@@ -77,6 +81,8 @@ final class JobWatch private () extends SparkFirehoseListener {
 
   def jobs: Seq[Job] = jobQ.asScala.toSeq.sortBy(_.id)
   def count: Int = jobQ.size
+  /** The measured jobs whose call site starts with `prefix`. */
+  def at(prefix: String): Seq[Job] = jobs.filter(_.site.startsWith(prefix))
   /** SQL executions the measured jobs ran under. */
   def executions: Set[Long] = jobs.flatMap(_.execution).toSet
   /** Physical plan of a SQL execution that started while measuring. */

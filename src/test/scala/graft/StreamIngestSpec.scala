@@ -1624,7 +1624,7 @@ class StreamIngestSpec extends AnyFunSuite {
     // ADVICE r18: the head-schema memo cached a failed footer read (None)
     // for the generation's whole life, so one transient read error pinned
     // the table to the jaccard tier. Failure injected by moving the head
-    // file away for the first read only.
+    // file away for the first read only; that read fails loudly.
     val docs = tmpDir("hfdoc") + "/docs.parquet"
     val buckets = tmpDir("hfbkt") + "/buckets.parquet"
     Streams.dedupIngestBatch((0 until 5).map(i => (i.toLong, 100L + i,
@@ -1635,11 +1635,39 @@ class StreamIngestSpec extends AnyFunSuite {
     val file = new java.io.File(buckets, head)
     val away = new java.io.File(buckets + ".away")
     assert(file.renameTo(away))
-    try assert(!Streams.bucketHeadHasFp(spark, buckets, Some(head)),
-      "an unreadable head answers 'no fp' for this call")
+    try intercept[java.io.IOException](Streams.bucketHeadHasFp(spark, buckets, Some(head)))
     finally assert(away.renameTo(file))
     assert(Streams.bucketHeadHasFp(spark, buckets, Some(head)),
       "the failed read must not be memoized: the fp layout is detected now")
+  }
+
+  test("an unreadable bucket head footer fails the landing batch before it writes") {
+    // ROADMAP item 5: a failed head-footer read on an EXISTING bucket
+    // table read as "no fp", so the batch appended 4-column bucket rows
+    // into the 5-column table. Failure injected as ONE failed open of the
+    // head file (a transient read error); the retried batch lands intact.
+    val docs = tmpDir("uhdoc") + "/docs.parquet"
+    val buckets = tmpDir("uhbkt") + "/buckets.parquet"
+    def land(from: Int, batchId: Long): Unit =
+      Streams.dedupIngestBatch((from until from + 5).map(i => (i.toLong, 100L + i,
+        randomWords(700 + i))).toDF("id", "ts", "text"), docs, buckets, "ts",
+        "ck-uh", "id", "text", 5, 8, 2, batchId)
+    land(0, 0L)
+    val before = Tables.liveFileNames(spark, buckets).get
+    val docsBefore = Tables.liveFileNames(spark, docs).get
+    FlakyLocalFS.failNextOpen(spark, before.head) {
+      intercept[java.io.IOException](land(10, 1L))
+    }
+    assert(Tables.liveFileNames(spark, buckets).get == before,
+      "the failed batch must not land bucket rows")
+    assert(Tables.liveFileNames(spark, docs).get == docsBefore,
+      "the failed batch must not land docs")
+    land(10, 1L)
+    val rows = Tables.snapshot(spark, buckets)
+    assert(rows.columns.contains("fp"))
+    assert(rows.filter(col("fp").isNull).isEmpty, "every bucket row carries fp")
+    assert(Tables.snapshot(spark, docs).select("id").as[Long].collect().toSet ==
+      ((0L until 5L) ++ (10L until 15L)).toSet)
   }
 
   /** The pre-change bucket-row composition for the text twin: banding

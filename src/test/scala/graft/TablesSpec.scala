@@ -2148,4 +2148,128 @@ class TablesSpec extends AnyFunSuite {
       assert(!Tables.commitEmptyStreamBatch(spark, path, "s-er", 0L))
     }
   }
+
+  /** A governed `landing.parquet` table of `files` load-layout files,
+    * ts = 0 until rows (int64 ns).
+    */
+  private def governedTable(tag: String, files: Int, rows: Long = 4000L): String = {
+    val path = java.nio.file.Files.createTempDirectory(s"graft_tables_$tag")
+      .toString + "/landing.parquet"
+    Tables.load(spark.range(0, rows, 1, files)
+      .select(col("id").as("ts"), (col("id") * 0.5).as("v")), path, Seq(), "ts")
+    path
+  }
+
+  private def rowsAt(from: Long, n: Long) =
+    spark.range(from, from + n, 1, 2).select(col("id").as("ts"), (col("id") * 0.5).as("v"))
+
+  /** Every measured job ran under a SQL execution that writes parquet. */
+  private def assertOnlyWriteJobs(w: JobWatch): Unit = {
+    assert(w.count > 0, "the write itself must register")
+    assert(w.jobs.forall(_.execution.nonEmpty),
+      s"jobs ran outside any SQL execution:${w.describe}")
+    val nonWrite = w.executions.filterNot(e =>
+      w.plan(e).exists(_.contains("InsertIntoHadoopFsRelationCommand")))
+    assert(nonWrite.isEmpty,
+      s"executions other than the write launched jobs ($nonWrite):${w.describe}")
+  }
+
+  test("snapshot of a 40-file governed table is built with no Spark job") {
+    val path = governedTable("snap40", 40)
+    val files = Tables.liveFileNames(spark, path).get
+    assert(files.size > 32, "the table must pass Spark's parallel-listing threshold")
+    val df = JobWatch.on(spark) { w =>
+      val df = w.measure(Tables.snapshot(spark, path))
+      assert(w.count == 0, s"snapshot construction launched jobs:${w.describe}")
+      df
+    }
+    val plain = spark.read.parquet(files.map(n => s"$path/$n"): _*)
+    assert(df.schema == plain.schema)
+    assert(df.inputFiles.sorted.sameElements(plain.inputFiles.sorted))
+    assert(df.except(plain).isEmpty && df.count() == 4000)
+  }
+
+  test("rangeScan right after appendStreamBatch launches no parquet-read job") {
+    val path = governedTable("rs40", 40)
+    val dir = new java.io.File(path).getParent
+    assert(Tables.appendStreamBatch(rowsAt(4000, 500), path, "ts", "rs", 0L))
+    JobWatch.on(spark) { w =>
+      w.measure(Tables.rangeScan(spark, dir, "landing", 3900L, 4500L))
+      assert(w.count == 0, s"rangeScan construction launched jobs:${w.describe}")
+      val n = w.measure(Tables.rangeScan(spark, dir, "landing", 3900L, 4500L).count())
+      assert(n == 600)
+      assert(w.at("parquet at Tables.scala").isEmpty,
+        s"a range read ran a listing or schema-inference job:${w.describe}")
+    }
+  }
+
+  test("compactIncremental launches jobs only under its write") {
+    val path = governedTable("ci40", 40)
+    (0 until 3).foreach(b =>
+      assert(Tables.appendStreamBatch(rowsAt(4000 + b * 100, 100), path, "ts", "ci", b)))
+    JobWatch.on(spark) { w =>
+      val (before, after) = w.measure(
+        Tables.compactIncremental(spark, path, Seq(), "ts"))
+      assert(after < before, "the appended files must fold")
+      assertOnlyWriteJobs(w)
+    }
+    assert(Tables.snapshot(spark, path).count() == 4300)
+  }
+
+  test("deleteRange launches jobs only under its rewrite write; a no-op delete none") {
+    val path = governedTable("dr40", 40)
+    JobWatch.on(spark) { w =>
+      w.measure(Tables.deleteRange(spark, path, "ts", lit(0L), lit(149L)))
+      assertOnlyWriteJobs(w)
+      w.measure(Tables.deleteRange(spark, path, "ts", lit(100000L), lit(200000L)))
+      assert(w.count == 0, s"a delete touching no file launched jobs:${w.describe}")
+    }
+    val ts = Tables.snapshot(spark, path).select("ts").as[Long].collect()
+    assert(ts.length == 3850 && ts.min == 150L)
+  }
+
+  test("governed frames take the head footer's schema: equal to the inferring read's") {
+    def inferred(path: String): org.apache.spark.sql.types.StructType =
+      spark.read.parquet(Tables.liveFileNames(spark, path).get
+        .map(n => s"$path/$n"): _*).schema
+    val base = spark.range(0, 300, 1, 3)
+    val shapes = Seq(
+      "longns" -> base.select((col("id") * 1000L).as("ts"), col("id").as("k")),
+      "ltz" -> base.select(timestamp_micros(col("id")).as("ts"), col("id").as("k")),
+      "ntz" -> base.select(timestamp_micros(col("id")).cast("timestamp_ntz").as("ts"),
+        col("id").as("k")),
+      "nested" -> base.select((col("id") * 1000L).as("ts"),
+        struct(col("id").as("a"), array(col("id"), col("id") + 1).as("b")).as("s"),
+        array(struct(col("id").as("x"), lit("y").as("y"))).as("arr"),
+        map(col("id"), array(lit(1.5))).as("m")))
+    shapes.foreach { case (tag, df) =>
+      val path = tmp(s"schema_$tag")
+      Tables.load(df, path, Seq(), "ts")
+      assert(Tables.snapshot(spark, path).schema == inferred(path), tag)
+    }
+    // a foreign writer's file carries no Spark row schema in its footer:
+    // the head schema falls back to the inferring read
+    val path = tmp("schema_foreign")
+    new java.io.File(path).mkdirs()
+    val msg = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message m { required int64 ts; optional binary name (UTF8); " +
+        "optional group pt { required double x; } }")
+    val out = org.apache.parquet.hadoop.example.ExampleParquetWriter.builder(
+      org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
+        new org.apache.hadoop.fs.Path(s"$path/part-0.parquet"),
+        spark.sparkContext.hadoopConfiguration)).withType(msg).build()
+    val groups = new org.apache.parquet.example.data.simple.SimpleGroupFactory(msg)
+    try (0 until 10).foreach { i =>
+      val g = groups.newGroup().append("ts", i.toLong).append("name", s"n$i")
+      g.addGroup("pt").append("x", i * 1.0)
+      out.write(g)
+    } finally out.close()
+    Tables.writeManifest(spark, path, "ts")
+    JobWatch.on(spark) { w =>
+      val df = w.measure(Tables.snapshot(spark, path))
+      assert(df.schema == inferred(path))
+      assert(w.count > 0, "the foreign footer must take the inferring read")
+      assert(df.count() == 10)
+    }
+  }
 }
