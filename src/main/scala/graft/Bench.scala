@@ -518,8 +518,7 @@ object Bench {
     // into later reps' entry phase — same total work, noisier attribution)
     sys.props.getOrElseUpdate("graft.retire.grace.ms", "0")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
+    val cpus = Session.benchCores
     val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS")
       .flatMap(_.toIntOption).getOrElse(7).max(2)
     val attempts = sys.env.get("SPARK_GRAFT_BENCH_ATTEMPTS")
@@ -540,18 +539,7 @@ object Bench {
     // busy-box bar) so our own just-finished attempt's decaying loadavg
     // residue doesn't stall or falsely flag them.
     val idleReachedPre = waitForIdle(() => loadavg().head, idleLoad, idleWaitSec)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // engine-written timestamp columns must carry INT64-µs stats —
-      // the INT96 default has no usable min/max, so row-group pruning
-      // over written layouts would silently be a no-op (PruneProbe)
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session(cpus, 32)
     spark.sparkContext.setLogLevel("ERROR")
 
     // Load phase — the reference is an IN-MEMORY columnar store whose
@@ -862,7 +850,7 @@ object Bench {
       val idleReached =
         if (attempt == 1) idleReachedPre
         else waitForIdle(() => loadavg().head,
-          math.max(idleLoad, cpus.toInt / 4.0), idleWaitSec)
+          math.max(idleLoad, cpus / 4.0), idleWaitSec)
       val startLoad = loadavg()
       // TWO measurement phases, each headed by its own canary snapshot
       // (VERDICT r16 wrong #1): the scan phase and the maintenance phase

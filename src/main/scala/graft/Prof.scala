@@ -1,14 +1,56 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev profiling harness: run one named query N times against a sf dir
   * under BENCH conditions (tables persisted, series warmed), print per-run
   * wall time split into plan (analysis+optimization+physical planning) and
   * exec (job run), and optionally the formatted plan.
-  * Usage: graft.Prof <sfDir> <queryName> [runs] [explain] [cold]
+  * Usage: graft.Prof <sfDir> <queryName> [runs] [explain] [cold] [jobs]
+  *        graft.Prof <sfDir> sweep [reps]
+  *        graft.Prof <sfDir> plans [query ...]
   */
 object Prof {
+  /** The `plans` mode's default query set: the headline and
+    * scale-critical queries whose physical plans PLANS.md audits.
+    */
+  val auditSet: Seq[String] = Seq(
+    "q1_agg", "q_join", "q_asof", "q_asof_exec", "q_range_join",
+    "q_sort_pos", "q_grid_agg", "q_window_agg", "q_cum_agg", "q_ema",
+    "q_dedup_exact", "q_minhash_lsh", "q_jaccard", "q_knn", "q_cos_lsh",
+    "q_tumbling", "q_repetition", "q_sample", "q_vocab", "q_group_topk",
+    "q_dup_clusters", "q_sem_dedup", "q_decontaminate", "q_tfidf",
+    "q_curation", "q_sketch_rollup",
+    // round 6
+    "q_asof_exec_keyless", "q_passage_dedup", "q_mixture", "q_dict_global",
+    "q_media_dup_banded", "q_window_join", "q_theta_overlap",
+    "q_quantile_rollup",
+    // round 7
+    "q_cs_sketch",
+    // round 8: the TABLE_get scan shape (rangeScan pushdown + NTZ
+    // file-level pruning) and the bucketed zero-shuffle as-of
+    "q_get", "q_asof_bucketed",
+    // round 10: the TPC-H plan families the headline under-tested —
+    // pure predicate pushdown (Q6), join-order/broadcast (Q3), the
+    // six-table multi-way join (Q5), and the conditional-aggregate
+    // promo share (Q14)
+    "q_tpch_q6", "q_tpch_q3", "q_tpch_q5", "q_tpch_q14", "q_concat_ranges",
+    // round 11: the semi/anti join families (Q4 EXISTS → left-semi,
+    // Q16 NOT IN → left-anti)
+    "q_tpch_q4", "q_tpch_q16",
+    // round 12: the outer-join (Q13) and correlated scalar-subquery
+    // decorrelation (Q17) families, and the key-equality bucket-pruned scan
+    "q_tpch_q13", "q_tpch_q17", "q_get_bucketed_key", "q_tpch_q18",
+    // round 13: the disjunctive-pushdown (Q19) and nested-semi-join-chain
+    // (Q20) families, then the remaining adaptable families — nation-pair
+    // OR join (Q7), share-of-group over the deepest join (Q8), computed
+    // measure over three relations (Q9), top-N revenue (Q10), dual
+    // conditional counts (Q12), aggregate-of-aggregate CTE reuse (Q15)
+    "q_tpch_q19", "q_tpch_q20", "q_tpch_q7", "q_tpch_q8", "q_tpch_q9",
+    "q_tpch_q10", "q_tpch_q12", "q_tpch_q15",
+    // round 14: the last two TPC-H families, gated over the synthesized
+    // partsupp CTE — correlated-min decorrelation + TakeOrdered (Q2),
+    // group-filter scalar subquery (Q11)
+    "q_tpch_q2", "q_tpch_q11")
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val name = args(1)
@@ -16,24 +58,26 @@ object Prof {
     // must not crash on toInt
     val runs = args.drop(2).flatMap(_.toIntOption).headOption.getOrElse(3)
     val doExplain = args.contains("explain")
-    val cold = args.contains("cold") // skip the cache-load phase
-    val builder = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // engine-written timestamp columns must carry INT64-µs stats —
-      // the INT96 default has no usable min/max, so row-group pruning
-      // over written layouts would silently be a no-op (PruneProbe)
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
+    // skip the cache-load phase; the plan audit reads the parquet files
+    val cold = args.contains("cold") || name == "plans"
     // ad-hoc experiment overrides: SPARK_GRAFT_CONF="k=v;k=v"
-    sys.env.get("SPARK_GRAFT_CONF").toSeq
+    val conf = sys.env.get("SPARK_GRAFT_CONF").toSeq
       .flatMap(_.split(';')).map(_.split("=", 2))
-      .collect { case Array(k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
+      .collect { case Array(k, v) => (k, v) }
+    val spark = Session(Session.benchCores, 32, conf)
     spark.sparkContext.setLogLevel("ERROR")
+    // PLANS mode: dump the physical plan of each named query (default:
+    // auditSet) — the source for PLANS.md's per-round audit
+    if (name == "plans") {
+      val names = if (args.length > 2) args.drop(2).toSeq else auditSet
+      names.foreach { n =>
+        println(s"===== $n =====")
+        try println(SparkEntry.queries(n)(spark, sfDir).queryExecution.executedPlan.toString)
+        catch { case e: Exception => println(s"<error: ${e.getMessage}>") }
+      }
+      spark.stop()
+      return
+    }
     if (!cold) {
       val tables = Seq("lineitem", "orders", "customer", "part",
         "events", "documents", "embeddings")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-up smoke: multiply sf0.1 by `factor` (default 20 → ~12M lineitem
@@ -22,18 +21,7 @@ object ScaleSmoke {
     val factor = args.headOption.flatMap(_.toIntOption).getOrElse(20)
     val work = args.drop(1).headOption.getOrElse(
       s"${System.getProperty("java.io.tmpdir")}/graft_scale_smoke")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // engine-written timestamp columns must carry INT64-µs stats —
-      // the INT96 default has no usable min/max, so row-group pruning
-      // over written layouts would silently be a no-op (PruneProbe)
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session(Session.benchCores, 32)
     spark.sparkContext.setLogLevel("ERROR")
     // loadavg head BEFORE each section: on a shared box a co-tenant burst
     // inflates a section's wall time — the snapshot lets a reader qualify

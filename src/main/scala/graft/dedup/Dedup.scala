@@ -1,7 +1,10 @@
 package graft.dedup
 
+import graft.sqlext.{BucketPairs, HammingBucketPairs, MinHashSig, SimHash64}
 import graft.text.TextOps
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftPlanBridge.{column, expression}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 
 /** Deduplication for training-data pipelines at 100 TB scale.
@@ -205,9 +208,8 @@ object Dedup {
     // all k lane minima) — the HOF form (minhashBase + k array_min lanes)
     // rescans the shingle array k+1 times; same construction, so the
     // banding math and collision analysis are unchanged
-    graft.sqlext.GraftFunctions.register(sh.sparkSession)
     val withSig = sh
-      .withColumn("sig", call_function("cs_minhash", col("sh"), lit(k)))
+      .withColumn("sig", column(MinHashSig(expression(col("sh")), k)))
     // (id, band) is unique by construction — one row per band per doc —
     // so no distinct is needed before the bucket self-join
     withSig.select(keep :+
@@ -249,11 +251,10 @@ object Dedup {
     // in the same final distinct(). Skew behaves the same: a hot bucket
     // lands on one task either way (hash join build vs collect_list),
     // with O(members) state and lazily-streamed pair output here.
-    graft.sqlext.GraftFunctions.register(banded.sparkSession)
     banded.groupBy(col("band"), col("bucket"))
       .agg(collect_list(col(id)).as("__ids"))
       .filter(size(col("__ids")) > 1)
-      .select(call_function("cs_pairs", col("__ids")))
+      .select(column(BucketPairs(expression(col("__ids")))))
       .distinct()
   }
 
@@ -351,15 +352,7 @@ object Dedup {
     * `aggregate` lanes scan the array 64×; an indexed-`transform` single
     * pass allocates a fresh 64-long array per token.)
     */
-  def simhash(hashes: Column): Column = {
-    // resolve through the registered function (the clean Column-API bridge
-    // to a custom Expression); registration is idempotent and sessionless
-    // callers must have registered — every in-repo path goes through a
-    // DataFrame whose session GraftFunctions.register has seen
-    graft.sqlext.GraftFunctions.register(
-      org.apache.spark.sql.SparkSession.active)
-    call_function("cs_simhash", hashes)
-  }
+  def simhash(hashes: Column): Column = column(SimHash64(expression(hashes)))
 
   /** Hamming distance between two 64-bit simhashes. */
   def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
@@ -374,10 +367,6 @@ object Dedup {
     */
   def simhashPairs(df: DataFrame, id: String, text: String,
                    bands: Int = 8, maxDist: Int = 7): DataFrame = {
-    // register on THE INPUT'S session (SparkSession.active can be a
-    // different session in multi-session apps — the minhash path already
-    // resolves through the frame's own session)
-    graft.sqlext.GraftFunctions.register(df.sparkSession)
     // empty-normalized docs (whitespace/punctuation-only) all hash to the
     // IDENTICAL simhash: one mega-bucket and a quadratic candidate blowup
     // with zero content signal — exact dedup owns those. Materialized
@@ -426,11 +415,11 @@ object Dedup {
     // computed the banding posexplode twice. Cross-band dedup unchanged
     // (hamming is a function of the pair, so distinct() dedups exactly
     // the pairs the join's distinct did).
-    graft.sqlext.GraftFunctions.register(withHash.sparkSession)
     banded.groupBy(col("band"), col("bucket"))
       .agg(collect_list(struct(col(id), col("__h64"))).as("__members"))
       .filter(size(col("__members")) > 1)
-      .select(call_function("cs_hamming_pairs", col("__members"), lit(maxDist)))
+      .select(column(HammingBucketPairs(expression(col("__members")),
+        Literal(maxDist))))
       .distinct()
   }
 
@@ -461,11 +450,11 @@ object Dedup {
     // fused codegen dots (bit-equal with the HOF form; ArrayDot scaladoc)
     val withNorm = df.select(col(id), col(vec).cast("array<double>").as("v"))
       .withColumn("nrm",
-        sqrt(graft.sim.Similarity.dotFused(df, col("v"), col("v"))))
+        sqrt(graft.sim.Similarity.dotFused(col("v"), col("v"))))
       .filter(col("nrm") > 0)
     withNorm.as("a").join(withNorm.as("b"), col(s"a.$id") < col(s"b.$id"))
       .withColumn("dot",
-        graft.sim.Similarity.dotFused(df, col("a.v"), col("b.v")))
+        graft.sim.Similarity.dotFused(col("a.v"), col("b.v")))
       .withColumn("cosine", col("dot") / (col("a.nrm") * col("b.nrm")))
       .filter(col("cosine") >= minCos)
       .select(col(s"a.$id").as("id1"), col(s"b.$id").as("id2"),
@@ -486,7 +475,7 @@ object Dedup {
                           minCos: Double, tables: Int = 32, bits: Int = 4): DataFrame = {
     val withNorm = df.select(col(id), col(vec).cast("array<double>").as("v"))
       .withColumn("nrm",
-        sqrt(graft.sim.Similarity.dotFused(df, col("v"), col("v"))))
+        sqrt(graft.sim.Similarity.dotFused(col("v"), col("v"))))
       .filter(col("nrm") > 0)
       // referenced FOUR times (both banded sides + both verify joins):
       // unmaterialized, the cast+norm+projection pass would run 4x
@@ -496,10 +485,8 @@ object Dedup {
     // The plane hashing is the fused cs_rhp_sig pass (bit-exact with the
     // composed per-table rhpBucket form; one compiled loop instead of
     // tables×bits interpreted HOF dots per row)
-    graft.sqlext.GraftFunctions.register(df.sparkSession)
     val banded = withNorm.select(col(id),
-      posexplode(call_function("cs_rhp_sig", col("v"),
-        lit(dim), lit(bits), lit(tables))))
+      posexplode(graft.sim.Similarity.rhpSignatures(col("v"), dim, bits, tables)))
       .select(col(id), col("pos").as("table"), col("col").as("bucket"))
     // DELIBERATELY the self-join shape, NOT bandedPairs' one-shuffle pair
     // emit (r18, measured): unlike minhash/simhash banding — where the
@@ -523,7 +510,7 @@ object Dedup {
       .join(side.select(col(id).as("id1"), col("v").as("__v1"), col("nrm").as("__n1")), "id1")
       .join(side.select(col(id).as("id2"), col("v").as("__v2"), col("nrm").as("__n2")), "id2")
       .withColumn("cosine",
-        graft.sim.Similarity.dotFused(df, col("__v1"), col("__v2"))
+        graft.sim.Similarity.dotFused(col("__v1"), col("__v2"))
           / (col("__n1") * col("__n2")))
       .filter(col("cosine") >= minCos)
       .select(col("id1"), col("id2"), col("cosine").cast("float").as("cosine"))

@@ -963,8 +963,7 @@ object FuzzGen {
       val fn =
         if (hasNulls) "cs_hash_count"
         else Vector("cs_hash_sum", "cs_hash_avg", "cs_hash_count")(rnd.nextInt(3))
-      xforms :+= ((df: DataFrame, s: SparkSession, _: String) => {
-        graft.sqlext.GraftFunctions.register(s)
+      xforms :+= ((df: DataFrame, _: SparkSession, _: String) => {
         val m = if (fn == "cs_hash_count") expr("cs_hash_count(event_type)")
                 else expr(s"""$fn(`value`, event_type)""")
         df.agg(m.as("__m"))
@@ -1350,7 +1349,6 @@ object FuzzGen {
     }
 
     val run = (spark: SparkSession, sfDir: String) => {
-      graft.sqlext.GraftFunctions.register(spark)
       base.srcSpark(spark, sfDir).createOrReplaceTempView(view)
       spark.sql(csSql)
     }
@@ -1552,7 +1550,6 @@ object FuzzGen {
     }
 
     val run = (spark: SparkSession, sfDir: String) => {
-      graft.sqlext.GraftFunctions.register(spark)
       base.srcSpark(spark, sfDir).createOrReplaceTempView(view)
       spark.sql(csSql)
     }
@@ -1573,18 +1570,8 @@ object Fuzz {
     val n = if (args.length > 2) args(2).toInt else 200
     val seed0 = if (args.length > 3) args(3).toLong else 1L
     val baseOverride = if (args.length > 4) Some(args(4)) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // engine-written timestamp columns must carry INT64-µs stats —
-      // the INT96 default has no usable min/max, so row-group pruning
-      // over written layouts would silently be a no-op (PruneProbe)
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = graft.Session(cpus, cpus)
     spark.sparkContext.setLogLevel("WARN")
     val crashes = runPrograms(spark, sfDir, outDir, n, seed0, baseOverride)
     // the cs_* SQL-surface leg rides every default run at a quarter of
@@ -1606,6 +1593,8 @@ object Fuzz {
     * `outDir/fuzz_<seed>/` plus `oracle_sql.json` and a `programs.txt`
     * replay log. Returns (seed, desc, error) for programs that crashed on
     * the Spark side — those are findings too (the oracle never ran).
+    * The `cs_*` SQL programs need the names installed on `spark`, as
+    * [[graft.Session]] does at build.
     */
   def runPrograms(spark: SparkSession, sfDir: String, outDir: String,
                   n: Int, seed0: Long,

@@ -131,9 +131,8 @@ object Tables {
 
   /** events.parquet's ts column has shipped as both TIMESTAMP(NANOS)
     * (readable only with `spark.sql.legacy.parquet.nanosAsLong=true`, set
-    * once at session build — Bench/Verify/Prof/Plans/TestSpark all do, NOT
-    * here: a read helper mutating session config is racy with concurrent
-    * sessions) and TIMESTAMP(MICROS). `read` normalizes either to int64
+    * once at session build by [[graft.Session]], NOT here: a read helper
+    * mutating session config is racy with concurrent sessions) and TIMESTAMP(MICROS). `read` normalizes either to int64
     * epoch-nanos (see normalizeNsTs); ordering and equality over the long
     * are isomorphic to the timestamp, and the DuckDB oracle maps via
     * epoch_ns(ts) when the column must be compared.
@@ -434,7 +433,7 @@ object Tables {
     * frame is then normalized to the int64-ns convention.
     *
     * Row-group pruning effectiveness depends on the FILE's ts encoding
-    * (measured, graft.PruneProbe): int64-ns and LTZ-µs layouts prune to
+    * (measured, PLANS.md round 8): int64-ns and LTZ-µs layouts prune to
     * the slice (~6% of rows for a 1-day cut of 30 days); NTZ-annotated
     * files (isAdjustedToUTC=false — the raw testdata shape) list the
     * pushed filter but Spark builds no parquet FilterPredicate for NTZ,
@@ -1874,7 +1873,7 @@ object Tables {
     * of scanning. The Spark analog pays ONE range shuffle at ingest so
     * that each output file covers a disjoint (keys, ts) slice — parquet
     * min/max stats then prune rangeScan to the touched slice (measured,
-    * graft.PruneProbe: ~6% of rows read for a 1-day cut of a 30-day
+    * PLANS.md round 8: ~6% of rows read for a 1-day cut of a 30-day
     * int64-ns layout vs 100% for an unclustered or NTZ one). A
     * sortWithinPartitions alone leaves round-robin input partitions each
     * spanning the FULL ts range — every file's min/max covers everything

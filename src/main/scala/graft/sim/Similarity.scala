@@ -1,6 +1,9 @@
 package graft.sim
 
+import graft.sqlext.{ArrayDot, RhpSignatures}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftPlanBridge.{column, expression}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,22 +22,18 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Σ a[i]*b[i] via higher-order functions (works on any session, no
-    * registration needed). For the scan-bound hot path prefer
-    * [[dotFused]] — the custom codegen expression.
+  /** Σ a[i]*b[i] via higher-order functions. For the scan-bound hot path
+    * prefer [[dotFused]] — the custom codegen expression.
     */
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (s, x) => s + x)
 
   /** Σ a[i]*b[i] as the fused ArrayDot codegen expression (reads float
     * elements directly, no cast/intermediate array). Bit-equal to the HOF
-    * form on cast("array<double>") inputs. Registers the cs_* functions
-    * idempotently on the frame's session.
+    * form on cast("array<double>") inputs.
     */
-  def dotFused(df: DataFrame, a: Column, b: Column): Column = {
-    graft.sqlext.GraftFunctions.register(df.sparkSession)
-    call_function("cs_dot", a, b)
-  }
+  def dotFused(a: Column, b: Column): Column =
+    column(ArrayDot(expression(a), expression(b)))
 
   def l2norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -51,8 +50,8 @@ object Similarity {
     // a zero-norm vector (padding row, failed embed) has no direction:
     // 0/0 would be NaN, which Spark sorts ABOVE 1.0 and would capture a
     // top-k slot — NULL instead, which descending order puts last
-    val denom = sqrt(dotFused(df, v, v)) * sqrt(dotFused(df, q, q))
-    val cos = when(denom > 0, dotFused(df, v, q) / denom)
+    val denom = sqrt(dotFused(v, v)) * sqrt(dotFused(q, q))
+    val cos = when(denom > 0, dotFused(v, q) / denom)
     df.select(col(id), cos.cast("float").as("cosine"))
       .orderBy(col("cosine").desc, col(id).asc)
       .limit(k)
@@ -70,14 +69,14 @@ object Similarity {
     // last), not NaN (sorted first)
     val q = broadcast(queries
       .select(col(id).as("query_id"), col(vec).cast("array<double>").as("qv"))
-      .withColumn("__qn", sqrt(dotFused(queries, col("qv"), col("qv")))))
+      .withColumn("__qn", sqrt(dotFused(col("qv"), col("qv")))))
     val scored = corpus
       .select(col(id), col(vec).cast("array<double>").as("cv"))
-      .withColumn("__cn", sqrt(dotFused(corpus, col("cv"), col("cv"))))
+      .withColumn("__cn", sqrt(dotFused(col("cv"), col("cv"))))
       .join(q, col("query_id") =!= col(id))
       .withColumn("cosine",
         when(col("__cn") * col("__qn") > 0,
-          dotFused(corpus, col("cv"), col("qv"))
+          dotFused(col("cv"), col("qv"))
             / (col("__cn") * col("__qn"))))
     val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col(id).asc)
     scored.withColumn("__rn", row_number().over(w))
@@ -107,17 +106,15 @@ object Similarity {
     else greatest(cb.map { case (cid, c) =>
       val cNormSq = c.map(x => x * x).sum
       // cs_dot: the corpus-scale assignment pays k of these per row —
-      // fused, not an interpreted HOF (callers register the functions)
-      struct((call_function("cs_dot", sub, typedLit(c)) * 2.0 - cNormSq)
+      // fused, not an interpreted HOF
+      struct((dotFused(sub, typedLit(c)) * 2.0 - cNormSq)
         .as("score"), lit(cid).as("cid"))
     }: _*).getField("cid")
   }
 
-  def ivfAssign(df: DataFrame, vec: String, centroids: Seq[(Int, Seq[Double])]): DataFrame = {
-    graft.sqlext.GraftFunctions.register(df.sparkSession)
+  def ivfAssign(df: DataFrame, vec: String, centroids: Seq[(Int, Seq[Double])]): DataFrame =
     df.withColumn("centroid_id",
       nearestCid(col(vec).cast("array<double>"), centroids))
-  }
 
   /** ANN query via IVF: scan only the `nProbe` centroids closest to the
     * query vector, then brute-force within them. Probe ranking uses the
@@ -157,6 +154,15 @@ object Similarity {
     bits.reduce((a, b) => a.bitwiseOR(b))
   }
 
+  /** All `tables` RHP-LSH bucket signatures of `vec` (array<float|double>
+    * of length `dim`) in one fused pass, the cs_rhp_sig expression
+    * ([[graft.sqlext.RhpSignatures]]): element t is bit-exact with
+    * `rhpBucket(vec, dim, bits, t * bits)`.
+    */
+  def rhpSignatures(vec: Column, dim: Int, bits: Int, tables: Int): Column =
+    column(RhpSignatures(Seq(expression(vec), Literal(dim), Literal(bits),
+      Literal(tables))))
+
   /** Deterministic pseudo-random plane weights in (-1, 1). The plane and
     * dimension indices are mixed through a splitmix-style finalizer — a
     * linear `pIdx*K + d` key would make plane p's weights at dims ≥ K a
@@ -189,7 +195,6 @@ object Similarity {
   def pqTrain(df: DataFrame, id: String, vec: String, dim: Int,
               m: Int, k: Int, iters: Int): Seq[Seq[(Int, Seq[Double])]] = {
     require(dim % m == 0, s"dim $dim must split evenly into $m subspaces")
-    graft.sqlext.GraftFunctions.register(df.sparkSession)
     val dsub = dim / m
     val v = df.select(col(id).as("__kid"), col(vec).cast("array<double>").as("__v"))
     // init = the k lowest-id vectors (as in kmeansTrain), sliced per
@@ -240,7 +245,6 @@ object Similarity {
     */
   def pqEncode(df: DataFrame, vec: String,
                codebooks: Seq[Seq[(Int, Seq[Double])]]): DataFrame = {
-    graft.sqlext.GraftFunctions.register(df.sparkSession)
     val m = codebooks.size
     val dsub = codebooks.head.head._2.size
     val withCodes = codebooks.zipWithIndex.foldLeft(df) { case (d, (cb, s)) =>
@@ -267,8 +271,8 @@ object Similarity {
     val qd = array(query.map(v => lit(v.toDouble)): _*)
     val approx = encoded
       .withColumn("__ascore",
-        dotFused(encoded, col("__recon"), qd)
-          / (sqrt(dotFused(encoded, col("__recon"), col("__recon")))
+        dotFused(col("__recon"), qd)
+          / (sqrt(dotFused(col("__recon"), col("__recon")))
             + lit(1e-12)))
       .orderBy(col("__ascore").desc, col(id).asc)
       .limit(rerank)

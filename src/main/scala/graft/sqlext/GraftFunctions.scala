@@ -12,8 +12,12 @@ import org.apache.spark.sql.types._
   * serialization), so `SELECT cs_wavg(volume, close)` plans identically to
   * the DataFrame `sum(x*y)/sum(x)` form.
   *
-  * Two registration paths:
-  *  - [[GraftFunctions.register]] on a live session (temp functions);
+  * The names are needed by SQL text only: the library's Column and
+  * DataFrame operators build these expressions directly and run on any
+  * session. Two ways to install the names:
+  *  - [[GraftFunctions.register]] on a live session (temp functions,
+  *    added only where the name is free; [[graft.Session]] calls it at
+  *    build);
   *  - [[GraftExtensions]] via `spark.sql.extensions=graft.sqlext.GraftExtensions`
   *    (config-time injection, the deployment story for a shared cluster).
   */
@@ -596,10 +600,15 @@ object GraftFunctions {
     ("cs_table_stats", (c: Seq[Expression]) => TableStatsExpr(c(0)),
       "cs_table_stats(path) - one JSON object of a managed table's operational snapshot (live/retired files+bytes, fold backlog, stream high-water, lease, pins) - cs_used_memory/cs_profile analog (imcs.c:5716-5767); columnar form: graft.io.Tables.stats"))
 
-  /** Register as temp functions on a live session. */
+  /** Installs every `cs_*` name the session does not already resolve, as
+    * a temp function. Idempotent, and a function the user registered
+    * under one of these names is never replaced.
+    */
   def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     all.foreach { case (name, b, _) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, b, "scala_udf")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, b, "scala_udf")
     }
   }
 }

@@ -378,7 +378,7 @@ private[graft] object FileBlooms {
         scala.util.Try {
           batchFailHook.foreach(_())
           import org.apache.spark.sql.functions._
-          graft.sqlext.GraftFunctions.register(spark)
+          import org.apache.spark.sql.GraftPlanBridge.{column, expression}
           val items = g.map { case (n, rows) => n -> math.max(64L, rows) }.toMap
           val schema = org.apache.spark.sql.types.StructType(Seq(
             org.apache.spark.sql.types.StructField(valueCol,
@@ -388,8 +388,9 @@ private[graft] object FileBlooms {
             .select(substring_index(input_file_name(), "/", -1).as("__fb_name"),
               col(valueCol))
             .groupBy(col("__fb_name"))
-            .agg(call_function("cs_bloom_agg", col(valueCol),
-              element_at(typedLit(items), col("__fb_name")), lit(fpp))
+            .agg(column(graft.sqlext.CsBloomAgg(expression(col(valueCol)),
+              expression(element_at(typedLit(items), col("__fb_name"))),
+              expression(lit(fpp))).toAggregateExpression())
               .as("__fb_bloom"))
             .collect()
             .map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).toMap

@@ -45,13 +45,25 @@ object Streams {
         col("n"), col("sv"))
   }
 
+  /** The file streaming sources read int64-ns ts columns; a TIMESTAMP(NANOS)
+    * parquet column reads as that long only under
+    * `spark.sql.legacy.parquet.nanosAsLong=true`, a setting of the caller's
+    * session (set at build by [[graft.Session]]) that no operator here
+    * changes.
+    */
+  private def requireNanosAsLong(spark: SparkSession): Unit =
+    if (!spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false").toBoolean)
+      throw new IllegalStateException(
+        "streaming sources need spark.sql.legacy.parquet.nanosAsLong=true " +
+          "on the session (graft.Session sets it at build)")
+
   /** Watermarked event-time stream over a parquet directory — the one
     * source block every streaming operator here shares (ns ts → µs event
     * time, 1 h watermark).
     */
   private def streamSource(spark: SparkSession, path: String,
                            schema: StructType): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    requireNanosAsLong(spark)
     spark.readStream.schema(schema).parquet(path)
       .withColumn("ets", etsCol)
       .withWatermark("ets", "1 hour")
@@ -265,7 +277,7 @@ object Streams {
   def dedupStreamWithinWatermark(spark: SparkSession, path: String,
                                  schema: StructType, textCol: String,
                                  tsCol: String, delay: String = "1 hour"): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    requireNanosAsLong(spark)
     spark.readStream.schema(schema).parquet(path)
       .withColumn("fp", graft.text.TextOps.fingerprint(col(textCol)))
       .withColumn("ets", timestamp_micros(expr(s"`$tsCol` div 1000")))
@@ -284,7 +296,7 @@ object Streams {
     */
   def intervalJoinStream(spark: SparkSession, path: String, schema: StructType,
                          windowSeconds: Long, delay: String = "1 hour"): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    requireNanosAsLong(spark)
     def src = spark.readStream.schema(schema).parquet(path).withColumn("ets", etsCol)
     val purchases = src.filter(col("event_type") === "purchase")
       .select(col("user_id").as("p_user"), col("ets").as("p_ets"),
@@ -1347,11 +1359,8 @@ object Streams {
                                 bits: Int, batchId: Long,
                                 retainNs: Long = Long.MaxValue): Unit = {
     val spark = batch0.sparkSession
-    // one registration serves cs_rhp_sig (plane hashing) and cs_dot (the
-    // fused norm/verify dots — bit-equal with the HOF form, ArrayDot)
-    graft.sqlext.GraftFunctions.register(spark)
-    def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      call_function("cs_dot", a, b)
+    // the fused norm/verify dots: bit-equal with the HOF form (ArrayDot)
+    import graft.sim.Similarity.{dotFused => dot}
     val batch = batch0
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val withNorm = batch
@@ -1376,8 +1385,7 @@ object Streams {
     // the whole ingest batch at the defaults (32×16×dim 64 — q_emb_ingest
     // measured it ~7× the rest of the batch put together).
     val bb = withNorm.select(col(id), col(ts), col("__vfp").as("fp"),
-        posexplode(call_function("cs_rhp_sig", col("__v"),
-          lit(dim), lit(bits), lit(tables))))
+        posexplode(graft.sim.Similarity.rhpSignatures(col("__v"), dim, bits, tables)))
       .select(col(id), col(ts), col("fp"), col("pos").as("band"),
         col("col").as("bucket"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

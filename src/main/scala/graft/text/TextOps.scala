@@ -1,6 +1,8 @@
 package graft.text
 
+import graft.sqlext.{LangSig, NormText, QualitySig, RepSig, ShingleHashes}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftPlanBridge.{column, expression}
 import org.apache.spark.sql.functions._
 
 /** Text analysis for large-scale training-data pipelines: token counting,
@@ -39,8 +41,6 @@ object TextOps {
     // document — the dominant cost of the quality scan.
     graft.window.Moving.guardNames(df.columns.toSeq, Seq("__qs"),
       "qualitySignals")
-    graft.sqlext.GraftFunctions.register(
-      org.apache.spark.sql.SparkSession.active)
     val t = col(text)
     val sig = col("__qs")
     val nChars = sig.getField("n_chars").cast("double")
@@ -48,7 +48,7 @@ object TextOps {
     // composition's phantom-one-word guard, folded in
     val nWords = sig.getField("n_words").cast("double")
     val nStop = sig.getField("n_stop").cast("double")
-    df.withColumn("__qs", call_function("cs_quality_sig", t))
+    df.withColumn("__qs", column(QualitySig(expression(t))))
       .withColumn("n_chars_c", nChars.cast("long"))
       .withColumn("n_words", nWords.cast("long"))
       // mean chars per word, counting the WORD characters only — the
@@ -120,8 +120,7 @@ object TextOps {
     // argmax fold is unchanged; LangSigSpec pins frame equality with the
     // composed form on adversarial unicode and the corpus slice.
     graft.window.Moving.guardNames(df.columns.toSeq, Seq("__lsig"), "langId")
-    graft.sqlext.GraftFunctions.register(df.sparkSession)
-    val scored = df.withColumn("__lsig", call_function("cs_lang_sig", col(text)))
+    val scored = df.withColumn("__lsig", column(LangSig(expression(col(text)))))
     val langs = langMarkers.keys.toSeq.sorted
     val best = langs.foldLeft((lit("und"), lit(0L))) { case ((bl, bs), lang) =>
       val h = col("__lsig")(s"hits_$lang")
@@ -170,9 +169,7 @@ object TextOps {
     // pre-r17 lower(trim(regexp_replace(text, "[^A-Za-z0-9]+", " ")))
     // composition (NormTextSpec pins the equality), at a fraction of the
     // cost: the regex chain was ~75% of the exact-dedup corpus scan
-    graft.sqlext.GraftFunctions.register(
-      org.apache.spark.sql.SparkSession.active)
-    call_function("cs_norm_text", text)
+    column(NormText(expression(text)))
   }
 
   /** When the normalization is EMPTY (a CJK/Cyrillic/emoji-only document
@@ -237,11 +234,8 @@ object TextOps {
     * are unchanged. Same materialization contract as charShingles: pass a
     * materialized norm column.
     */
-  def hashedCharShingles(norm: Column, n: Int): Column = {
-    graft.sqlext.GraftFunctions.register(
-      org.apache.spark.sql.SparkSession.active)
-    call_function("cs_shingle_hashes", norm, lit(n))
-  }
+  def hashedCharShingles(norm: Column, n: Int): Column =
+    column(ShingleHashes(expression(norm), n))
 
   /** Word shingles (n-gram of tokens) joined by a space. Same contract:
     * `toks` must be a materialized array column (`split(norm, " ")`).
@@ -347,10 +341,8 @@ object TextOps {
     graft.window.Moving.guardNames(df.columns.toSeq,
       Seq("__rs", "n_words", "n_distinct_words", "distinct_ratio",
         "top_word_frac", "top_bigram_frac"), "repetitionSignals")
-    graft.sqlext.GraftFunctions.register(
-      org.apache.spark.sql.SparkSession.active)
     val sig = col("__rs")
-    df.withColumn("__rs", call_function("cs_rep_sig", col(text)))
+    df.withColumn("__rs", column(RepSig(expression(col(text)))))
       .withColumn("n_words", sig.getField("n_words"))
       .withColumn("n_distinct_words", sig.getField("n_distinct"))
       .withColumn("distinct_ratio",

@@ -199,6 +199,42 @@ class SqlExtSpec extends AnyFunSuite {
     assert(d.getLong(0) == 0L)
   }
 
+  test("operators' direct cs_* expressions plan as the registered-name forms") {
+    import graft.sqlext._
+    import org.apache.spark.sql.{Column, DataFrame}
+    import org.apache.spark.sql.GraftPlanBridge.{column, expression}
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    GraftFunctions.register(spark)
+    val df = Seq((1L, "Some text, here!", Array(0.5, -1.0, 2.0), Array(3L, 5L),
+      Array(1L, 2L, 3L))).toDF("id", "t", "v", "h", "ids")
+      .withColumn("m", array(struct(col("id"), col("id").as("h64"))))
+    def same(direct: DataFrame, byName: DataFrame): Unit =
+      assert(direct.queryExecution.optimizedPlan.canonicalized ==
+        byName.queryExecution.optimizedPlan.canonicalized,
+        s"\n${direct.queryExecution.optimizedPlan}\nvs\n${byName.queryExecution.optimizedPlan}")
+    def sameCol(direct: Column, name: String, args: Column*): Unit =
+      same(df.select(direct), df.select(call_function(name, args: _*)))
+    // the public Column operators, called as the library exposes them
+    sameCol(graft.sim.Similarity.dotFused(col("v"), col("v")), "cs_dot", col("v"), col("v"))
+    sameCol(TextOps.normalizedText(col("t")), "cs_norm_text", col("t"))
+    sameCol(TextOps.hashedCharShingles(col("t"), 3), "cs_shingle_hashes", col("t"), lit(3))
+    sameCol(graft.dedup.Dedup.simhash(col("h")), "cs_simhash", col("h"))
+    sameCol(graft.sim.Similarity.rhpSignatures(col("v"), 3, 4, 2), "cs_rhp_sig",
+      col("v"), lit(3), lit(4), lit(2))
+    // the constructions the DataFrame operators make inline (Dedup's
+    // banding and pair emits, TextOps' signal scans, FileBlooms' build)
+    sameCol(column(MinHashSig(expression(col("h")), 16)), "cs_minhash", col("h"), lit(16))
+    sameCol(column(BucketPairs(expression(col("ids")))), "cs_pairs", col("ids"))
+    sameCol(column(HammingBucketPairs(expression(col("m")), Literal(7))),
+      "cs_hamming_pairs", col("m"), lit(7))
+    sameCol(column(QualitySig(expression(col("t")))), "cs_quality_sig", col("t"))
+    sameCol(column(LangSig(expression(col("t")))), "cs_lang_sig", col("t"))
+    sameCol(column(RepSig(expression(col("t")))), "cs_rep_sig", col("t"))
+    same(df.groupBy(col("t")).agg(column(CsBloomAgg(expression(col("id")),
+        expression(lit(64L)), expression(lit(0.01))).toAggregateExpression())),
+      df.groupBy(col("t")).agg(call_function("cs_bloom_agg", col("id"), lit(64L), lit(0.01))))
+  }
+
   test("GraftExtensions injects the functions at session build time") {
     // Force a NEW session over the shared context: getOrCreate would
     // otherwise return the active test session (without the extensions).

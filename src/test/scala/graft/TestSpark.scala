@@ -11,17 +11,7 @@ object TestSpark {
   sys.props("graft.retire.grace.ms") = "0"
 
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // engine-written timestamp columns must carry INT64-µs stats —
-      // the INT96 default has no usable min/max, so row-group pruning
-      // over written layouts would silently be a no-op (PruneProbe)
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Session(4, 4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
