@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.{BucketSpec, CatalogTable}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StructType, TimestampNTZType, TimestampType}
 
@@ -893,32 +894,19 @@ object Tables {
     * a catalog-integrated bucketed scan cannot exclude co-located retired
     * files, so the bucketed fold keeps the reader-exclusive swap): move
     * the live dir aside to `old`, move the staged `tmp` in, delete `old`.
-    * `restorable` selects the failure semantics of the install rename:
-    * COPY protocols (full compact, deleteRange — tmp is a derived copy,
-    * the original intact at `old`) restore the original and discard tmp;
-    * MARKER protocols (incremental/bucketed compact — tmp holds COLD
-    * originals renamed in, and a commit marker promises roll-forward)
-    * must leave everything in place for recovery. Extracted because four
-    * hand-copied variants of this block had already drifted once.
+    * Its one caller ([[installBucketedFold]]) holds a commit marker that
+    * promises roll-forward — tmp holds carried originals renamed in — so
+    * a failed rename leaves everything in place for [[recoverCompact]].
     */
   private def swapInstall(fs: FileSystem, live: Path, tmp: Path, old: Path,
-                          op: String, tag: String, restorable: Boolean): Unit = {
+                          op: String, tag: String): Unit = {
     if (fs.exists(old)) fs.delete(old, true)
-    if (!fs.rename(live, old)) {
-      if (restorable) fs.delete(tmp, true)
+    if (!fs.rename(live, old))
       sys.error(s"$op: cannot move $live aside; original left in place")
-    }
     crashPoint(s"$tag:aside")
-    if (!fs.rename(tmp, live)) {
-      if (restorable) {
-        val restored = fs.rename(old, live)
-        fs.delete(tmp, true)
-        sys.error(s"$op: cannot install staged layout at $live; " +
-          (if (restored) "original restored" else s"ORIGINAL LEFT AT $old"))
-      } else
-        sys.error(s"$op: cannot install staged layout at $live " +
-          "(recoverable: rerun — the commit marker rolls forward)")
-    }
+    if (!fs.rename(tmp, live))
+      sys.error(s"$op: cannot install staged layout at $live " +
+        "(recoverable: rerun — the commit marker rolls forward)")
     crashPoint(s"$tag:installed")
     fs.delete(old, true)
   }
@@ -976,10 +964,12 @@ object Tables {
     * writer — a real kill, since a mere exception releases in the
     * `finally` — and is broken and taken over, which is safe because
     * every protocol is crash-recoverable at any step (crash-point fuzz).
-    * Re-entrant per thread so compactIncremental's fallback into compact
-    * doesn't self-deadlock.
-    */
-  /** Staleness is judged by comparing the CHECKER's clock against an
+    * Re-entrant per thread: callers outside this object (the landing
+    * bridge in `Streams`, `DedupBloom`, `Bench`) hold a table's lease
+    * across several ops, and [[loadBucketed]] leases two directories
+    * that can be the same one.
+    *
+    * Staleness is judged by comparing the CHECKER's clock against an
     * mtime stamped by the HOLDER's heartbeat — on a shared filesystem
     * across hosts this assumes clocks synchronized (NTP) well within
     * `TTL − heartbeat period` (~6-7 min at the defaults); skew beyond
@@ -1757,7 +1747,7 @@ object Tables {
                                 tag: String): Seq[TsFileEntry] = {
     val conf = spark.sparkContext.hadoopConfiguration
     // one footer pass serves manifest stats AND the zero-row drop (the
-    // same fold appendBatch's staging does): a rewrite that empties a
+    // same fold appendBody's staging does): a rewrite that empties a
     // file — deleteRange removing every row a file held — must not
     // install a stat-less 0-row entry that degrades every future
     // metadata-only decision. A footer-read failure keeps the file.
@@ -1926,19 +1916,24 @@ object Tables {
     * btree.c:644-745); the parquet analog is this explicit rewrite:
     * range-recluster on (keys, ts) into byte-proportional files of
     * ~targetBytes. The new layout is fully written to a sibling tmp dir
-    * first, so any failure BEFORE the swap leaves the original intact;
-    * the swap itself is two renames — a crash between them leaves the
-    * data at `path + ".compact.old"`, which the next compact (or any
-    * caller) recovers from at entry. Returns (filesBefore, filesAfter).
+    * first, so any failure before the install leaves the original
+    * intact; the install is the generation install
+    * ([[installGeneration]]), which the next op's entry rolls forward
+    * after a crash. Returns (filesBefore, filesAfter).
     */
   def compact(spark: SparkSession, path: String, keys: Seq[String], ts: String,
-              targetBytes: Long = 128L << 20): (Int, Int) = {
-    val hp = new Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    withWriterLease(fs, hp, "compact") {
-    recoverMutations(spark, fs, path)
-    reclaimRetired(fs, hp, retireGraceMs)
-    guardCompactable(fs, hp)
+              targetBytes: Long = 128L << 20): (Int, Int) =
+    clusteredOp(spark, path, "compact") { (fs, hp) =>
+      guardCompactable(fs, hp)
+      fullCompact(spark, fs, hp, path, keys, ts, targetBytes)
+    }
+
+  /** [[compact]]'s body, run under its entry — and under
+    * [[compactIncremental]]'s when that table has no trustworthy manifest.
+    */
+  private def fullCompact(spark: SparkSession, fs: FileSystem, hp: Path,
+                          path: String, keys: Seq[String], ts: String,
+                          targetBytes: Long): (Int, Int) = {
     def dataFiles(p: Path): Array[FileStatus] =
       fs.listStatus(p).filter(s => s.isFile && isDataFile(s.getPath.getName))
     // the rewrite's input is the LIVE generation: a governed manifest's
@@ -1976,17 +1971,8 @@ object Tables {
     reclaimRetired(fs, hp, retireGraceMs)
     invalidateRead(spark, path)
     (liveNames.length, after.length)
-    }
   }
 
-  /** deleteRange's entry recovery (mirrors recoverCompact's no-marker
-    * branch). With the live dir present, a surviving `.delete.old` is the
-    * superseded copy of an already-completed swap — cleanup, not data.
-    * The PRE-swap legacy protocol (delete-then-rename) could crash with
-    * the rewrite stranded in `__tmp` as the ONLY copy (no live dir, no
-    * .old) — adopt it rather than discard it; a re-delete of the same
-    * range is idempotent over the adopted content.
-    */
   /** deleteRange's staging-provenance tag: a sibling marker file created
     * BEFORE the rewrite dir is written and removed after the swap. It is
     * the discriminator the dot-less `__tmp` suffix cannot provide by
@@ -1998,6 +1984,15 @@ object Tables {
     */
   private def deleteStagingTag(path: String): Path = new Path(path + "__tmp.graft")
 
+  /** deleteRange's legacy (pre-r12) entry recovery (mirrors
+    * recoverCompact's no-marker branch). With the live dir present, a
+    * surviving `.delete.old` is the superseded copy of an
+    * already-completed swap — cleanup, not data. The PRE-swap legacy
+    * protocol (delete-then-rename) could crash with the rewrite stranded
+    * in `__tmp` as the ONLY copy (no live dir, no .old) — adopt it rather
+    * than discard it; a re-delete of the same range is idempotent over
+    * the adopted content.
+    */
   private def recoverDelete(fs: FileSystem, path: String): Unit = {
     val p = new Path(path)
     val tmp = new Path(path + "__tmp")
@@ -2036,6 +2031,26 @@ object Tables {
     recoverGen(spark, fs, path)
     recoverCompact(fs, path)
     recoverDelete(fs, path)
+  }
+
+  /** The entry of every clustered op that keeps the table (append, the
+    * stream appends, both compacts, deleteRange): writer lease, entry
+    * recovery, then reclaim of grace-expired retired files — any
+    * lease-holding op reclaims, so retention never outlives the grace for
+    * long. Runs once per op: a body never enters another op's entry,
+    * whose recovery would roll back the caller's own in-flight stream
+    * batch. [[load]] and [[truncate]] replace the whole table and take
+    * the lease and recovery without the reclaim.
+    */
+  private def clusteredOp[T](spark: SparkSession, path: String, op: String)(
+      body: (FileSystem, Path) => T): T = {
+    val hp = new Path(path)
+    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    withWriterLease(fs, hp, op) {
+      recoverMutations(spark, fs, path)
+      reclaimRetired(fs, hp, retireGraceMs)
+      body(fs, hp)
+    }
   }
 
   /** Resolve an ORPHANED manifest-staging sibling (a writer crashed
@@ -2253,38 +2268,35 @@ object Tables {
     * the staged rewrite's write; building its input launches none.
     */
   def compactIncremental(spark: SparkSession, path: String, keys: Seq[String],
-                         ts: String, targetBytes: Long = 128L << 20): (Int, Int) = {
-    val hp = new Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    withWriterLease(fs, hp, "compactIncremental") {
-    recoverMutations(spark, fs, path)
-    reclaimRetired(fs, hp, retireGraceMs)
-    guardCompactable(fs, hp)
-    val mOpt = liveEntries(fs, hp, Some(ts))
-    if (mOpt.isEmpty) return compact(spark, path, keys, ts, targetBytes)
-    val m = mOpt.get
-    val hot = m.files.filterNot(_.loaded)
-    if (hot.isEmpty) return (m.files.length, m.files.length)
-    // the cold load-layout files are NOT TOUCHED AT ALL — they stay live
-    // at their paths, carried in the manifest verbatim (the pre-r12 swap
-    // renamed them through a staging dir, which broke in-flight readers'
-    // paths; zero moves is both the isolation and less rename work)
-    val cold = m.files.filter(_.loaded)
-    val bytes = hot.map(_.bytes).sum
-    val parts = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    val tmp = genTmpPath(path)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    writeClustered(liveFrame(spark, m, hot.map(_.name), resize = false),
-      tmp.toString, (keys :+ ts).map(col), parts)
-    crashPoint("incr:staged")
-    val after = installGeneration(spark, fs, hp, tmp, ts,
-      replaced = hot.map(_.name), carryLive = cold.map(_.copy(loaded = true)),
-      carryRetired = m.retired, tag = "incr")
-    reclaimRetired(fs, hp, retireGraceMs)
-    invalidateRead(spark, path)
-    (m.files.length, after.length)
+                         ts: String, targetBytes: Long = 128L << 20): (Int, Int) =
+    clusteredOp(spark, path, "compactIncremental") { (fs, hp) =>
+      guardCompactable(fs, hp)
+      liveEntries(fs, hp, Some(ts)) match {
+        case None => fullCompact(spark, fs, hp, path, keys, ts, targetBytes)
+        case Some(m) if m.files.forall(_.loaded) => (m.files.length, m.files.length)
+        case Some(m) =>
+          val hot = m.files.filterNot(_.loaded)
+          // the cold load-layout files are NOT TOUCHED AT ALL — they stay
+          // live at their paths, carried in the manifest verbatim (the
+          // pre-r12 swap renamed them through a staging dir, which broke
+          // in-flight readers' paths; zero moves is both the isolation
+          // and less rename work)
+          val cold = m.files.filter(_.loaded)
+          val bytes = hot.map(_.bytes).sum
+          val parts = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
+          val tmp = genTmpPath(path)
+          if (fs.exists(tmp)) fs.delete(tmp, true)
+          writeClustered(liveFrame(spark, m, hot.map(_.name), resize = false),
+            tmp.toString, (keys :+ ts).map(col), parts)
+          crashPoint("incr:staged")
+          val after = installGeneration(spark, fs, hp, tmp, ts,
+            replaced = hot.map(_.name), carryLive = cold.map(_.copy(loaded = true)),
+            carryRetired = m.retired, tag = "incr")
+          reclaimRetired(fs, hp, retireGraceMs)
+          invalidateRead(spark, path)
+          (m.files.length, after.length)
+      }
     }
-  }
 
   /** TABLE_append: rows with ts >= from appended (imcs--1.1.sql:211-217).
     * `from` is a Column bound so it works for both Timestamp and int64-ns
@@ -2305,27 +2317,22 @@ object Tables {
     * incoming side is one small min() aggregate either way.
     */
   def append(df: DataFrame, path: String, ts: String, from: Column): Unit =
-    appendBatch(df.filter(col(ts) >= from), path, ts)
+    clusteredOp(df.sparkSession, path, "append") { (fs, hp) =>
+      appendBody(fs, hp, df.filter(col(ts) >= from), path, ts)
+      fs.delete(appendMarkerPath(path), false)
+      invalidateRead(df.sparkSession, path)
+    }
 
-  /** [[append]] without the `from` cut — the whole frame is the batch.
-    * Also the streaming bridge's per-micro-batch body
-    * ([[appendStreamBatch]] wraps it in the commit-log protocol).
-    * `retainMarker` (the stream path) leaves the append marker in place
-    * at success: the marker IS the batch's rollback identity, and it must
-    * survive until the stream's commit record lands — the caller clears
-    * it after that write (a crash in between rolls forward idempotently
-    * through [[recoverAppend]]).
+  /** The append protocol up to the manifest extension, run under the
+    * caller's entry ([[append]], [[appendStreamBatch]]). It leaves the
+    * append marker in place: the marker is the batch's rollback identity,
+    * so a stream batch clears it only after its commit record lands (a
+    * crash in between rolls forward idempotently through
+    * [[recoverAppend]]); a plain append clears it at once.
     */
-  private[graft] def appendBatch(incoming: DataFrame, path: String,
-                                 ts: String, retainMarker: Boolean = false): Unit = {
+  private def appendBody(fs: FileSystem, hp: Path, incoming: DataFrame,
+                         path: String, ts: String): Unit = {
     val spark = incoming.sparkSession
-    val hp = new Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    withWriterLease(fs, hp, "append") {
-    recoverMutations(spark, fs, path)
-    // any lease-holding op reclaims grace-expired retired files — append
-    // is the steady-state op, so retention never outlives grace for long
-    if (fs.exists(hp)) reclaimRetired(fs, hp, retireGraceMs)
     def listing(): Seq[FileStatus] =
       if (fs.exists(hp))
         fs.listStatus(hp).filter(s => s.isFile && isDataFile(s.getPath.getName)).toSeq
@@ -2333,7 +2340,7 @@ object Tables {
     val preFiles = listing()
     // ONE manifest read serves the tail check, the bootstrap decision and
     // the extension below — under the writer lease nothing else can move
-    // it (reclaimRetired above may have rewritten it, hence read AFTER)
+    // it (the entry's reclaim may have rewritten it, hence read AFTER)
     val mEntry = if (fs.exists(hp)) readManifest(fs, hp) else None
     // The METADATA tail check is DEFERRED past staging (r18, guide §2.4
     // "remove jobs outright"): the staging footer pass below records each
@@ -2502,10 +2509,7 @@ object Tables {
           "(or Tables.vacuum) first")
       else fs.delete(new Path(hp, ManifestName), false)
     }
-    if (!retainMarker) fs.delete(appendMarkerPath(path), false)
     if (fs.exists(tmp)) fs.delete(tmp, true)
-    invalidateRead(spark, path)
-    }
   }
 
   // ---- streaming ingest bridge (insert trigger, imcs.c:4617-4740) ------
@@ -2532,21 +2536,11 @@ object Tables {
     * [[recoverMutations]]) so maintenance can never fold a half-committed
     * batch into the layout before its replay decides it.
     */
-  /** The stream batch THIS thread is currently landing: its own pending
-    * record must not be "recovered" by the nested append body's entry
-    * recovery (rolling back the very batch being written would both strip
-    * crash protection and discard the data mid-flight).
-    */
-  private val inFlightPending = new ThreadLocal[Option[(String, Long)]] {
-    override def initialValue(): Option[(String, Long)] = None
-  }
-
   private def recoverStreamPending(fs: FileSystem, path: String): Unit = {
     val hp = new Path(path)
     if (!fs.exists(hp) || fs.getFileStatus(hp).isFile) return
     val rec = readStreamCommits(fs, hp)
     rec.pending.foreach { pnd =>
-      if (inFlightPending.get.contains((pnd.streamId, pnd.batchId))) return
       // routing: the explicit flag picks the marker-based branch; for
       // flag-less records, an EMPTY pre-listing WITH a surviving append
       // marker is the brief flag-less slim format's encoding (it wrote
@@ -2631,7 +2625,7 @@ object Tables {
     * stream's committed high-water mark, e.g. after checkpoint recovery)
     * is SKIPPED; otherwise a pending record (with the pre-batch file
     * listing) commits the attempt, the batch appends through the ordered
-    * -ingest contract + manifest extension [[appendBatch]], and the
+    * -ingest contract + manifest extension [[appendBody]], and the
     * commit record advances the mark. A crash anywhere replays the batch:
     * before the pending record nothing happened; after it, recovery rolls
     * the partial data back and the replay re-appends. `streamId` keys the
@@ -2640,15 +2634,9 @@ object Tables {
     * replay skipped).
     */
   def appendStreamBatch(batch: DataFrame, path: String, ts: String,
-                        streamId: String, batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    val hp = new Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    withWriterLease(fs, hp, "appendStreamBatch") {
-      recoverMutations(spark, fs, path)
-      if (fs.exists(hp)) reclaimRetired(fs, hp, retireGraceMs)
-      val rec = if (fs.exists(hp)) readStreamCommits(fs, hp)
-                else StreamCommits(Map.empty)
+                        streamId: String, batchId: Long): Boolean =
+    clusteredOp(batch.sparkSession, path, "appendStreamBatch") { (fs, hp) =>
+      val rec = readStreamCommits(fs, hp)
       if (rec.committed.get(streamId).exists(_ >= batchId)) false
       else {
         // slim pending (r12 review): the rollback identity is the append
@@ -2658,30 +2646,23 @@ object Tables {
           rec.copy(pending = Some(PendingBatch(streamId, batchId, Seq.empty,
             markerBased = Some(true)))))
         crashPoint("stream:pending")
-        inFlightPending.set(Some((streamId, batchId)))
-        // retainMarker: the append marker is this batch's rollback
-        // identity — it must outlive appendBatch so a crash BEFORE the
-        // commit record below still lets recovery delete exactly the
-        // batch's files; cleared after the commit (a crash in between
-        // rolls forward idempotently through recoverAppend)
-        try appendBatch(batch, path, ts, retainMarker = true)
-        finally inFlightPending.set(None)
+        // the body leaves the append marker — this batch's rollback
+        // identity — in place, so a crash BEFORE the commit record below
+        // still lets recovery delete exactly the batch's files
+        appendBody(fs, hp, batch, path, ts)
         crashPoint("stream:appended")
         writeStreamCommits(fs, hp,
           StreamCommits(rec.committed + (streamId -> batchId), None))
         crashPoint("stream:committed")
         fs.delete(appendMarkerPath(path), false)
-        // re-invalidate AFTER the marker clears: appendBatch's own
-        // invalidation ran while the retained marker still subtracted the
-        // batch's files from the served live set, so a registered view
-        // (and any memoized read) rebuilt there holds the PRE-batch
-        // snapshot — without this the view would lag the stream by one
-        // batch forever (r13 review finding #1)
-        invalidateRead(spark, path)
+        // invalidate AFTER the marker clears: while it stands it subtracts
+        // the batch's files from the served live set, so a registered view
+        // rebuilt earlier would hold the PRE-batch snapshot and lag the
+        // stream by one batch (r13 review finding #1)
+        invalidateRead(batch.sparkSession, path)
         true
       }
     }
-  }
 
   /** Advance a stream's commit log for a batch the CALLER knows is empty
     * (r18; guide §2.4 "remove jobs outright"): exactly-once semantics with
@@ -2699,20 +2680,14 @@ object Tables {
     * crashed batch is rolled back before this one commits past it.
     */
   def commitEmptyStreamBatch(spark: SparkSession, path: String,
-                             streamId: String, batchId: Long): Boolean = {
-    val hp = new Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    withWriterLease(fs, hp, "appendStreamBatch") {
-      recoverMutations(spark, fs, path)
-      // retired-generation reclamation must not STOP on the all-drop
-      // steady state (review r18): appendStreamBatch ran this per batch,
-      // and a stream that folds once then drops every subsequent batch
-      // would otherwise hold the retired files past the grace window
-      // until some other maintenance op happens by. Driver FS metadata
-      // only — the zero-jobs property of this path is unchanged.
-      if (fs.exists(hp)) reclaimRetired(fs, hp, retireGraceMs)
-      val rec = if (fs.exists(hp)) readStreamCommits(fs, hp)
-                else StreamCommits(Map.empty)
+                             streamId: String, batchId: Long): Boolean =
+    // the entry's reclaim keeps retired-generation reclamation going on the
+    // all-drop steady state (review r18): a stream that folds once then
+    // drops every subsequent batch would otherwise hold the retired files
+    // past the grace window until some other maintenance op happens by.
+    // Driver FS metadata only — the zero-jobs property is unchanged.
+    clusteredOp(spark, path, "appendStreamBatch") { (fs, hp) =>
+      val rec = readStreamCommits(fs, hp)
       if (rec.committed.get(streamId).exists(_ >= batchId)) false
       else {
         if (!fs.exists(hp)) fs.mkdirs(hp) // the sidecar needs its dir
@@ -2723,65 +2698,32 @@ object Tables {
         true
       }
     }
-  }
 
   /** The bucketed twin of [[appendStreamBatch]]: exactly-once micro-batch
     * ingest through a catalog bucketed table's own spec
-    * ([[appendBucketed]] body — ordered contract + manifest extension +
+    * ([[appendBucketedBody]] — ordered contract + manifest extension +
     * zero-Exchange layout preserved). The table must already exist
     * ([[loadBucketed]] establishes the spec; a stream cannot invent one).
     */
   def appendStreamBatchBucketed(batch: DataFrame, table: String,
-                                streamId: String, batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    val ct = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val loc = new Path(ct.location)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    withWriterLease(fs, loc, "appendStreamBatchBucketed") {
-      requireLocationCurrent(spark, table, fs, loc, "appendStreamBatchBucketed")
-      sweepManifestStaging(fs, loc)
-      recoverStreamPending(fs, loc.toString)
-      // predecessor-crash recovery must run BEFORE the pending record's
-      // pre-listing: a committed fold marker rolled forward later (inside
-      // appendBucketed) replaces the directory, and a crash after that
-      // would make the rollback delete the recovered layout's files as
-      // "extras" of a stale listing
-      recoverCompact(fs, loc.toString)
-      reclaimRetiredDirs(fs, loc, retireGraceMs)
-      val rec = readStreamCommits(fs, loc)
+                                streamId: String, batchId: Long): Boolean =
+    bucketedOp(batch.sparkSession, table, "appendStreamBatchBucketed") { b =>
+      val rec = readStreamCommits(b.fs, b.loc)
       if (rec.committed.get(streamId).exists(_ >= batchId)) false
       else {
-        val preNames = fs.listStatus(loc)
-          .filter(s => s.isFile && isDataFile(s.getPath.getName))
-          .map(_.getPath.getName).toSeq
-        writeStreamCommits(fs, loc,
+        val preNames = b.dataFiles(b.loc).map(_.getPath.getName)
+        writeStreamCommits(b.fs, b.loc,
           rec.copy(pending = Some(PendingBatch(streamId, batchId, preNames))))
         crashPoint("stream:pending")
-        inFlightPending.set(Some((streamId, batchId)))
-        try appendBucketed(batch, table)
-        finally inFlightPending.set(None)
+        appendBucketedBody(b, batch)
         crashPoint("stream:appended")
-        writeStreamCommits(fs, loc,
+        writeStreamCommits(b.fs, b.loc,
           StreamCommits(rec.committed + (streamId -> batchId), None))
-        spark.catalog.refreshTable(table)
+        batch.sparkSession.catalog.refreshTable(table)
         true
       }
     }
-  }
 
-  /** TABLE_delete(from, till): inclusive range delete by timestamp
-    * (btree.c:747-899) — rewrite excluding the range. On a real deployment
-    * this is a Delta/Iceberg DELETE; over plain Parquet it is
-    * read-filter-rewrite installed by the SAME two-rename swap the
-    * compact flavors use (never delete-then-write: a crash between the
-    * delete and the install must not strand the only copy in a staging
-    * dir), with the replaced generation grace-retained in place for
-    * in-flight readers. Legacy entry recovery still honors the pre-r12
-    * protocol's strands: a missing live dir with a `.delete.old` sibling
-    * is restored, a TAGGED `__tmp` ([[deleteStagingTag]]) is adopted when
-    * it is the only copy; an untagged `__tmp` is never touched at all.
-    */
   /** deleteRange's [from, till] bounds as epoch-ns on the MANIFEST's
     * scale, which is the parquet footer's: NTZ stats are timezone-less
     * WALL micros ×1000 and LTZ stats are UTC-adjusted micros ×1000
@@ -2856,12 +2798,8 @@ object Tables {
     * the rewrite's write; a delete touching no file launches none.
     */
   def deleteRange(spark: SparkSession, path: String, ts: String,
-                  from: Column, till: Column): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    withWriterLease(fs, p, "deleteRange") {
-    recoverMutations(spark, fs, path)
-    reclaimRetired(fs, p, retireGraceMs)
+                  from: Column, till: Column): Unit =
+    clusteredOp(spark, path, "deleteRange") { (fs, p) =>
     // same refusal as the compact flavors: a rewrite must never silently
     // destroy content the engine doesn't own. (The legacy `__tmp` staging
     // is gone — a sibling `__tmp` of unknown provenance is simply never
@@ -2922,7 +2860,6 @@ object Tables {
     reclaimRetired(fs, p, retireGraceMs)
     invalidateRead(spark, path)
     }
-  }
 
   /** [[deleteRange]] with epoch-ns bounds — INCLUSIVE [fromNs, tillNs]
     * on the engine's int64-ns scale, translated to literals of the ts
@@ -3099,13 +3036,8 @@ object Tables {
     // sortCols beyond the keys (e.g. the series ts) let ORDER-requiring
     // operators — sort-merge join, the as-of merge exec — run with zero
     // per-query Sort as well as zero Exchange
-    val sort = keys ++ sortCols
-    df.repartition(buckets, keys.map(col): _*)
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, keys.head, keys.tail: _*)
-      .sortBy(sort.head, sort.tail: _*)
-      .format("parquet")
-      .saveAsTable(table)
+    saveBucketed(df, BucketSpec(buckets, keys, keys ++ sortCols), table,
+      SaveMode.Overwrite)
     // the bucketed layout makes the SAME lifecycle promises as the
     // clustered one: a ts manifest at the committed location backs
     // appendBucketed's metadata-only out-of-order rejection and
@@ -3184,31 +3116,104 @@ object Tables {
     * reference's append path (imcs.c:4617-4740): writes land in the
     * series' existing layout, maintenance restores the compact form.
     */
-  def appendBucketed(df: DataFrame, table: String): Unit = {
-    val spark = df.sparkSession
+  def appendBucketed(df: DataFrame, table: String): Unit =
+    bucketedOp(df.sparkSession, table, "appendBucketed") { b =>
+      appendBucketedBody(b, df)
+      df.sparkSession.catalog.refreshTable(table)
+    }
+
+  /** A bucketed catalog table as its op's entry ([[bucketedOp]]) resolved
+    * it: catalog metadata, bucket spec, and the leased location.
+    */
+  private final case class BucketedTable(name: String, ct: CatalogTable,
+                                         bs: BucketSpec, loc: Path,
+                                         fs: FileSystem) {
+    def seriesTs: Option[String] = seriesTsOf(bs.bucketColumnNames, bs.sortColumnNames)
+    def dataFiles(p: Path): Seq[FileStatus] =
+      fs.listStatus(p).filter(s => s.isFile && isDataFile(s.getPath.getName)).toSeq
+  }
+
+  /** The entry of every bucketed mutator ([[appendBucketed]],
+    * [[appendStreamBatchBucketed]], [[compactBucketed]],
+    * [[compactBucketedIsolated]], [[deleteRangeBucketed]]): catalog
+    * lookup and bucket spec, writer lease on the location, the
+    * generation-flip check ([[requireLocationCurrent]]), the pin refusal
+    * of the `readerExclusive` in-place rewrites, then entry recovery and
+    * reclaim — once per op. Recovery comes before any body work: a
+    * committed fold marker rolled forward AFTER new files landed (or
+    * after a stream batch's pre-listing) would sweep those files aside
+    * with the staged layout, or make a rollback delete the recovered
+    * layout's files as "extras" of a stale listing.
+    */
+  private def bucketedOp[T](spark: SparkSession, table: String, op: String,
+                            readerExclusive: Boolean = false)(
+      body: BucketedTable => T): T = {
     val ct = spark.sessionState.catalog.getTableMetadata(
       org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val bs = ct.bucketSpec.getOrElse(
-      sys.error(s"appendBucketed: $table carries no bucket spec"))
-    val keys = bs.bucketColumnNames
-    val sort = bs.sortColumnNames
+    val bs = ct.bucketSpec.getOrElse(sys.error(s"$op: $table carries no bucket spec"))
     val loc = new Path(ct.location)
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    withWriterLease(fs, loc, "appendBucketed") {
-    requireLocationCurrent(spark, table, fs, loc, "appendBucketed")
-    sweepManifestStaging(fs, loc)
-    recoverStreamPending(fs, loc.toString)
-    reclaimRetiredDirs(fs, loc, retireGraceMs)
-    // recover a predecessor's crashed fold BEFORE writing fresh files —
-    // an append on top of a committed-but-uninstalled fold marker would
-    // otherwise have its files swept aside (and deleted) when the next
-    // compactBucketed rolls that stale staged layout forward; the same
-    // recover-first rule the clustered append has carried since r11
-    recoverCompact(fs, loc.toString)
+    withWriterLease(fs, loc, op) {
+      requireLocationCurrent(spark, table, fs, loc, op)
+      // an in-place rewrite replaces the directory under any reader (its
+      // documented reader-EXCLUSIVE trade) — an explicit pin is the one
+      // reader statement it can honor: refuse before touching anything,
+      // like truncate/load do (compactBucketedIsolated proceeds under pins)
+      if (readerExclusive) requireNoLivePins(fs, loc, op)
+      sweepManifestStaging(fs, loc)
+      recoverStreamPending(fs, loc.toString)
+      recoverCompact(fs, loc.toString)
+      reclaimRetiredDirs(fs, loc, retireGraceMs)
+      body(BucketedTable(table, ct, bs, loc, fs))
+    }
+  }
+
+  /** Write `df` as catalog table `table` through bucket spec `bs`,
+    * hash-repartitioned by the bucket keys so each bucket lands as one
+    * file, sorted when the spec sorts (bucketBy without sortBy is a legal
+    * catalog spec — mirror it exactly). `path` makes the table EXTERNAL.
+    */
+  private def saveBucketed(df: DataFrame, bs: BucketSpec, table: String,
+                           mode: SaveMode, path: Option[Path] = None): Unit = {
+    val keys = bs.bucketColumnNames
+    val sort = bs.sortColumnNames
+    val w0 = df.repartition(bs.numBuckets, keys.map(col): _*).write.mode(mode)
+    val w1 = path.fold(w0)(p => w0.option("path", p.toString))
+      .bucketBy(bs.numBuckets, keys.head, keys.tail: _*)
+    val w = if (sort.isEmpty) w1 else w1.sortBy(sort.head, sort.tail: _*)
+    w.format("parquet").saveAsTable(table)
+  }
+
+  /** Drop an in-place bucketed rewrite's staged `<table>__fold` table. A
+    * crashed earlier fold can leak it — possibly only its LOCATION (a
+    * fresh session's in-memory catalog no longer lists it, but the
+    * orphaned dir still blocks the managed-table create). The fold is
+    * derived data: always rebuilt, never trusted. Found by the
+    * crash-point fuzz (TablesSpec).
+    */
+  private def dropFoldLeftovers(spark: SparkSession, table: String): Unit = {
+    val foldTable = table + "__fold"
+    spark.sql(s"DROP TABLE IF EXISTS `$foldTable`")
+    // defaultTablePath, not $warehouse/$foldTable: they diverge outside
+    // the default database (<db>.db/ subdir). Its OWN filesystem: a
+    // delete through the TABLE-location fs would "Wrong FS" on a
+    // cross-filesystem warehouse
+    val fl = new Path(spark.sessionState.catalog.defaultTablePath(
+      org.apache.spark.sql.catalyst.TableIdentifier(foldTable)))
+    val ffs = fl.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (ffs.exists(fl)) ffs.delete(fl, true)
+  }
+
+  /** The append protocol of a bucketed table under its op's entry
+    * ([[appendBucketed]], [[appendStreamBatchBucketed]]): ordered-ingest
+    * check, the write through the table's own spec, manifest extension.
+    */
+  private def appendBucketedBody(b: BucketedTable, df: DataFrame): Unit = {
+    val spark = df.sparkSession
+    val fs = b.fs
+    val loc = b.loc
     def listing(): Seq[FileStatus] =
-      if (fs.exists(loc))
-        fs.listStatus(loc).filter(s => s.isFile && isDataFile(s.getPath.getName)).toSeq
-      else Seq.empty
+      if (fs.exists(loc)) b.dataFiles(loc) else Seq.empty
     val preFiles = listing()
     // ordered-ingest contract — the SAME promise the clustered append
     // makes (imcs.c:4617-4740): a batch below the stored series tail is an
@@ -3217,7 +3222,7 @@ object Tables {
     // lookup reading zero data bytes); manifest-less/stat-less tables pay
     // one max(ts) scan over the catalog table. Sortless specs carry no
     // series order — nothing to protect.
-    val seriesTs = seriesTsOf(keys, sort)
+    val seriesTs = b.seriesTs
     for (ts <- seriesTs; if preFiles.nonEmpty) {
       val manifestTail: Option[Option[Long]] =
         readManifest(fs, loc).filter(_.ts == ts)
@@ -3244,7 +3249,7 @@ object Tables {
           }
         case None =>
           val viol = df.agg(min(col(ts)).as("mn"))
-            .crossJoin(spark.table(table).agg(max(col(ts)).as("mx")))
+            .crossJoin(spark.table(b.name).agg(max(col(ts)).as("mx")))
             .filter(col("mn") < col("mx"))
             .head(1)
           if (viol.nonEmpty)
@@ -3255,12 +3260,7 @@ object Tables {
                 "(imcs.c:4617-4740)")
       }
     }
-    val w0 = df.repartition(bs.numBuckets, keys.map(col): _*)
-      .write.mode(SaveMode.Append)
-      .bucketBy(bs.numBuckets, keys.head, keys.tail: _*)
-    // bucketBy without sortBy is a legal catalog spec — mirror it exactly
-    val w = if (sort.isEmpty) w0 else w0.sortBy(sort.head, sort.tail: _*)
-    w.format("parquet").saveAsTable(table)
+    saveBucketed(df, b.bs, b.name, SaveMode.Append)
     // extend the manifest with the batch's files as loaded=false (the set
     // compactBucketed's fold re-establishes); a manifest that no longer
     // matches the pre-append listing is stale (foreign writer) — drop it
@@ -3275,30 +3275,8 @@ object Tables {
           writeManifestFile(fs, loc, m.copy(files = m.files ++ entries))
         } else fs.delete(new Path(loc, ManifestName), false)
       }
-    spark.catalog.refreshTable(table)
-    }
   }
 
-  /** Per-bucket incremental compact for a bucketed catalog table: fold
-    * ONLY buckets holding more than one file back to a single sorted
-    * file; single-file buckets are carried by RENAME — bytes untouched.
-    * Work is therefore proportional to the data in TOUCHED buckets, not
-    * the table: an append stream over a subset of keys folds just those
-    * buckets, which is what makes maintenance payable when the table is
-    * 100 TB but the day's appends are not. (When every bucket was
-    * appended to, a fold necessarily re-sorts every bucket — same as the
-    * reference absorbing appends into every touched B-tree page,
-    * btree.c:644-745.)
-    *
-    * The fold is ONE Spark job: the hot files are read together and
-    * re-written through the same bucketBy spec into a staging table, so
-    * each output file lands with the correct bucket id in its name (the
-    * bucket hash is a pure function of the key columns). The staged files
-    * plus the renamed-in cold files then install via the SAME commit-
-    * marker + two-rename swap [[compact]] uses (crash recovery shared:
-    * [[recoverCompact]] at entry, roll-forward after the marker).
-    * Returns (filesBefore, filesAfter).
-    */
   // ---- bucketed generation flip (reader-isolated fold) -----------------
 
   private val RetiredDirsName = "_graft_retired_dirs.json"
@@ -3411,26 +3389,13 @@ object Tables {
     * generation is written INSIDE the new one before the flip, so a
     * crash after it loses nothing. Returns (filesBefore, filesAfter).
     */
-  def compactBucketedIsolated(spark: SparkSession, table: String): (Int, Int) = {
-    val ct = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val bs = ct.bucketSpec.getOrElse(
-      sys.error(s"compactBucketedIsolated: $table carries no bucket spec"))
-    val loc = new Path(ct.location)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    withWriterLease(fs, loc, "compactBucketedIsolated") {
-    requireLocationCurrent(spark, table, fs, loc, "compactBucketedIsolated")
-    sweepManifestStaging(fs, loc)
-    recoverStreamPending(fs, loc.toString)
-    recoverCompact(fs, loc.toString)
+  def compactBucketedIsolated(spark: SparkSession, table: String): (Int, Int) =
+    bucketedOp(spark, table, "compactBucketedIsolated") { b =>
+    val fs = b.fs
+    val loc = b.loc
     guardCompactable(fs, loc)
-    reclaimRetiredDirs(fs, loc, retireGraceMs)
     sweepStaleGenerations(fs, table, loc, retireGraceMs)
-    def dataFiles(p: Path): Seq[FileStatus] =
-      fs.listStatus(p).filter(s => s.isFile && isDataFile(s.getPath.getName)).toSeq
-    val before = dataFiles(loc).size
-    val keys = bs.bucketColumnNames
-    val sort = bs.sortColumnNames
+    val before = b.dataFiles(loc).size
     val genTable = table + "__gen"
     spark.sql(s"DROP TABLE IF EXISTS `$genTable`") // crashed-attempt entry
     val gen = new Path(loc.getParent,
@@ -3442,14 +3407,9 @@ object Tables {
     // output partitioning, under which the repartition can be elided and
     // the write then emits one file per (task, bucket) instead of the one
     // sorted file per bucket the zero-Sort property needs)
-    val w0 = spark.read.schema(ct.schema)
-      .parquet(dataFiles(loc).map(_.getPath.toString): _*)
-      .repartition(bs.numBuckets, keys.map(col): _*)
-      .write.mode(SaveMode.Overwrite)
-      .option("path", gen.toString)
-      .bucketBy(bs.numBuckets, keys.head, keys.tail: _*)
-    val w = if (sort.isEmpty) w0 else w0.sortBy(sort.head, sort.tail: _*)
-    w.format("parquet").saveAsTable(genTable)
+    saveBucketed(spark.read.schema(b.ct.schema)
+      .parquet(b.dataFiles(loc).map(_.getPath.toString): _*),
+      b.bs, genTable, SaveMode.Overwrite, Some(gen))
     crashPoint("bktiso:staged")
     // the new generation's ledger: previous retirees carry over, the
     // current generation joins them — written INSIDE the new dir BEFORE
@@ -3466,7 +3426,7 @@ object Tables {
       val sc = readStreamCommits(fs, loc)
       if (sc.committed.nonEmpty) writeStreamCommits(fs, gen, sc.copy(pending = None))
     }
-    seriesTsOf(keys, sort).foreach(ts => writeManifest(spark, gen.toString, ts))
+    b.seriesTs.foreach(ts => writeManifest(spark, gen.toString, ts))
     crashPoint("bktiso:ledger")
     spark.sql(s"DROP TABLE IF EXISTS `$genTable`") // external: files stay
     crashPoint("bktiso:gen-dropped")
@@ -3475,98 +3435,102 @@ object Tables {
     spark.sql(s"ALTER TABLE `$table` SET LOCATION '${gen.toString}'")
     crashPoint("bktiso:flipped")
     spark.catalog.refreshTable(table)
-    (before, dataFiles(gen).size)
+    (before, b.dataFiles(gen).size)
     }
-  }
 
-  def compactBucketed(spark: SparkSession, table: String): (Int, Int) = {
-    val ct = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val bs = ct.bucketSpec.getOrElse(
-      sys.error(s"compactBucketed: $table carries no bucket spec"))
-    val loc = new Path(ct.location)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    withWriterLease(fs, loc, "compactBucketed") {
-    requireLocationCurrent(spark, table, fs, loc, "compactBucketed")
-    // the in-place fold rewrites the directory under any reader (its
-    // documented reader-EXCLUSIVE trade) — an explicit pin is the one
-    // reader statement it can honor: refuse, like truncate/load do
-    // (compactBucketedIsolated is the fold that proceeds under pins)
-    requireNoLivePins(fs, loc, "compactBucketed")
-    sweepManifestStaging(fs, loc)
-    recoverStreamPending(fs, loc.toString)
-    recoverCompact(fs, loc.toString)
-    guardCompactable(fs, loc)
-    reclaimRetiredDirs(fs, loc, retireGraceMs)
-    // a crashed earlier fold leaks the staged `__fold` table — possibly
-    // only its LOCATION (a fresh session's in-memory catalog no longer
-    // lists it, but the orphaned dir still blocks the managed-table
-    // create). The fold is derived data: always rebuild, never trust
-    // leftovers. Found by the crash-point fuzz (TablesSpec).
-    val foldTable = table + "__fold"
-    def dropFoldLeftovers(): Unit = {
-      spark.sql(s"DROP TABLE IF EXISTS `$foldTable`")
-      // defaultTablePath, not $warehouse/$foldTable: they diverge outside
-      // the default database (<db>.db/ subdir)
-      val fl = new Path(spark.sessionState.catalog.defaultTablePath(
-        org.apache.spark.sql.catalyst.TableIdentifier(foldTable)))
-      val ffs = fl.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (ffs.exists(fl)) ffs.delete(fl, true)
-    }
-    dropFoldLeftovers()
-    def dataFiles(p: Path): Seq[FileStatus] =
-      fs.listStatus(p).filter(s => s.isFile && isDataFile(s.getPath.getName)).toSeq
-    val before = dataFiles(loc)
+  /** Per-bucket incremental compact for a bucketed catalog table: fold
+    * ONLY buckets holding more than one file back to a single sorted
+    * file; single-file buckets are carried by RENAME — bytes untouched.
+    * Work is therefore proportional to the data in TOUCHED buckets, not
+    * the table: an append stream over a subset of keys folds just those
+    * buckets, which is what makes maintenance payable when the table is
+    * 100 TB but the day's appends are not. (When every bucket was
+    * appended to, a fold necessarily re-sorts every bucket — same as the
+    * reference absorbing appends into every touched B-tree page,
+    * btree.c:644-745.)
+    *
+    * The fold is ONE Spark job: the hot files are read together and
+    * re-written through the same bucketBy spec into a staging table, so
+    * each output file lands with the correct bucket id in its name (the
+    * bucket hash is a pure function of the key columns). The staged files
+    * plus the renamed-in cold files then install via the commit-marker +
+    * two-rename swap of [[installBucketedFold]] (crash recovery:
+    * [[recoverCompact]] at entry rolls a committed marker forward).
+    * Returns (filesBefore, filesAfter).
+    */
+  def compactBucketed(spark: SparkSession, table: String): (Int, Int) =
+    bucketedOp(spark, table, "compactBucketed", readerExclusive = true) { b =>
+    guardCompactable(b.fs, b.loc)
+    dropFoldLeftovers(spark, table)
+    val before = b.dataFiles(b.loc)
     val byBucket = before.groupBy { s =>
       bucketIdOf(s.getPath.getName).getOrElse(
         sys.error(s"compactBucketed: ${s.getPath.getName} has no bucket id — " +
-          s"foreign file in bucketed table dir $loc"))
+          s"foreign file in bucketed table dir ${b.loc}"))
     }
     val hot = byBucket.filter(_._2.size > 1)
     if (hot.isEmpty) {
-      // nothing to fold — but a roll-forward recovery (recoverCompact
-      // above) installs the folded layout WITHOUT a manifest (the
+      // nothing to fold — but a roll-forward recovery (recoverCompact at
+      // entry) installs the folded layout WITHOUT a manifest (the
       // bucketed staging never carries one), so returning here without a
       // regen would strand the table manifest-less forever: every slice
       // re-reads all bucket files and every append pays the max(ts) scan
-      seriesTsOf(bs.bucketColumnNames, bs.sortColumnNames).foreach { ts =>
-        val ok = readManifest(fs, loc).exists(m =>
+      b.seriesTs.foreach { ts =>
+        val ok = readManifest(b.fs, b.loc).exists(m =>
           m.ts == ts && manifestConsistent(m, before))
-        if (!ok) writeManifest(spark, loc.toString, ts)
+        if (!ok) writeManifest(spark, b.loc.toString, ts)
       }
       spark.catalog.refreshTable(table)
       return (before.size, before.size)
     }
     val cold = byBucket.filterNot(k => hot.contains(k._1)).values.flatten.toSeq
-    // fold the hot buckets through the same spec into a staging table so
-    // the output files carry correct bucket ids in their names
     val hotPaths = hot.values.flatten.map(_.getPath.toString).toSeq
-    val keys = bs.bucketColumnNames
-    val sort = bs.sortColumnNames
-    val w0 = spark.read.schema(ct.schema).parquet(hotPaths: _*)
-      .repartition(bs.numBuckets, keys.map(col): _*)
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(bs.numBuckets, keys.head, keys.tail: _*)
-    // sortless bucket specs fold without a sortBy (legal spec — mirror it)
-    val w = if (sort.isEmpty) w0 else w0.sortBy(sort.head, sort.tail: _*)
-    w.format("parquet").saveAsTable(foldTable)
-    crashPoint("bkt:folded")
+    installBucketedFold(spark, b, spark.read.schema(b.ct.schema).parquet(hotPaths: _*),
+      hot.keySet, cold, "compactBucketed", "bkt")
+    spark.catalog.refreshTable(table)
+    (before.size, b.dataFiles(b.loc).size)
+    }
+
+  /** The install shared by the in-place bucketed rewrites
+    * ([[compactBucketed]], [[deleteRangeBucketed]]): write `input` through
+    * the table's own spec into the staged `<table>__fold` table, so each
+    * output lands with the correct bucket id; stage the outputs with the
+    * stream-commit log and retired-dirs ledger in `<loc>.compact.tmp`;
+    * write the commit marker naming `carried` (live files kept as they
+    * are); move them in; swap the directory; regenerate the manifest.
+    * `buckets` are the bucket ids the rewrite may write — the bucket hash
+    * is the same function both writes used, so an output outside them
+    * means corruption and stops the install. Crash tags are `tag`-prefixed.
+    */
+  private def installBucketedFold(spark: SparkSession, b: BucketedTable,
+                                  input: DataFrame, buckets: Set[Int],
+                                  carried: Seq[FileStatus],
+                                  op: String, tag: String): Unit = {
+    val fs = b.fs
+    val loc = b.loc
+    val foldTable = b.name + "__fold"
+    saveBucketed(input, b.bs, foldTable, SaveMode.Overwrite)
+    crashPoint(s"$tag:folded")
     val foldLoc = new Path(spark.sessionState.catalog.getTableMetadata(
       org.apache.spark.sql.catalyst.TableIdentifier(foldTable)).location)
     val tmp = new Path(loc.toString + ".compact.tmp")
     if (fs.exists(tmp)) fs.delete(tmp, true)
-    if (!fs.mkdirs(tmp)) sys.error(s"compactBucketed: cannot create staging $tmp")
-    dataFiles(foldLoc).foreach { s =>
-      val id = bucketIdOf(s.getPath.getName)
-      // the bucket hash is the same function both writes used, so a fold
-      // output landing in a cold bucket means corruption — stop
-      if (!id.exists(hot.contains))
-        sys.error(s"compactBucketed: folded file ${s.getPath.getName} maps to " +
-          s"bucket ${id.map(_.toString).getOrElse("<unparsed>")} which was " +
-          "not hot — refusing to install")
-      if (!fs.rename(s.getPath, new Path(tmp, s.getPath.getName)))
-        sys.error(s"compactBucketed: cannot stage folded file ${s.getPath}")
-    }
+    if (!fs.mkdirs(tmp)) sys.error(s"$op: cannot create staging $tmp")
+    // one footer pass over the fold outputs (only the row count is used):
+    // the bucket-id check, and the zero-row drop — a bucket whose every
+    // row a delete removed writes an empty file
+    scanEntriesWithRows(spark.sparkContext.hadoopConfiguration,
+      b.seriesTs.getOrElse(""), b.dataFiles(foldLoc), loaded = true)
+      .foreach { case (e, rows) =>
+        val id = bucketIdOf(e.name)
+        if (!id.exists(buckets)) sys.error(
+          s"$op: folded file ${e.name} maps to bucket " +
+            s"${id.map(_.toString).getOrElse("<unparsed>")}, which the " +
+            "rewrite did not cover — refusing to install")
+        if (!rows.contains(0L) &&
+            !fs.rename(new Path(foldLoc, e.name), new Path(tmp, e.name)))
+          sys.error(s"$op: cannot stage folded file ${e.name}")
+      }
     // the stream-commit log AND the retired-dirs ledger travel with the
     // layout: the two-rename swap replaces the whole dir, so both
     // sidecars must be staged into tmp — losing the commit log would
@@ -3580,33 +3544,25 @@ object Tables {
       if (ledger.nonEmpty) writeSmallFileAtomic(fs, new Path(tmp, RetiredDirsName),
         org.json4s.jackson.Serialization.write(ledger))
     }
-    crashPoint("bkt:staged")
-    // COMMIT marker: from here recovery rolls the swap forward
+    crashPoint(s"$tag:staged")
+    // COMMIT marker (the recoverCompact protocol: a JSON list of the files
+    // still to move) — from here recovery rolls the swap forward
     val marker = new Path(loc.toString + ".compact.commit")
     writeSmallFileAtomic(fs, marker,
-      org.json4s.jackson.Serialization.write(cold.map(_.getPath.getName)))
-    crashPoint("bkt:marker")
-    cold.foreach { s =>
+      org.json4s.jackson.Serialization.write(carried.map(_.getPath.getName)))
+    crashPoint(s"$tag:marker")
+    carried.foreach { s =>
       if (!fs.rename(s.getPath, new Path(tmp, s.getPath.getName)))
-        sys.error(s"compactBucketed: cannot move cold file ${s.getPath} into staging")
-      crashPoint("bkt:cold-moved")
+        sys.error(s"$op: cannot move carried file ${s.getPath} into staging")
+      crashPoint(s"$tag:cold-moved")
     }
-    val old = new Path(loc.toString + ".compact.old")
-    swapInstall(fs, loc, tmp, old, "compactBucketed", "bkt", restorable = false)
+    swapInstall(fs, loc, tmp, new Path(loc.toString + ".compact.old"), op, tag)
     fs.delete(marker, false)
-    // dropFoldLeftovers' own-filesystem delete covers the fold location —
-    // a second delete through the TABLE-location fs would "Wrong FS" on a
-    // cross-filesystem warehouse after the swap already committed
-    dropFoldLeftovers()
-    // the pre-fold manifest travelled into `.compact.old` with the rest of
-    // the replaced dir — regenerate it over the folded layout (every file
-    // loaded=true again), same as the clustered compact
-    seriesTsOf(bs.bucketColumnNames, bs.sortColumnNames).foreach { ts =>
-      writeManifest(spark, loc.toString, ts)
-    }
-    spark.catalog.refreshTable(table)
-    (before.size, dataFiles(loc).size)
-    }
+    dropFoldLeftovers(spark, b.name)
+    // the pre-rewrite manifest travelled into `.compact.old` with the rest
+    // of the replaced dir — regenerate it over the installed layout (every
+    // file loaded=true again)
+    b.seriesTs.foreach(ts => writeManifest(spark, loc.toString, ts))
   }
 
   /** TABLE_delete(from, till) on a BUCKETED catalog table — the rolling
@@ -3618,11 +3574,12 @@ object Tables {
     * — metadata ops, bytes untouched, names preserved) and INTERSECTING
     * ones (read, filtered, rewritten through the table's own bucket spec
     * so each output lands with a correct bucket id). Installs via the
-    * commit-marker + two-rename swap [[compactBucketed]] uses — crash
-    * recovery is shared ([[recoverCompact]] rolls a committed marker
-    * forward at the next op's entry). Stat-less manifest entries and
-    * non-literal bounds conservatively join the rewrite set; a delete no
-    * file intersects is a pure no-op.
+    * commit-marker + two-rename swap [[compactBucketed]] uses
+    * ([[installBucketedFold]]) — crash recovery is shared
+    * ([[recoverCompact]] rolls a committed marker forward at the next
+    * op's entry). Stat-less manifest entries and non-literal bounds
+    * conservatively join the rewrite set; a delete no file intersects is
+    * a pure no-op.
     *
     * A bucket holding both carried and rewritten files temporarily has
     * >1 file (the same state [[appendBucketed]] creates); the next fold
@@ -3631,48 +3588,22 @@ object Tables {
     * live reader pin; inclusive [from, till], NULL-ts rows survive.
     */
   def deleteRangeBucketed(spark: SparkSession, table: String,
-                          from: Column, till: Column): Unit = {
-    val ct = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val bs = ct.bucketSpec.getOrElse(
-      sys.error(s"deleteRangeBucketed: $table carries no bucket spec"))
-    val keys = bs.bucketColumnNames
-    val sort = bs.sortColumnNames
-    val ts = seriesTsOf(keys, sort).getOrElse(
+                          from: Column, till: Column): Unit =
+    bucketedOp(spark, table, "deleteRangeBucketed", readerExclusive = true) { b =>
+    val ts = b.seriesTs.getOrElse(
       sys.error(s"deleteRangeBucketed: $table has no series ts sort column — " +
         "a key-only bucket spec carries no series order to delete by"))
-    val dt = ct.schema.fields.find(_.name.equalsIgnoreCase(ts)).map(_.dataType)
+    val dt = b.ct.schema.fields.find(_.name.equalsIgnoreCase(ts)).map(_.dataType)
       .getOrElse(sys.error(s"deleteRangeBucketed: sort column $ts missing " +
         s"from $table's schema"))
-    val loc = new Path(ct.location)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    withWriterLease(fs, loc, "deleteRangeBucketed") {
-    requireLocationCurrent(spark, table, fs, loc, "deleteRangeBucketed")
-    requireNoLivePins(fs, loc, "deleteRangeBucketed")
-    sweepManifestStaging(fs, loc)
-    recoverStreamPending(fs, loc.toString)
-    recoverCompact(fs, loc.toString)
-    guardCompactable(fs, loc)
-    reclaimRetiredDirs(fs, loc, retireGraceMs)
-    // derived staging table — always rebuilt, never trusted (the same
-    // leftover-reclaim reasoning as compactBucketed's fold)
-    val foldTable = table + "__fold"
-    def dropFoldLeftovers(): Unit = {
-      spark.sql(s"DROP TABLE IF EXISTS `$foldTable`")
-      val fl = new Path(spark.sessionState.catalog.defaultTablePath(
-        org.apache.spark.sql.catalyst.TableIdentifier(foldTable)))
-      val ffs = fl.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (ffs.exists(fl)) ffs.delete(fl, true)
-    }
-    dropFoldLeftovers()
-    def dataFiles(p: Path): Seq[FileStatus] =
-      fs.listStatus(p).filter(s => s.isFile && isDataFile(s.getPath.getName)).toSeq
-    val files = dataFiles(loc)
+    guardCompactable(b.fs, b.loc)
+    dropFoldLeftovers(spark, table)
+    val files = b.dataFiles(b.loc)
     if (files.isEmpty) return
     // the manifest-pruned split (trustworthy manifest only — a stale one
     // cannot prove a file disjoint); bounds on the manifest's ns scale
     val entryBounds: Map[String, (Option[Long], Option[Long])] =
-      readManifest(fs, loc).filter(_.ts == ts)
+      readManifest(b.fs, b.loc).filter(_.ts == ts)
         .filter(manifestConsistent(_, files))
         .map(_.files.map(e => e.name -> (e.minNs, e.maxNs)).toMap)
         .getOrElse(Map.empty)
@@ -3687,71 +3618,16 @@ object Tables {
       case None => (Seq.empty[FileStatus], files)
     }
     if (rewrite.isEmpty) return // nothing intersects — pure no-op
-    val rewriteBuckets = rewrite.flatMap(s => bucketIdOf(s.getPath.getName)).toSet
     // filtered rewrite of the intersecting files through the bucket spec
     // (NULL-ts rows are outside every range — the isNull arm keeps them
     // from being deleted by three-valued logic, like the clustered path)
-    val w0 = spark.read.schema(ct.schema)
-      .parquet(rewrite.map(_.getPath.toString): _*)
-      .filter(col(ts).isNull || !(col(ts) >= from && col(ts) <= till))
-      .repartition(bs.numBuckets, keys.map(col): _*)
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(bs.numBuckets, keys.head, keys.tail: _*)
-    val w = if (sort.isEmpty) w0 else w0.sortBy(sort.head, sort.tail: _*)
-    w.format("parquet").saveAsTable(foldTable)
-    crashPoint("bktdel:folded")
-    val foldLoc = new Path(spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(foldTable)).location)
-    val tmp = new Path(loc.toString + ".compact.tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    if (!fs.mkdirs(tmp)) sys.error(s"deleteRangeBucketed: cannot create staging $tmp")
-    // one footer pass over the fold outputs: bucket-id sanity (an output
-    // landing in a bucket no rewritten file belonged to means the hash
-    // functions disagree — corruption, stop) + the zero-row drop (a
-    // bucket whose every row was deleted writes an empty file)
-    val foldScan = scanEntriesWithRows(spark.sparkContext.hadoopConfiguration,
-      ts, dataFiles(foldLoc), loaded = true)
-    foldScan.foreach { case (e, rows) =>
-      val id = bucketIdOf(e.name)
-      if (!id.exists(rewriteBuckets.contains)) sys.error(
-        s"deleteRangeBucketed: rewritten file ${e.name} maps to bucket " +
-          s"${id.map(_.toString).getOrElse("<unparsed>")} which held no " +
-          "intersecting file — refusing to install")
-      if (!rows.contains(0L) &&
-          !fs.rename(new Path(foldLoc, e.name), new Path(tmp, e.name)))
-        sys.error(s"deleteRangeBucketed: cannot stage rewritten file ${e.name}")
-    }
-    // sidecars travel with the layout (same reasoning as compactBucketed)
-    locally {
-      val sc = readStreamCommits(fs, loc)
-      if (sc.committed.nonEmpty) writeStreamCommits(fs, tmp, sc.copy(pending = None))
-      val ledger = readRetiredDirs(fs, loc)
-      if (ledger.nonEmpty) writeSmallFileAtomic(fs, new Path(tmp, RetiredDirsName),
-        org.json4s.jackson.Serialization.write(ledger))
-    }
-    crashPoint("bktdel:staged")
-    // COMMIT marker (shared recoverCompact protocol: a JSON list of the
-    // files still to move) — from here recovery rolls the swap forward
-    val marker = new Path(loc.toString + ".compact.commit")
-    writeSmallFileAtomic(fs, marker,
-      org.json4s.jackson.Serialization.write(carried.map(_.getPath.getName)))
-    crashPoint("bktdel:marker")
-    carried.foreach { s =>
-      if (!fs.rename(s.getPath, new Path(tmp, s.getPath.getName)))
-        sys.error(s"deleteRangeBucketed: cannot move carried file ${s.getPath} " +
-          "into staging")
-      crashPoint("bktdel:cold-moved")
-    }
-    val old = new Path(loc.toString + ".compact.old")
-    swapInstall(fs, loc, tmp, old, "deleteRangeBucketed", "bktdel",
-      restorable = false)
-    fs.delete(marker, false)
-    dropFoldLeftovers()
-    // regenerate the ordered-ingest manifest over the installed layout
-    writeManifest(spark, loc.toString, ts)
+    installBucketedFold(spark, b,
+      spark.read.schema(b.ct.schema).parquet(rewrite.map(_.getPath.toString): _*)
+        .filter(col(ts).isNull || !(col(ts) >= from && col(ts) <= till)),
+      rewrite.flatMap(s => bucketIdOf(s.getPath.getName)).toSet, carried,
+      "deleteRangeBucketed", "bktdel")
     spark.catalog.refreshTable(table)
     }
-  }
 
   /** TABLE_get over a BUCKETED table: ts-range scan with file-level
     * pruning from the manifest sidecar — the second half of the

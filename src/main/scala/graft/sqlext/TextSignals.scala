@@ -179,7 +179,7 @@ object QualitySig {
   *  - n_words   = size(tokens)
   *  - n_distinct= size(array_distinct(tokens))        (string-exact)
   *  - top_word  = max multiplicity of any token       (string-exact —
-  *                maxRunInSorted(array_sort(tokens)); 0 when no tokens)
+  *                the longest run in array_sort(tokens); 0 when no tokens)
   *  - n_bigrams = max(size(tokens) − 1, 0); 0 when size < 2
   *  - top_bigram= max multiplicity of any adjacent pair (string-exact;
   *                pair equality ⟺ concat-with-space equality because

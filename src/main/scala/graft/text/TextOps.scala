@@ -34,8 +34,9 @@ object TextOps {
     // ONE fused byte pass (cs_quality_sig, r17) supplies every counter the
     // signals divide; the ratio arithmetic below is byte-for-byte the
     // composed form's, so outputs are bit-identical
-    // ([[qualitySignalsComposed]] is the pinned reference —
-    // TextSignalsSpec asserts frame equality on adversarial inputs).
+    // (the test-side `TextOpsReference.qualitySignalsComposed` is the
+    // pinned reference — TextSignalsSpec asserts frame equality on
+    // adversarial inputs).
     // The composition paid four full-text regexp_replace passes, a regex
     // split, and a per-word interpreted lower∘regexp_replace lambda per
     // document — the dominant cost of the quality scan.
@@ -65,35 +66,6 @@ object TextOps {
       .drop("__qs")
   }
 
-  /** The pre-r17 composed form of [[qualitySignals]] — kept as the
-    * bit-equality REFERENCE for TextSignalsSpec (regex passes + per-word
-    * lambda; never called on a scan path).
-    */
-  private[graft] def qualitySignalsComposed(df: DataFrame, text: String): DataFrame = {
-    val t = col(text)
-    val nChars = length(t).cast("double")
-    val words = split(trim(t), "\\s+")
-    // empty text: split yields [""], which would phantom-count one word;
-    // ratios over an empty doc are explicitly NULL on both engines rather
-    // than whatever each one's x/0 happens to be
-    val nWords = when(length(trim(t)) === 0, lit(0.0))
-      .otherwise(size(words).cast("double"))
-    val stop = Seq("the", "and", "of", "to", "a", "in", "is", "that", "it", "for")
-    val lw = transform(words, w => lower(regexp_replace(w, "[^A-Za-z]", "")))
-    val nStop = size(filter(lw, w => w.isInCollection(stop))).cast("double")
-    df.withColumn("n_chars_c", nChars.cast("long"))
-      .withColumn("n_words", nWords.cast("long"))
-      .withColumn("mean_word_len",
-        when(nWords > 0, length(regexp_replace(t, "\\s+", "")) / nWords))
-      .withColumn("punct_ratio",
-        when(nChars > 0,
-          (nChars - length(regexp_replace(t, "[^A-Za-z0-9\\s]", ""))) / nChars))
-      .withColumn("upper_ratio",
-        when(nChars > 0,
-          (nChars - length(regexp_replace(t, "[A-Z]", ""))) / nChars))
-      .withColumn("stopword_ratio", when(nWords > 0, nStop / nWords))
-  }
-
   /** Composite quality score in 0..10 points — monotone blend of the
     * signals (integer so it is exactly comparable across engines).
     */
@@ -116,9 +88,10 @@ object TextOps {
   def langId(df: DataFrame, text: String, out: String = "lang_pred"): DataFrame = {
     // ONE fused byte pass for all four languages' marker-hit counts
     // (cs_lang_sig; r18 — replaces the split + 4 interpreted filter-HOF
-    // array passes of langIdComposed, the parked r17 residual). The
+    // array passes of the composed form, the parked r17 residual). The
     // argmax fold is unchanged; LangSigSpec pins frame equality with the
-    // composed form on adversarial unicode and the corpus slice.
+    // test-side `TextOpsReference.langIdComposed` on adversarial unicode
+    // and the corpus slice.
     graft.window.Moving.guardNames(df.columns.toSeq, Seq("__lsig"), "langId")
     val scored = df.withColumn("__lsig", column(LangSig(expression(col(text)))))
     val langs = langMarkers.keys.toSeq.sorted
@@ -127,31 +100,6 @@ object TextOps {
       (when(h > bs, lit(lang)).otherwise(bl), when(h > bs, h).otherwise(bs))
     }
     scored.withColumn(out, best._1).drop("__lsig")
-  }
-
-  /** The pre-r18 composed langId — kept as the spec's pinned reference
-    * (LangSigSpec asserts frame equality with [[langId]], the same
-    * composed-vs-fused contract TextSignalsSpec holds for quality /
-    * repetition).
-    */
-  private[graft] def langIdComposed(df: DataFrame, text: String,
-                                    out: String = "lang_pred"): DataFrame = {
-    graft.window.Moving.guardNames(df.columns.toSeq,
-      "__ltoks" +: langMarkers.keys.toSeq.sorted.map(l => s"__hits_$l"), "langId")
-    val withToks = df.withColumn("__ltoks", split(lower(trim(col(text))), "\\s+"))
-    val scored = langMarkers.toSeq.sortBy(_._1).foldLeft(withToks) { case (d, (lang, ms)) =>
-      val words = ms
-      d.withColumn(s"__hits_$lang",
-        size(filter(col("__ltoks"),
-          t => words.map(w => t === lit(w)).reduce(_ || _))).cast("long"))
-    }
-    val langs = langMarkers.keys.toSeq.sorted
-    val best = langs.foldLeft((lit("und"), lit(0L))) { case ((bl, bs), lang) =>
-      val h = col(s"__hits_$lang")
-      (when(h > bs, lit(lang)).otherwise(bl), when(h > bs, h).otherwise(bs))
-    }
-    scored.withColumn(out, best._1)
-      .drop("__ltoks").drop(langs.map(l => s"__hits_$l"): _*)
   }
 
   /** Document fingerprint: 64-bit hash of the normalized text (lowercase,
@@ -247,22 +195,6 @@ object TextOps {
           i => concat_ws(" ", slice(toks, i + 1, lit(n)))),
         s => size(split(s, " ")) === n))
 
-  /** Longest run length in a SORTED array — equals the max multiplicity of
-    * any element. O(n log n) per row (the sort), map-only, no shuffle: the
-    * scale-correct way to get per-document mode counts (an explode +
-    * groupBy(doc, token) would shuffle every token of the corpus).
-    */
-  private def maxRunInSorted(sorted: Column): Column =
-    aggregate(sorted,
-      struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("best")),
-      (acc, x) => {
-        val run = when(x === acc.getField("prev"), acc.getField("run") + 1L)
-          .otherwise(lit(1L))
-        struct(x.as("prev"), run.as("run"),
-          greatest(acc.getField("best"), run).as("best"))
-      },
-      acc => acc.getField("best"))
-
   /** Gopher-style repetition signals per document: distinct-word ratio,
     * most-frequent-word fraction, most-frequent-bigram fraction. High
     * top-fraction / low distinct ratio flags the degenerate repetitive
@@ -336,8 +268,9 @@ object TextOps {
     // and two interpreted per-element aggregate() scans per document.
     // Ratio arithmetic below is the composed form's (long/long division,
     // same when() guards), so outputs are bit-identical
-    // ([[repetitionSignalsComposed]] is the pinned reference —
-    // TextSignalsSpec asserts frame equality on adversarial inputs).
+    // (the test-side `TextOpsReference.repetitionSignalsComposed` is the
+    // pinned reference — TextSignalsSpec asserts frame equality on
+    // adversarial inputs).
     graft.window.Moving.guardNames(df.columns.toSeq,
       Seq("__rs", "n_words", "n_distinct_words", "distinct_ratio",
         "top_word_frac", "top_bigram_frac"), "repetitionSignals")
@@ -354,41 +287,6 @@ object TextOps {
           sig.getField("top_bigram") / sig.getField("n_bigrams"))
           .otherwise(lit(0.0)))
       .drop("__rs")
-  }
-
-  /** The pre-r17 composed form of [[repetitionSignals]] — kept as the
-    * bit-equality REFERENCE for TextSignalsSpec (regex split +
-    * array_distinct + sort/aggregate scans; never called on a scan path).
-    */
-  private[graft] def repetitionSignalsComposed(df: DataFrame, text: String): DataFrame = {
-    graft.window.Moving.guardNames(df.columns.toSeq,
-      Seq("__toks", "__bg", "n_words", "n_distinct_words", "distinct_ratio",
-        "top_word_frac", "top_bigram_frac"), "repetitionSignals")
-    // empty text: split yields [""] — an empty doc must count 0 words
-    // (with NULL ratios), not look maximally repetitive
-    val withToks = df.withColumn("__toks",
-      when(length(trim(col(text))) === 0, array().cast("array<string>"))
-        .otherwise(split(trim(col(text)), "\\s+")))
-    val toks = col("__toks")
-    // guard: sequence(1, 0) counts DOWN in Spark, so a 1-word doc would
-    // index past the array — emit an empty bigram list instead
-    val bigrams = when(size(toks) >= 2,
-      transform(sequence(lit(1), size(toks) - 1),
-        i => concat(element_at(toks, i), lit(" "), element_at(toks, i + 1))))
-      .otherwise(array().cast("array<string>"))
-    withToks
-      .withColumn("n_words", size(toks).cast("long"))
-      .withColumn("n_distinct_words", size(array_distinct(toks)).cast("long"))
-      .withColumn("distinct_ratio",
-        when(col("n_words") > 0, col("n_distinct_words") / col("n_words")))
-      .withColumn("top_word_frac",
-        when(col("n_words") > 0, maxRunInSorted(array_sort(toks)) / col("n_words")))
-      .withColumn("__bg", bigrams)
-      .withColumn("top_bigram_frac",
-        when(size(col("__bg")) > 0,
-          maxRunInSorted(array_sort(col("__bg"))) / size(col("__bg")))
-          .otherwise(lit(0.0)))
-      .drop("__toks", "__bg")
   }
 
   /** PII redaction: emails, phone-like digit runs, and IPv4 literals

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Frame-equality pins for the r18 cs_lang_sig fusion: langId (one fused
-  * byte pass) must agree with langIdComposed (split + 4 filter-HOF
-  * passes, kept in-tree as the reference) on every adversarial input and
+  * byte pass) must agree with TextOpsReference.langIdComposed (split + 4
+  * filter-HOF passes, the test-side reference) on every adversarial input and
   * on the real corpus slice — the contract that keeps q_lang_id's oracle
   * hash unchanged across the switch.
   */
@@ -19,7 +19,7 @@ class LangSigSpec extends AnyFunSuite {
     val fused = TextOps.langId(df, "text")
       .select(col("id"), col("lang_pred")).collect()
       .map(r => (r.get(0), r.get(1))).sortBy(_._1.toString)
-    val composed = TextOps.langIdComposed(df, "text")
+    val composed = TextOpsReference.langIdComposed(df, "text")
       .select(col("id"), col("lang_pred")).collect()
       .map(r => (r.get(0), r.get(1))).sortBy(_._1.toString)
     assert(fused.sameElements(composed))

@@ -65,12 +65,12 @@ class TextSignalsSpec extends AnyFunSuite {
 
   test("fused qualitySignals equals the composed regex form (adversarial)") {
     assertSame(TextOps.qualitySignals(df, "text"),
-      TextOps.qualitySignalsComposed(df, "text"), qualityCols)
+      TextOpsReference.qualitySignalsComposed(df, "text"), qualityCols)
   }
 
   test("fused repetitionSignals equals the composed form (adversarial)") {
     assertSame(TextOps.repetitionSignals(df, "text"),
-      TextOps.repetitionSignalsComposed(df, "text"), repCols)
+      TextOpsReference.repetitionSignalsComposed(df, "text"), repCols)
   }
 
   test("fused signal frames equal the composed ones on the sf0.001 corpus") {
@@ -79,9 +79,9 @@ class TextSignalsSpec extends AnyFunSuite {
     val docs = graft.io.Tables.read(spark, dir, "documents")
       .select(col("doc_id").as("id"), col("text"))
     assertSame(TextOps.qualitySignals(docs, "text"),
-      TextOps.qualitySignalsComposed(docs, "text"), qualityCols)
+      TextOpsReference.qualitySignalsComposed(docs, "text"), qualityCols)
     assertSame(TextOps.repetitionSignals(docs, "text"),
-      TextOps.repetitionSignalsComposed(docs, "text"), repCols)
+      TextOpsReference.repetitionSignalsComposed(docs, "text"), repCols)
   }
 
   test("fused signals equal the composed ones on random unicode fuzz rows") {
@@ -107,8 +107,8 @@ class TextSignalsSpec extends AnyFunSuite {
     }
     val fdf = rows.toDF("id", "text")
     assertSame(TextOps.qualitySignals(fdf, "text"),
-      TextOps.qualitySignalsComposed(fdf, "text"), qualityCols)
+      TextOpsReference.qualitySignalsComposed(fdf, "text"), qualityCols)
     assertSame(TextOps.repetitionSignals(fdf, "text"),
-      TextOps.repetitionSignalsComposed(fdf, "text"), repCols)
+      TextOpsReference.repetitionSignalsComposed(fdf, "text"), repCols)
   }
 }
