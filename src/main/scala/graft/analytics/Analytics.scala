@@ -10,15 +10,9 @@ import org.apache.spark.sql.functions._
   */
 object Analytics {
 
-  /** Keyed ordered window. NOTE: with keys empty this is a whole-frame
-    * window (one task); the carry-forward scans below (trend, crossings,
-    * extrema) only hit it when callers pass no keys — a keyless variant at
-    * scale should route through Moving.affineScanRanged (carry-forward is
-    * the affine map a∈{0,1}) the way diff routes through a pos-join.
-    */
+  /** Keyed ordered window; keyless calls run ordered scans instead. */
   private def keyWindow(keys: Seq[String]) =
-    (if (keys.isEmpty) Window.partitionBy() else Window.partitionBy(keys.map(col): _*))
-      .orderBy(col("pos"))
+    Window.partitionBy(keys.map(col): _*).orderBy(col("pos"))
 
   /** out[0]=0; out[i]=x[i]-x[i-1] — cs_diff (func.c:2268-2303). NULL
     * values follow the keyed lag-window form on BOTH paths: a NULL on

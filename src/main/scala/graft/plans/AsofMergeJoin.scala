@@ -200,17 +200,20 @@ case class AsofMergeJoinExec(
 /** DataFrame-level API over the custom operator. */
 object AsofMerge {
 
-  /** Idempotently add the planner strategy to a live session. Serialized
-    * on the ExperimentalMethods instance — `extraStrategies` is a plain
-    * shared var, so an unsynchronized check-then-append could lose an
-    * install under concurrent callers (same reasoning as
+  /** Idempotently add the planner strategy to a live session. */
+  def install(spark: SparkSession): Unit = installStrategy(spark, AsofJoinStrategy)
+
+  /** Idempotently add a planner strategy (this one's, or
+    * [[OrderedScanStrategy]]) to a live session. Serialized on the
+    * ExperimentalMethods instance — `extraStrategies` is a plain shared
+    * var, so an unsynchronized check-then-append could lose an install
+    * under concurrent callers (same reasoning as
     * [[UnionDisjointFilterCollapse.install]]).
     */
-  def install(spark: SparkSession): Unit = {
+  private[graft] def installStrategy(spark: SparkSession, s: SparkStrategy): Unit = {
     val e = spark.experimental
     e.synchronized {
-      if (!e.extraStrategies.contains(AsofJoinStrategy))
-        e.extraStrategies = e.extraStrategies :+ AsofJoinStrategy
+      if (!e.extraStrategies.contains(s)) e.extraStrategies = e.extraStrategies :+ s
     }
   }
 
@@ -238,12 +241,10 @@ object AsofMerge {
     * way — the window form would pay one `last()` per column.
     *
     * NOTE (map-bearing values): the row-id route those take
-    * ([[keylessRowIdAsof]]) is EAGER — attachPosRanged runs a small
-    * collect job at CALL time to build its partition-offset table, so
-    * constructing the frame (e.g. printing its plan) launches that job.
-    * Its tie semantics on DUPLICATE right ts values are a consistent but
-    * arbitrary row choice; see the route's scaladoc for the
-    * shuffle-reuse caveat (AsofMergeSpec pins the consistency contract).
+    * ([[keylessRowIdAsof]]) carries ONE whole right row on DUPLICATE right
+    * ts values, but which of the tied rows is an arbitrary choice that
+    * may differ between evaluations (see the route's scaladoc;
+    * AsofMergeSpec pins the one-whole-row contract).
     */
   def asofJoinDir(left: DataFrame, right: DataFrame, keys: Seq[String], ts: String,
                   valueCols: Seq[String], outCols: Seq[String],
@@ -596,7 +597,7 @@ object AsofMerge {
     * cannot group or join BY a map, so no dictionary or lane can carry the
     * value itself — carry the matched right ROW's identity instead:
     *
-    *  1. number the right frame once ([[graft.series.Series.attachPosRanged]],
+    *  1. number the right frame ([[graft.series.Series.attachPosRanged]],
     *     keyless — range shuffle + an O(partitions) driver offset table);
     *  2. ride ONLY (ts, row id) through the parallel ranged scan — the id
     *     is int64, so it takes the exact hi/lo lanes;
@@ -608,10 +609,7 @@ object AsofMerge {
     * row. NULL semantics follow for free — a NULL (or empty) map in the
     * carried row comes back exactly as stored from the fetch join, and a
     * left row with no match carries a NULL id, which the left join leaves
-    * as NULL outputs. The id→row mapping is consistent between the scan
-    * and fetch subtrees because both read the SAME numbered RDD
-    * (attachPosRanged captures its shuffled RDD once; Spark reuses the
-    * shuffle output across the consuming jobs).
+    * as NULL outputs.
     *
     * This route retired the r10/r11 entry-array and recursive-transcode
     * forms: they dict-encoded the (high-cardinality) sorted entry arrays —
@@ -619,16 +617,15 @@ object AsofMerge {
     * of the maps — and planned O(depth) transcode expression trees. The
     * scan here shuffles (ts, int64) regardless of value width or depth.
     *
-    * Caveats (ADVICE r17): attachPosRanged runs its offset-table collect
-    * job at CALL time, so this route is eager, not lazy. And the scan/
-    * fetch id consistency relies on shuffle-output REUSE of the numbered
-    * RDD — if it is recomputed (executor loss, shuffle GC), rows with
-    * DUPLICATE right ts can be renumbered differently between the two
-    * subtrees; the output remains a legal tie choice and internally
-    * consistent per evaluation (one fetched row — the fetch join is by
-    * the carried id), but WHICH tied row wins is not stable across
-    * recomputation. Declared queries group by ts, so ties never arise
-    * there; AsofMergeSpec pins the one-consistent-row contract.
+    * Ties: the route is lazy, and the scan and fetch subtrees each
+    * evaluate the numbering. Ids follow ts order, so the rows of one
+    * DUPLICATE right ts hold the same id range in every evaluation, and
+    * the fetched row always has the matched ts — but the two subtrees may
+    * order the tied rows differently, so WHICH tied row is carried is an
+    * arbitrary choice. Every output column still comes from that ONE row
+    * (the fetch join is by the single carried id). Declared queries group
+    * by ts, so ties never arise there; AsofMergeSpec pins the
+    * one-whole-row contract.
     */
   private def keylessRowIdAsof(lf: DataFrame, rf: DataFrame, ts: String,
                                valueCols: Seq[String], outCols: Seq[String],

@@ -1,9 +1,10 @@
 package graft.series
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import graft.plans.{OrderedScan, ScanKernel}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StructField}
 
 /** Core series abstraction.
   *
@@ -25,20 +26,6 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   */
 object Series {
 
-  /** Key extractor for the scan machinery's run detection: values are
-    * compared and hashed inside `Seq[Any]`, where `Array[Byte]` (a
-    * BinaryType key — e.g. a fingerprint column) compares by REFERENCE —
-    * every row would look like a fresh key run and the broadcast offset
-    * lookup would miss. Normalize binary to an immutable Seq.
-    */
-  private[graft] def rowKey(keyIdx: Seq[Int])(r: Row): Seq[Any] =
-    keyIdx.map { i =>
-      r.get(i) match {
-        case a: Array[Byte] => a.toSeq
-        case x => x
-      }
-    }
-
   /** Attach `pos` (0-based) per key partition ordered by `order` columns.
     * Mirrors the implicit element order of a per-key timeseries like
     * "quote-close-IBM" (imcs--1.1.sql:361-369).
@@ -52,85 +39,33 @@ object Series {
     * directly.
     */
   def attachPos(df: DataFrame, keys: Seq[String], order: Seq[Column]): DataFrame =
-    if (keys.isEmpty) attachPosRanged(df, Seq(), order)
-    else {
-      val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
-      df.withColumn("pos", row_number().over(w).cast("long") - 1L)
-    }
+    ordinal(df, keys, order, "pos")
+
+  /** [[attachPos]] into column `out`. */
+  private[graft] def ordinal(df: DataFrame, keys: Seq[String], order: Seq[Column],
+                             out: String): DataFrame =
+    if (keys.isEmpty) attachPosRanged(df, Seq(), order, out)
+    else df.withColumn(out, row_number().over(
+      Window.partitionBy(keys.map(col): _*).orderBy(order: _*)).cast("long") - 1L)
 
   /** Scalable per-key position numbering with NO single-partition stage:
-    * range-partition by (keys, order), sort within partitions, number rows
-    * locally per key, then add per-(partition, key) offsets from a small
-    * count aggregate (the classic zipWithIndex pattern, generalized to
-    * keys). Parallelism is the number of range partitions regardless of key
-    * cardinality — this is the ingest-time `pos` materialization SURVEY §7
-    * calls for (the reference numbers elements at load, imcs.c:4177-4412).
+    * one ranged [[graft.plans.OrderedScan]] counts each (partition, key)
+    * run, folds the counts into offsets on the driver and numbers every
+    * run from its offset. Parallelism is the range-partition count
+    * regardless of key cardinality — the ingest-time `pos` SURVEY §7 calls
+    * for (the reference numbers elements at load, imcs.c:4177-4412).
     *
-    * The offset table has one entry per (partition, key) run — that is
-    * ≤ #keys + nPartitions entries (each key occupies contiguous range
-    * partitions, but one partition can hold many whole keys). The driver
-    * collect is therefore O(#keys): right for keyless or FEW-key series;
-    * for high-cardinality keys use `attachPos`'s key-partitioned window
-    * (no driver state, parallelism = #keys). `order` must be a total
-    * order (include a tiebreak) for pos to be deterministic.
+    * The driver holds one offset per (partition, key) run, ≤ #keys +
+    * nPartitions: right for keyless or FEW-key series; for
+    * high-cardinality keys use `attachPos`'s key-partitioned window. `order`
+    * must be a total order (include a tiebreak) for pos to be
+    * deterministic.
     */
   def attachPosRanged(df: DataFrame, keys: Seq[String], order: Seq[Column],
                       out: String = "pos"): DataFrame = {
     graft.window.Moving.guardNames(df.columns.toSeq, Seq(out), "attachPosRanged")
-    val spark = df.sparkSession
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val all = keys.map(col) ++ order
-    val ranged = df.repartitionByRange(parts, all: _*).sortWithinPartitions(all: _*)
-    val keyIdx = keys.map(ranged.schema.fieldIndex)
-    val keyOf = rowKey(keyIdx) _
-    // Capture the shuffled RDD ONCE: the counts job and the numbering job
-    // below share its shuffle output (the second job skips the map stage).
-    // Re-deriving the DataFrame per job would re-sample the range bounds
-    // (the RangePartitioner seed involves the fresh RDD id), assigning rows
-    // to DIFFERENT partitions in each job and corrupting the offsets.
-    val rdd = ranged.rdd
-    // Per-(partition, key) run lengths — keys are contiguous within each
-    // sorted partition, so this is a streaming scan with O(1) working
-    // memory emitting one row per key run (≤ #keys + parts total; see the
-    // cardinality note in the doc comment above).
-    val counts: Array[(Int, Seq[Any], Long)] = rdd.mapPartitionsWithIndex { (pid, it) =>
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(Int, Seq[Any], Long)]
-      var cur: Seq[Any] = null
-      var n = 0L
-      var any = false
-      it.foreach { r =>
-        val k = keyOf(r)
-        if (!any || k != cur) {
-          if (any) buf += ((pid, cur, n))
-          cur = k; n = 1L; any = true
-        } else n += 1L
-      }
-      if (any) buf += ((pid, cur, n))
-      buf.iterator
-    }.collect()
-    val offsets: Map[(Int, Seq[Any]), Long] = counts.groupBy(_._2).iterator.flatMap {
-      case (k, rows) =>
-        var acc = 0L
-        rows.sortBy(_._1).map { case (pid, _, n) =>
-          val e = (pid, k) -> acc
-          acc += n
-          e
-        }
-    }.toMap
-    val bc = spark.sparkContext.broadcast(offsets)
-    val outRdd = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var cur: Seq[Any] = null
-      var i = 0L
-      var off = 0L
-      it.map { r =>
-        val k = keyOf(r)
-        if (cur == null || k != cur) { cur = k; i = 0L; off = bc.value((pid, k)) }
-        else i += 1L
-        Row.fromSeq(r.toSeq :+ (off + i))
-      }
-    }
-    spark.createDataFrame(outRdd,
-      StructType(ranged.schema.fields :+ StructField(out, LongType, nullable = false)))
+    OrderedScan(df, keys, order, ranged = true, ScanKernel.Positions,
+      Seq(StructField(out, LongType, nullable = false)))
   }
 
   /** Positional slice [from, till] inclusive; negative index counts from the
@@ -151,14 +86,7 @@ object Series {
     } else {
       graft.window.Moving.guardNames(df.columns.toSeq, Seq("__ord", "__cnt"),
         "span (negative index)")
-      val withOrd =
-        if (keys.isEmpty)
-          attachPosRanged(df, Seq(), Seq(col("pos")), out = "__ord")
-        else {
-          val w = Window.partitionBy(keys.map(col): _*).orderBy(col("pos"))
-          df.withColumn("__ord", row_number().over(w).cast("long") - 1L)
-        }
-      val withCnt = withKeyCount(withOrd, keys)
+      val withCnt = withKeyCount(ordinal(df, keys, Seq(col("pos")), "__ord"), keys)
       val loOk =
         if (from >= 0) col("pos") >= from else col("__ord") >= col("__cnt") + from
       val hiOk =

@@ -645,6 +645,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     // the custom as-of plan node (graft.plans.AsofMergeJoin)
     e.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
+    // the ordered-scan node (graft.plans.OrderedScan)
+    e.injectPlannerStrategy(_ => graft.plans.OrderedScanStrategy)
     // concat-of-disjoint-slices → one scan (graft.plans.UnionCollapse)
     e.injectOptimizerRule(_ => graft.plans.UnionDisjointFilterCollapse)
   }

@@ -357,7 +357,8 @@ private[graft] object FileBlooms {
     // Sidecar bytes are identical (cs_bloom_agg's scaladoc; spec-pinned).
     // Over-cap predictions skip BEFORE the job (same memo + warning as
     // the legacy path); collect volume is bounded by grouping files so
-    // each job's Σ predicted bloom bytes stays within the cache cap.
+    // each job's Σ predicted bloom bytes stays within the cache cap and
+    // each job's file-name map within MaxFilesPerBuild entries.
     locally {
       val (statted, legacyOnly) = missing.partition(n =>
         footerFor.get(n).exists(f => f._1.isDefined && f._2.isDefined))
@@ -365,16 +366,7 @@ private[graft] object FileBlooms {
       val (overCap, buildable) =
         withRows.partition { case (_, rows) => predictedBloomBytes(rows) > cacheCapBytes }
       overCap.foreach { case (n, rows) => skipOverCap(n, rows) }
-      // budget groups: Σ predicted bytes ≤ the cache cap per collect
-      val groups = buildable.foldLeft(List.empty[List[(String, Long)]] -> 0L) {
-        case ((acc, run), e @ (_, rows)) =>
-          val b = predictedBloomBytes(rows)
-          acc match {
-            case g :: rest if run + b <= cacheCapBytes => ((e :: g) :: rest, run + b)
-            case _ => (List(e) :: acc, b)
-          }
-      }._1
-      groups.foreach { g =>
+      buildGroups(buildable, predictedBloomBytes, cacheCapBytes).foreach { g =>
         scala.util.Try {
           batchFailHook.foreach(_())
           import org.apache.spark.sql.functions._
@@ -441,6 +433,28 @@ private[graft] object FileBlooms {
     // sidecars may have just appeared where probes memoized their absence
     negCache.clear()
   }
+
+  /** Files per batched-build group. The build looks each row's file up
+    * with `element_at(typedLit(items), __fb_name)`, a linear scan of the
+    * literal map's entries, so a group's map stays this small.
+    */
+  private[graft] val MaxFilesPerBuild = 1024
+
+  /** Split (file, rows) entries into batched-build groups: each group's
+    * Σ `bytes(rows)` stays within `budget` (an entry over it alone forms
+    * its own group) and it holds at most [[MaxFilesPerBuild]] files.
+    */
+  private[graft] def buildGroups(entries: Seq[(String, Long)], bytes: Long => Long,
+                                 budget: Long): List[List[(String, Long)]] =
+    entries.foldLeft((List.empty[List[(String, Long)]], 0L, 0)) {
+      case ((acc, run, files), e @ (_, rows)) =>
+        val b = bytes(rows)
+        acc match {
+          case g :: rest if run + b <= budget && files < MaxFilesPerBuild =>
+            ((e :: g) :: rest, run + b, files + 1)
+          case _ => (List(e) :: acc, b, 1)
+        }
+    }._1
 
   /** Does any of `sorted` (ascending) land in [mn, mx]? Binary search for
     * the first element ≥ mn, then one bound check — O(log k).

@@ -57,15 +57,15 @@ object Dict {
   }
 
   /** Build the dictionary: (code: long, value) with code = sorted rank.
-    * The row count is one extra dictionary-sized job here (the ranged
-    * numbering's shuffle is reused), paid once per BUILD rather than once
-    * per lookup.
+    * The numbering is lazy; the row count (the distinct count, no
+    * numbering) is the one job here, a dictionary-sized one paid once per
+    * BUILD rather than once per lookup.
     */
   def build(df: DataFrame, value: String): DataFrame = {
-    val d = Series.attachPosRanged(
-      df.select(col(value)).distinct(), Seq(), Seq(col(value)), out = "code")
+    val distinct = df.select(col(value)).distinct()
+    val d = Series.attachPosRanged(distinct, Seq(), Seq(col(value)), out = "code")
       .select(col("code"), col(value))
-    knownRows.put(d.queryExecution.analyzed.canonicalized, d.count())
+    knownRows.put(d.queryExecution.analyzed.canonicalized, distinct.count())
     d
   }
 

@@ -262,6 +262,13 @@ object TextOps {
       .select(col(id), col("term"), col("__score").cast("float").as("bm25"))
   }
 
+  /** Repetition counters per document: n_words, n_distinct_words,
+    * distinct_ratio, top_word_frac and top_bigram_frac, from one fused
+    * byte pass (cs_rep_sig). A document of 2^28 tokens or more (about
+    * 512 MB of text) gets NULL counters instead of failing the scan, so a
+    * threshold filter such as `rep_ratio < t` evaluates NULL and DROPS it;
+    * coalesce the counters first to keep such documents.
+    */
   def repetitionSignals(df: DataFrame, text: String): DataFrame = {
     // ONE fused byte pass (cs_rep_sig, r17) supplies every counter: the
     // composition paid a regex split, an array_distinct, two array_sorts

@@ -1,9 +1,12 @@
 package graft.window
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import scala.collection.immutable.ListMap
+
+import graft.plans.{OrderedScan, ScanKernel}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, StructField}
 
 /** Moving (trailing count-window) operators — cs_window_* (SURVEY.md §2.5).
   *
@@ -17,12 +20,15 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   * across keys on a cluster.
   *
   * EMA and ATR are *recursive* (each output depends on the previous
-  * output, func.c:1764-1788) and have no SQL frame equivalent. They are
-  * implemented as a single-pass per-key scan: repartition by key, sort
-  * within partitions by (key, pos), then one sequential pass per key inside
-  * mapPartitions. This is one shuffle and O(1) state per key — the same
-  * cost shape as a window agg, and it streams (never collects a key's
-  * series into memory at once).
+  * output, func.c:1764-1788) and have no SQL frame equivalent. They, the
+  * running monoid folds and the keyless trailing window are each one
+  * [[graft.plans.OrderedScan]] plan node: keyed calls require the rows
+  * clustered by key and sorted by (key, pos) and make one sequential
+  * pass; keyless calls range-partition by pos and compose per-partition
+  * summaries on the driver. The planner plants the exchange and sort, so
+  * building a frame runs no job. One shuffle and O(1) state per key — the
+  * same cost shape as a window agg, and it streams (never collects a
+  * key's series into memory at once).
   */
 object Moving {
 
@@ -63,17 +69,12 @@ object Moving {
       .rowsBetween(-(n - 1), Window.currentRow)
   }
 
-  /** Generalization of [[affineScanRanged]] to an arbitrary associative
-    * monoid over a fixed-width Double state vector: pass 1 folds each
-    * chunk, the driver prefix-folds per key, pass 2 replays from the
-    * incoming state and emits the running state's components as `outs`
-    * columns. Handles every componentwise-associative running aggregate
-    * (sum/sumsq/min/max in ONE pass) where the affine form cannot.
-    *
-    * Keyed calls dispatch to [[monoidScanKeyed]] (hash-partitioned
-    * single pass, zero driver state); the ranged two-pass path below is
-    * the KEYLESS route only, where its driver collect is one small row
-    * per shuffle partition — bounded by the partition count.
+  /** Running fold of an associative monoid over a fixed-width Double
+    * state vector, emitting the running state's components as `outs`
+    * columns: sum/sumsq/min/max and any other componentwise-associative
+    * running aggregate in ONE pass, where the affine form cannot. Keyed
+    * calls dispatch to [[monoidScanKeyed]]; keyless calls are one ranged
+    * [[graft.plans.OrderedScan]] (driver state: one row per partition).
     */
   def monoidScanRanged(df: DataFrame, keys: Seq[String], outs: Seq[String],
                        order: Seq[org.apache.spark.sql.Column] = Seq(col("pos")))(
@@ -82,132 +83,38 @@ object Moving {
     guardNames(df.columns.toSeq, outs, "monoidScanRanged")
     if (keys.nonEmpty)
       return monoidScanKeyed(df, keys, outs, order)(identity)(inject)(op)
-    val spark = df.sparkSession
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val all = keys.map(col) ++ order
-    val ranged = df.repartitionByRange(parts, all: _*).sortWithinPartitions(all: _*)
-    val keyIdx = keys.map(ranged.schema.fieldIndex)
-    val keyOf = graft.series.Series.rowKey(keyIdx) _
-    val rdd = ranged.rdd
-    val comps: Array[(Int, Seq[Any], Array[Double])] =
-      rdd.mapPartitionsWithIndex { (pid, it) =>
-        val buf = scala.collection.mutable.ArrayBuffer.empty[(Int, Seq[Any], Array[Double])]
-        var cur: Seq[Any] = null
-        // clone: `op` may mutate its accumulator argument in place (a
-        // natural fold optimization); aliasing the shared identity array
-        // here would corrupt it for every later key in the partition
-        var acc = identity.clone()
-        var any = false
-        it.foreach { r =>
-          val k = keyOf(r)
-          if (!any || k != cur) {
-            if (any) buf += ((pid, cur, acc))
-            cur = k; acc = identity.clone(); any = true
-          }
-          acc = op(acc, inject(r))
-        }
-        if (any) buf += ((pid, cur, acc))
-        buf.iterator
-      }.collect()
-    val incoming: Map[(Int, Seq[Any]), Array[Double]] =
-      comps.groupBy(_._2).iterator.flatMap { case (k, rows) =>
-        var e = identity.clone()
-        rows.sortBy(_._1).map { case (pid, _, a) =>
-          val entry = (pid, k) -> e
-          // clone: `entry` retains e — an in-place-mutating op would
-          // otherwise corrupt the already-stored incoming state
-          e = op(e.clone(), a)
-          entry
-        }
-      }.toMap
-    val bc = spark.sparkContext.broadcast(incoming)
-    val outRdd = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var cur: Seq[Any] = null
-      var e = identity.clone()
-      it.map { r =>
-        val k = keyOf(r)
-        // clone: broadcast values are SHARED across tasks in one executor
-        // JVM — mutating them in place would corrupt other partitions' reads
-        if (cur == null || k != cur) { cur = k; e = bc.value((pid, k)).clone() }
-        e = op(e, inject(r))
-        Row.fromSeq(r.toSeq ++ e.toSeq)
-      }
-    }
-    spark.createDataFrame(outRdd,
-      StructType(ranged.schema.fields ++
-        outs.map(o => StructField(o, DoubleType, nullable = false))))
+    OrderedScan(df, keys, order, ranged = true,
+      new ScanKernel.Monoid(identity, inject, op), doubles(outs, nullable = false))
   }
 
-  /** Keyed running monoid fold: hash-partition on the key columns so each
-    * key lives wholly in one partition, sort within partitions by
-    * (keys, pos), then one sequential pass with O(1) state per open key.
-    * One shuffle, NO driver collect — scales to arbitrarily many keys
-    * (per-user state at 100 TB); parallelism is min(#keys, #partitions).
-    *
-    * Unlike the ranged keyless path, this is a plain left fold — `op`
-    * need NOT be associative here (state machines like capacity-reset
-    * packing are fine), but then the computation cannot fall back to the
-    * chunk-composing keyless route.
+  /** Keyed running monoid fold: a clustered [[graft.plans.OrderedScan]],
+    * one sequential pass per key with NO driver state — scales to
+    * arbitrarily many keys; parallelism is min(#keys, #partitions). A
+    * plain left fold, so `op` need NOT be associative here (state machines
+    * like capacity-reset packing are fine).
     */
   def monoidScanKeyed(df: DataFrame, keys: Seq[String], outs: Seq[String],
                       order: Seq[org.apache.spark.sql.Column] = Seq(col("pos")))(
       identity: Array[Double])(inject: Row => Array[Double])(
       op: (Array[Double], Array[Double]) => Array[Double]): DataFrame = {
     guardNames(df.columns.toSeq, outs, "monoidScanKeyed")
-    val spark = df.sparkSession
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val all = keys.map(col) ++ order
-    val hashed = df.repartition(parts, keys.map(col): _*).sortWithinPartitions(all: _*)
-    val keyIdx = keys.map(hashed.schema.fieldIndex)
-    val keyOf = graft.series.Series.rowKey(keyIdx) _
-    val outRdd = hashed.rdd.mapPartitions { it =>
-      var cur: Seq[Any] = null
-      // clone at every key reset: `op` may mutate its accumulator argument
-      // in place (allowed here — this path is a plain left fold); aliasing
-      // the shared identity array would corrupt it for every later key
-      var acc = identity.clone()
-      it.map { r =>
-        val k = keyOf(r)
-        if (cur == null || k != cur) { cur = k; acc = identity.clone() }
-        acc = op(acc, inject(r))
-        Row.fromSeq(r.toSeq ++ acc.toSeq)
-      }
-    }
-    spark.createDataFrame(outRdd,
-      StructType(hashed.schema.fields ++
-        outs.map(o => StructField(o, DoubleType, nullable = false))))
+    OrderedScan(df, keys, order, ranged = false,
+      new ScanKernel.Monoid(identity, inject, op), doubles(outs, nullable = false))
   }
 
-  /** Keyed linear-recurrence scan — same partitioning strategy as
-    * [[monoidScanKeyed]]: each key's rows are contiguous in one sorted
-    * partition, so the recurrence runs in a single pass with no
-    * cross-chunk composition and no driver-side per-key map.
+  /** Keyed linear-recurrence scan: a clustered [[graft.plans.OrderedScan]]
+    * like [[monoidScanKeyed]], one pass and no driver state.
     */
   def affineScanKeyed(df: DataFrame, keys: Seq[String], out: String,
                       pre: Boolean = false)(
       seed: Row => Double)(coef: Row => (Double, Double)): DataFrame = {
     guardNames(df.columns.toSeq, Seq(out), "affineScanKeyed")
-    val spark = df.sparkSession
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val all = keys.map(col) :+ col("pos")
-    val hashed = df.repartition(parts, keys.map(col): _*).sortWithinPartitions(all: _*)
-    val keyIdx = keys.map(hashed.schema.fieldIndex)
-    val keyOf = graft.series.Series.rowKey(keyIdx) _
-    val outRdd = hashed.rdd.mapPartitions { it =>
-      var cur: Seq[Any] = null
-      var e = 0.0
-      it.map { r =>
-        val k = keyOf(r)
-        if (cur == null || k != cur) { cur = k; e = seed(r) }
-        val before = e
-        val (ca, cb) = coef(r)
-        e = ca * e + cb
-        Row.fromSeq(r.toSeq :+ (if (pre) before else e))
-      }
-    }
-    spark.createDataFrame(outRdd,
-      StructType(hashed.schema.fields :+ StructField(out, DoubleType, nullable = false)))
+    OrderedScan(df, keys, Seq(col("pos")), ranged = false,
+      new ScanKernel.Affine(seed, coef, pre), doubles(Seq(out), nullable = false))
   }
+
+  private def doubles(names: Seq[String], nullable: Boolean): Seq[StructField] =
+    names.map(StructField(_, DoubleType, nullable))
 
   /** cs_window_sum/avg/min/max/var/dev (func.c:1632-1761).
     *
@@ -224,141 +131,47 @@ object Moving {
     // validate ONCE for both paths: the keyed frame would throw an
     // AnalysisException but the keyless scan would silently emit all-NULL
     require(n >= 1, s"window length must be >= 1, got $n")
-    guardNames(df.columns.toSeq,
-      Seq("w_sum", "w_avg", "w_min", "w_max", "w_var", "w_dev",
-        "w_avg_ref", "w_var_ref", "w_dev_ref"), "windowAgg")
+    guardNames(df.columns.toSeq, WindowCols, "windowAgg")
     if (keys.isEmpty) return windowAggScanKeyless(df, value, n)
     val w = frame(keys, n)
     val v = col(value)
     val refVar = (sum(v * v).over(w) - sum(v).over(w) * sum(v).over(w) / n) / n
-    df.withColumn("w_sum", sum(v).over(w))
-      .withColumn("w_avg", avg(v).over(w))
-      .withColumn("w_min", min(v).over(w))
-      .withColumn("w_max", max(v).over(w))
-      .withColumn("w_var", var_pop(v).over(w))
+    df.select(col("*"), sum(v).over(w).as("w_sum"), avg(v).over(w).as("w_avg"),
+        min(v).over(w).as("w_min"), max(v).over(w).as("w_max"),
+        var_pop(v).over(w).as("w_var"))
       // sqrt of the var column, not a second windowed Welford buffer
-      .withColumn("w_dev", sqrt(col("w_var")))
-      .withColumn("w_avg_ref", sum(v).over(w) / n)
-      .withColumn("w_var_ref", refVar)
-      .withColumn("w_dev_ref", sqrt(greatest(refVar, lit(0.0))))
+      .select(col("*"), sqrt(col("w_var")).as("w_dev"),
+        (sum(v).over(w) / n).as("w_avg_ref"), refVar.as("w_var_ref"),
+        sqrt(greatest(refVar, lit(0.0))).as("w_dev_ref"))
   }
+
+  private val WindowCols = Seq("w_sum", "w_avg", "w_min", "w_max", "w_var",
+    "w_dev", "w_avg_ref", "w_var_ref", "w_dev_ref")
 
   /** Keyless trailing window WITHOUT a whole-frame ordered window (which
-    * would be one task): range-partition by pos, collect each partition's
-    * LAST n−1 (pos, value) rows to the driver (bounded: ≤ (n−1)·parts
-    * rows), then stream every partition with its carry-in — the previous
-    * partitions' tail rows seed the sliding window, so output row i sees
-    * exactly rows (i−n+1..i) even across partition boundaries. One
-    * shuffle, parallelism = partition count. Emits the same columns as
-    * the keyed [[windowAgg]] (SQL semantics for w_avg/w_var/w_dev: divide
-    * by the ACTUAL warm-up count; *_ref variants use the reference's
-    * fixed-N divisor, func.c:1674-1761).
+    * would be one task): a ranged [[graft.plans.OrderedScan]] over pos
+    * whose chunk summary is its last n−1 values, so output row i sees
+    * exactly rows (i−n+1..i) across partition boundaries. Emits the keyed
+    * [[windowAgg]]'s columns with its semantics; an all-null frame yields
+    * NULL aggregates, hence nullable columns.
     */
-  def windowAggScanKeyless(df: DataFrame, value: String, n: Int): DataFrame = {
-    val spark = df.sparkSession
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val ranged = df.repartitionByRange(parts, col("pos"))
-      .sortWithinPartitions(col("pos"))
-    val vIdx = ranged.schema.fieldIndex(value)
-    val rdd = ranged.rdd // captured once; both jobs share the shuffle
-    // NULL values ride along as nulls (boxed) so the frame still counts
-    // them as ROWS but every aggregate skips them — the same semantics as
-    // the keyed path's SQL aggregates over a rowsBetween frame. An
-    // all-null frame yields NULL aggregates, hence nullable output columns.
-    def boxed(r: Row): java.lang.Double =
-      if (r.isNullAt(vIdx)) null
-      else java.lang.Double.valueOf(r.getAs[Number](vIdx).doubleValue())
-    val tails: Map[Int, Array[java.lang.Double]] =
-      rdd.mapPartitionsWithIndex { (pid, it) =>
-        val ring = new scala.collection.mutable.ArrayDeque[java.lang.Double]()
-        it.foreach { r =>
-          ring.append(boxed(r))
-          if (ring.size > n - 1) ring.removeHead()
-        }
-        Iterator.single(pid -> ring.toArray)
-      }.collect().toMap
-    // carry-in for pid = last n−1 values BEFORE it, chaining backwards
-    // across partitions that hold fewer than n−1 rows
-    val carry: Map[Int, Array[java.lang.Double]] = (0 until parts).map { pid =>
-      val buf = scala.collection.mutable.ArrayBuffer.empty[java.lang.Double]
-      var p = pid - 1
-      while (buf.size < n - 1 && p >= 0) {
-        val t = tails.getOrElse(p, Array.empty[java.lang.Double])
-        buf.prependAll(t.takeRight(n - 1 - buf.size))
-        p -= 1
-      }
-      pid -> buf.toArray
-    }.toMap
-    val bc = spark.sparkContext.broadcast(carry)
-    val outRdd = rdd.mapPartitionsWithIndex { (pid, it) =>
-      val win = scala.collection.mutable.ArrayDeque.empty[java.lang.Double]
-      bc.value(pid).foreach(win.append)
-      it.map { r =>
-        win.append(boxed(r))
-        if (win.size > n) win.removeHead()
-        var c = 0
-        var s = 0.0; var ss = 0.0
-        var mn = Double.PositiveInfinity; var mx = Double.NegativeInfinity
-        var anyNaN = false
-        win.foreach { v =>
-          if (v != null) {
-            val x = v.doubleValue()
-            c += 1; s += x; ss += x * x
-            // Spark's total order puts NaN ABOVE every value, so min over
-            // a frame containing NaN is the true minimum (math.min would
-            // propagate NaN and diverge from the keyed SQL path) and max
-            // is NaN; sum/avg/var propagate NaN on both paths already
-            if (x.isNaN) anyNaN = true
-            else { mn = math.min(mn, x); mx = math.max(mx, x) }
-          }
-        }
-        val outs: Seq[Any] =
-          // all-NULL frame: every aggregate is NULL except w_dev_ref —
-          // the keyed path computes sqrt(greatest(refVar, 0.0)) and
-          // greatest SKIPS nulls, so a NULL refVar yields 0.0 there; the
-          // scan must agree (fuzz finding, seeds 8026/8059)
-          if (c == 0) Seq(null, null, null, null, null, null, null, null, 0.0)
-          else {
-            val mnOut = if (anyNaN && mn == Double.PositiveInfinity) Double.NaN else mn
-            val mxOut = if (anyNaN) Double.NaN else mx
-            val vr = math.max((ss - s * s / c) / c, 0.0)
-            val refVar = (ss - s * s / n) / n
-            Seq(s, s / c, mnOut, mxOut, vr, math.sqrt(vr),
-              s / n, refVar, math.sqrt(math.max(refVar, 0.0)))
-          }
-        Row.fromSeq(r.toSeq ++ outs)
-      }
-    }
-    spark.createDataFrame(outRdd,
-      StructType(ranged.schema.fields ++ Seq(
-        "w_sum", "w_avg", "w_min", "w_max", "w_var", "w_dev",
-        "w_avg_ref", "w_var_ref", "w_dev_ref")
-        .map(c => StructField(c, DoubleType, nullable = true))))
-  }
+  def windowAggScanKeyless(df: DataFrame, value: String, n: Int): DataFrame =
+    OrderedScan(df, Nil, Seq(col("pos")), ranged = true,
+      new ScanKernel.WindowTail(df.schema.fieldIndex(value), n),
+      doubles(WindowCols, nullable = true))
 
   /** Parallel linear-recurrence scan: evaluates E_i = a_i·E_{i-1} + b_i per
-    * key in pos order, where `coef` maps each row to (a_i, b_i). Initial
-    * conditions are encoded in the pos==0 coefficient (a=0 collapses any
-    * seed), so no per-key seeding is needed.
+    * key in `ordCol` order, where `coef` maps each row to (a_i, b_i) and
+    * `seed` the key's first row to E_{-1} (a = 0 at the first row makes
+    * the seed irrelevant).
     *
-    * Affine maps COMPOSE — (a2,b2)∘(a1,b1) = (a2·a1, a2·b1 + b2) — so the
-    * recurrence parallelizes as a two-pass chunked scan (the classic
-    * parallel-prefix shape): range-partition by (keys, pos), pass 1
-    * composes each chunk's map (one small row per (partition, key)
-    * collected to the driver, which prefix-composes per key), pass 2
-    * re-runs the recurrence per chunk from the incoming state. Parallelism
-    * is the partition count — NOT the key count — which is what makes
-    * recursive indicators (EMA/ATR/cumprod) survive a series with few or
-    * no keys at 100 TB, where a key-partitioned scan would serialize.
-    * Both passes share one captured shuffle (see Series.attachPosRanged
-    * for why re-deriving the DataFrame would corrupt the chunking).
+    * Affine maps COMPOSE — (a2,b2)∘(a1,b1) = (a2·a1, a2·b1 + b2) — so a
+    * keyless recurrence is one ranged [[graft.plans.OrderedScan]] whose
+    * parallelism is the partition count, NOT the key count: recursive
+    * indicators (EMA/ATR/cumprod) survive a series with few or no keys.
+    * Keyed calls dispatch to [[affineScanKeyed]].
     *
-    * The two-pass shape collects one (chunk, key) row per key PRESENT IN
-    * EACH CHUNK to the driver — fine for keyless/few-key series, a
-    * driver OOM for per-user keys at scale. Keyed calls therefore
-    * dispatch to [[affineScanKeyed]], which needs no driver state.
-    */
-  /** With `pre = true` the emitted column is the state BEFORE applying the
+    * With `pre = true` the emitted column is the state BEFORE applying the
     * current row — the gap-safe form of `lag`/"carry up to the previous
     * row" (no pos-arithmetic join, so non-dense pos from slicing/filtering
     * cannot skew it). The first row of a key emits the seed.
@@ -376,60 +189,8 @@ object Moving {
       return affineScanKeyed(df, keys, out, pre)(seed)(coef)
     }
     guardNames(df.columns.toSeq, Seq(out), "affineScanRanged")
-    val spark = df.sparkSession
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val all = keys.map(col) :+ col(ordCol)
-    val ranged = df.repartitionByRange(parts, all: _*).sortWithinPartitions(all: _*)
-    val keyIdx = keys.map(ranged.schema.fieldIndex)
-    val keyOf = graft.series.Series.rowKey(keyIdx) _
-    val rdd = ranged.rdd
-    // Pass 1: per (partition, key) composed map (A, B) + the chunk's seed
-    // (the key's overall seed is its first chunk's).
-    val comps: Array[(Int, Seq[Any], Double, Double, Double)] =
-      rdd.mapPartitionsWithIndex { (pid, it) =>
-        val buf =
-          scala.collection.mutable.ArrayBuffer.empty[(Int, Seq[Any], Double, Double, Double)]
-        var cur: Seq[Any] = null
-        var a = 1.0; var b = 0.0; var s = 0.0; var any = false
-        it.foreach { r =>
-          val k = keyOf(r)
-          if (!any || k != cur) {
-            if (any) buf += ((pid, cur, a, b, s))
-            cur = k; a = 1.0; b = 0.0; s = seed(r); any = true
-          }
-          val (ca, cb) = coef(r)
-          a = ca * a; b = ca * b + cb
-        }
-        if (any) buf += ((pid, cur, a, b, s))
-        buf.iterator
-      }.collect()
-    // Driver: prefix-compose per key in partition order → incoming state.
-    val incoming: Map[(Int, Seq[Any]), Double] =
-      comps.groupBy(_._2).iterator.flatMap { case (k, rows) =>
-        val ordered = rows.sortBy(_._1)
-        var e = ordered.head._5 // the key's seed
-        ordered.map { case (pid, _, a, b, _) =>
-          val entry = (pid, k) -> e
-          e = a * e + b
-          entry
-        }
-      }.toMap
-    val bc = spark.sparkContext.broadcast(incoming)
-    // Pass 2: replay the recurrence per chunk from the incoming state.
-    val outRdd = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var cur: Seq[Any] = null
-      var e = 0.0
-      it.map { r =>
-        val k = keyOf(r)
-        if (cur == null || k != cur) { cur = k; e = bc.value((pid, k)) }
-        val before = e
-        val (ca, cb) = coef(r)
-        e = ca * e + cb
-        Row.fromSeq(r.toSeq :+ (if (pre) before else e))
-      }
-    }
-    spark.createDataFrame(outRdd,
-      StructType(ranged.schema.fields :+ StructField(out, DoubleType, nullable = false)))
+    OrderedScan(df, Nil, Seq(col(ordCol)), ranged = true,
+      new ScanKernel.Affine(seed, coef, pre), doubles(Seq(out), nullable = false))
   }
 
   /** Exponential moving average — cs_window_ema (func.c:1764-1777):
@@ -459,13 +220,7 @@ object Moving {
   def atr(df: DataFrame, keys: Seq[String], value: String, n: Int, out: String = "atr"): DataFrame = {
     require(n >= 1, s"ATR period must be >= 1, got $n")
     guardNames(df.columns.toSeq, Seq("__aord"), "atr")
-    val withOrd =
-      if (keys.isEmpty)
-        graft.series.Series.attachPosRanged(df, Seq(), Seq(col("pos")), out = "__aord")
-      else {
-        val w = Window.partitionBy(keys.map(col): _*).orderBy(col("pos"))
-        df.withColumn("__aord", row_number().over(w).cast("long") - 1L)
-      }
+    val withOrd = graft.series.Series.ordinal(df, keys, Seq(col("pos")), "__aord")
     val vIdx = withOrd.schema.fieldIndex(value)
     val oIdx = withOrd.schema.fieldIndex("__aord")
     affineScanRanged(withOrd, keys, out)(
@@ -502,15 +257,14 @@ object Moving {
     guardNames(df.columns.toSeq,
       Seq("__d", "__up", "__dn", "__su", "__sd", out), "rsi")
     val withUd = graft.analytics.Analytics.diff(df, keys, value, "__d")
-      .withColumn("__up", greatest(col("__d"), lit(0.0)))
-      .withColumn("__dn", greatest(-col("__d"), lit(0.0)))
+      .select(col("*"), greatest(col("__d"), lit(0.0)).as("__up"),
+        greatest(-col("__d"), lit(0.0)).as("__dn"))
     val smoothed = atr(atr(withUd, keys, "__up", n, "__su"), keys, "__dn", n, "__sd")
-    smoothed
-      .withColumn(out,
-        when(col("__sd") === 0.0 && col("__su") > 0.0, lit(100.0))
-          .when(col("__sd") === 0.0, lit(Double.NaN))
-          .otherwise(lit(100.0) - lit(100.0) / (lit(1.0) + col("__su") / col("__sd"))))
-      .drop("__d", "__up", "__dn", "__su", "__sd")
+    smoothed.select(df.columns.map(col) :+
+      when(col("__sd") === 0.0 && col("__su") > 0.0, lit(100.0))
+        .when(col("__sd") === 0.0, lit(Double.NaN))
+        .otherwise(lit(100.0) - lit(100.0) / (lit(1.0) + col("__su") / col("__sd")))
+        .as(out): _*)
   }
 
   /** Rank with gaps / dense rank over the whole series — cs_rank /
@@ -551,7 +305,8 @@ object Moving {
         .withColumnRenamed("__origpos", "pos")
     } else {
       val w = Window.partitionBy(keys.map(col): _*).orderBy(col(value))
-      df.withColumn("rnk", org.apache.spark.sql.functions.rank().over(w).cast("long"))
-        .withColumn("dense_rnk", dense_rank().over(w).cast("long"))
+      df.withColumns(ListMap(
+        "rnk" -> org.apache.spark.sql.functions.rank().over(w).cast("long"),
+        "dense_rnk" -> dense_rank().over(w).cast("long")))
     }
 }

@@ -140,4 +140,18 @@ class FileBloomsBatchSpec extends AnyFunSuite {
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
     assert(msgs(e).exists(_.contains("cannot be sized")), s"got: $e")
   }
+
+  test("batched-build groups cap the files per group; the byte budget splits as before") {
+    import graft.streaming.FileBlooms.{buildGroups, MaxFilesPerBuild}
+    val small = (0 until 2500).map(i => s"f$i.parquet" -> 10L)
+    val groups = buildGroups(small, _ * 8, budget = 1L << 40)
+    assert(groups.size >= 3, s"${groups.size} groups")
+    assert(groups.forall(_.size <= MaxFilesPerBuild))
+    assert(groups.flatten.sorted == small.sorted)
+    // the byte budget alone: 40-byte entries under a 100-byte budget pair
+    // up, and an over-budget entry stands alone
+    val sized = Seq("a" -> 40L, "b" -> 40L, "c" -> 40L, "d" -> 500L, "e" -> 40L)
+    assert(buildGroups(sized, identity, budget = 100L).reverse.map(_.reverse.map(_._1)) ==
+      List(List("a", "b"), List("c"), List("d"), List("e")))
+  }
 }
