@@ -667,13 +667,38 @@ object Streams {
   private[graft] def probeStoredBuckets(spark: SparkSession, bucketPath: String,
                                         bb: DataFrame,
                                         cols: Seq[String]): DataFrame = {
-    val probe = bb.select(col("band"), col("bucket")).distinct()
+    val vals = bb.select(col("bucket")).distinct()
+      .limit(probeCollectCap + 1).collect().map(_.getLong(0))
+    probeStored(spark, bucketPath, bb.select(col("band"), col("bucket")),
+      cols.map(col), Some(vals).filter(_.length <= probeCollectCap), "left_semi")
+      // nothing can collide: the batch's own columns, empty, stand in
+      .getOrElse(bb.select(cols.map(col): _*).limit(0))
+  }
+
+  /** The cap on the batch's bucket rows a probe collects to the driver
+    * (`graft.dedup.probe.collect.max`, default 1e6). Past it the probe
+    * skips the sidecar check and scans plainly.
+    */
+  private def probeCollectCap: Int = sys.props.get("graft.dedup.probe.collect.max")
+    .flatMap(_.toIntOption).getOrElse(1000000)
+
+  /** [[probeStoredBuckets]] over the batch's distinct bucket values
+    * already on the driver (`vals`, None past [[probeCollectCap]]): the
+    * stored rows, projected to `cols` (which keep `band` and `bucket`),
+    * joined `how` to the broadcast batch side `side` on (band, bucket).
+    * An inner join lets a caller take the colliding batch rows from the
+    * same broadcast; duplicate keys on a semi-join side change nothing,
+    * so the side needs no distinct (and its shuffle). None when nothing
+    * can collide — no bucket values, a bloom that clears them all, or
+    * file pruning that keeps no file — so the caller runs no job at all.
+    */
+  private def probeStored(spark: SparkSession, bucketPath: String, side: DataFrame,
+                          cols: Seq[Column], vals: Option[Array[Long]],
+                          how: String): Option[DataFrame] = {
+    def probed(stored: DataFrame): DataFrame =
+      stored.join(broadcast(side), Seq("band", "bucket"), how)
     val isinCap = sys.props.get("graft.dedup.probe.isin.max")
       .flatMap(_.toIntOption).getOrElse(8192)
-    val collectCap = sys.props.get("graft.dedup.probe.collect.max")
-      .flatMap(_.toIntOption).getOrElse(1000000)
-    val vals = probe.select(col("bucket")).distinct()
-      .limit(collectCap + 1).collect().map(_.getLong(0))
     // the live view is resolved ONCE (one manifest + listing read) and
     // every stored-side frame below is built from it by Tables.liveFrame:
     // statuses from that listing, schema from the memoized head footer —
@@ -682,21 +707,17 @@ object Streams {
     def readFiles(names: Seq[String]): DataFrame = (live match {
       case Some(l) => graft.io.Tables.liveFrame(spark, l, names, resize = false)
       case None => graft.io.Tables.snapshotUnsized(spark, bucketPath)
-    }).select(cols.map(col): _*)
+    }).select(cols: _*)
     lazy val stored0 = readFiles(live.map(_.names).getOrElse(Nil))
-    def emptyStored: DataFrame =
-      if (live.isDefined) readFiles(Nil) else stored0.limit(0)
     // a bucket-less batch (empty, or all docs too short to shingle)
     // can collide with nothing — skip the scan outright
-    if (vals.isEmpty) return emptyStored
+    if (vals.exists(_.isEmpty)) return None
     // the sidecar check: definite-miss values drop on the driver; what
     // remains (real hits + the fp tail) is the verify scan's filter set.
-    // No sidecar (or a collect flood past collectCap) → candidates =
+    // No sidecar (or a collect flood past the cap) → candidates =
     // None → the always-correct full-scan fallback.
-    val candidates: Option[Array[Long]] =
-      if (vals.length > collectCap) None
-      else DedupBloom.load(spark, bucketPath)
-        .map(bf => vals.filter(bf.mightContainLong))
+    val candidates: Option[Array[Long]] = vals.flatMap(v =>
+      DedupBloom.load(spark, bucketPath).map(bf => v.filter(bf.mightContainLong)))
     // the or-chain hazard zone (see the doc block): parquet-mr receives
     // an In ≤ the session threshold as a left-deep or()-chain of eq,
     // which stack-overflows tasks beyond ~1.5k values. Safe by default
@@ -721,35 +742,32 @@ object Streams {
     // over-keep (footer ranges bound the real values; per-file blooms
     // have no false negatives; un-indexed files are always kept), so the
     // probe's answer is scan-identical.
-    val verifySet: Option[Array[Long]] =
-      if (vals.length > collectCap) None else candidates.orElse(Some(vals))
-    // LAZY: the bloom-cleared branch below returns the empty frame
-    // without resolving a stored-side scan
+    val verifySet: Option[Array[Long]] = candidates.orElse(vals)
+    // LAZY: the bloom-cleared branch below returns None without
+    // resolving a stored-side scan
     lazy val stored = (verifySet.filter(_.nonEmpty), live) match {
       case (Some(pos), Some(l)) =>
         FileBlooms.pruneKnown(spark, bucketPath, pos, l.names) match {
-          case Some(keep) if keep.isEmpty => emptyStored
-          case Some(keep) => readFiles(keep)
-          case None => stored0
+          case Some(keep) if keep.isEmpty => None
+          case Some(keep) => Some(readFiles(keep))
+          case None => Some(stored0)
         }
-      case _ => stored0
+      case _ => Some(stored0)
     }
     candidates match {
       case Some(pos) if pos.isEmpty =>
         // bloom-cleared: the common no-collision batch reads NOTHING
-        emptyStored
+        None
       case Some(pos) if pos.length <= isinCap &&
-          pos.length * 2 <= vals.length && !orChainHazard(pos.length) =>
+          pos.length * 2 <= vals.get.length && !orChainHazard(pos.length) =>
         // SELECTIVE positives: the InSet thins what flows into the join.
         // When most of the batch is positive (a re-crawl batch: every
         // doc collides), the filter eliminates ~nothing and only adds
         // per-batch analysis + codegen of a thousands-literal predicate
         // — the plain scan+join is cheaper (measured on the bench's
         // re-crawl entry), so large positive fractions skip it.
-        stored.filter(col("bucket").isin(pos.map(Long.box): _*))
-          .join(broadcast(probe), Seq("band", "bucket"), "left_semi")
-      case _ =>
-        stored.join(broadcast(probe), Seq("band", "bucket"), "left_semi")
+        stored.map(s => probed(s.filter(col("bucket").isin(pos.map(Long.box): _*))))
+      case _ => stored.map(probed)
     }
   }
 
@@ -951,20 +969,29 @@ object Streams {
     * Each batch-sized frame is computed ONCE: one normalize pass yields
     * (id, ts, fp, sh), banding passes ts and fp through, and the bucket
     * rows are the banded frame restricted to the survivors — no join
-    * re-derives a column the batch already had. Per-batch SQL-execution
-    * budget on a bucket table that exists and has its bloom sidecar (a
-    * steady-state stream):
-    *  - a batch with no band collision runs 7 — the probe's bucket-value
-    *    collect, the fresh-empty check, the in-batch candidate check, the
-    *    doc write, the bucket-value collect, the bucket write and the
-    *    file-bloom build (StreamIngestSpec pins it);
-    *  - an all-drop re-crawl runs 3 — the probe collect, the labeled
-    *    -candidate collect, the fresh-empty check — and writes nothing;
-    *  - colliding candidates add one execution each for the stored
-    *    candidate collect, the tier-2 verify and the in-batch verify, and
-    *    verified in-batch pairs add connected components (~6 more). A
-    *    fresh 1000-doc batch of perfbench's `ingest_mixed`, whose random
-    *    texts still band-collide a little, runs 10 (29 jobs).
+    * re-derives a column the batch already had. The verdict
+    * ([[landingVerdict]]) is decided on the driver from at most three
+    * collects, so per-batch SQL executions on a bucket table that exists
+    * and has its bloom sidecar (a steady-state stream) are:
+    *  - a fresh batch: at most 6 — the batch-rows collect, the stored
+    *    -candidate collect (none when the bloom clears every bucket), one
+    *    collect of the tier-2 verdicts and the verified in-batch pairs
+    *    (none when there is neither), the doc write, the bucket write
+    *    and the file-bloom build. LandingVerdictSpec pins 6 for a batch
+    *    with both kinds of candidate; StreamIngestSpec pins 4 for a batch
+    *    with none;
+    *  - an all-drop re-crawl: 2 — the batch-rows and stored-candidate
+    *    collects. Every doc is an exact duplicate, so there is no
+    *    in-batch pair to verify and nothing is written;
+    *  - verified in-batch pairs whose two ends both survive the stored
+    *    check add connected components and one loser collect.
+    * Every driver collect is bounded by the batch, never by the stored
+    * corpus: the batch-rows collect holds the batch's ids plus batch ×
+    * bands (id, band, bucket) rows under `graft.dedup.probe.collect.max`;
+    * the candidate and verdict collects hold the batch's collisions and
+    * its verified pairs under `graft.dedup.verify.collect.max`. Past a
+    * cap the same verdict comes from the frame-based path, which collects
+    * only drop ids (at most the batch's ids).
     */
   def dedupIngestBatch(batch0: DataFrame, docPath: String, bucketPath: String,
                        ts: String, streamKey: String, id: String, text: String,
@@ -987,51 +1014,36 @@ object Streams {
     val caches = scala.collection.mutable.ListBuffer[DataFrame](batch, sh, bb)
     try {
       val (exists, liveHead, hasFp) = bucketLayout(spark, bucketPath)
-      val fresh =
-        if (!exists) batch
-        else if (minJaccard <= 0) {
-          // legacy banding-aggressive mode: ANY (band, bucket) collision
-          // drops the doc, zero verify I/O
-          val hitBuckets = probeStoredBuckets(spark, bucketPath, bb,
-            Seq("band", "bucket")).distinct()
-          val hit = bb.join(broadcast(hitBuckets), Seq("band", "bucket"),
-            "left_semi").select(col(id)).distinct()
-          cached(caches, batch.join(hit, Seq(id), "left_anti"))
-        } else {
-          // tier 2 is EXACT JACCARD against the colliding stored docs:
-          // shingle only those (∝ candidates); the intersect arithmetic
-          // is verifyJaccard's, inlined because the two sides come from
-          // different frames
-          val shB = sh.select(col(id), col("sh"))
-          cached(caches, storedSurvivors(spark, batch, bb, docPath, bucketPath,
-            id, ts, hasFp, tier1 = hasFp && minJaccard <= 1.0, caches)(
-            _.select(col(id).as("__oldId"), col(text).as("__otxt"))) {
-            (pairs, oldDocs) =>
-              val oldSh = graft.dedup.Dedup
-                .shingleSets(oldDocs, "__oldId", "__otxt", shingleLen)
-                .select(col("__oldId"), col("sh").as("__osh"))
-              pairs.join(shB, Seq(id)).join(oldSh, Seq("__oldId"))
-                .withColumn("__inter",
-                  size(array_intersect(col("sh"), col("__osh"))).cast("long"))
-                .filter(col("__inter") /
-                  (size(col("sh")) + size(col("__osh")) - col("__inter"))
-                  >= minJaccard)
-                .select(col(id)).distinct()
-          })
-        }
+      // tier 2 is EXACT JACCARD against the colliding stored docs:
+      // shingle only those (∝ candidates); the intersect arithmetic is
+      // verifyJaccard's, inlined because the two sides come from
+      // different frames. minJaccard <= 0 is the legacy
+      // banding-aggressive mode: ANY (band, bucket) collision drops the
+      // doc, zero verify I/O
+      val shB = sh.select(col(id), col("sh"))
+      val verdict = landingVerdict(spark, batch, bb, docPath, bucketPath, id, ts,
+        exists, hasFp, tier1 = hasFp && minJaccard <= 1.0,
+        collisionDrops = minJaccard <= 0, caches)(
+        _.select(col(id).as("__oldId"), col(text).as("__otxt"))) {
+        (pairs, oldDocs) =>
+          val oldSh = graft.dedup.Dedup
+            .shingleSets(oldDocs, "__oldId", "__otxt", shingleLen)
+            .select(col("__oldId"), col("sh").as("__osh"))
+          pairs.join(shB, Seq(id)).join(oldSh, Seq("__oldId"))
+            .withColumn("__inter",
+              size(array_intersect(col("sh"), col("__osh"))).cast("long"))
+            .filter(col("__inter") /
+              (size(col("sh")) + size(col("__osh")) - col("__inter"))
+              >= minJaccard)
+            .select(col(id))
+      } { cand =>
+        if (minJaccard <= 0) cand
+        else graft.dedup.Dedup.verifyJaccard(cand, sh, id, minJaccard)
+          .select(col("id1"), col("id2"))
+      }
       // an ALL-DROP batch (a re-crawl — the steady state when a crawler
-      // revisits its corpus) is KNOWN empty on the driver after this
-      // check: the in-batch machinery, the bucket-value collect and both
-      // staging writes are skipped (landSurvivors)
-      val freshEmpty = exists && fresh.isEmpty
-      val survivors =
-        if (freshEmpty) fresh
-        else inBatchSurvivors(batch, fresh, bb, id, caches) { cand =>
-          if (minJaccard <= 0) cand
-          else graft.dedup.Dedup.verifyJaccard(cand, sh, id, minJaccard)
-            .select(col("id1"), col("id2"))
-        }
-      landSurvivors(spark, batch, survivors, freshEmpty, bb,
+      // revisits its corpus) writes nothing (landSurvivors)
+      landSurvivors(spark, batch, verdict, exists && verdict.allDropped, bb,
         shouldWriteFp(liveHead, hasFp), docPath, bucketPath, ts, id,
         streamKey, batchId, retainNs)
     } finally {
@@ -1071,154 +1083,232 @@ object Streams {
     (exists, liveHead, bucketHeadHasFp(spark, bucketPath, liveHead))
   }
 
-  /** The VERIFIED stored-corpus check shared by the landing twins: the
-    * batch minus the docs that near-duplicate a RETAINED doc. `bb` is the
-    * batch's banded frame (id, band, bucket, fp — fp is the text
-    * fingerprint or the vector fingerprint). The probe carries the
-    * stored id, so its hits ARE the candidate (batch-id, stored-id)
-    * pairs. Two-tier verify:
-    *  1. FINGERPRINT SHORTCUT (`tier1`) — bucket rows written with `fp`
-    *     carry the stored doc's fingerprint, so a candidate whose batch
-    *     fingerprint MATCHES is an exact duplicate and drops with ZERO
-    *     doc-table I/O. The comparison happens inside the candidate job
-    *     itself (the broadcast batch side carries its fp), so candidates
-    *     arrive pre-labeled exact/not. A re-crawl of identical pages —
-    *     THE steady state when a crawler revisits its corpus — never
-    *     touches the doc table. Tables written before fp existed take
-    *     tier 2 for everything.
-    *  2. `hits` for the rest — (pairs (id, __oldId), colliding stored
-    *     docs) → dropped batch ids, over a doc-table fetch bounded in
-    *     BOTH dimensions: the candidates' ts SPAN file-prunes the read to
-    *     the overlapping manifest slice (the layout is ts-clustered,
-    *     never id-clustered, so an In alone cannot file-prune at 100 TB)
-    *     and the id set bounds the verify. `oldSide` projects the slice
-    *     to (__oldId, payload…).
-    * The labeled candidate set is COLLECTED once under a cap
-    * (graft.dedup.verify.collect.max, default 20000 — collisions only,
-    * ~40 B/row): the driver decides tier 1 outright, tier 2's pair set
-    * becomes a local frame (no probe recomputation), and an all-exact
-    * batch runs no tier-2 job. Past the cap a frame-based shape takes
-    * over (persisted candidates, span agg, broadcast semi-join fetch) —
-    * a giant re-crawl must not revert to O(corpus) work or an unbounded
-    * collect.
+  /** A driver-local frame of id-typed columns `names` over `rows` — the
+    * verdict's id sets and pair sets, typed from the batch's own id column
+    * so join keys resolve whatever the id type is.
     */
-  private def storedSurvivors(spark: SparkSession, batch: DataFrame,
-                              bb: DataFrame, docPath: String, bucketPath: String,
-                              id: String, ts: String, hasFp: Boolean,
-                              tier1: Boolean,
-                              caches: scala.collection.mutable.ListBuffer[DataFrame])(
+  private def localIds(batch: DataFrame, id: String, rows: Array[Row],
+                       names: String*): DataFrame =
+    batch.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(names.map(n => batch.schema(id).copy(name = n))))
+
+  /** At most `cap` + 1 rows of `df`, taken in ONE job: a take over many
+    * partitions runs a job for the first and more for the rest. The
+    * frames taken here end in batch-sized stages (their scans and joins
+    * run before an exchange or over the persisted batch), so reading
+    * them in one task costs nothing a second job would not.
+    */
+  private def capped(df: DataFrame, cap: Int): Array[Row] =
+    df.coalesce(1).limit(cap + 1).collect()
+
+  /** A landing batch's verdict, decided on the driver: the survivors (the
+    * batch minus `drops`, a broadcast anti-join of a local id frame),
+    * whether nothing survives, and the survivors' distinct bucket values
+    * for the bloom sidecar (None past the batch-rows cap).
+    */
+  private final case class Verdict(survivors: DataFrame, allDropped: Boolean,
+                                   survivorBuckets: Option[Array[Long]])
+
+  /** The verdict shared by the landing twins: the batch minus the docs
+    * that near-duplicate a RETAINED doc, then minus the losers of the
+    * in-batch clusters among what is left (min id per connected
+    * component survives). `bb` is the batch's banded frame (id, ts, fp,
+    * band, bucket — fp is the text or the vector fingerprint); docs with
+    * no bucket rows collide with nothing and always survive.
+    *
+    * Three collects decide it:
+    *  1. BATCH ROWS — (id, band, bucket) per banded row plus each batch
+    *     row's id. The distinct bucket values feed the probe's sidecar
+    *     check ([[probeStored]]), the survivors' ones feed the sidecar
+    *     update, the banded rows give the in-batch candidate pairs
+    *     ([[localPairs]]), and the ids tell an all-drop batch: every
+    *     row's id dropped.
+    *  2. STORED CANDIDATES — the probe's hits joined to the broadcast
+    *     batch side in one join: the stored id rides along, so the rows
+    *     ARE the candidate (batch-id, stored-id) pairs, labeled by tier 1
+    *     (FINGERPRINT SHORTCUT, `tier1`: bucket rows written with `fp`
+    *     carry the stored doc's fingerprint, so a matching batch
+    *     fingerprint is an exact duplicate that drops with ZERO doc-table
+    *     I/O — the re-crawl steady state never touches the doc table;
+    *     `collisionDrops` labels every collision a drop).
+    *  3. VERDICTS — tier 2 and the in-batch pairs in one plan. Tier 2
+    *     runs only for candidates tier 1 left undecided: `hits` over
+    *     (pairs (id, __oldId), colliding stored docs) → dropped batch ids,
+    *     over a doc-table fetch bounded in BOTH dimensions: the
+    *     candidates' ts SPAN file-prunes the read to the overlapping
+    *     manifest slice (the layout is ts-clustered, never id-clustered,
+    *     so an In alone cannot file-prune at 100 TB) and the id set
+    *     bounds the verify. `oldSide` projects the slice to (__oldId,
+    *     payload…). The in-batch part is `verify` over the candidate
+    *     pairs among the docs tier 1 kept, a local frame (an all-exact
+    *     re-crawl has none, and a batch with no pair runs no collect 3).
+    * The driver then keeps only the in-batch edges whose two ends
+    * survived the stored check. That equals pairing the stored check's
+    * survivors alone, because a pair and its verify depend on the pair's
+    * two docs only; so a doc the stored check drops never bridges two
+    * fresh docs into one cluster. Connected components run only when
+    * such edges remain.
+    *
+    * Past `graft.dedup.probe.collect.max` batch rows, or more candidate
+    * pairs than `graft.dedup.verify.collect.max`, the pairs come from
+    * [[graft.dedup.Dedup.bandedPairs]] in Spark instead. Past
+    * `graft.dedup.verify.collect.max` rows in either of collects 2 and 3
+    * (default 20000, ~40 B/row) a frame-based shape decides identically
+    * (persisted candidates, span agg, broadcast semi-join fetch,
+    * distributed in-batch pairs) and collects only the drop ids — a giant
+    * re-crawl must not revert to O(corpus) work or an unbounded collect.
+    */
+  private def landingVerdict(spark: SparkSession, batch: DataFrame, bb: DataFrame,
+                             docPath: String, bucketPath: String, id: String,
+                             ts: String, exists: Boolean, hasFp: Boolean,
+                             tier1: Boolean, collisionDrops: Boolean,
+                             caches: scala.collection.mutable.ListBuffer[DataFrame])(
       oldSide: DataFrame => DataFrame)(
-      hits: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    val probeCols = Seq("band", "bucket", id, ts) ++
-      (if (hasFp) Seq("fp") else Nil)
-    val storedHits = probeStoredBuckets(spark, bucketPath, bb, probeCols)
-      .withColumnRenamed(id, "__oldId").withColumnRenamed(ts, "__oldTs")
-      .withColumnsRenamed(Map("fp" -> "__oldFp"))
-    val exactCol =
-      if (tier1) coalesce(col("__oldFp") === col("__bfp"), lit(false))
-      else lit(false)
-    val cand = storedHits
-      .join(broadcast(bb.select(col(id), col("band"), col("bucket"),
-        col("fp").as("__bfp"))), Seq("band", "bucket"))
-      .select(col(id), col("__oldId"), col("__oldTs"), exactCol.as("__exact"))
-      .distinct()
+      hits: (DataFrame, DataFrame) => DataFrame)(
+      verify: DataFrame => DataFrame): Verdict = {
+    def ids(vals: Array[Any], name: String): DataFrame =
+      localIds(batch, id, vals.map(v => Row(v)), name)
+    // 1. the batch rows: (id, band, bucket) per banded row, and one
+    // (id, __doc) row per batch row
+    val rowCap = probeCollectCap
+    val rows = capped(bb.select(col(id), col("band"), col("bucket"),
+        lit(false).as("__doc"))
+      .unionByName(batch.select(col(id), lit(null).cast("int").as("band"),
+        lit(null).cast("long").as("bucket"), lit(true).as("__doc"))), rowCap)
+    val complete = rows.length <= rowCap
+    val (docRows, bandRows) = rows.partition(_.getBoolean(3))
+    val banded = Some(bandRows).filter(_ => complete)
+    // 2. the stored candidates (id, __oldId, __oldTs, __exact)
+    val bands = Seq(col("band"), col("bucket"))
+    val stored = (if (!exists) None else probeStored(spark, bucketPath,
+      bb.select(bands :+ col(id) :+ col("fp").as("__bfp"): _*),
+      if (collisionDrops) bands
+      else bands ++ Seq(col(id).as("__oldId"), col(ts).as("__oldTs")) ++
+        (if (hasFp) Seq(col("fp").as("__oldFp")) else Nil),
+      banded.map(_.map(_.getLong(2)).distinct), "inner")).map { joined =>
+      val exactCol =
+        if (collisionDrops) lit(true)
+        else if (tier1) coalesce(col("__oldFp") === col("__bfp"), lit(false))
+        else lit(false)
+      (if (collisionDrops) joined.select(col(id),
+        lit(null).cast(bb.schema(id).dataType).as("__oldId"),
+        lit(null).cast(bb.schema(ts).dataType).as("__oldTs"), exactCol.as("__exact"))
+      else joined.select(col(id), col("__oldId"), col("__oldTs"), exactCol.as("__exact")))
+        .distinct()
+    }
+    // the in-batch pairs in Spark: the frame path's, and past the caps
+    lazy val edges = verify(graft.dedup.Dedup.bandedPairs(bb, id))
+    val candCap = sys.props.get("graft.dedup.verify.collect.max")
+      .flatMap(_.toIntOption).getOrElse(20000)
     def fetchOld(bounds: Option[(Long, Long)]): DataFrame = oldSide(
       bounds.map { case (lo, hi) =>
         graft.io.Tables.snapshotSliceNs(spark, docPath, lo, hi, ts)
       }.getOrElse(graft.io.Tables.snapshot(spark, docPath)))
-    // a local single-column id frame for broadcast anti-joins — typed
-    // from the batch's own schema, so the join key resolves whatever the
-    // id type is
-    def localFrame(rows: Array[Row], names: String*): DataFrame =
-      spark.createDataFrame(
-        new java.util.ArrayList[Row](java.util.Arrays.asList(rows: _*)),
-        StructType(names.map(n => batch.schema(id).copy(name = n))))
-    def idFrame(vals: Array[Any], name: String): DataFrame =
-      localFrame(vals.map(v => Row(v)), name)
-    val candCap = sys.props.get("graft.dedup.verify.collect.max")
-      .flatMap(_.toIntOption).getOrElse(20000)
-    val candRows = cand.limit(candCap + 1).collect()
-    if (candRows.length <= candCap) {
-      // DRIVER-DECIDED: every labeled candidate is on the driver
-      val exactIds = candRows.filter(_.getBoolean(3)).map(_.get(0)).distinct
-      val exactSet = exactIds.toSet
-      // pairs still undecided: their batch id survived tier 1
-      val restRows = candRows.filterNot(r => exactSet.contains(r.get(0)))
-      if (restRows.isEmpty) {
-        // the all-exact re-crawl steady state: zero doc-table I/O, zero
-        // tier-2 jobs — one broadcast anti-join decides the batch
-        if (exactIds.isEmpty) batch
-        else batch.join(broadcast(idFrame(exactIds, id)), Seq(id), "left_anti")
-      } else {
-        val ns = restRows.flatMap(r => tsValueNs(r.get(2)))
-        val oldIds = restRows.map(_.get(1)).distinct
-        val old0 = fetchOld(
-          if (ns.length == restRows.length) Some((ns.min, ns.max)) else None)
-        val old =
-          if (oldIds.length <= 1000)
-            // isin additionally pushes row-group pruning inside the
-            // ts-sliced files
-            old0.filter(col("__oldId").isin(oldIds: _*))
-          else old0.join(broadcast(idFrame(oldIds, "__oldId")),
-            Seq("__oldId"), "left_semi")
-        // the pair set is a LOCAL frame (it was just collected) — tier 2
-        // never recomputes the probe — and its verdicts come back to the
-        // driver too (a subset of the collected batch ids): a batch whose
-        // candidates all fail verify stays the batch itself
-        val hitIds = hits(localFrame(restRows.map(r => Row(r.get(0), r.get(1))),
-          id, "__oldId"), old).collect().map(_.get(0))
-        val drops = (exactIds ++ hitIds).distinct
-        if (drops.isEmpty) batch
-        else batch.join(broadcast(idFrame(drops, id)), Seq(id), "left_anti")
-      }
-    } else {
-      // OVER-CAP fallback: the frame-based shape
-      val candDf = cached(caches, cand)
-      val exactIds = candDf.filter(col("__exact")).select(col(id)).distinct()
-      val rest = candDf.join(exactIds, Seq(id), "left_anti")
-      val candOld = rest.select(col("__oldId"), col("__oldTs")).distinct()
-      val span = candOld.agg(min(col("__oldTs")), max(col("__oldTs")),
-        count(lit(1))).head()
-      if (span.getLong(2) == 0L) batch.join(exactIds, Seq(id), "left_anti")
+    def clusterLosers(pairs: DataFrame): Array[Any] =
+      graft.dedup.Dedup.connectedComponents(pairs)
+        .filter(col("id") =!= col("cluster_id")).select(col("id"))
+        .collect().map(_.get(0))
+    // DRIVER-DECIDED below both caps; None sends the batch to the frame path
+    val driverDrops: Option[Array[Any]] = {
+      val storedCand = stored.fold(Array.empty[Row])(capped(_, candCap))
+      if (storedCand.length > candCap) None
       else {
-        val old = fetchOld(for {
-          lo <- tsValueNs(span.get(0)); hi <- tsValueNs(span.get(1))
-        } yield (lo, hi)).join(broadcast(candOld.select(col("__oldId"))),
-          Seq("__oldId"), "left_semi")
-        val hit = hits(rest.select(col(id), col("__oldId")), old)
-        batch.join(hit.unionByName(exactIds).distinct(), Seq(id), "left_anti")
+        val exactIds = storedCand.filter(_.getBoolean(3)).map(_.get(0)).distinct
+        val exactSet = exactIds.toSet
+        // pairs still undecided: their batch id survived tier 1
+        val restRows = storedCand.filterNot(r => exactSet.contains(r.get(0)))
+        // 3. tier 2 over the LOCAL pair set (it was just collected — tier 2
+        // never recomputes the probe)
+        val tier2 = if (restRows.isEmpty) None else Some {
+          val ns = restRows.flatMap(r => tsValueNs(r.get(2)))
+          val oldIds = restRows.map(_.get(1)).distinct
+          val old0 = fetchOld(
+            if (ns.length == restRows.length) Some((ns.min, ns.max)) else None)
+          val old =
+            if (oldIds.length <= 1000)
+              // isin additionally pushes row-group pruning inside the
+              // ts-sliced files
+              old0.filter(col("__oldId").isin(oldIds: _*))
+            else old0.join(broadcast(ids(oldIds, "__oldId")), Seq("__oldId"),
+              "left_semi")
+          hits(localIds(batch, id, restRows.map(r => Row(r.get(0), r.get(1))),
+            id, "__oldId"), old)
+        }
+        // the in-batch pairs among the docs tier 1 kept, verified in the
+        // same collect as tier 2; formed from the batch rows already here
+        // (none for an all-exact re-crawl), or in Spark past the caps
+        val inBatch = banded.flatMap(localPairs(_, exactSet, candCap)) match {
+          case Some(ps) if ps.isEmpty => None
+          case Some(ps) => Some(verify(localIds(batch, id, ps, "id1", "id2")))
+          case None => Some(edges)
+        }
+        val verdicts = tier2.map(_.select(col(id), lit(null).cast(batch.schema(id)
+          .dataType).as("__id2"), lit(false).as("__edge"))).toSeq ++
+          inBatch.map(_.select(col("id1").as(id), col("id2").as("__id2"),
+            lit(true).as("__edge")))
+        val got = verdicts.reduceOption(_ unionByName _)
+          .fold(Array.empty[Row])(capped(_, candCap))
+        if (got.length > candCap) None
+        else {
+          val (edgeRows, hitRows) = got.partition(_.getBoolean(2))
+          val storedDrops = exactIds ++ hitRows.map(_.get(0))
+          val dropSet = storedDrops.toSet
+          val kept = edgeRows.filterNot(r => dropSet(r.get(0)) || dropSet(r.get(1)))
+          Some(storedDrops ++ (if (kept.isEmpty) Array.empty[Any]
+            else clusterLosers(localIds(batch, id,
+              kept.map(r => Row(r.get(0), r.get(1))), "id1", "id2"))))
+        }
       }
     }
+    val drops: Array[Any] = driverDrops.getOrElse {
+      // OVER-CAP: the frame-based shape, collecting only drop ids
+      val storedDrops = stored.fold(Array.empty[Any]) { c =>
+        val candDf = cached(caches, c)
+        val exactIds = candDf.filter(col("__exact")).select(col(id)).distinct()
+        val rest = candDf.join(exactIds, Seq(id), "left_anti")
+        val candOld = rest.select(col("__oldId"), col("__oldTs")).distinct()
+        val span = candOld.agg(min(col("__oldTs")), max(col("__oldTs")),
+          count(lit(1))).head()
+        (if (span.getLong(2) == 0L) exactIds
+        else {
+          val old = fetchOld(for {
+            lo <- tsValueNs(span.get(0)); hi <- tsValueNs(span.get(1))
+          } yield (lo, hi)).join(broadcast(candOld.select(col("__oldId"))),
+            Seq("__oldId"), "left_semi")
+          hits(rest.select(col(id), col("__oldId")), old).unionByName(exactIds)
+            .distinct()
+        }).collect().map(_.get(0))
+      }
+      storedDrops ++ clusterLosers(edges
+        .join(broadcast(ids(storedDrops, "id1")), Seq("id1"), "left_anti")
+        .join(broadcast(ids(storedDrops, "id2")), Seq("id2"), "left_anti"))
+    }
+    val dropIds = drops.filter(_ != null).distinct
+    val dropSet = dropIds.toSet
+    Verdict(
+      if (dropIds.isEmpty) batch
+      else batch.join(broadcast(ids(dropIds, id)), Seq(id), "left_anti"),
+      // all-drop: every row's id dropped (drop ids are distinct batch ids,
+      // so past the cap as many of them as rows says the same)
+      if (complete) docRows.forall(r => !r.isNullAt(0) && dropSet(r.get(0)))
+      else dropIds.length == batch.count(),
+      banded.map(_.filter(r => !r.isNullAt(0) && !dropSet(r.get(0)))
+        .map(_.getLong(2)).distinct))
   }
 
-  /** In-batch collisions among the docs that survived the stored corpus
-    * (`fresh`), shared by the landing twins: candidate pairs from the
-    * bucket-collision graph of the ALREADY-BANDED frame, `verify` (an
-    * exact similarity filter over (id1, id2), or identity), connected
-    * components, min id per cluster survives. Docs with no buckets
-    * collide with nothing and always survive. The UNVERIFIED candidate
-    * set is checked first, then the verified one: a batch with no
-    * candidates — the steady state of fresh crawls — skips verify, and
-    * one whose candidates all fail verify skips the component machinery's
-    * whole shuffle stages of task-launch floor; both return `fresh`
-    * itself.
+  /** The in-batch candidate pairs among banded rows (id, band, bucket)
+    * already on the driver, skipping ids in `skip`: two distinct ids
+    * sharing a (band, bucket), once per pair — the pairs of
+    * [[graft.dedup.Dedup.bandedPairs]], as (id1, id2) rows in no
+    * particular order. None past `cap` pairs.
     */
-  private def inBatchSurvivors(batch: DataFrame, fresh: DataFrame, bb: DataFrame,
-                               id: String,
-                               caches: scala.collection.mutable.ListBuffer[DataFrame])(
-      verify: DataFrame => DataFrame): DataFrame = {
-    val freshBB =
-      if (fresh eq batch) bb
-      else bb.join(fresh.select(col(id)), Seq(id), "left_semi")
-    val cand = cached(caches, graft.dedup.Dedup.bandedPairs(freshBB, id))
-    lazy val pairs = cached(caches, verify(cand))
-    if (cand.isEmpty || pairs.isEmpty) fresh
-    else {
-      val losers = graft.dedup.Dedup.connectedComponents(pairs)
-        .filter(col("id") =!= col("cluster_id"))
-        .select(col("id").as(id))
-      cached(caches, fresh.join(losers, Seq(id), "left_anti"))
-    }
+  private def localPairs(rows: Array[Row], skip: Set[Any], cap: Int): Option[Array[Row]] = {
+    val groups = rows.filter(r => !r.isNullAt(0) && !skip(r.get(0)))
+      .groupBy(r => (r.getInt(1), r.getLong(2))).values
+      .map(_.map(_.get(0)).distinct).filter(_.length > 1).toSeq
+    if (groups.map(g => g.length.toLong * (g.length - 1) / 2).sum > cap) None
+    else Some(groups.flatMap(_.combinations(2).map(_.toSet)).distinct
+      .map { p => Row(p.toSeq: _*) }.toArray)
   }
 
   /** The landing tail shared by the dedup twins: the survivors' doc rows,
@@ -1230,33 +1320,36 @@ object Streams {
     * of the batch and the PRE-batch bucket table, so a crash between the
     * two appends replays the batch, recomputes the same survivors, skips
     * the committed doc append and applies the bucket append. Distinct
-    * stream ids keep the two commit logs separate. An ALL-DROP batch (`freshEmpty`) advances both commit
-    * logs WITHOUT staging writes ([[graft.io.Tables.commitEmptyStreamBatch]]
-    * — the same exactly-once transition minus the 0-row write job, marker
-    * and manifest rewrite).
+    * stream ids keep the two commit logs separate. An ALL-DROP batch
+    * (`freshEmpty`) advances both commit logs WITHOUT staging writes
+    * ([[graft.io.Tables.commitEmptyStreamBatch]] — the same exactly-once
+    * transition minus the 0-row write job, marker and manifest rewrite).
     *
-    * The bucket rows are built ONCE (persisted): the distinct-bucket
-    * collect that feeds the sidecar and the append both read that copy.
-    * Sidecar BEFORE the bucket append: a crash between the two leaves the
-    * bloom a superset of the stored table — the invariant the probe's
-    * correctness rests on (see DedupBloom); a replayed batch re-ORs the
-    * same bits. ONE writer-lease span covers update AND append (ADVICE
-    * r15 high): an un-leased window between them lets a concurrent
-    * rebuild snapshot the table WITHOUT this batch's rows and install a
-    * bloom missing its bits — after which the append lands anyway and the
-    * sidecar is a strict SUBSET of the table (silent false negatives =
-    * duplicates admitted forever). The lease is thread-re-entrant, so the
-    * nested acquisitions inside DedupBloom.update and appendStreamBatch
-    * are no-ops; a rebuild attempted mid-span fails loudly instead.
+    * The sidecar's new bucket values are the verdict's
+    * `survivorBuckets`, taken from the batch rows it already collected —
+    * no bucket-value job; only a batch past the batch-rows cap collects
+    * them from the bucket rows here. Sidecar BEFORE the bucket append: a
+    * crash between the two leaves the bloom a superset of the stored
+    * table — the invariant the probe's correctness rests on (see
+    * DedupBloom); a replayed batch re-ORs the same bits. ONE writer-lease
+    * span covers update AND append (ADVICE r15 high): an un-leased window
+    * between them lets a concurrent rebuild snapshot the table WITHOUT
+    * this batch's rows and install a bloom missing its bits — after which
+    * the append lands anyway and the sidecar is a strict SUBSET of the
+    * table (silent false negatives = duplicates admitted forever). The
+    * lease is thread-re-entrant, so the nested acquisitions inside
+    * DedupBloom.update and appendStreamBatch are no-ops; a rebuild
+    * attempted mid-span fails loudly instead.
     */
   private def landSurvivors(spark: SparkSession, batch: DataFrame,
-                            survivors: DataFrame, freshEmpty: Boolean,
+                            verdict: Verdict, freshEmpty: Boolean,
                             bb: DataFrame, writeFp: Boolean, docPath: String,
                             bucketPath: String, ts: String, id: String,
                             streamKey: String, batchId: Long,
                             retainNs: Long): Unit = {
     val hp = new org.apache.hadoop.fs.Path(bucketPath)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val survivors = verdict.survivors
     if (freshEmpty)
       graft.io.Tables.commitEmptyStreamBatch(spark, docPath,
         streamKey + "#docs", batchId)
@@ -1271,22 +1364,20 @@ object Streams {
       else Some((if (survivors eq batch) bb
         else bb.join(survivors.select(col(id)), Seq(id), "left_semi"))
         .select(Seq(col(id), col("band"), col("bucket"), col(ts)) ++
-          (if (writeFp) Seq(col("fp")) else Nil): _*)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    try {
-      // the Spark job runs OUTSIDE the lease
-      val newBucketVals = bucketRows.map(_.select(col("bucket")).distinct()
-        .collect().map(_.getLong(0))).getOrElse(Array.empty[Long])
-      graft.io.Tables.withWriterLease(fs, hp, "dedupIngestBuckets") {
-        DedupBloom.update(spark, bucketPath, newBucketVals)
-        bucketRows match {
-          case Some(rows) => graft.io.Tables.appendStreamBatch(rows, bucketPath,
-            ts, streamKey + "#buckets", batchId)
-          case None => graft.io.Tables.commitEmptyStreamBatch(spark, bucketPath,
-            streamKey + "#buckets", batchId)
-        }
+          (if (writeFp) Seq(col("fp")) else Nil): _*))
+    // the over-cap collect runs OUTSIDE the lease
+    val newBucketVals = bucketRows.fold(Array.empty[Long])(rows =>
+      verdict.survivorBuckets.getOrElse(
+        rows.select(col("bucket")).distinct().collect().map(_.getLong(0))))
+    graft.io.Tables.withWriterLease(fs, hp, "dedupIngestBuckets") {
+      DedupBloom.update(spark, bucketPath, newBucketVals)
+      bucketRows match {
+        case Some(rows) => graft.io.Tables.appendStreamBatch(rows, bucketPath,
+          ts, streamKey + "#buckets", batchId)
+        case None => graft.io.Tables.commitEmptyStreamBatch(spark, bucketPath,
+          streamKey + "#buckets", batchId)
       }
-    } finally bucketRows.foreach(_.unpersist())
+    }
     // per-file blooms for the batch's new file(s) — OUTSIDE the lease (it
     // only reads committed live files) and best-effort: a missing file
     // bloom degrades the probe's file pruning, never its answer
@@ -1401,26 +1492,21 @@ object Streams {
         .filter(dot(col("__v"), col("__ov")) / (col("__nrm") * col("__on"))
           >= minCos)
       val (exists, liveHead, hasFp) = bucketLayout(spark, bucketPath)
-      // the same probe and two-tier verify as the text twin; tier 1 keys
-      // on the VECTOR fingerprint, tier 2 is the exact cosine against the
-      // colliding stored vectors
-      val fresh =
-        if (!exists) batch
-        else cached(caches, storedSurvivors(spark, batch, bb, docPath,
-          bucketPath, id, ts, hasFp, tier1 = hasFp && minCos <= 1.0, caches)(
-          _.select(col(id).as("__oldId"), col(vec).cast("array<double>").as("__ov")))(
-          (pairs, oldVecs) => verified(pairs, oldVecs).select(col(id)).distinct()))
-      val freshEmpty = fresh.isEmpty
-      val survivors =
-        if (freshEmpty) fresh
-        else inBatchSurvivors(batch, fresh, bb, id, caches) { cand =>
+      // the same verdict as the text twin; tier 1 keys on the VECTOR
+      // fingerprint, tier 2 and the in-batch verify are the exact cosine
+      val verdict = landingVerdict(spark, batch, bb, docPath, bucketPath, id, ts,
+        exists, hasFp, tier1 = hasFp && minCos <= 1.0, collisionDrops = false,
+        caches)(
+        _.select(col(id).as("__oldId"), col(vec).cast("array<double>").as("__ov")))(
+        (pairs, oldVecs) => verified(pairs, oldVecs).select(col(id))) {
+        cand =>
           verified(cand.select(col("id1").as(id), col("id2").as("__oldId")),
             withNorm.select(col(id).as("__oldId"), col("__v").as("__ov")))
             .select(col(id).as("id1"), col("__oldId").as("id2"))
-        }
+      }
       // bucket rows carry the VECTOR fingerprint under the same
       // creation-governed layout contract as the text twin
-      landSurvivors(spark, batch, survivors, freshEmpty, bb,
+      landSurvivors(spark, batch, verdict, verdict.allDropped, bb,
         shouldWriteFp(liveHead, hasFp), docPath, bucketPath, ts, id,
         streamKey, batchId, retainNs)
     } finally caches.reverseIterator.foreach(c => scala.util.Try(c.unpersist()))

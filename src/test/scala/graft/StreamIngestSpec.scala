@@ -1509,11 +1509,10 @@ class StreamIngestSpec extends AnyFunSuite {
 
   test("all-drop re-crawl batch: bounded job count, zero staging writes (r18)") {
     // the landing-dedup steady state (a crawler revisiting its corpus)
-    // must stay a HANDFUL of jobs per batch: the probe's bucket-value
-    // collect, the labeled-candidate collect, and the fresh-empty check —
-    // with the two commit-log advances running as pure metadata
+    // must stay a HANDFUL of jobs per batch: the batch-rows collect and
+    // the stored-candidate collect, which together show every doc dropped
+    // — with the two commit-log advances running as pure metadata
     // (commitEmptyStreamBatch: no 0-row staging write job, no marker).
-    // r17 shipped ~6 jobs/batch on this path; this pins the r18 shape.
     val docs = tmpDir("jcdoc") + "/docs.parquet"
     val buckets = tmpDir("jcbkt") + "/buckets.parquet"
     def text(i: Int): String = (0 until 12).map(w => s"j${w}c$i").mkString(" ")
@@ -1530,14 +1529,16 @@ class StreamIngestSpec extends AnyFunSuite {
     JobWatch.on(spark) { w =>
       w.measure(Streams.dedupIngestBatch(batch(2000), docs, buckets, "ts",
         "ck-jc", "id", "text", 5, 8, 2, 2L))
-      // composition at r18: probe bucket-value collect (1), the labeled
-      // -candidate collect with its AQE stage/broadcast sub-jobs (~7),
-      // the fresh-empty check (1) — and NOTHING else. r18 removed the
-      // two 0-row staging writes (commitEmptyStreamBatch) and the
-      // per-batch parquet schema-inference job (memoized head schema);
-      // the bound tolerates ±1 of AQE stage-count variation
-      assert(w.count <= 12,
-        s"all-drop batch grew past its r18 job budget, saw ${w.count}:${w.describe}")
+      info(s"all-drop batch: ${w.executions.size} SQL executions, ${w.count} jobs")
+      // two executions: the batch-rows collect and the stored-candidate
+      // collect — and NOTHING else: every doc is an exact duplicate, so
+      // no tier 2, no in-batch pairs, no emptiness check, no 0-row
+      // staging write (commitEmptyStreamBatch), no schema-inference job
+      // (memoized head schema). Measured 4 jobs on local[4]
+      assert(w.executions.size <= 2,
+        s"all-drop batch ran ${w.executions.size} SQL executions:${w.describe}")
+      assert(w.count <= 4,
+        s"all-drop batch grew past its job budget, saw ${w.count}:${w.describe}")
       val writes = w.jobs.filter(j => j.site.contains("parquet") || j.site.contains("save"))
       assert(writes.isEmpty,
         s"all-drop batch must stage NO parquet write, saw ${writes.size}:${w.describe}")
@@ -1560,10 +1561,10 @@ class StreamIngestSpec extends AnyFunSuite {
 
   test("fresh collision-free batch: bounded jobs and SQL executions, no verify") {
     // the fresh-crawl steady state: each batch-sized frame is built once
-    // (one normalize pass carries ts/fp to the bucket rows, which are
-    // persisted once for the sidecar collect AND the append), the append's
-    // partition probe executes nothing, and an empty unverified in-batch
-    // candidate set skips verify and connected components
+    // (one normalize pass carries ts/fp to the bucket rows), the sidecar's
+    // bucket values come from the batch-rows collect, the append's
+    // partition probe executes nothing, and no in-batch edge means no
+    // connected components
     val docs = tmpDir("cfdoc") + "/docs.parquet"
     val buckets = tmpDir("cfbkt") + "/buckets.parquet"
     def batch(from: Int) = (from until from + 30)
@@ -1576,13 +1577,14 @@ class StreamIngestSpec extends AnyFunSuite {
     JobWatch.on(spark) { w =>
       w.measure(Streams.dedupIngestBatch(batch(200), docs, buckets, "ts",
         "ck-cf", "id", "text", 5, 8, 2, 2L))
-      // probe collect, fresh-empty check, in-batch candidate check, doc
-      // write, bucket-value collect, bucket write, file-bloom build
-      assert(w.executions.size <= 7,
+      info(s"fresh batch: ${w.executions.size} SQL executions, ${w.count} jobs")
+      // batch-rows collect, doc write, bucket write, file-bloom build:
+      // the bloom clears the stored side and the batch rows hold no
+      // in-batch pair, so nothing is left to verify
+      assert(w.executions.size <= 4,
         s"fresh batch ran ${w.executions.size} SQL executions:${w.describe}")
-      // measured 16 jobs on local[4] (the parent shape ran ~35 in ~11
-      // executions); the bound tolerates ±1 of AQE stage-count variation
-      assert(w.count <= 17, s"fresh batch grew past its job budget:${w.describe}")
+      // measured 7 jobs on local[4]
+      assert(w.count <= 7, s"fresh batch grew past its job budget:${w.describe}")
       val writes = w.executions.filter(e =>
         w.plan(e).exists(_.contains("InsertIntoHadoopFsRelationCommand")))
       assert(writes.size == 2, s"one doc write + one bucket write:${w.describe}")
@@ -1612,9 +1614,10 @@ class StreamIngestSpec extends AnyFunSuite {
     JobWatch.on(spark) { w =>
       w.measure(Streams.dedupIngestBatch(rows.toDF("id", "ts", "text"), docs,
         buckets, "ts", "ck-ib", "id", "text", 5, 8, 2, 2L))
-      // (measured 46 on local[4]: 16 of them connected components'
-      // two propagation rounds), ±AQE stage-count variation
-      assert(w.count <= 48, s"near-dup batch grew past its job budget:${w.describe}")
+      info(s"near-dup batch: ${w.executions.size} SQL executions, ${w.count} jobs")
+      // measured 30 on local[4], most of them connected components'
+      // two propagation rounds and the loser collect
+      assert(w.count <= 30, s"near-dup batch grew past its job budget:${w.describe}")
     }
     assert(Tables.snapshot(spark, docs).select("id").as[Long].collect().toSet ==
       ((0L until 60L) ++ (100L until 130L)).toSet)

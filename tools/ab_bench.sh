@@ -15,6 +15,17 @@
 # set AB_BASE_DIR to an existing checkout of the base to use it instead.
 # Each side builds and runs from its own checkout with perfbench/run.py,
 # `--trace 0`. Every run's JSON line is kept in <out_dir>/runs.jsonl.
+#
+# Each metric's direction (`better`) and relative bound come from
+# BENCHMARK.json. The verdict column reads:
+#   gain              the change wins >= 9 of 10 pairs and its median is
+#                     better than the base median by more than the base's
+#                     interquartile range;
+#   worse than bound  the change's median is worse than the base's by more
+#                     than the metric's bound;
+#   unresolved        the metric has no bound, or the base's interquartile
+#                     range is wider than the bound (too noisy to tell);
+#   within bound      otherwise.
 set -euo pipefail
 
 workload=ingest_mixed pairs=10 seed0=101 seconds=5 base="" out=""
@@ -22,7 +33,7 @@ while getopts "w:n:s:t:b:o:" opt; do
   case $opt in
     w) workload=$OPTARG ;; n) pairs=$OPTARG ;; s) seed0=$OPTARG ;;
     t) seconds=$OPTARG ;; b) base=$OPTARG ;; o) out=$OPTARG ;;
-    *) sed -n '2,17p' "$0"; exit 2 ;;
+    *) sed -n '2,28p' "$0"; exit 2 ;;
   esac
 done
 
@@ -60,10 +71,12 @@ for ((i = 0; i < pairs; i++)); do
   else run change "$repo" $seed; run base "$base_dir" $seed; fi
 done
 
-python3 - "$out/runs.jsonl" <<'EOF'
+python3 - "$out/runs.jsonl" "$repo/BENCHMARK.json" <<'EOF'
 import json, statistics, sys
 
 runs = [json.loads(l) for l in open(sys.argv[1])]
+bench = json.load(open(sys.argv[2]))
+decl = {m["name"]: m for m in bench.get("end_to_end", []) + bench.get("per_layer", [])}
 for r in runs:  # perfbench prints each metric as {"value": v, "unit": u}
     r["run"]["metrics"] = {k: v["value"] if isinstance(v, dict) else v
                            for k, v in r["run"].get("metrics", {}).items()}
@@ -76,6 +89,19 @@ def quart(xs):
     q = statistics.quantiles(xs, n=4, method="inclusive") if len(xs) > 1 else xs * 3
     return q[0], statistics.median(xs), q[2]
 
+def verdict(better, bound, wins, n, bq, cq):
+    gain = (cq[1] - bq[1]) * (1 if better == "higher" else -1)  # > 0: better
+    iqr = bq[2] - bq[0]
+    if wins >= 0.9 * n and gain > iqr:
+        return "gain"
+    if bound is None or not bq[1]:
+        return "unresolved"
+    if -gain > bound * abs(bq[1]):
+        return "worse than bound"
+    if iqr > bound * abs(bq[1]):
+        return "unresolved"
+    return "within bound"
+
 names = sorted({m for p in pairs for s in p.values() for m in s.get("metrics", {})})
 print(f"{len(pairs)} pairs; failed ops base/change: "
       f"{sum(p['base'].get('failed', 0) for p in pairs)}/"
@@ -83,17 +109,19 @@ print(f"{len(pairs)} pairs; failed ops base/change: "
       f"{sum(not p['base'].get('correct') for p in pairs)}/"
       f"{sum(not p['change'].get('correct') for p in pairs)}")
 print(f"{'metric':<16} {'base median [q1, q3]':>30} {'change median [q1, q3]':>30} "
-      f"{'delta':>8} {'wins':>6}")
+      f"{'delta':>8} {'wins':>6} {'bound':>6}  verdict")
 for m in names:
     both = [p for p in pairs if m in p["base"]["metrics"] and m in p["change"]["metrics"]]
-    if not both:
+    if not both or m not in decl:
         continue
+    better, bound = decl[m]["better"], decl[m].get("bound")
     b = [p["base"]["metrics"][m] for p in both]
     c = [p["change"]["metrics"][m] for p in both]
-    higher = m.endswith("_per_s")  # throughputs: higher is better
-    wins = sum((y > x) if higher else (y < x) for x, y in zip(b, c))
+    wins = sum((y > x) if better == "higher" else (y < x) for x, y in zip(b, c))
     bq, cq = quart(b), quart(c)
     delta = (cq[1] - bq[1]) / bq[1] * 100 if bq[1] else float("nan")
     fmt = lambda q: f"{q[1]:.4g} [{q[0]:.4g}, {q[2]:.4g}]"
-    print(f"{m:<16} {fmt(bq):>30} {fmt(cq):>30} {delta:>7.1f}% {wins:>3}/{len(both)}")
+    bnd = f"{bound:.0%}" if bound is not None else "-"
+    print(f"{m:<16} {fmt(bq):>30} {fmt(cq):>30} {delta:>7.1f}% {wins:>3}/{len(both)} "
+          f"{bnd:>6}  {verdict(better, bound, wins, len(both), bq, cq)}")
 EOF
