@@ -43,8 +43,8 @@ object Bench {
     "q_tpch_q6",     // pure-pushdown plan family (round-over-round canary)
     "q_tpch_q3",     // join-order/broadcast plan family (TakeOrdered top-10)
     "q_tpch_q21",    // multi-correlated self-join family (semi+anti on one fact)
-    "q_asof",        // as-of alignment join (union+window form)
-    "q_asof_exec",   // same shape on the custom merge operator (graft.plans)
+    "q_asof",        // as-of alignment join (Align: skips NULL values)
+    "q_asof_exec",   // same shape on AsofMerge directly (carries the matched row)
     "q_asof_bucketed", // the flagship 100 TB plan: zero-Exchange bucketed as-of
     "q_join",        // relational join path
     "q_ema",         // recursive indicator scan

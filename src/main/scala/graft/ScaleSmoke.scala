@@ -137,6 +137,8 @@ object ScaleSmoke {
     lazy val l = series.filter(col("k") % 2 === 0).select(col("k").as("ts"), col("value"))
     lazy val r = series.filter(col("k") % 2 === 1)
       .groupBy((col("k") - 1).as("ts")).agg(max("value").as("value"))
+    // Align's keyless as-of runs AsofMerge's ranged carry scan (the
+    // numeric lanes of AsofMerge.keylessRangedAsof)
     run("keyless as-of (carry scan)") {
       graft.join.Align.asofJoin(l, r, Seq(), "ts", "value")
         .write.format("noop").mode("overwrite").save()
@@ -184,17 +186,12 @@ object ScaleSmoke {
         .write.format("noop").mode("overwrite").save()
     }
 
-    // keyed as-of at scale: the union+window form vs the custom merge
-    // exec (graft.plans.AsofMergeJoin) on ~#orderkey keys — both one
-    // shuffle per side; the exec drops the union materialization, the
-    // window buffer, and the post-filter
+    // keyed as-of at scale: the merge exec (graft.plans.AsofMergeJoin)
+    // on ~#orderkey keys — one shuffle + sort per side, then the
+    // per-partition two-cursor merge
     val kl = li.select(col("l_orderkey").as("key"),
       col("l_linenumber").cast("long").as("ts"), col("l_extendedprice").as("v"))
     val kr = kl.select(col("key"), (col("ts") - 1).as("ts"), col("v"))
-    run("keyed as-of union+window") {
-      graft.join.Align.asofJoin(kl, kr, Seq("key"), "ts", "v")
-        .write.format("noop").mode("overwrite").save()
-    }
     run("keyed as-of merge exec") {
       graft.plans.AsofMerge.asofJoin(kl, kr, Seq("key"), "ts", "v")
         .write.format("noop").mode("overwrite").save()

@@ -3118,7 +3118,7 @@ object SparkEntry {
     // encodes the Spark-side semantics exactly: the match is the latest
     // NON-NULL right value, with staleness bounded by THAT row's ts (a
     // newer NULL-valued right row neither matches nor masks) — see
-    // Align.asofJoinTol's packed-struct construction.
+    // Align.asofJoinTol's right-side pre-filter (Align.skipNulls).
     "q_asof_tol" ->
       """SELECT l.user_id, l.event_id,
          CAST(CASE WHEN epoch_ns(l.ts) - epoch_ns(r.ts) <= 86400000000000

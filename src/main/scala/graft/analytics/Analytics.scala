@@ -155,7 +155,7 @@ object Analytics {
       // UnboundedFollowingWindowFunctionFrame, which re-walks the rest of
       // the partition buffer for EVERY row — O(n²), measured minutes on a
       // 200k-row partition (fuzz seed 15004 at sf0.1) where this form is
-      // sub-second. Same trick as Align.asofJoinDir's direction=+1 mirror.
+      // sub-second. Same trick as AsofMergeJoinExec's direction=+1 mirror.
       val wDescPrev = Window.partitionBy(keys.map(col): _*)
         .orderBy(col("pos").desc)
         .rowsBetween(Window.unboundedPreceding, -1)

@@ -1,31 +1,26 @@
 package graft.join
 
+import graft.plans.AsofMerge
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Timestamp-alignment joins — the reference's only join family
   * (SURVEY.md §2.7; about.txt:86 "Not able to perform joins").
   *
-  * The workhorse is the as-of join. A naive range join (`r.ts <= l.ts` +
-  * max_by) degenerates to O(n·m) per key at scale, so the implementation
-  * uses the union trick: tag both sides, union on (key, ts), and carry the
-  * last right-side value forward with `last(..., ignoreNulls)` over a
-  * key-partitioned window. That is ONE shuffle on the key and a streaming
-  * window scan — the distributed equivalent of the reference's single
-  * merge pass over two sorted series (func.c:4591-4662), and it survives a
-  * 100× scale-up because each key's merge is independent.
+  * The workhorse is the as-of join, and it has one implementation:
+  * [[graft.plans.AsofMerge.asofJoinDir]], the distributed form of the
+  * reference's single merge pass over two sorted series
+  * (func.c:4591-4662). Keyed calls plan one shuffle + sort per side and a
+  * per-partition two-cursor merge; keyless calls run its ranged carry
+  * scan. Every as-of entry here is a short composition over it.
+  *
+  * The two layers differ only in their NULL contracts. AsofMerge carries
+  * the matched right ROW, whatever its value. Align skips NULL values (a
+  * NULL quote never masks an earlier real one), and a left row with a
+  * NULL ts gets no match. Align gets both from one right-side pre-filter
+  * (ts and values non-NULL) and one output gate ([[skipNulls]]).
   */
 object Align {
-
-  /** Types whose keyless as-of carry rides dictionary codes instead of a
-    * numeric lane: no Double lane fits the VALUES, but the distinct-value
-    * domain does (see [[asofJoinDir]]'s dict branch).
-    */
-  private def dictableType(dt: org.apache.spark.sql.types.DataType): Boolean = {
-    import org.apache.spark.sql.types.{BinaryType, DecimalType, StringType}
-    dt == StringType || dt == BinaryType || dt.isInstanceOf[DecimalType]
-  }
 
   /** Fail loud when an input frame already carries one of an operator's
     * reserved working/output names. Case-INSENSITIVE, because Spark column
@@ -52,6 +47,21 @@ object Align {
       s"output column '$outCol' already exists on the left side of $ctx; " +
         "pass a distinct outCol instead of silently overwriting it")
 
+  /** The value-skipping as-of every entry below runs: right rows with a
+    * NULL ts or a NULL value in any of `valueCols` never match, so the
+    * merge's row carry surfaces the latest non-NULL values; and each
+    * `outCols` entry is NULL where the left ts is NULL (that row holds an
+    * end of the merge order, so its carry is not a temporal match).
+    */
+  private def skipNulls(left: DataFrame, right: DataFrame, keys: Seq[String], ts: String,
+                        valueCols: Seq[String], outCols: Seq[String],
+                        direction: Int, inclusive: Boolean): DataFrame = {
+    val matchable = (ts +: valueCols).map(col(_).isNotNull).reduce(_ && _)
+    val joined = AsofMerge.asofJoinDir(left, right.filter(matchable), keys, ts,
+      valueCols, outCols, direction, inclusive)
+    outCols.foldLeft(joined)((df, o) => df.withColumn(o, when(col(ts).isNotNull, col(o))))
+  }
+
   /** As-of join — cs_asof_join (func.c:4499-4662): for each left row, the
     * latest right `valueCol` with right.ts <= left.ts (per key). Left rows
     * before any right row get NULL. Output: left columns + `asofValue`.
@@ -66,34 +76,27 @@ object Align {
   /** Directional as-of — the TABLE_join direction parameter
     * (func.c:6494-6548, imcs--1.1.sql:334-347): direction −1 matches the
     * latest right ts <= left ts ("preceding", the classic as-of); +1 matches
-    * the EARLIEST right ts >= left ts ("succeeding"), implemented as the
-    * mirror image: same union trick scanned in descending ts order. Both
-    * are one shuffle on the key + a streaming window pass.
+    * the EARLIEST right ts >= left ts ("succeeding"), the merge run in
+    * descending ts order.
     *
     * `inclusive = false` excludes an equal-ts right row from the match
     * (strictly-preceding / strictly-succeeding) — cs_stretch's boundary
     * (func.c:4333: the cursor advances while left ts >= right ts, so an
-    * equal right row is consumed, not carried). Implemented purely in the
-    * scan order: at equal ts the left row sorts BEFORE the right row, so
-    * the carry it sees cannot include it.
+    * equal right row is consumed, not carried).
     *
-    * NULL timestamps carry no position on the time axis: right rows with
-    * NULL ts are excluded (they would otherwise sort to one end of the
-    * scan and seed the carry as if ts = ±infinity), and left rows with
-    * NULL ts get a NULL `outCol` — matching the contract that a match
-    * requires an actual right ts on the required side of an actual left ts.
+    * NULL-valued right rows are skipped, not carried. NULL timestamps
+    * carry no position on the time axis: right rows with a NULL ts never
+    * match, and left rows with a NULL ts get a NULL `outCol` — a match
+    * requires an actual right ts on the required side of an actual left
+    * ts.
     */
   def asofJoinDir(left: DataFrame, right: DataFrame, keys: Seq[String], ts: String,
                   valueCol: String, outCol: String = "asof_value",
                   direction: Int = -1, inclusive: Boolean = true): DataFrame = {
     require(direction == -1 || direction == 1, "direction must be -1 or +1")
-    // the union scan tags rows with __side/__rv, the dict branch adds
-    // __dcode/__dout, and the keyless int64 path materializes __cv0..__cvN
-    // and __has — a user frame already carrying any of these would be
-    // silently overwritten by withColumn; fail loud instead (regex guard,
+    // working names reserved for the as-of family (regex guard,
     // case-insensitive like Spark's own resolution, same pattern as
-    // AsofMerge.guardInternalNames, so new lanes can't reopen the gap one
-    // literal name at a time)
+    // AsofMerge.guardInternalNames): a frame carrying one fails loud
     locally {
       val reserved = "(?i)(__side|__rv|__dcode|__dout|__cv\\d+|__has)".r
       val clash = (left.columns ++ right.columns).distinct
@@ -105,155 +108,7 @@ object Align {
         s"outCol '$outCol' collides with the as-of scan's reserved working names")
     }
     guardOutCol(left.columns.toSeq, outCol, "asofJoinDir")
-    asofScan(left, right, keys, ts, valueCol, outCol, direction, inclusive)
-  }
-
-  /** [[asofJoinDir]] minus the entry guards — the dict branch recurses
-    * here with the reserved `__dout` working name as its outCol.
-    */
-  private def asofScan(left: DataFrame, right: DataFrame, keys: Seq[String], ts: String,
-                       valueCol: String, outCol: String,
-                       direction: Int, inclusive: Boolean): DataFrame = {
-    // keyless strings/binary/decimals: the VALUES have no Double lane but
-    // their distinct-value DOMAIN does — dictionary-encode the right side
-    // to long codes, run the same parallel scan, decode the carry. The
-    // skip-NULL contract survives for free: a NULL value encodes to a
-    // NULL code, which the scan's inject already skips. (Keyed calls
-    // never lane — the window form carries any type directly.)
-    if (keys.isEmpty && dictableType(right.schema(valueCol).dataType)) {
-      import graft.text.Dict
-      val dict = Dict.build(right, valueCol)
-      val rEnc = Dict.str2code(right, dict, valueCol, "__dcode")
-        .drop(valueCol).withColumnRenamed("__dcode", valueCol)
-      val scanned = asofScan(left, rEnc, keys, ts, valueCol, "__dout",
-        direction, inclusive)
-      return Dict.code2str(scanned, dict, "__dout", outCol).drop("__dout")
-        .select((left.columns.toSeq :+ outCol).map(col): _*)
-    }
-    val leftCols = left.columns.toSeq
-    val lTagged = left
-      .withColumn("__side", lit(1))
-      .withColumn("__rv", lit(null).cast(right.schema(valueCol).dataType))
-    // a NULL right ts has no position on the time axis: under the scan
-    // order it would sort to one end and seed the carry as if
-    // ts = ±infinity (NULLS FIRST ascending / NULLS LAST descending) —
-    // exclude it, matching the no-match-without-a-timestamp contract
-    val rTagged = right
-      .filter(col(ts).isNotNull)
-      .select((keys :+ ts).map(col) :+ col(valueCol).as("__rv"): _*)
-      .withColumn("__side", lit(0))
-    val common = (keys :+ ts) ++ Seq("__side", "__rv")
-    val unioned = lTagged.select((common ++ leftCols.diff(common)).map(col): _*)
-      .unionByName(rTagged, allowMissingColumns = true)
-    // Inclusive: right rows (__side=0) sort before left rows at equal ts
-    // in scan order, so an exact timestamp match is visible to the left
-    // row. Exclusive: the flip hides it.
-    val tsOrd = if (direction == -1) col(ts).asc else col(ts).desc
-    val sideOrd = if (inclusive) col("__side").asc else col("__side").desc
-    if (keys.isEmpty) {
-      // Keyless (a single global series — the reference's default shape,
-      // func.c:4591-4662): a whole-frame ordered window would be ONE task,
-      // so instead run a carry-forward monoid scan over the union ordered
-      // by (ts, side): state = (last right value(s), seen-any flag), op
-      // keeps the later defined state — associative, so the ranged
-      // two-pass parallel-prefix machinery applies. One range shuffle,
-      // parallelism = partition count. Values ride as Doubles (every
-      // reference element type is numeric) and are cast back to their
-      // original types on output; int64 fields (ns timestamps, snowflake
-      // ids — legitimately beyond a Double's 2^53 integer range) split
-      // into exact signed-hi/unsigned-lo 32-bit lane pairs, so every
-      // int64-and-under integral and every float/double round-trips
-      // exactly. DecimalType is REJECTED: arbitrary precision cannot
-      // ride a Double lane losslessly (a decimal with >15-16 significant
-      // digits would silently round) — and the reference has no decimal
-      // element type. A struct of numerics (the tolerance join's packed
-      // (v, ts)) is carried componentwise — its fields must be non-null
-      // whenever the struct is (true for asofJoinTol's packing).
-      import org.apache.spark.sql.types.{DecimalType, LongType, NumericType, StructType}
-      def laneSafe(dt: org.apache.spark.sql.types.DataType): Boolean =
-        dt.isInstanceOf[NumericType] && !dt.isInstanceOf[DecimalType]
-      val vType = right.schema(valueCol).dataType
-      val fields: Seq[org.apache.spark.sql.types.StructField] = vType match {
-        case st: StructType =>
-          require(st.fields.forall(f => laneSafe(f.dataType)),
-            s"keyless as-of struct carry needs all-numeric non-decimal fields " +
-              s"(decimals exceed a Double lane's precision); got ${st.simpleString}")
-          st.fields.toSeq
-        case nt: NumericType if laneSafe(nt) =>
-          Seq(org.apache.spark.sql.types.StructField("v", nt))
-        case other => throw new IllegalArgumentException(
-          s"keyless as-of carries the right value through a numeric scan " +
-            s"(strings/binary/decimals ride dictionary codes; complex " +
-            s"types are unsupported); got ${other.simpleString}")
-      }
-      val isLong: Array[Boolean] = fields.map(_.dataType == LongType).toArray
-      val laneOff: Array[Int] =
-        isLong.scanLeft(0)((acc, l) => acc + (if (l) 2 else 1)).toArray
-      val lanes = laneOff(fields.size)
-      val rvIdx = unioned.schema.fieldIndex("__rv")
-      val zero = Array.fill(lanes + 1)(0.0)
-      val outs = (0 until lanes).map(i => s"__cv$i") :+ "__has"
-      def injectInto(a: Array[Double], i: Int, get: => Number): Unit = {
-        val n = get
-        // a null field inside a non-null struct has no lane encoding; a
-        // clear rejection beats the NullPointerException it would become
-        if (n == null) throw new IllegalArgumentException(
-          s"keyless as-of struct carry requires non-null fields whenever " +
-            s"the struct is non-null; field '${fields(i).name}' is null")
-        if (isLong(i)) {
-          val v = n.longValue()
-          a(laneOff(i)) = (v >> 32).toDouble
-          a(laneOff(i) + 1) = (v & 0xFFFFFFFFL).toDouble
-        } else a(laneOff(i)) = n.doubleValue()
-      }
-      val scanned = graft.window.Moving.monoidScanRanged(
-        unioned, Seq(), outs,
-        order = Seq(tsOrd, sideOrd))(
-        identity = zero)(
-        inject = r =>
-          if (r.isNullAt(rvIdx)) zero
-          else {
-            val a = new Array[Double](lanes + 1)
-            vType match {
-              case _: StructType =>
-                val s = r.getStruct(rvIdx)
-                fields.indices.foreach(i => injectInto(a, i, s.getAs[Number](i)))
-              case _ =>
-                injectInto(a, 0, r.getAs[Number](rvIdx))
-            }
-            a(lanes) = 1.0
-            a
-          })(
-        op = (a, b) => if (b(lanes) == 1.0) b else a)
-      def outLane(i: Int): org.apache.spark.sql.Column =
-        if (isLong(i))
-          shiftleft(col(s"__cv${laneOff(i)}").cast(LongType), 32)
-            .bitwiseOR(col(s"__cv${laneOff(i) + 1}").cast(LongType))
-        else col(s"__cv${laneOff(i)}").cast(fields(i).dataType)
-      val carried = vType match {
-        case _: StructType => struct(fields.zipWithIndex.map { case (f, i) =>
-          outLane(i).as(f.name)
-        }: _*)
-        case _ => outLane(0)
-      }
-      // a left row with NULL ts sits at one end of the scan order; its
-      // carry there is an artifact of null ordering, not a temporal match
-      scanned
-        .withColumn(outCol,
-          when(col("__has") === 1.0 && col(ts).isNotNull, carried))
-        .filter(col("__side") === 1)
-        .select((leftCols :+ outCol).map(col): _*)
-    } else {
-      val w = Window.partitionBy(keys.map(col): _*)
-        .orderBy(tsOrd, sideOrd)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      unioned
-        .withColumn(outCol,
-          when(col(ts).isNotNull,
-            last(col("__rv"), ignoreNulls = true).over(w)))
-        .filter(col("__side") === 1)
-        .select((leftCols :+ outCol).map(col): _*)
-    }
+    skipNulls(left, right, keys, ts, Seq(valueCol), Seq(outCol), direction, inclusive)
   }
 
   /** Nearest-timestamp as-of — the reference's DOCUMENTED cs_asof_join
@@ -266,90 +121,56 @@ object Align {
     * [[asofJoin]] keeps the backward-only default deliberately — it is
     * the kdb/pandas/DuckDB industry semantics and the causally safe one
     * (no future leakage); this variant is the reference-parity form.
-    * Composition: a backward pass then a strictly-forward pass, each the
-    * one-shuffle union scan, carrying (value, ts) structs so the pick
-    * can compare distances; NULL-valued right rows neither match nor
-    * mask (same contract as [[asofJoinTol]]).
+    * Composition: a backward pass then a strictly-forward pass, each
+    * carrying the matched value and its ts as two columns so the pick can
+    * compare distances; NULL-valued right rows neither match nor mask.
     */
   def asofJoinNearest(left: DataFrame, right: DataFrame, keys: Seq[String], ts: String,
                       valueCol: String, outCol: String = "asof_value"): DataFrame = {
     guardReserved(left.columns.toSeq ++ right.columns,
-      Seq("__pkn", "__prevn", "__nextn", "__dcode", "__dout"), "asofJoinNearest")
+      Seq("__pkn", "__prevn", "__prevt", "__nextn", "__nextt", "__dcode", "__dout"),
+      "asofJoinNearest")
     guardOutCol(left.columns.toSeq, outCol, "asofJoinNearest")
-    // keyless strings/binary/decimals: the packed (v, t) struct cannot
-    // ride the numeric lanes, but the VALUE component can ride dictionary
-    // codes exactly like the base join's dict branch — encode, recurse,
-    // decode the pick
-    if (keys.isEmpty && dictableType(right.schema(valueCol).dataType)) {
-      import graft.text.Dict
-      val dict = Dict.build(right, valueCol)
-      val rEnc = Dict.str2code(right, dict, valueCol, "__dcode")
-        .drop(valueCol).withColumnRenamed("__dcode", valueCol)
-      val joined = asofJoinNearest(left, rEnc, keys, ts, valueCol, "__dout")
-      return Dict.code2str(joined, dict, "__dout", outCol).drop("__dout")
-        .select((left.columns.toSeq :+ outCol).map(col): _*)
-    }
-    val packed = right
-      .withColumn("__pkn",
-        when(col(valueCol).isNotNull, struct(col(valueCol).as("v"), col(ts).as("t"))))
-      .select((keys :+ ts :+ "__pkn").map(col): _*)
-    val withPrev = asofJoinDir(left, packed, keys, ts, "__pkn", "__prevn", direction = -1)
+    val withPrev = skipNulls(left, right, keys, ts, Seq(valueCol, ts),
+      Seq("__prevn", "__prevt"), direction = -1, inclusive = true)
     // strictly-forward: an equal-ts right row is already the backward
     // match at distance 0; excluding it here keeps the passes disjoint
-    val withBoth = asofJoinDir(withPrev, packed, keys, ts, "__pkn", "__nextn",
-      direction = 1, inclusive = false)
-    withBoth
+    skipNulls(withPrev, right, keys, ts, Seq(valueCol, ts),
+      Seq("__nextn", "__nextt"), direction = 1, inclusive = false)
       .withColumn(outCol,
-        when(col("__nextn").isNull ||
-          (col("__prevn").isNotNull &&
-            (col(ts) - col("__prevn.t")) <= (col("__nextn.t") - col(ts))),
-          col("__prevn.v"))
-          .otherwise(col("__nextn.v")))
-      .drop("__prevn", "__nextn")
+        when(col("__nextt").isNull ||
+          (col("__prevt").isNotNull &&
+            (col(ts) - col("__prevt")) <= (col("__nextt") - col(ts))),
+          col("__prevn"))
+          .otherwise(col("__nextn")))
+      .drop("__prevn", "__prevt", "__nextn", "__nextt")
   }
 
   /** Tolerance-bounded as-of join: the classic as-of match, but the
     * carried value is dropped (NULL) when it is staler than `tolerance`
     * (left.ts − matched.ts > tolerance). The kdb/pandas `tolerance=`
     * semantics — a quote older than the staleness budget is no match at
-    * all. Pure composition: the union-scan machinery carries a
-    * (value, ts) struct instead of the bare value; same single shuffle.
+    * all. One merge carries the value and the matched ts (`__mts`); the
+    * staleness gate is a plain Column on top.
     */
   def asofJoinTol(left: DataFrame, right: DataFrame, keys: Seq[String], ts: String,
                   valueCol: String, tolerance: Column,
                   outCol: String = "asof_value"): DataFrame = {
-    guardReserved(left.columns.toSeq ++ right.columns,
-      Seq("__pk", "__asof", "__dcode", "__dout"), "asofJoinTol")
+    guardReserved(left.columns.toSeq ++ right.columns :+ outCol,
+      Seq("__pk", "__asof", "__mts", "__dcode", "__dout"), "asofJoinTol")
     guardOutCol(left.columns.toSeq, outCol, "asofJoinTol")
-    // keyless strings/binary/decimals ride dictionary codes, as in the
-    // base join and asofJoinNearest: encode, recurse, decode
-    if (keys.isEmpty && dictableType(right.schema(valueCol).dataType)) {
-      import graft.text.Dict
-      val dict = Dict.build(right, valueCol)
-      val rEnc = Dict.str2code(right, dict, valueCol, "__dcode")
-        .drop(valueCol).withColumnRenamed("__dcode", valueCol)
-      val joined = asofJoinTol(left, rEnc, keys, ts, valueCol, tolerance, "__dout")
-      return Dict.code2str(joined, dict, "__dout", outCol).drop("__dout")
-        .select((left.columns.toSeq :+ outCol).map(col): _*)
-    }
-    // pack only non-null values: a bare struct is never NULL, which would
-    // defeat the base join's last(..., ignoreNulls) and let a NULL-valued
-    // right row mask an earlier real match
-    val packed = right.withColumn("__pk",
-      when(col(valueCol).isNotNull, struct(col(valueCol).as("v"), col(ts).as("t"))))
-    asofJoin(left, packed, keys, ts, "__pk", "__asof")
-      .withColumn(outCol,
-        when(col("__asof").isNotNull &&
-          (col(ts) - col("__asof.t")) <= tolerance, col("__asof.v")))
-      .drop("__asof")
+    skipNulls(left, right, keys, ts, Seq(valueCol, ts), Seq(outCol, "__mts"),
+      direction = -1, inclusive = true)
+      .withColumn(outCol, when((col(ts) - col("__mts")) <= tolerance, col(outCol)))
+      .drop("__mts")
   }
 
   /** Positions in `right` matching each left ts — cs_asof_join_pos
-    * (func.c:4591-4662). Same machinery carrying right.pos.
+    * (func.c:4591-4662): the as-of join carrying right.pos.
     */
   def asofJoinPos(left: DataFrame, right: DataFrame, keys: Seq[String], ts: String): DataFrame = {
     guardReserved(left.columns.toSeq ++ right.columns, Seq("__rpos"), "asofJoinPos")
-    asofJoin(left, right.withColumnRenamed("pos", "__rpos"), keys, ts, "__rpos", "right_pos")
+    asofJoin(left, right, keys, ts, "pos", "right_pos")
   }
 
   /** Sorted-merge equi-join on ts — cs_join / cs_join_pos

@@ -15,31 +15,27 @@ import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
   * semantics the reference treats as its workhorse (func.c:4591-4662:
   * one merge pass over two sorted series).
   *
-  * Why a custom physical node when [[graft.join.Align.asofJoin]]'s
-  * union + last-ignoreNulls window already works: the union form pays for
-  * shuffling BOTH sides tagged into one stream, a window buffer, and a
-  * post-filter that throws the right rows away again. The merge exec
-  * declares `requiredChildDistribution`/`requiredChildOrdering` instead —
-  * Spark plants one Exchange + Sort per side (exactly a sort-merge join's
-  * scaffolding, AQE-coalescible) and the operator itself is a zero-copy
+  * This is the engine's one as-of join: [[graft.join.Align]]'s as-of
+  * entries are compositions over [[AsofMerge.asofJoinDir]]. The exec
+  * declares `requiredChildDistribution`/`requiredChildOrdering`, so Spark
+  * plants one Exchange + Sort per side (exactly a sort-merge join's
+  * scaffolding, AQE-coalescible), and the operator itself is a zero-copy
   * per-partition two-cursor merge: O(n+m), no window buffer, no union
-  * materialization, no post-filter. Per key-partition the merge is
-  * independent, so the plan scales like any shuffled join.
+  * materialization. Per key-partition the merge is independent, so the
+  * plan scales like any shuffled join.
   *
-  * Semantics match Align.asofJoin (backward as-of): for each left row,
-  * the value columns of the latest right row with right.ts <= left.ts
-  * (strictly < when `inclusive=false`) in the same key group; NULLs when
-  * no such row. NULL keys compare equal to each other — the same grouping
-  * the window form's partitionBy gives — and NULL order keys sort first.
+  * Semantics (backward as-of): for each left row, the value columns of
+  * the latest right row with right.ts <= left.ts (strictly < when
+  * `inclusive=false`) in the same key group; NULLs when no such row. NULL
+  * keys compare equal to each other and NULL order keys sort first.
   *
-  * One deliberate divergence on NULL-VALUED right rows: this merge
-  * carries the latest right ROW even when its value column is NULL (a
-  * NULL quote at ts=5 masks a real quote at ts=3), while Align.asofJoin's
-  * `last(..., ignoreNulls=true)` skips NULL values and surfaces the
-  * earlier non-null match. Row-carry is the reference's own contract
-  * (func.c:4591-4662 copies whatever element is current, NULL or not);
-  * callers who want the window form's value-skipping contract should
-  * pre-filter NULL-valued right rows, as [[AsofMerge.asofJoinTol]] does.
+  * One implementation, two NULL contracts. This layer carries the
+  * latest right ROW even when its value column is NULL (a NULL quote at
+  * ts=5 masks a real quote at ts=3): row-carry is the reference's own
+  * contract (func.c:4591-4662 copies whatever element is current, NULL
+  * or not). Align skips NULL values instead (the earlier non-null match
+  * surfaces) and gives a NULL-ts left row no match; it gets both from a
+  * right-side pre-filter and one output gate over this merge.
   */
 case class AsofJoinPlan(
     left: LogicalPlan,
@@ -219,12 +215,9 @@ object AsofMerge {
 
   /** As-of join via the custom plan node — left columns + `outCol`, the
     * latest right `valueCol` with right.ts <= left.ts per key (strictly
-    * earlier when `inclusive=false`). Same contract as
-    * [[graft.join.Align.asofJoin]] EXCEPT for NULL-valued right rows:
-    * this merge carries the latest right ROW (a NULL value at a later ts
-    * masks an earlier non-null one), where the window form's
-    * last-ignoreNulls skips NULL values. Pre-filter
-    * `right.filter(col(valueCol).isNotNull)` for the window contract.
+    * earlier when `inclusive=false`). Row-carry: a NULL value at a later
+    * ts masks an earlier non-null one. [[graft.join.Align.asofJoin]] is
+    * the value-skipping form over the same merge.
     */
   def asofJoin(left: DataFrame, right: DataFrame, keys: Seq[String], ts: String,
                valueCol: String, outCol: String = "asof_value",
@@ -232,13 +225,12 @@ object AsofMerge {
     asofJoinDir(left, right, keys, ts, Seq(valueCol), Seq(outCol),
       direction = -1, inclusive = inclusive)
 
-  /** Directional, multi-column form — the full
-    * [[graft.join.Align.asofJoinDir]] surface on the custom operator:
-    * every `valueCols(i)` from the matched right row lands in
-    * `outCols(i)`; direction −1 matches the latest right ts <= left ts,
-    * +1 the earliest right ts >= left ts (TABLE_join's direction enum,
-    * func.c:6494-6548). Carrying several columns costs one merge either
-    * way — the window form would pay one `last()` per column.
+  /** Directional, multi-column form — the merge every
+    * [[graft.join.Align]] as-of entry runs: every `valueCols(i)` from the
+    * matched right row lands in `outCols(i)`; direction −1 matches the
+    * latest right ts <= left ts, +1 the earliest right ts >= left ts
+    * (TABLE_join's direction enum, func.c:6494-6548). Carrying several
+    * columns costs one merge.
     *
     * NOTE (map-bearing values): the row-id route those take
     * ([[keylessRowIdAsof]]) carries ONE whole right row on DUPLICATE right
@@ -270,8 +262,8 @@ object AsofMerge {
     // Keyless series (the reference's default single-series shape):
     // AsofMergeJoinExec would declare AllTuples — ONE merge task, the
     // honest requirement for a global merge but a serial plan. Route to
-    // the ranged carry-forward scan instead (same parallel-prefix
-    // machinery as Align.asofJoin's keyless branch), which keeps the
+    // the ranged carry-forward scan instead (the parallel-prefix
+    // machinery of graft.plans.OrderedScan), which keeps the
     // exec's row-carry NULL semantics via explicit null-flag lanes and
     // exact int64 carry via hi/lo lane splitting. Lane-able value types
     // (see lanable) ride directly; dictionary-encodable ones (strings,
@@ -361,32 +353,6 @@ object AsofMerge {
       inclusive,
       direction)
     GraftPlanBridge.ofRows(spark, node).toDF(left.columns ++ outCols: _*)
-  }
-
-  /** Tolerance-bounded as-of on the custom operator — the kdb/pandas
-    * `tolerance=` semantics of [[graft.join.Align.asofJoinTol]]: the
-    * match is dropped when staler than `tolerance`. Composition: the
-    * merge carries (value, right ts) in one pass; the staleness gate is a
-    * plain Column on top. NULL-valued right rows neither match nor mask
-    * (filtered before the merge), matching the window form's
-    * last-ignoreNulls contract.
-    */
-  def asofJoinTol(left: DataFrame, right: DataFrame, keys: Seq[String], ts: String,
-                  valueCol: String, tolerance: org.apache.spark.sql.Column,
-                  outCol: String = "asof_value"): DataFrame = {
-    import org.apache.spark.sql.functions.{col, when}
-    // "__mts" is this composition's own temp: an input already carrying
-    // it (or an outCol named it) would make the staleness gate ambiguous
-    val mtsClash = (left.columns ++ right.columns).exists(_.equalsIgnoreCase("__mts"))
-    require(!mtsClash && !outCol.equalsIgnoreCase("__mts"),
-      "column name __mts is reserved by asofJoinTol's staleness gate; " +
-        "rename it before the join")
-    asofJoinDir(left, right.filter(col(valueCol).isNotNull),
-      keys, ts, Seq(valueCol, ts), Seq(outCol, "__mts"))
-      .withColumn(outCol,
-        when(col("__mts").isNotNull && (col(ts) - col("__mts")) <= tolerance,
-          col(outCol)))
-      .drop("__mts")
   }
 
   import org.apache.spark.sql.types._

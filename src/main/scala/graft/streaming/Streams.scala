@@ -1544,7 +1544,8 @@ object Streams {
   }
 
   /** Streaming as-of join — the streaming form of the reference's
-    * workhorse operator (Align.asofJoin; func.c:4591-4662): one tagged
+    * workhorse operator (func.c:4591-4662), whose batch form is
+    * Align.asofJoin over the AsofMerge merge exec: one tagged
     * stream per key carries rows with `side` 0 (right, value provider) and
     * 1 (left, probe); each left row emits the latest preceding right
     * value, NULL before any right row. State per key is one (value, seen)

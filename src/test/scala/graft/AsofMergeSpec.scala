@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The custom as-of plan node (graft.plans.AsofMergeJoin): semantics must
-  * be bit-identical to Align.asofJoin's union+window form on every shape,
+  * be bit-identical to AsofReference's union+window form on every shape,
   * and the physical plan must actually be the custom exec (not a fallback).
   */
 class AsofMergeSpec extends AnyFunSuite {
@@ -25,7 +25,7 @@ class AsofMergeSpec extends AnyFunSuite {
   private def assertSameAsUnionForm(l: DataFrame, r: DataFrame, keys: Seq[String],
                                     inclusive: Boolean = true): Unit = {
     val merge = AsofMerge.asofJoin(l, r, keys, "ts", "v", inclusive = inclusive)
-    val window = Align.asofJoinDir(l, r, keys, "ts", "v", "asof_value",
+    val window = AsofReference.asofJoinDir(l, r, keys, "ts", "v", "asof_value",
       direction = -1, inclusive = inclusive)
     assert(rows(merge) == rows(window))
   }
@@ -55,7 +55,7 @@ class AsofMergeSpec extends AnyFunSuite {
     // while the merge carries them; align on non-null values only here and
     // assert the null-valued-row case directly below
     val merge = AsofMerge.asofJoin(l, r.filter(col("v").isNotNull), Seq("key"), "ts", "v")
-    val window = Align.asofJoin(l, r.filter(col("v").isNotNull), Seq("key"), "ts", "v")
+    val window = AsofReference.asofJoin(l, r.filter(col("v").isNotNull), Seq("key"), "ts", "v")
     assert(rows(merge) == rows(window))
     // merge semantics: the latest right ROW wins even if its value is NULL —
     // (null,10) carries "n" (ts 4), (null,20) carries the NULL at ts 15
@@ -92,12 +92,12 @@ class AsofMergeSpec extends AnyFunSuite {
     val br = Seq.fill(300)(rnd.nextInt(1000).toLong).distinct
       .map(t => (t, t.toDouble * 2)).toDF("ts", "v")
     assert(rows(AsofMerge.asofJoin(bl, br, Seq(), "ts", "v")) ==
-      rows(Align.asofJoin(bl, br, Seq(), "ts", "v")))
+      rows(AsofReference.asofJoin(bl, br, Seq(), "ts", "v")))
     // succeeding direction + strict boundary through the routed path
     for (dir <- Seq(-1, 1); incl <- Seq(true, false)) {
       val merge = AsofMerge.asofJoinDir(bl, br, Seq(), "ts",
         Seq("v"), Seq("asof_value"), direction = dir, inclusive = incl)
-      val window = Align.asofJoinDir(bl, br, Seq(), "ts", "v",
+      val window = AsofReference.asofJoinDir(bl, br, Seq(), "ts", "v",
         "asof_value", direction = dir, inclusive = incl)
       assert(rows(merge) == rows(window), s"direction=$dir inclusive=$incl")
     }
@@ -535,7 +535,7 @@ class AsofMergeSpec extends AnyFunSuite {
     val l = Seq((7L, 1.0)).toDF("ts", "__mts")
     val r = Seq((5L, 2.0)).toDF("ts", "v")
     val e = intercept[IllegalArgumentException] {
-      AsofMerge.asofJoinTol(l, r, Seq(), "ts", "v", lit(10L))
+      Align.asofJoinTol(l, r, Seq(), "ts", "v", lit(10L))
     }
     assert(e.getMessage.contains("__mts"))
   }
@@ -572,10 +572,10 @@ class AsofMergeSpec extends AnyFunSuite {
     // — tol=0 drops the match, tol=1 keeps it (a double-lane carry would
     // see staleness 0±128 and flip both ways)
     val l1 = Seq(Tuple1(base + 1000L)).toDF("ts")
-    val drop = AsofMerge.asofJoinTol(l1, r, Seq(), "ts", "v", lit(0L))
+    val drop = Align.asofJoinTol(l1, r, Seq(), "ts", "v", lit(0L))
       .head().get(1)
     assert(drop == null)
-    val keep = AsofMerge.asofJoinTol(l1, r, Seq(), "ts", "v", lit(1L))
+    val keep = Align.asofJoinTol(l1, r, Seq(), "ts", "v", lit(1L))
       .head().getLong(1)
     assert(keep == 900719925474099317L)
   }
@@ -584,8 +584,8 @@ class AsofMergeSpec extends AnyFunSuite {
     val l = Seq(("k", 5L), ("k", 30L), ("k", 21L)).toDF("key", "ts")
     val r = Seq(("k", 4L, 1.0), ("k", 20L, 2.0)).toDF("key", "ts", "v")
     for (tol <- Seq(1L, 5L, 100L)) {
-      val merge = AsofMerge.asofJoinTol(l, r, Seq(), "ts", "v", lit(tol))
-      val window = Align.asofJoinTol(l, r, Seq(), "ts", "v", lit(tol))
+      val merge = Align.asofJoinTol(l, r, Seq(), "ts", "v", lit(tol))
+      val window = AsofReference.asofJoinTol(l, r, Seq(), "ts", "v", lit(tol))
       assert(rows(merge) == rows(window), s"keyless tol=$tol")
     }
   }
@@ -614,7 +614,7 @@ class AsofMergeSpec extends AnyFunSuite {
     for (incl <- Seq(true, false)) {
       val merge = AsofMerge.asofJoinDir(left, right, Seq("key"), "ts",
         Seq("v"), Seq("asof_value"), direction = 1, inclusive = incl)
-      val window = Align.asofJoinDir(left, right, Seq("key"), "ts", "v",
+      val window = AsofReference.asofJoinDir(left, right, Seq("key"), "ts", "v",
         "asof_value", direction = 1, inclusive = incl)
       assert(rows(merge) == rows(window), s"inclusive=$incl")
     }
@@ -632,8 +632,8 @@ class AsofMergeSpec extends AnyFunSuite {
     val l = Seq(("k", 5L), ("k", 30L), ("k", 21L)).toDF("key", "ts")
     val r = Seq(("k", 4L, 1.0), ("k", 20L, 2.0)).toDF("key", "ts", "v")
     for (tol <- Seq(1L, 5L, 100L)) {
-      val merge = AsofMerge.asofJoinTol(l, r, Seq("key"), "ts", "v", lit(tol))
-      val window = Align.asofJoinTol(l, r, Seq("key"), "ts", "v", lit(tol))
+      val merge = Align.asofJoinTol(l, r, Seq("key"), "ts", "v", lit(tol))
+      val window = AsofReference.asofJoinTol(l, r, Seq("key"), "ts", "v", lit(tol))
       assert(rows(merge) == rows(window), s"tol=$tol")
     }
   }
@@ -647,7 +647,7 @@ class AsofMergeSpec extends AnyFunSuite {
       ("b", 2, 9L)).toDF("k1", "k2", "ts")
     val r = Seq(("a", 1, 9L, "x"), ("a", 2, 8L, "y"), ("b", 1, 4L, "z"),
       ("a", 1, 15L, "w")).toDF("k1", "k2", "ts", "v")
-    val window = Align.asofJoinDir(l, r, Seq("k1", "k2"), "ts", "v", "asof_value")
+    val window = AsofReference.asofJoinDir(l, r, Seq("k1", "k2"), "ts", "v", "asof_value")
     // left only pre-partitioned on k1
     assert(rows(AsofMerge.asofJoin(l.repartition(col("k1")), r,
       Seq("k1", "k2"), "ts", "v")) == rows(window))
@@ -661,7 +661,7 @@ class AsofMergeSpec extends AnyFunSuite {
   }
 
   test("adversarial: children pre-partitioned with DIFFERENT partition counts") {
-    val window = Align.asofJoinDir(left, right, Seq("key"), "ts", "v", "asof_value")
+    val window = AsofReference.asofJoinDir(left, right, Seq("key"), "ts", "v", "asof_value")
     val merge = AsofMerge.asofJoin(
       left.repartition(3, col("key")), right.repartition(7, col("key")),
       Seq("key"), "ts", "v")
@@ -687,8 +687,8 @@ class AsofMergeSpec extends AnyFunSuite {
     val stacked = AsofMerge.asofJoin(
       AsofMerge.asofJoin(left, right, Seq("key"), "ts", "v"),
       r2, Seq("key"), "ts", "w", outCol = "asof_w")
-    val windowStacked = Align.asofJoin(
-      Align.asofJoin(left, right, Seq("key"), "ts", "v"),
+    val windowStacked = AsofReference.asofJoin(
+      AsofReference.asofJoin(left, right, Seq("key"), "ts", "v"),
       r2, Seq("key"), "ts", "w", outCol = "asof_w")
     assert(rows(stacked) == rows(windowStacked))
   }
@@ -709,7 +709,7 @@ class AsofMergeSpec extends AnyFunSuite {
     for (incl <- Seq(true, false)) {
       val merge = AsofMerge.asofJoinDir(l, r, Seq("key"), "ts",
         Seq("v"), Seq("asof_value"), direction = 1, inclusive = incl)
-      val window = Align.asofJoinDir(l, r, Seq("key"), "ts", "v",
+      val window = AsofReference.asofJoinDir(l, r, Seq("key"), "ts", "v",
         "asof_value", direction = 1, inclusive = incl)
       assert(rows(merge) == rows(window), s"direction=+1 inclusive=$incl")
     }

@@ -11,7 +11,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Job accounting for the job-count pins. Counts the jobs a body launches
-  * (with each job's call site and SQL execution id) and settles by
+  * (with each job's call site, SQL execution id and that execution's
+  * description) and settles by
   * QUIESCENCE instead of a fixed sleep: the listener bus is asynchronous,
   * so a count is read only once every started job has ended and no
   * listener event has arrived for `QuietPolls` consecutive polls.
@@ -24,6 +25,7 @@ final class JobWatch private () extends SparkFirehoseListener {
   private val events = new AtomicLong
   private val jobQ = new ConcurrentLinkedQueue[Job]
   private val execPlans = new ConcurrentHashMap[Long, String]
+  private val execDescs = new ConcurrentHashMap[Long, String]
 
   override def onEvent(e: SparkListenerEvent): Unit = {
     e match {
@@ -38,11 +40,17 @@ final class JobWatch private () extends SparkFirehoseListener {
         val exec = Option(j.properties)
           .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
           .map(_.toLong)
-        jobQ.add(Job(j.jobId, site, exec))
+        // an execution's start event precedes its jobs on the bus; its
+        // description names the action that ran it (e.g. "count at
+        // Tables.scala:…"), which AQE stage jobs do not carry as a site
+        val desc = exec.flatMap(id => Option(execDescs.get(id))).getOrElse("")
+        jobQ.add(Job(j.jobId, site, exec, desc))
         open.add(j.jobId)
       case j: SparkListenerJobEnd => open.remove(j.jobId)
       case s: SparkListenerSQLExecutionStart =>
         execPlans.put(s.executionId, s.physicalPlanDescription)
+        execDescs.put(s.executionId,
+          Option(s.description).getOrElse("").takeWhile(_ != '\n'))
       case _ =>
     }
     events.incrementAndGet()
@@ -87,12 +95,17 @@ final class JobWatch private () extends SparkFirehoseListener {
   def executions: Set[Long] = jobs.flatMap(_.execution).toSet
   /** Physical plan of a SQL execution that started while measuring. */
   def plan(execution: Long): Option[String] = Option(execPlans.get(execution))
-  def describe: String = jobs.map(j =>
-    s"job ${j.id} exec ${j.execution.getOrElse("-")}: ${j.site}").mkString("\n  ", "\n  ", "")
+  def describe: String = jobs.map { j =>
+    val desc = if (j.description.isEmpty) "" else s" [${j.description}]"
+    s"job ${j.id} exec ${j.execution.getOrElse("-")}: ${j.site}$desc"
+  }.mkString("\n  ", "\n  ", "")
 }
 
 object JobWatch {
-  final case class Job(id: Int, site: String, execution: Option[Long])
+  /** `site` is the job's result-stage name; `description` is its SQL
+    * execution's description ("" outside any execution).
+    */
+  final case class Job(id: Int, site: String, execution: Option[Long], description: String)
 
   private val QuietPolls = 5
   private val PollMs = 20L
