@@ -201,14 +201,12 @@ object Tables {
     * a mid-grace directory also holds the retained (excluded) generation,
     * which would inflate the target ~2x right after every compact.
     */
-  def sizedParts(spark: SparkSession, path: String): Int =
-    sizedPartsForBytes(spark, governedLiveBytes(spark, path).getOrElse {
-      val hp = new org.apache.hadoop.fs.Path(path)
+  def sizedParts(spark: SparkSession, path: String): Int = {
+    val bytes = governedLive(spark, path).map(_.files.map(_.bytes).sum).getOrElse {
+      val hp = new Path(path)
       hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .getContentSummary(hp).getLength
-    })
-
-  private def sizedPartsForBytes(spark: SparkSession, bytes: Long): Int = {
+    }
     val dp = spark.sparkContext.defaultParallelism
     val coarse = (bytes + bytesPerPart - 1) / bytesPerPart
     val fine = math.min(fineCap, (bytes + fineBytesPerPart - 1) / fineBytesPerPart)
@@ -227,23 +225,15 @@ object Tables {
       val path = s"$sfDir/$name.parquet"
       // snapshot, not a plain directory read: a manifest-governed table
       // mid-grace holds retired (replaced) files a plain read would
-      // double-count; ungoverned paths (the testdata tables) read plainly.
-      // The governed branch surfaces its live-byte total so sizing reuses
-      // the SAME liveEntries evaluation (no second listing/manifest read)
-      val (raw, liveBytes) = snapshotWithBytes(spark, path)
-      val target = {
-        val sized = sizedPartsForBytes(spark, liveBytes.getOrElse {
-          val hp = new Path(path)
-          hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .getContentSummary(hp).getLength
-        })
-        if (cpuHeavy(name))
-          math.max(sized, math.min(4, spark.sparkContext.defaultParallelism))
+      // double-count; ungoverned paths (the testdata tables) read plainly
+      val raw = snapshot(spark, path)
+      val sized = sizedParts(spark, path)
+      val target =
+        if (cpuHeavy(name)) math.max(sized, math.min(4, spark.sparkContext.defaultParallelism))
         else sized
-      }
-      // getNumPartitions only computes the scan's split plan (no job);
-      // never coalesce DOWN — a source that already splits finer (real
-      // multi-file layouts at scale) keeps its natural parallelism
+      // the one read that plans at construction (an `rdd` execution, no
+      // job), once per memoized frame; never coalesce DOWN — a source that
+      // already splits finer keeps its natural parallelism
       if (raw.rdd.getNumPartitions < target) raw.repartition(target) else raw
     })
 
@@ -483,7 +473,6 @@ object Tables {
   private def ntzPrunedRead(spark: SparkSession, path: String,
                             schema: StructType,
                             fromNs: Long, tillNs: Long): DataFrame = {
-    import scala.jdk.CollectionConverters._
     val conf = spark.sparkContext.hadoopConfiguration
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(conf)
@@ -510,7 +499,7 @@ object Tables {
       import scala.collection.parallel.CollectionConverters._
       parts.toSeq.par.filter(s => overlaps(s.getPath)).seq
     }
-    filesFrame(spark, schema, kept, resize = true)
+    filesFrame(spark, schema, kept)
   }
 
   /** Part-file predicate shared by every direct-listing consumer. */
@@ -1450,10 +1439,6 @@ object Tables {
     if (isDir) liveEntries(fs, hp, tsName) else None
   }
 
-  /** The live generation's byte total for a governed dir, None otherwise. */
-  private def governedLiveBytes(spark: SparkSession, path: String): Option[Long] =
-    governedLive(spark, path).map(_.files.map(_.bytes).sum)
-
   /** Live-generation schema memo: table path → (head file name, schema).
     * Data files are immutable and uniquely named, so the schema read from
     * a given head never changes, and any rewrite of the layout changes
@@ -1497,43 +1482,41 @@ object Tables {
     override def invalidateAll(): Unit = byPath.clear()
   }
 
-  /** Exactly `files` read under `schema`, with no Spark job at
-    * construction: the relation `spark.read.schema(schema).parquet(files)`
-    * resolves to, over a file index primed with the given statuses.
-    * `resize` applies the byte-proportional re-split of undersized
-    * sources ([[sizedPartsForBytes]]); no files is an empty LOCAL
-    * relation, which the optimizer propagates (a join or aggregate over
-    * it plans no scan and launches no job).
+  /** Exactly `files` read under `schema`, in the layout's own
+    * partitioning and with no query planning at construction: the
+    * relation `spark.read.schema(schema).parquet(files)` resolves to,
+    * over a file index primed with the given statuses. No files is an
+    * empty LOCAL relation, which the optimizer propagates (a join or
+    * aggregate over it plans no scan and launches no job).
     */
   private def filesFrame(spark: SparkSession, schema: StructType,
-                         files: Seq[FileStatus], resize: Boolean): DataFrame =
+                         files: Seq[FileStatus]): DataFrame =
     if (files.isEmpty)
       spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](), schema)
     else {
       import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex}
       val index = new InMemoryFileIndex(spark, files.map(_.getPath), Map.empty,
         Some(schema), new KnownStatuses(files))
-      val df = spark.baseRelationToDataFrame(HadoopFsRelation(index,
+      spark.baseRelationToDataFrame(HadoopFsRelation(index,
         index.partitionSchema, schema, None,
         new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
         Map.empty)(spark))
-      val target = sizedPartsForBytes(spark, files.map(_.getLen).sum)
-      if (resize && df.rdd.getNumPartitions < target) df.repartition(target) else df
     }
 
   /** The live files `names` of a governed table as a DataFrame, built from
     * the manifest view alone: file statuses from `live`'s listing, schema
     * from the live head's footer ([[headSchema]]) unless `schema` is
-    * given. Launches no Spark job — no listing job, no schema-inference
-    * job. Every governed multi-file read (snapshot, rangeScan, the
-    * compact/delete rewrite inputs, the landing probe) is built here.
+    * given. Starts no SQL execution — no listing, schema-inference or
+    * split-planning probe. Every governed multi-file read (snapshot,
+    * rangeScan, the compact/delete rewrite inputs, the landing probe) is
+    * built here.
     */
   private[graft] def liveFrame(spark: SparkSession, live: LiveSet,
-                               names: Seq[String], resize: Boolean = true,
+                               names: Seq[String],
                                schema: Option[StructType] = None): DataFrame =
     filesFrame(spark,
       schema.getOrElse(headSchema(spark, live.dir, live.files.head.name)),
-      names.map(live.status), resize)
+      names.map(live.status))
 
   /** The live generation of `path` as a DataFrame: manifest-governed
     * directories serve EXACTLY the manifest's live files — grace-retained
@@ -1545,31 +1528,10 @@ object Tables {
     * table format imposes — read through the engine, not the directory).
     *
     * Job budget: constructing the frame of a governed table with live
-    * files launches 0 Spark jobs ([[liveFrame]]).
+    * files starts no SQL execution ([[liveFrame]]).
     */
   def snapshot(spark: SparkSession, path: String): DataFrame =
-    snapshotWithBytes(spark, path)._1
-
-  /** [[snapshot]] without the byte-proportional repartition: the live
-    * file set exactly as the scan produces it. For PROBE plans (the
-    * dedup-at-landing corpus check) the repartition is an Exchange on
-    * the corpus side of a broadcast join — the one shuffle the probe
-    * exists to avoid — and the probe aggregates to a tiny hit set, so
-    * scan-parallelism sizing buys it nothing.
-    */
-  private[graft] def snapshotUnsized(spark: SparkSession, path: String): DataFrame =
-    snapshotWithBytes(spark, path, resize = false)._1
-
-  /** [[snapshot]] plus, for a governed table, the live generation's byte
-    * total (None for ungoverned paths) — so a caller that also needs to
-    * SIZE by live bytes reuses the single liveEntries evaluation instead
-    * of paying a second listing + manifest + marker round-trip.
-    */
-  private[graft] def snapshotWithBytes(spark: SparkSession,
-                                       path: String,
-                                       resize: Boolean = true): (DataFrame, Option[Long]) = {
-    val governed = governedLive(spark, path).map { live =>
-      val bytes = live.files.map(_.bytes).sum
+    governedLive(spark, path).map { live =>
       if (live.files.isEmpty)
         // an EMPTY live set still needs a schema. Directory inference
         // covers the common case (grace-retained files still on
@@ -1577,17 +1539,15 @@ object Tables {
         // anywhere — fail with the table's actual state instead of
         // AnalysisException's misleading "unable to infer schema"
         // (ADVICE r12, low)
-        (spark.createDataFrame(
+        spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           scala.util.Try(spark.read.parquet(path).schema).getOrElse(
             sys.error(s"table $path is governed but EMPTY (its live " +
               "set has zero files and no parquet footer remains to " +
               "derive a schema from) — load data before reading, or " +
-              "truncate it"))), Some(bytes))
-      else (liveFrame(spark, live, live.names, resize), Some(bytes))
-    }
-    governed.getOrElse((spark.read.parquet(path), None))
-  }
+              "truncate it")))
+      else liveFrame(spark, live, live.names)
+    }.getOrElse(spark.read.parquet(path))
 
   // ---- reader pins -----------------------------------------------------
 
@@ -1881,7 +1841,7 @@ object Tables {
     withWriterLease(fs, hp, "load") {
       recoverMutations(spark, fs, path)
       if (fs.exists(hp)) requireNoLivePins(fs, hp, "load")
-      writeClustered(df, path, (keys :+ ts).map(col), df.rdd.getNumPartitions)
+      writeClustered(df, path, (keys :+ ts).map(col), plannedPartitions(df))
       // the load layout's ts manifest: one footer pass at write time buys
       // every future rangeScan its file pruning without driver footer RPCs,
       // and records the layout-membership compactIncremental folds against
@@ -1962,7 +1922,7 @@ object Tables {
     val parts = math.max(1L, (liveBytes + targetBytes - 1) / targetBytes).toInt
     val tmp = genTmpPath(path)
     if (fs.exists(tmp)) fs.delete(tmp, true)
-    writeClustered(liveFrame(spark, live, liveNames, resize = false),
+    writeClustered(liveFrame(spark, live, liveNames),
       tmp.toString, (keys :+ ts).map(col), parts)
     crashPoint("full:staged")
     val after = installGeneration(spark, fs, hp, tmp, ts,
@@ -2286,7 +2246,7 @@ object Tables {
           val parts = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
           val tmp = genTmpPath(path)
           if (fs.exists(tmp)) fs.delete(tmp, true)
-          writeClustered(liveFrame(spark, m, hot.map(_.name), resize = false),
+          writeClustered(liveFrame(spark, m, hot.map(_.name)),
             tmp.toString, (keys :+ ts).map(col), parts)
           crashPoint("incr:staged")
           val after = installGeneration(spark, fs, hp, tmp, ts,
@@ -2324,14 +2284,15 @@ object Tables {
     }
 
   /** The append protocol up to the manifest extension, run under the
-    * caller's entry ([[append]], [[appendStreamBatch]]). It leaves the
-    * append marker in place: the marker is the batch's rollback identity,
+    * caller's entry ([[append]], [[appendStreamBatch]]); returns the
+    * installed files' names. It leaves the append marker in place: the
+    * marker is the batch's rollback identity,
     * so a stream batch clears it only after its commit record lands (a
     * crash in between rolls forward idempotently through
     * [[recoverAppend]]); a plain append clears it at once.
     */
   private def appendBody(fs: FileSystem, hp: Path, incoming: DataFrame,
-                         path: String, ts: String): Unit = {
+                         path: String, ts: String): Seq[String] = {
     val spark = incoming.sparkSession
     def listing(): Seq[FileStatus] =
       if (fs.exists(hp))
@@ -2510,6 +2471,7 @@ object Tables {
       else fs.delete(new Path(hp, ManifestName), false)
     }
     if (fs.exists(tmp)) fs.delete(tmp, true)
+    staged.map(_.getName)
   }
 
   // ---- streaming ingest bridge (insert trigger, imcs.c:4617-4740) ------
@@ -2635,9 +2597,17 @@ object Tables {
     */
   def appendStreamBatch(batch: DataFrame, path: String, ts: String,
                         streamId: String, batchId: Long): Boolean =
+    appendStreamBatchFiles(batch, path, ts, streamId, batchId).isDefined
+
+  /** [[appendStreamBatch]] returning the installed files' names (None:
+    * a replay skipped).
+    */
+  private[graft] def appendStreamBatchFiles(batch: DataFrame, path: String,
+                                            ts: String, streamId: String,
+                                            batchId: Long): Option[Seq[String]] =
     clusteredOp(batch.sparkSession, path, "appendStreamBatch") { (fs, hp) =>
       val rec = readStreamCommits(fs, hp)
-      if (rec.committed.get(streamId).exists(_ >= batchId)) false
+      if (rec.committed.get(streamId).exists(_ >= batchId)) None
       else {
         // slim pending (r12 review): the rollback identity is the append
         // MARKER's O(batch) file list, not an O(table) pre-listing — the
@@ -2649,7 +2619,7 @@ object Tables {
         // the body leaves the append marker — this batch's rollback
         // identity — in place, so a crash BEFORE the commit record below
         // still lets recovery delete exactly the batch's files
-        appendBody(fs, hp, batch, path, ts)
+        val files = appendBody(fs, hp, batch, path, ts)
         crashPoint("stream:appended")
         writeStreamCommits(fs, hp,
           StreamCommits(rec.committed + (streamId -> batchId), None))
@@ -2660,7 +2630,7 @@ object Tables {
         // rebuilt earlier would hold the PRE-batch snapshot and lag the
         // stream by one batch (r13 review finding #1)
         invalidateRead(batch.sparkSession, path)
-        true
+        Some(files)
       }
     }
 
@@ -2850,7 +2820,7 @@ object Tables {
     // negated conjunction is NULL under three-valued logic and filter
     // would silently DELETE them. No pre-materialization needed — the
     // source stays untouched until the install, strictly after this write.
-    liveFrame(spark, live, rewrite.map(_.name), resize = false)
+    liveFrame(spark, live, rewrite.map(_.name))
       .filter(col(ts).isNull || !(col(ts) >= from && col(ts) <= till))
       .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     crashPoint("del:staged")
@@ -2875,9 +2845,12 @@ object Tables {
                     fromNs: Long, tillNs: Long): Unit = {
     val hp = new Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the ts type from the memoized head-footer schema, as in deleteRange
     val dtOpt =
       if (!fs.exists(hp)) None
-      else scala.util.Try(snapshot(spark, path).schema).toOption
+      else scala.util.Try(governedLive(spark, path).filter(_.files.nonEmpty)
+          .fold(spark.read.parquet(path).schema)(l =>
+            headSchema(spark, l.dir, l.files.head.name))).toOption
         .flatMap(_.fields.find(_.name.equalsIgnoreCase(ts)))
         .map(_.dataType)
     dtOpt match {

@@ -151,7 +151,7 @@ private[graft] object DedupBloom {
       val (ver, bf) = loadVersioned(spark, bucketPath).getOrElse {
         val fresh =
           if (!fs.exists(hp)) BloomFilter.create(expectedItems, 0.01)
-          else graft.io.Tables.snapshotUnsized(spark, bucketPath)
+          else graft.io.Tables.snapshot(spark, bucketPath)
             .head(1).isEmpty match { // a throw here fails the batch loudly
               case true => BloomFilter.create(expectedItems, 0.01)
               case false => rebuilt(spark, bucketPath)
@@ -181,7 +181,7 @@ private[graft] object DedupBloom {
       .getOrElse(16000000L)
 
   private def rebuilt(spark: SparkSession, bucketPath: String): BloomFilter = {
-    val live = graft.io.Tables.snapshotUnsized(spark, bucketPath)
+    val live = graft.io.Tables.snapshot(spark, bucketPath)
     val n = live.count()
     // distributed build (df.stat.bloomFilter), sized 2× the live rows so
     // the rebuilt sidecar has growth headroom before the next rebuild —

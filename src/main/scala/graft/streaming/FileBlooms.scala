@@ -279,9 +279,15 @@ private[graft] object FileBlooms {
     * by the operator after a fold (which renames the table's files).
     * No-op on ungoverned paths and when `graft.dedup.fbloom.enabled` is
     * false.
+    *
+    * `known` maps a file to the distinct values it holds (a landing
+    * batch's one new file): its bloom builds on the driver, byte-identical
+    * to the read-back (same footer-row sizing), when the footer's min/max
+    * match — no job; other missing files take one batched build job.
     */
   def sync(spark: SparkSession, tablePath: String,
-           valueCol: String = "bucket"): Unit = {
+           valueCol: String = "bucket",
+           known: Map[String, Array[Long]] = Map.empty): Unit = {
     if (!enabled) return
     val hp = new Path(tablePath)
     val conf = spark.sparkContext.hadoopConfiguration
@@ -366,7 +372,15 @@ private[graft] object FileBlooms {
       val (overCap, buildable) =
         withRows.partition { case (_, rows) => predictedBloomBytes(rows) > cacheCapBytes }
       overCap.foreach { case (n, rows) => skipOverCap(n, rows) }
-      buildGroups(buildable, predictedBloomBytes, cacheCapBytes).foreach { g =>
+      val (fromKnown, readBack) = buildable.partition { case (n, _) =>
+        known.get(n).exists(v => v.nonEmpty && footerFor(n)._1.contains((v.min, v.max)))
+      }
+      fromKnown.foreach { case (n, rows) =>
+        val bf = BloomFilter.create(math.max(64L, rows), fpp)
+        known(n).foreach(bf.putLong)
+        write(fs, new Path(dir, n + ".bloom"), bf)
+      }
+      buildGroups(readBack, predictedBloomBytes, cacheCapBytes).foreach { g =>
         scala.util.Try {
           batchFailHook.foreach(_())
           import org.apache.spark.sql.functions._

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Structured Streaming variants of the batch operators (SURVEY.md §2.9).
   *
@@ -660,9 +660,9 @@ object Streams {
     *     width.
     *
     * Returns the stored rows (selected to `cols`) whose (band, bucket)
-    * collides with the batch — tiny by construction. `snapshotUnsized`
-    * keeps the scan free of the byte-proportional repartition (an
-    * Exchange the probe must not pay).
+    * collides with the batch — tiny by construction. The stored side
+    * keeps the file layout's partitioning (per-call reads never
+    * re-split), so the scan carries no Exchange into the probe.
     */
   private[graft] def probeStoredBuckets(spark: SparkSession, bucketPath: String,
                                         bb: DataFrame,
@@ -705,8 +705,8 @@ object Streams {
     // no listing and no schema-inference job per micro-batch
     val live = graft.io.Tables.governedLive(spark, bucketPath).filter(_.files.nonEmpty)
     def readFiles(names: Seq[String]): DataFrame = (live match {
-      case Some(l) => graft.io.Tables.liveFrame(spark, l, names, resize = false)
-      case None => graft.io.Tables.snapshotUnsized(spark, bucketPath)
+      case Some(l) => graft.io.Tables.liveFrame(spark, l, names)
+      case None => graft.io.Tables.snapshot(spark, bucketPath)
     }).select(cols: _*)
     lazy val stored0 = readFiles(live.map(_.names).getOrElse(Nil))
     // a bucket-less batch (empty, or all docs too short to shingle)
@@ -973,18 +973,18 @@ object Streams {
     * ([[landingVerdict]]) is decided on the driver from at most three
     * collects, so per-batch SQL executions on a bucket table that exists
     * and has its bloom sidecar (a steady-state stream) are:
-    *  - a fresh batch: at most 6 — the batch-rows collect, the stored
+    *  - a fresh batch: at most 5 — the batch-rows collect, the stored
     *    -candidate collect (none when the bloom clears every bucket), one
     *    collect of the tier-2 verdicts and the verified in-batch pairs
-    *    (none when there is neither), the doc write, the bucket write
-    *    and the file-bloom build. LandingVerdictSpec pins 6 for a batch
-    *    with both kinds of candidate; StreamIngestSpec pins 4 for a batch
-    *    with none;
+    *    (none when there is neither), the doc write and the bucket write
+    *    (a multi-file one adds the file-bloom read-back). LandingVerdictSpec
+    *    pins 5 for a batch with both kinds of candidate; StreamIngestSpec
+    *    pins 3 for a batch with none;
     *  - an all-drop re-crawl: 2 — the batch-rows and stored-candidate
     *    collects. Every doc is an exact duplicate, so there is no
     *    in-batch pair to verify and nothing is written;
-    *  - verified in-batch pairs whose two ends both survive the stored
-    *    check add connected components and one loser collect.
+    *  - in-batch clusters form on the driver ([[localLosers]]): no
+    *    execution.
     * Every driver collect is bounded by the batch, never by the stored
     * corpus: the batch-rows collect holds the batch's ids plus batch ×
     * bands (id, band, bucket) rows under `graft.dedup.probe.collect.max`;
@@ -1146,8 +1146,8 @@ object Streams {
     * survived the stored check. That equals pairing the stored check's
     * survivors alone, because a pair and its verify depend on the pair's
     * two docs only; so a doc the stored check drops never bridges two
-    * fresh docs into one cluster. Connected components run only when
-    * such edges remain.
+    * fresh docs into one cluster. The remaining edges cluster on the
+    * driver ([[localLosers]]).
     *
     * Past `graft.dedup.probe.collect.max` batch rows, or more candidate
     * pairs than `graft.dedup.verify.collect.max`, the pairs come from
@@ -1190,11 +1190,11 @@ object Streams {
         if (collisionDrops) lit(true)
         else if (tier1) coalesce(col("__oldFp") === col("__bfp"), lit(false))
         else lit(false)
-      (if (collisionDrops) joined.select(col(id),
+      // a row per colliding band, deduped by the consumer (no shuffle)
+      if (collisionDrops) joined.select(col(id),
         lit(null).cast(bb.schema(id).dataType).as("__oldId"),
         lit(null).cast(bb.schema(ts).dataType).as("__oldTs"), exactCol.as("__exact"))
-      else joined.select(col(id), col("__oldId"), col("__oldTs"), exactCol.as("__exact")))
-        .distinct()
+      else joined.select(col(id), col("__oldId"), col("__oldTs"), exactCol.as("__exact"))
     }
     // the in-batch pairs in Spark: the frame path's, and past the caps
     lazy val edges = verify(graft.dedup.Dedup.bandedPairs(bb, id))
@@ -1204,15 +1204,12 @@ object Streams {
       bounds.map { case (lo, hi) =>
         graft.io.Tables.snapshotSliceNs(spark, docPath, lo, hi, ts)
       }.getOrElse(graft.io.Tables.snapshot(spark, docPath)))
-    def clusterLosers(pairs: DataFrame): Array[Any] =
-      graft.dedup.Dedup.connectedComponents(pairs)
-        .filter(col("id") =!= col("cluster_id")).select(col("id"))
-        .collect().map(_.get(0))
     // DRIVER-DECIDED below both caps; None sends the batch to the frame path
     val driverDrops: Option[Array[Any]] = {
-      val storedCand = stored.fold(Array.empty[Row])(capped(_, candCap))
-      if (storedCand.length > candCap) None
+      val storedRows = stored.fold(Array.empty[Row])(capped(_, candCap))
+      if (storedRows.length > candCap) None
       else {
+        val storedCand = storedRows.distinct
         val exactIds = storedCand.filter(_.getBoolean(3)).map(_.get(0)).distinct
         val exactSet = exactIds.toSet
         // pairs still undecided: their batch id survived tier 1
@@ -1254,16 +1251,15 @@ object Streams {
           val storedDrops = exactIds ++ hitRows.map(_.get(0))
           val dropSet = storedDrops.toSet
           val kept = edgeRows.filterNot(r => dropSet(r.get(0)) || dropSet(r.get(1)))
-          Some(storedDrops ++ (if (kept.isEmpty) Array.empty[Any]
-            else clusterLosers(localIds(batch, id,
-              kept.map(r => Row(r.get(0), r.get(1))), "id1", "id2"))))
+          Some(storedDrops ++ localLosers(kept.map(r => (r.get(0), r.get(1))),
+            batch.schema(id).dataType))
         }
       }
     }
     val drops: Array[Any] = driverDrops.getOrElse {
       // OVER-CAP: the frame-based shape, collecting only drop ids
       val storedDrops = stored.fold(Array.empty[Any]) { c =>
-        val candDf = cached(caches, c)
+        val candDf = cached(caches, c.distinct())
         val exactIds = candDf.filter(col("__exact")).select(col(id)).distinct()
         val rest = candDf.join(exactIds, Seq(id), "left_anti")
         val candOld = rest.select(col("__oldId"), col("__oldTs")).distinct()
@@ -1279,9 +1275,11 @@ object Streams {
             .distinct()
         }).collect().map(_.get(0))
       }
-      storedDrops ++ clusterLosers(edges
+      storedDrops ++ graft.dedup.Dedup.connectedComponents(edges
         .join(broadcast(ids(storedDrops, "id1")), Seq("id1"), "left_anti")
         .join(broadcast(ids(storedDrops, "id2")), Seq("id2"), "left_anti"))
+        .filter(col("id") =!= col("cluster_id")).select(col("id"))
+        .collect().map(_.get(0))
     }
     val dropIds = drops.filter(_ != null).distinct
     val dropSet = dropIds.toSet
@@ -1292,8 +1290,36 @@ object Streams {
       // so past the cap as many of them as rows says the same)
       if (complete) docRows.forall(r => !r.isNullAt(0) && dropSet(r.get(0)))
       else dropIds.length == batch.count(),
-      banded.map(_.filter(r => !r.isNullAt(0) && !dropSet(r.get(0)))
+      // exactly the bucket rows landSurvivors writes
+      banded.map(_.filter(r => dropIds.isEmpty || !r.isNullAt(0) && !dropSet(r.get(0)))
         .map(_.getLong(2)).distinct))
+  }
+
+  /** The in-batch cluster losers over `edges`, by union-find on the
+    * driver: the smaller root (Spark's order on `idType`) absorbs the
+    * larger, so each component's min id survives, as in
+    * [[graft.dedup.Dedup.connectedComponents]].
+    */
+  private def localLosers(edges: Array[(Any, Any)], idType: DataType): Array[Any] = {
+    val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToCatalystConverter(idType)
+    val order = org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(idType)
+    val parent = scala.collection.mutable.HashMap.empty[Any, Any]
+    def root(x: Any): Any = {
+      var r = x
+      while (parent.contains(r)) r = parent(r)
+      var y = x
+      while (y != r) { val up = parent(y); parent(y) = r; y = up }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (root(a), root(b))
+      if (ra != rb) {
+        if (order.lt(toCatalyst(ra), toCatalyst(rb))) parent(rb) = ra else parent(ra) = rb
+      }
+    }
+    // only a root that another absorbed has a parent
+    parent.keys.toArray
   }
 
   /** The in-batch candidate pairs among banded rows (id, band, bucket)
@@ -1328,10 +1354,12 @@ object Streams {
     * The sidecar's new bucket values are the verdict's
     * `survivorBuckets`, taken from the batch rows it already collected —
     * no bucket-value job; only a batch past the batch-rows cap collects
-    * them from the bucket rows here. Sidecar BEFORE the bucket append: a
-    * crash between the two leaves the bloom a superset of the stored
-    * table — the invariant the probe's correctness rests on (see
-    * DedupBloom); a replayed batch re-ORs the same bits. ONE writer-lease
+    * them from the bucket rows here. They also build the file bloom of a
+    * one-file batch, so the tail runs just the two writes. Sidecar
+    * BEFORE the bucket append: a crash between the two leaves the bloom
+    * a superset of the stored table — the invariant the probe's
+    * correctness rests on (see DedupBloom); a replayed batch re-ORs the
+    * same bits. ONE writer-lease
     * span covers update AND append (ADVICE r15 high): an un-leased window
     * between them lets a concurrent rebuild snapshot the table WITHOUT
     * this batch's rows and install a bloom missing its bits — after which
@@ -1369,19 +1397,22 @@ object Streams {
     val newBucketVals = bucketRows.fold(Array.empty[Long])(rows =>
       verdict.survivorBuckets.getOrElse(
         rows.select(col("bucket")).distinct().collect().map(_.getLong(0))))
-    graft.io.Tables.withWriterLease(fs, hp, "dedupIngestBuckets") {
+    val newFiles = graft.io.Tables.withWriterLease(fs, hp, "dedupIngestBuckets") {
       DedupBloom.update(spark, bucketPath, newBucketVals)
       bucketRows match {
-        case Some(rows) => graft.io.Tables.appendStreamBatch(rows, bucketPath,
-          ts, streamKey + "#buckets", batchId)
+        case Some(rows) => graft.io.Tables.appendStreamBatchFiles(rows, bucketPath,
+          ts, streamKey + "#buckets", batchId).getOrElse(Nil)
         case None => graft.io.Tables.commitEmptyStreamBatch(spark, bucketPath,
-          streamKey + "#buckets", batchId)
+          streamKey + "#buckets", batchId); Nil
       }
     }
     // per-file blooms for the batch's new file(s) — OUTSIDE the lease (it
     // only reads committed live files) and best-effort: a missing file
-    // bloom degrades the probe's file pruning, never its answer
-    scala.util.Try(FileBlooms.sync(spark, bucketPath)).failed.foreach(e =>
+    // bloom degrades the probe's file pruning, never its answer. Only a
+    // one-file batch's values are known per file
+    val known =
+      if (newFiles.size == 1) Map(newFiles.head -> newBucketVals) else Map.empty[String, Array[Long]]
+    scala.util.Try(FileBlooms.sync(spark, bucketPath, known = known)).failed.foreach(e =>
       System.err.println(s"[dedup-ingest] file-bloom sync skipped: ${e.getMessage}"))
     // retention LAST, after both appends committed: a replayed batch
     // re-runs the beat (idempotent — the re-cut range is empty), and a

@@ -62,6 +62,36 @@ class FileBloomsBatchSpec extends AnyFunSuite {
     }
   }
 
+  test("a one-file landing batch's sidecar is built from its values, BYTE-IDENTICAL to the read-back") {
+    val dir = tmpDir("land")
+    val (docs, buckets) = (dir + "/docs.parquet", dir + "/buckets.parquet")
+    def text(i: Int): String = (0 until 12).map(w => s"b${w}y$i").mkString(" ")
+    def land(bid: Long, from: Int): Unit = graft.streaming.Streams.dedupIngestBatch(
+      (from until from + 40).map(i => (i.toLong, 100L + i, text(i)))
+        .toDF("id", "ts", "text"), docs, buckets, "ts", "ck-fbl", "id", "text",
+      5, 8, 2, bid)
+    land(0L, 0)
+    val before = Tables.liveFileNames(spark, buckets).getOrElse(Nil).toSet
+    JobWatch.on(spark) { w =>
+      w.measure(land(1L, 100))
+      assert(!w.jobs.exists(j => j.site.contains("FileBlooms.scala") ||
+        j.description.contains("FileBlooms.scala")),
+        s"the new file's bloom was built by reading the file back:${w.describe}")
+    }
+    val fresh = Tables.liveFileNames(spark, buckets).getOrElse(Nil).toSet -- before
+    assert(fresh.size == 1, s"precondition: the batch lands one bucket file: $fresh")
+    val sidecar = new java.io.File(new java.io.File(dir, "buckets.parquet.fblooms"),
+      fresh.head + ".bloom")
+    val built = java.nio.file.Files.readAllBytes(sidecar.toPath)
+    // the same file's sidecar from sync's read-back build
+    assert(sidecar.delete())
+    graft.streaming.FileBlooms.clearCache()
+    graft.streaming.FileBlooms.sync(spark, buckets)
+    assert(java.util.Arrays.equals(built, java.nio.file.Files.readAllBytes(sidecar.toPath)),
+      "the values-built sidecar diverged from the read-back build")
+    assert(java.util.Arrays.equals(built, legacyBytes(s"$buckets/${fresh.head}", "bucket")))
+  }
+
   test("one sync over many missing files launches ONE batched build job set, not 2 per file") {
     val buckets = tmpDir("jobs") + "/buckets.parquet"
     for (w <- 0 until 6) Tables.append(win(w, rows = 120), buckets, "ts", lit(0L))

@@ -12,7 +12,8 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Job accounting for the job-count pins. Counts the jobs a body launches
   * (with each job's call site, SQL execution id and that execution's
-  * description) and settles by
+  * description), records every SQL execution that starts, jobs or not
+  * (`Dataset.rdd`'s planning starts one that runs no job), and settles by
   * QUIESCENCE instead of a fixed sleep: the listener bus is asynchronous,
   * so a count is read only once every started job has ended and no
   * listener event has arrived for `QuietPolls` consecutive polls.
@@ -26,6 +27,7 @@ final class JobWatch private () extends SparkFirehoseListener {
   private val jobQ = new ConcurrentLinkedQueue[Job]
   private val execPlans = new ConcurrentHashMap[Long, String]
   private val execDescs = new ConcurrentHashMap[Long, String]
+  private val startQ = new ConcurrentLinkedQueue[(Long, String)]
 
   override def onEvent(e: SparkListenerEvent): Unit = {
     e match {
@@ -49,8 +51,9 @@ final class JobWatch private () extends SparkFirehoseListener {
       case j: SparkListenerJobEnd => open.remove(j.jobId)
       case s: SparkListenerSQLExecutionStart =>
         execPlans.put(s.executionId, s.physicalPlanDescription)
-        execDescs.put(s.executionId,
-          Option(s.description).getOrElse("").takeWhile(_ != '\n'))
+        val desc = Option(s.description).getOrElse("").takeWhile(_ != '\n')
+        execDescs.put(s.executionId, desc)
+        startQ.add(s.executionId -> desc)
       case _ =>
     }
     events.incrementAndGet()
@@ -81,7 +84,7 @@ final class JobWatch private () extends SparkFirehoseListener {
     */
   def measure[T](body: => T): T = {
     settle()
-    jobQ.clear(); execPlans.clear()
+    jobQ.clear(); execPlans.clear(); startQ.clear()
     val r = body
     settle()
     r
@@ -93,6 +96,10 @@ final class JobWatch private () extends SparkFirehoseListener {
   def at(prefix: String): Seq[Job] = jobs.filter(_.site.startsWith(prefix))
   /** SQL executions the measured jobs ran under. */
   def executions: Set[Long] = jobs.flatMap(_.execution).toSet
+  /** Every SQL execution that started while measuring, as (id,
+    * description), including those that launched no job.
+    */
+  def started: Seq[(Long, String)] = startQ.asScala.toSeq.sortBy(_._1)
   /** Physical plan of a SQL execution that started while measuring. */
   def plan(execution: Long): Option[String] = Option(execPlans.get(execution))
   def describe: String = jobs.map { j =>

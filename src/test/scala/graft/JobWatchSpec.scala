@@ -20,4 +20,15 @@ class JobWatchSpec extends AnyFunSuite {
       assert(w.describe.contains("[collect at JobWatchSpec.scala"), w.describe)
     }
   }
+
+  test("an execution that launches no job is still recorded as started") {
+    // Dataset.rdd plans the query under an `rdd` execution and runs nothing
+    val df = spark.range(0, 1000, 1, 4).select((col("id") * 2).as("x"))
+    JobWatch.on(spark) { w =>
+      w.measure(df.rdd.getNumPartitions)
+      assert(w.count == 0, w.describe)
+      assert(w.started.nonEmpty && w.started.forall(_._2.startsWith("rdd at")),
+        w.started)
+    }
+  }
 }

@@ -210,7 +210,7 @@ class LandingVerdictSpec extends AnyFunSuite {
       Set(1003L, 1005L))
   }
 
-  test("fresh batch with stored and in-batch candidates: 6 SQL executions") {
+  test("fresh batch with stored and in-batch candidates: 5 SQL executions") {
     // stored docs share 5 of 12 words with the batch's docs, and the
     // batch's docs pairwise with each other: band collisions on both
     // sides, none near enough to verify, so every doc lands
@@ -245,7 +245,7 @@ class LandingVerdictSpec extends AnyFunSuite {
       val compiled = compile.getCount - before
       info(s"fresh batch: ${w.executions.size} SQL executions, ${w.count} jobs, " +
         s"$compiled compiled classes")
-      assert(w.executions.size <= 6,
+      assert(w.executions.size <= 5,
         s"fresh batch ran ${w.executions.size} SQL executions:${w.describe}")
       assert(!w.jobs.exists(_.site.contains("localCheckpoint")),
         s"no verified in-batch pair, yet connected components ran:${w.describe}")

@@ -122,5 +122,15 @@ class SessionSpec extends AnyFunSuite {
       confSets)
     assert(confSets.forall(_._3.contains(
       "conf.set(\"spark.sql.legacy.bucketedTableScan.outputOrdering\", \"true\")")), confSets)
+    // per-call reads plan no query at construction: `.rdd` (whose planning
+    // starts an `rdd` SQL execution) stays out of the table and landing
+    // layers, but for the memoized cache source's one re-split probe
+    val rddUse = "\\.rdd\\b".r
+    val rdds = lines.filter(h => (h._1.startsWith("io/") || h._1.startsWith("streaming/")) &&
+      rddUse.findFirstIn(h._3).nonEmpty).map(h => (h._1, h._3))
+    val allowed = Seq(
+      // Tables.readRaw
+      ("io/Tables.scala", "if (raw.rdd.getNumPartitions < target) raw.repartition(target) else raw"))
+    assert(rdds == allowed, rdds)
   }
 }

@@ -2124,6 +2124,28 @@ class TablesSpec extends AnyFunSuite {
       m.files.nonEmpty && m.files.size <= Tables.plannedPartitions(agg)))
   }
 
+  test("load of an un-persisted shuffle frame runs its jobs only under the write") {
+    // load sizes its write from the input's PLAN, as append does: counting
+    // an adaptive input's partitions through Dataset.rdd ran its shuffle
+    // stages outside any SQL execution, and the write then ran them again
+    val path = tmp("loadshuf")
+    val agg = spark.range(0, 4000).select((col("id") % 97).as("k"), col("id"))
+      .groupBy("k").agg(max(col("id")).as("ts"), count(lit(1)).as("n"))
+    JobWatch.on(spark) { w =>
+      w.measure(Tables.load(agg, path, Seq("k"), "ts"))
+      info(s"load wrote ${Tables.manifest(spark, path).map(_.files.size).getOrElse(0)} " +
+        s"files for ${Tables.plannedPartitions(agg)} planned partitions")
+      assert(w.count > 0, "the write itself must register")
+      val outside = w.jobs.filter(_.execution.isEmpty)
+      assert(outside.isEmpty, s"jobs ran outside any SQL execution:${w.describe}")
+      val nonWrite = w.executions.filterNot(e =>
+        w.plan(e).exists(_.contains("InsertIntoHadoopFsRelationCommand")))
+      assert(nonWrite.isEmpty,
+        s"executions other than the write launched jobs ($nonWrite):${w.describe}")
+    }
+    assert(Tables.snapshot(spark, path).count() == 97)
+  }
+
   test("commitEmptyStreamBatch reclaims expired retired files (all-drop steady state, r18)") {
     val path = tmp("emptyreclaim")
     Tables.load((0L until 500L).map(i => (i, i * 1.0)).toDF("ts", "v"),
