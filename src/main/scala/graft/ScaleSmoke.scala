@@ -137,38 +137,29 @@ object ScaleSmoke {
     lazy val l = series.filter(col("k") % 2 === 0).select(col("k").as("ts"), col("value"))
     lazy val r = series.filter(col("k") % 2 === 1)
       .groupBy((col("k") - 1).as("ts")).agg(max("value").as("value"))
-    // Align's keyless as-of runs AsofMerge's ranged carry scan (the
-    // numeric lanes of AsofMerge.keylessRangedAsof)
+    // every keyless as-of, whatever its value type, is one ranged carry
+    // scan (AsofMerge.keylessAsof: a side-tagged union under an
+    // OrderedScan with the row-carry kernel)
     run("keyless as-of (carry scan)") {
       graft.join.Align.asofJoin(l, r, Seq(), "ts", "value")
         .write.format("noop").mode("overwrite").save()
     }
-    // round-7: keyless as-of with a STRING value — the dict-coded lane
-    // path (AsofMerge.keylessDictAsof): distinct+rank dictionary, encode
-    // join, the same parallel ranged scan on code lanes, decode join.
-    // The string domain is the distinct price strings (~hundreds of
-    // thousands — a mid-size dictionary, inside the broadcast guard);
-    // compare with the numeric "keyless as-of (carry scan)" above for
-    // the dictionary overhead on the same shape.
-    run("keyless string as-of (dict lanes)") {
+    // the same shape with STRING, ARRAY and STRUCT values: the same scan
+    // carrying wider values; compare with the numeric section above for
+    // the cost of the value width
+    run("keyless string as-of (carry scan)") {
       val rs = r.withColumn("value",
         format_number(col("value"), 2)).select(col("ts"), col("value"))
       graft.plans.AsofMerge.asofJoin(l.select(col("ts")), rs, Seq(), "ts", "value")
         .write.format("noop").mode("overwrite").save()
     }
-    // round-8: the same shape with an ARRAY value (dict-coded by value)
-    // and a STRUCT value (per-field lane decomposition + presence lane) —
-    // the two complex-type routes that close the serial-exec fallback.
-    // Array domain = distinct [price, price/2] pairs (same cardinality as
-    // the string dict above); struct fields ride one double lane + one
-    // dict lane each.
-    run("keyless array as-of (dict lanes)") {
+    run("keyless array as-of (carry scan)") {
       val ra = r.select(col("ts"),
         array(col("value"), col("value") / 2).as("value"))
       graft.plans.AsofMerge.asofJoin(l.select(col("ts")), ra, Seq(), "ts", "value")
         .write.format("noop").mode("overwrite").save()
     }
-    run("keyless struct as-of (decomposed lanes)") {
+    run("keyless struct as-of (carry scan)") {
       val rst = r.select(col("ts"),
         struct(col("value").as("v"),
           format_number(col("value"), 0).as("tag")).as("value"))

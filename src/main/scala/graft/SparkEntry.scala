@@ -534,7 +534,7 @@ object SparkEntry {
     "q_asof_keyless" -> ((s, dir) => {
       // keyless as-of over the GLOBAL series (the reference's default
       // single-series shape, func.c:4591-4662) — exercises the ranged
-      // carry-forward scan, not a whole-frame window. The right side is
+      // carry scan, not a whole-frame window. The right side is
       // pre-deduped per ts (max value) so equal-ts ties can't make the
       // match nondeterministic between engines.
       val ev = Tables.read(s, dir, "events")
@@ -548,11 +548,11 @@ object SparkEntry {
     }),
     "q_asof_exec_keyless" -> ((s, dir) => {
       // q_asof_keyless's shape through the custom-operator API: keys=()
-      // routes to the parallel ranged carry-forward scan (AsofMerge
-      // .asofJoinDir keyless branch) instead of a single AllTuples merge
-      // task — the plan has NO single-task merge (AsofExecSpec asserts
-      // the partitioning). Right side deduped per ts so equal-ts ties
-      // can't make the match nondeterministic between engines.
+      // runs the parallel ranged carry scan (AsofMerge.asofJoinDir's
+      // keyless route) instead of a single AllTuples merge task — the
+      // plan has NO single-task merge. Right side deduped per ts so
+      // equal-ts ties can't make the match nondeterministic between
+      // engines.
       val ev = Tables.read(s, dir, "events")
       val l = ev.filter(col("event_type") === "purchase")
         .select(col("event_id"), col("ts"), col("value"))
@@ -563,13 +563,12 @@ object SparkEntry {
           fl(col("value")).as("value"), fl(col("asof_value")).as("asof_value"))
     }),
     "q_asof_exec_array" -> ((s, dir) => {
-      // keyless as-of carrying an ARRAY value column: arrays group/join by
-      // value, so they ride the dict-coded parallel lanes — the last
-      // reachable complex-type fallback closed (maps alone stay serial).
-      // Right array is [max, min] per ts (deterministic construction; a
-      // collect_list would have nondeterministic order). Elements are
-      // projected for the oracle; the array itself is what the scan
-      // carried.
+      // keyless as-of carrying an ARRAY value column through the
+      // parallel carry scan, which copies the matched row's array as
+      // stored. Right array is [max, min] per ts (deterministic
+      // construction; a collect_list would have nondeterministic order).
+      // Elements are projected for the oracle; the array itself is what
+      // the scan carried.
       val ev = Tables.read(s, dir, "events")
       val l = ev.filter(col("event_type") === "purchase")
         .select(col("event_id"), col("ts"), col("value"))
@@ -578,18 +577,16 @@ object SparkEntry {
           array(max(col("value")), min(col("value"))).as("av"))
       val out = graft.plans.AsofMerge.asofJoin(l, r, Seq(), "ts", "av", "asof_av")
       require(!out.queryExecution.executedPlan.toString.contains("AsofMergeJoin"),
-        "array keyless as-of must ride the dict-coded parallel scan")
+        "array keyless as-of must ride the parallel carry scan")
       out.select(col("event_id"), fl(col("value")).as("value"),
         fl(element_at(col("asof_av"), 1)).as("asof_mx"),
         fl(element_at(col("asof_av"), 2)).as("asof_mn"))
     }),
     "q_asof_struct" -> ((s, dir) => {
-      // keyless as-of carrying a STRUCT value column through the
-      // decomposed parallel lanes (double + int64 + dict-coded string
-      // field, plus the presence lane) — the round-7 "complex-type
-      // keyless as-of" closure. The plan is asserted free of the
-      // single-task merge; the oracle carries the fields separately and
-      // the query unpacks the struct to match.
+      // keyless as-of carrying a STRUCT value column (double + int64 +
+      // string fields) whole through the parallel carry scan. The plan
+      // is asserted free of the single-task merge; the oracle carries
+      // the fields separately and the query unpacks the struct to match.
       val ev = Tables.read(s, dir, "events")
       val l = ev.filter(col("event_type") === "purchase")
         .select(col("event_id"), col("ts"), col("value"))
@@ -599,7 +596,7 @@ object SparkEntry {
         .select(col("ts"), struct(col("v"), col("sid"), col("tag")).as("sv"))
       val out = graft.plans.AsofMerge.asofJoin(l, r, Seq(), "ts", "sv", "asof_sv")
       require(!out.queryExecution.executedPlan.toString.contains("AsofMergeJoin"),
-        "struct keyless as-of must ride the decomposed parallel scan")
+        "struct keyless as-of must ride the parallel carry scan")
       out.select(col("event_id"), fl(col("value")).as("value"),
         fl(col("asof_sv").getField("v")).as("asof_v"),
         col("asof_sv").getField("sid").as("asof_sid"),
@@ -607,9 +604,8 @@ object SparkEntry {
     }),
     "q_asof_exec_map" -> ((s, dir) => {
       // keyless as-of carrying a MAP value column through the parallel
-      // scan via the row-id carry (the int64 right-row id rides the exact
-      // hi/lo lanes; one hash join fetches the carried row's map after
-      // the scan). The right map is {mx→max, mn→min} per ts (deterministic
+      // carry scan, which copies the matched row's map as stored. The
+      // right map is {mx→max, mn→min} per ts (deterministic
       // construction); the oracle carries the values as columns and the
       // query unpacks the carried map to match.
       val ev = Tables.read(s, dir, "events")
@@ -621,18 +617,18 @@ object SparkEntry {
             array(max(col("value")), min(col("value")))).as("mv"))
       val out = graft.plans.AsofMerge.asofJoin(l, r, Seq(), "ts", "mv", "asof_mv")
       require(!out.queryExecution.executedPlan.toString.contains("AsofMergeJoin"),
-        "map keyless as-of must ride the row-id-carry parallel scan")
+        "map keyless as-of must ride the parallel carry scan")
       out.select(col("event_id"), fl(col("value")).as("value"),
         fl(element_at(col("asof_mv"), "mx")).as("asof_mx"),
         fl(element_at(col("asof_mv"), "mn")).as("asof_mn"))
     }),
     "q_asof_exec_map_nested" -> ((s, dir) => {
       // keyless as-of carrying a NESTED map (map<string, map<string,
-      // double>>) through the parallel scan via the row-id carry (README
-      // "As-of value types") — nesting depth does not change the scan's
-      // shape, only the fetch join's payload width. The right map is
-      // {stats → {mx→max, mn→min}} per ts; the query unpacks the carried
-      // nesting to the scalars the oracle computes.
+      // double>>) through the parallel carry scan (README "As-of value
+      // types") — nesting depth does not change the scan's shape, only
+      // the carried value's width. The right map is {stats → {mx→max,
+      // mn→min}} per ts; the query unpacks the carried nesting to the
+      // scalars the oracle computes.
       val ev = Tables.read(s, dir, "events")
       val l = ev.filter(col("event_type") === "purchase")
         .select(col("event_id"), col("ts"), col("value"))
@@ -643,18 +639,17 @@ object SparkEntry {
               array(max(col("value")), min(col("value")))))).as("nmv"))
       val out = graft.plans.AsofMerge.asofJoin(l, r, Seq(), "ts", "nmv", "asof_nmv")
       require(!out.queryExecution.executedPlan.toString.contains("AsofMergeJoin"),
-        "one-level nested-map as-of must ride the row-id-carry parallel scan")
+        "one-level nested-map as-of must ride the parallel carry scan")
       out.select(col("event_id"), fl(col("value")).as("value"),
         fl(element_at(element_at(col("asof_nmv"), "stats"), "mx")).as("asof_mx"),
         fl(element_at(element_at(col("asof_nmv"), "stats"), "mn")).as("asof_mn"))
     }),
     "q_asof_exec_map_deep" -> ((s, dir) => {
       // keyless as-of carrying a DEPTH-3 map (map<string, map<string,
-      // map<string, double>>>) through the same row-id carry as the flat
-      // and one-level map cases (r17 retired the recursive transcoder;
-      // README "As-of value types"). The right map is {agg → {stats →
-      // {mx→max, mn→min}}} per ts; the query unpacks the carried nesting
-      // to the oracle scalars.
+      // map<string, double>>>) through the same carry scan as the flat
+      // and one-level map cases (README "As-of value types"). The right
+      // map is {agg → {stats → {mx→max, mn→min}}} per ts; the query
+      // unpacks the carried nesting to the oracle scalars.
       val ev = Tables.read(s, dir, "events")
       val l = ev.filter(col("event_type") === "purchase")
         .select(col("event_id"), col("ts"), col("value"))
@@ -666,7 +661,7 @@ object SparkEntry {
                 array(max(col("value")), min(col("value")))))))).as("dmv"))
       val out = graft.plans.AsofMerge.asofJoin(l, r, Seq(), "ts", "dmv", "asof_dmv")
       require(!out.queryExecution.executedPlan.toString.contains("AsofMergeJoin"),
-        "depth-3 map as-of must ride the row-id-carry parallel scan")
+        "depth-3 map as-of must ride the parallel carry scan")
       val stats = element_at(element_at(col("asof_dmv"), "agg"), "stats")
       out.select(col("event_id"), fl(col("value")).as("value"),
         fl(element_at(stats, "mx")).as("asof_mx"),

@@ -715,7 +715,7 @@ object FuzzGen {
 
     def asofExecStage(tag: String): Unit = { // as-of via the CUSTOM OPERATOR
       // keyed → AsofMergeJoinExec (two-cursor merge); keyless → the ranged
-      // carry-forward scan (hi/lo lanes). The right side filters NULL
+      // carry scan (row-carry kernel). The right side filters NULL
       // values BEFORE grouping so rv is never NULL — there row-carry and
       // the window form's skip-NULL contract coincide, and DuckDB's ASOF
       // (row-carry) renders both exactly.

@@ -24,9 +24,9 @@ object Align {
 
   /** Fail loud when an input frame already carries one of an operator's
     * reserved working/output names. Case-INSENSITIVE, because Spark column
-    * resolution is case-insensitive by default — a user `__RV` would
+    * resolution is case-insensitive by default — a user `__PREVN` would
     * otherwise slip past an exact-match guard and be silently clobbered
-    * by `withColumn("__rv", ...)` (same reasoning as
+    * by the working `__prevn` (same reasoning as
     * AsofMerge.guardInternalNames).
     */
   private def guardReserved(cols: Seq[String], names: Seq[String], ctx: String): Unit = {
@@ -94,19 +94,6 @@ object Align {
                   valueCol: String, outCol: String = "asof_value",
                   direction: Int = -1, inclusive: Boolean = true): DataFrame = {
     require(direction == -1 || direction == 1, "direction must be -1 or +1")
-    // working names reserved for the as-of family (regex guard,
-    // case-insensitive like Spark's own resolution, same pattern as
-    // AsofMerge.guardInternalNames): a frame carrying one fails loud
-    locally {
-      val reserved = "(?i)(__side|__rv|__dcode|__dout|__cv\\d+|__has)".r
-      val clash = (left.columns ++ right.columns).distinct
-        .filter(c => reserved.pattern.matcher(c).matches())
-      require(clash.isEmpty, s"column name(s) ${clash.mkString(", ")} " +
-        "collide with the as-of scan's reserved working names " +
-        "(__side/__rv/__dcode/__dout/__cvN/__has); rename them before the join")
-      require(!reserved.pattern.matcher(outCol).matches(),
-        s"outCol '$outCol' collides with the as-of scan's reserved working names")
-    }
     guardOutCol(left.columns.toSeq, outCol, "asofJoinDir")
     skipNulls(left, right, keys, ts, Seq(valueCol), Seq(outCol), direction, inclusive)
   }
@@ -128,7 +115,7 @@ object Align {
   def asofJoinNearest(left: DataFrame, right: DataFrame, keys: Seq[String], ts: String,
                       valueCol: String, outCol: String = "asof_value"): DataFrame = {
     guardReserved(left.columns.toSeq ++ right.columns,
-      Seq("__pkn", "__prevn", "__prevt", "__nextn", "__nextt", "__dcode", "__dout"),
+      Seq("__prevn", "__prevt", "__nextn", "__nextt"),
       "asofJoinNearest")
     guardOutCol(left.columns.toSeq, outCol, "asofJoinNearest")
     val withPrev = skipNulls(left, right, keys, ts, Seq(valueCol, ts),
@@ -157,7 +144,7 @@ object Align {
                   valueCol: String, tolerance: Column,
                   outCol: String = "asof_value"): DataFrame = {
     guardReserved(left.columns.toSeq ++ right.columns :+ outCol,
-      Seq("__pk", "__asof", "__mts", "__dcode", "__dout"), "asofJoinTol")
+      Seq("__mts"), "asofJoinTol")
     guardOutCol(left.columns.toSeq, outCol, "asofJoinTol")
     skipNulls(left, right, keys, ts, Seq(valueCol, ts), Seq(outCol, "__mts"),
       direction = -1, inclusive = true)
@@ -168,10 +155,8 @@ object Align {
   /** Positions in `right` matching each left ts — cs_asof_join_pos
     * (func.c:4591-4662): the as-of join carrying right.pos.
     */
-  def asofJoinPos(left: DataFrame, right: DataFrame, keys: Seq[String], ts: String): DataFrame = {
-    guardReserved(left.columns.toSeq ++ right.columns, Seq("__rpos"), "asofJoinPos")
+  def asofJoinPos(left: DataFrame, right: DataFrame, keys: Seq[String], ts: String): DataFrame =
     asofJoin(left, right, keys, ts, "pos", "right_pos")
-  }
 
   /** Sorted-merge equi-join on ts — cs_join / cs_join_pos
     * (func.c:4677-4801): inner join on (keys, ts) returning left columns +

@@ -16,13 +16,14 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * (keys, order) order, appending `outs` to every row — the cumulative,
   * trailing-window and recursive (EMA/ATR) families the reference runs as
   * lazy iterators over an ordered column (func.c:1632-1788, SURVEY §2.5),
-  * and the ranged `pos` numbering. `ranged = false` (keyed calls): each
-  * key lives in one partition. `ranged = true` (keyless calls, and keyed
-  * numbering with few keys): a key spans several range partitions. The
-  * planner plants the exchange and sort, so building the frame runs no
-  * job, and statistics come from the child. Kernels read the child's rows
-  * as `Row`s by column index, so the node references every child column:
-  * `ColumnPruning` can never narrow the child under it.
+  * the ranged `pos` numbering and the keyless as-of carry. `ranged =
+  * false` (keyed calls): each key lives in one partition. `ranged = true`
+  * (keyless calls, and keyed numbering with few keys): a key spans
+  * several range partitions. The planner plants the exchange and sort, so
+  * building the frame runs no job, and statistics come from the child.
+  * Kernels read the child's rows as `Row`s by column index, so the node
+  * references every child column: `ColumnPruning` can never narrow the
+  * child under it.
   */
 case class OrderedScan(
     child: LogicalPlan,
@@ -106,7 +107,7 @@ case class OrderedScanExec(
         var key: InternalRow = null
         var init: C = null.asInstanceOf[C]
         var s: S = null.asInstanceOf[S]
-        runs.walk(it).foreach { case (start, r, _) =>
+        runs.walk(it, k).foreach { case (start, r, _) =>
           if (start != null) {
             if (key != null) buf += ((key, init, s))
             key = start; init = k.init(r); s = k.zero
@@ -132,7 +133,7 @@ case class OrderedScanExec(
       val proj = UnsafeProjection.create(outAttrs, outAttrs)
       var run = -1
       var c: C = null.asInstanceOf[C]
-      runs.walk(it).map { case (start, r, ir) =>
+      runs.walk(it, k).map { case (start, r, ir) =>
         if (start != null) {
           run += 1
           // broadcast carries are shared by the tasks of an executor
@@ -149,8 +150,8 @@ case class OrderedScanExec(
 }
 
 /** Walks a partition's rows as (a copy of the key if the row starts a run
-  * else null, the row as a `Row`, the row). Keys compare with the sort's
-  * own ordering: binary keys by content, NaN keys equal.
+  * else null, the row as the kernel reads it, the row). Keys compare with
+  * the sort's own ordering: binary keys by content, NaN keys equal.
   */
 private case class Runs(keys: Seq[Expression], input: Seq[Attribute]) {
   def sameKey(): (InternalRow, InternalRow) => Boolean = {
@@ -158,16 +159,15 @@ private case class Runs(keys: Seq[Expression], input: Seq[Attribute]) {
     (a, b) => ord.compare(a, b) == 0
   }
 
-  def walk(it: Iterator[InternalRow]): Iterator[(InternalRow, Row, InternalRow)] = {
-    val toRow = CatalystTypeConverters.createToScalaConverter(
-      StructType(input.map(a => StructField(a.name, a.dataType, a.nullable))))
+  def walk(it: Iterator[InternalRow], k: ScanKernel[_, _]): Iterator[(InternalRow, Row, InternalRow)] = {
+    val toRow = k.reader(StructType(input.map(a => StructField(a.name, a.dataType, a.nullable))))
     val keyOf = UnsafeProjection.create(keys, input)
     val same = sameKey()
     var cur: InternalRow = null
     it.map { ir =>
       val key = keyOf(ir)
       val start = if (cur != null && same(cur, key)) null else { cur = key.copy(); cur }
-      (start, toRow(ir).asInstanceOf[Row], ir)
+      (start, toRow(ir), ir)
     }
   }
 }
@@ -180,6 +180,9 @@ private case class Runs(keys: Seq[Expression], input: Seq[Attribute]) {
   * carry when `replay` mutates it.
   */
 abstract class ScanKernel[C, S] extends Serializable {
+  /** How the scan hands this kernel the child's rows: as Scala `Row`s. */
+  private[plans] def reader(input: StructType): InternalRow => Row =
+    CatalystTypeConverters.createToScalaConverter(input).asInstanceOf[InternalRow => Row]
   def init(first: Row): C
   def replay(c: C, r: Row, out: Array[Any]): C
   def zero: S
@@ -285,5 +288,37 @@ object ScanKernel {
       win
     }
     override def toString: String = s"WindowTail($n)"
+  }
+
+  /** Row-carry over a side-tagged union, the reference's as-of merge
+    * (func.c:4591-4662): a right row (`sideIdx` = 0) replaces the carry
+    * with its `valueIdx` columns exactly as they are, NULLs included, and
+    * every row emits the carry (NULLs before any right row). A run's
+    * summary is its last right row; the later one wins. The kernel reads
+    * its columns in Catalyst form and keeps copies, so every value type
+    * carries exactly: a round trip through Scala values would re-order
+    * the entries of a map and move dates in the 1582 calendar gap.
+    */
+  final class Carry(sideIdx: Int, valueIdx: Seq[Int]) extends ScanKernel[Array[Any], Row] {
+    override private[plans] def reader(input: StructType): InternalRow => Row = {
+      val read = (sideIdx +: valueIdx).map(i => (i, input(i).dataType))
+      ir => {
+        val a = new Array[Any](input.size)
+        read.foreach { case (i, dt) => a(i) = InternalRow.copyValue(ir.get(i, dt)) }
+        new GenericRow(a)
+      }
+    }
+    private def right(r: Row): Boolean = r.getInt(sideIdx) == 0
+    private def values(r: Row): Array[Any] = valueIdx.map(r.get).toArray
+    def init(first: Row): Array[Any] = null
+    def replay(c: Array[Any], r: Row, out: Array[Any]): Array[Any] = {
+      val next = if (right(r)) values(r) else c
+      if (next == null) out.indices.foreach(out(_) = null) else next.copyToArray(out)
+      next
+    }
+    def zero: Row = null
+    def summarize(s: Row, r: Row): Row = if (right(r)) r else s
+    def compose(c: Array[Any], s: Row): Array[Any] = if (s == null) c else values(s)
+    override def toString: String = s"Carry(${valueIdx.size})"
   }
 }

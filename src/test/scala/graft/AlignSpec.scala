@@ -127,11 +127,12 @@ class AlignSpec extends AnyFunSuite {
     assert(gd.map(Option(_).map(_.toString).orNull) ==
       Seq(null, "1.250000000000000000", "7.500000000000000000",
         "7.500000000000000000"))
-    // reserved dictionary names fail loud
-    val e = intercept[IllegalArgumentException] {
-      Align.asofJoin(l.withColumn("__dout", col("ts")), r, Seq(), "ts", "v")
-    }
-    assert(e.getMessage.contains("__dout"))
+    // __dout, the retired dictionary route's name, is an ordinary column:
+    // it joins and gives the same rows as a renamed one
+    assert(Align.asofJoin(l.withColumn("__dout", col("ts")), r, Seq(), "ts", "v")
+      .orderBy("ts").collect().toSeq ==
+      Align.asofJoin(l.withColumn("dout", col("ts")), r, Seq(), "ts", "v")
+        .orderBy("ts").collect().toSeq)
   }
 
   test("rangeJoin with no keys (pure range join)") {
@@ -376,20 +377,20 @@ class AlignSpec extends AnyFunSuite {
   }
 
   test("reserved-name guards fold case like Spark's resolution") {
-    // spark.sql.caseSensitive=false resolves __RV to the working __rv,
-    // so an exact-match guard would let the clobbering through
-    val l = left.withColumn("__RV", lit(1))
+    // spark.sql.caseSensitive=false resolves __PREVN to the working
+    // __prevn, so an exact-match guard would let the clobbering through
+    val l = left.withColumn("__PREVN", lit(1))
     val e = intercept[IllegalArgumentException] {
-      Align.asofJoin(l, right, Seq("key"), "ts", "v")
+      Align.asofJoinNearest(l, right, Seq("key"), "ts", "v")
     }
-    assert(e.getMessage.contains("__RV"))
+    assert(e.getMessage.contains("__PREVN"))
     intercept[IllegalArgumentException] {
       Align.windowJoin(left.withColumn("WIN_COUNT", lit(1)), right,
         Seq("key"), "ts", 3L, 3L, "v")
     }
   }
 
-  test("composition-layer working names are guarded (__slot/__salt/__prevn/__pk/__rpos)") {
+  test("composition-layer working names are guarded (__slot/__salt/__prevn)") {
     intercept[IllegalArgumentException] {
       Align.rangeJoin(left.withColumn("__slot", lit(1)),
         Seq(("k", 1L, 2L, "t")).toDF("key", "start", "end", "tag"),
@@ -403,14 +404,20 @@ class AlignSpec extends AnyFunSuite {
       Align.asofJoinNearest(left.withColumn("__prevn", lit(1)), right,
         Seq("key"), "ts", "v")
     }
-    intercept[IllegalArgumentException] {
-      Align.asofJoinTol(left, right.withColumn("__pk", lit(1)),
-        Seq("key"), "ts", "v", lit(5L))
-    }
-    intercept[IllegalArgumentException] {
-      Align.asofJoinPos(left.withColumn("__rpos", lit(1)),
-        right.withColumn("pos", lit(1L)), Seq("key"), "ts")
-    }
+  }
+
+  test("retired working names (__pk/__rpos) join like any column") {
+    // no code path of asofJoinTol or asofJoinPos uses them any more: a
+    // frame carrying one gives the same rows as a renamed one
+    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Unit =
+      assert(a.orderBy("ts").collect().toSeq == b.orderBy("ts").collect().toSeq)
+    same(Align.asofJoinTol(left, right.withColumn("__pk", lit(1)),
+        Seq("key"), "ts", "v", lit(5L)),
+      Align.asofJoinTol(left, right.withColumn("pk", lit(1)),
+        Seq("key"), "ts", "v", lit(5L)))
+    val pos = right.withColumn("pos", col("ts") * 2)
+    same(Align.asofJoinPos(left.withColumn("__rpos", col("ts")), pos, Seq("key"), "ts"),
+      Align.asofJoinPos(left.withColumn("rpos", col("ts")), pos, Seq("key"), "ts"))
   }
 
   test("saltedEquiJoin: salt=0 rejected; byte-identical duplicates still join exactly") {

@@ -143,6 +143,71 @@ class AsofMergeSpec extends AnyFunSuite {
       .toDF(l.columns :+ "asof_value": _*)
   }
 
+  /** A value as text that tells NaN, -0.0 and byte contents apart, with
+    * map entries sorted (`collect()` hands maps back unordered).
+    */
+  private def show(v: Any): String = v match {
+    case null => "∅"
+    case b: Array[Byte] => b.mkString("bytes[", ",", "]")
+    case m: scala.collection.Map[_, _] =>
+      m.toSeq.map { case (k, x) => s"${show(k)}->${show(x)}" }.sorted.mkString("map{", ",", "}")
+    case r: org.apache.spark.sql.Row => r.toSeq.map(show).mkString("{", ",", "}")
+    case xs: scala.collection.Seq[_] => xs.map(show).mkString("[", ",", "]")
+    case o => o.toString
+  }
+
+  test("keyless as-of carries every value type through the ranged scan, equal to the serial exec") {
+    import java.time.{Duration, LocalDateTime}
+    val l = Seq(3L, 5L, 6L, 7L, 9L, 11L).map(Tuple1(_)).toDF("ts")
+    val cases: Seq[(String, DataFrame)] = Seq(
+      "timestamp_ntz" -> Seq[(Long, Option[LocalDateTime])](
+        (5L, Some(LocalDateTime.parse("2024-02-29T23:59:59.123456"))), (6L, None),
+        (8L, Some(LocalDateTime.parse("1969-12-31T00:00:00.000001"))),
+        (10L, Some(LocalDateTime.parse("0001-01-01T00:00:00")))).toDF("ts", "v"),
+      "interval day to second" -> Seq[(Long, Option[Duration])](
+        (5L, Some(Duration.ofSeconds(-90061L, 5000L))), (6L, None),
+        (8L, Some(Duration.ofDays(3))), (10L, Some(Duration.ZERO))).toDF("ts", "v"),
+      "binary" -> Seq[(Long, Array[Byte])]((5L, Array[Byte](0, -1, 7)), (6L, null),
+        (8L, Array.empty[Byte]), (10L, Array[Byte](-128, 127))).toDF("ts", "v"),
+      "decimal(38,18)" -> Seq[(Long, Option[BigDecimal])](
+        (5L, Some(BigDecimal("12345678901234567890.123456789012345678"))), (6L, None),
+        (8L, Some(BigDecimal("-0.000000000000000001"))), (10L, Some(BigDecimal(0))))
+        .toDF("ts", "v"),
+      "float NaN/-0.0" -> Seq[(Long, Option[Float])]((5L, Some(Float.NaN)), (6L, Some(-0.0f)),
+        (8L, None), (10L, Some(0.0f))).toDF("ts", "v"),
+      "struct<a: map<string,int>, b: double>" -> Seq[(Long, Map[String, Int], Option[Double], Boolean)](
+        (5L, Map("x" -> 1, "y" -> 2), Some(-0.0), true), (6L, null, Some(Double.NaN), true),
+        (8L, Map.empty, Some(1.5), false), (10L, Map.empty, None, true))
+        .toDF("ts", "a", "b", "present")
+        .select(col("ts"), when(col("present"), struct(col("a"), col("b"))).as("v")))
+    assert(cases.map(_._2.schema("v").dataType.sql) == Seq("TIMESTAMP_NTZ",
+      "INTERVAL DAY TO SECOND", "BINARY", "DECIMAL(38,18)", "FLOAT",
+      "STRUCT<a: MAP<STRING, INT>, b: DOUBLE>"))
+    def shown(df: DataFrame): Seq[String] =
+      df.collect().map(r => r.toSeq.map(show).mkString("|")).toSeq.sorted
+    for ((name, r) <- cases; dir <- Seq(-1, 1); incl <- Seq(true, false)) {
+      val merge = AsofMerge.asofJoinDir(l, r, Seq(), "ts",
+        Seq("v"), Seq("asof_value"), direction = dir, inclusive = incl)
+      assert(!merge.queryExecution.executedPlan.toString.contains("AsofMergeJoin"),
+        s"$name dir=$dir incl=$incl planned the single-task merge")
+      val ground = serialKeylessExec(l, r, "ts", "v", direction = dir, inclusive = incl)
+      assert(shown(merge) == shown(ground), s"$name dir=$dir incl=$incl")
+    }
+    // the carry copies Catalyst values: a round trip through Scala values
+    // would hand back an eight-entry map in hash order and move dates in
+    // the 1582 Julian/Gregorian gap
+    val r = Seq(Tuple1(5L)).toDF("ts").select(col("ts"),
+      map_from_arrays(array((1 to 8).map(i => lit(s"z$i")): _*),
+        array((1 to 8).map(lit(_)): _*)).as("m"),
+      lit("1582-10-10").cast("date").as("d"),
+      lit("1582-10-10 01:02:03").cast("timestamp").as("t"))
+    val out = AsofMerge.asofJoinDir(l, r, Seq(), "ts", Seq("m", "d", "t"), Seq("om", "od", "ot"))
+    val got = out.filter(col("ts") === 7L).select(map_keys(col("om")), col("od").cast("string"),
+      col("ot").cast("string")).head()
+    assert(got.getSeq[String](0) == (1 to 8).map(i => s"z$i"))
+    assert(got.getString(1) == "1582-10-10" && got.getString(2) == "1582-10-10 01:02:03")
+  }
+
   test("keyless string as-of rides dictionary-coded lanes (no single-task merge)") {
     val l = Seq(Tuple1(3L), Tuple1(5L), Tuple1(7L), Tuple1(9L)).toDF("ts")
     val r = Seq((5L, "a"), (6L, "b"), (8L, null: String)).toDF("ts", "v")

@@ -51,6 +51,40 @@ class OrderedScanSpec extends AnyFunSuite {
     }
   }
 
+  /** Keyless as-of frames over one value type each; none needs a job to
+    * build.
+    */
+  private def keylessAsofs: Seq[(String, DataFrame)] = {
+    val l = Seq(Tuple1(5L), Tuple1(7L)).toDF("ts")
+    Seq(
+      "string" -> Seq((5L, "a"), (6L, "b")).toDF("ts", "v"),
+      "decimal" -> Seq((5L, BigDecimal("1.25")), (6L, BigDecimal("7.5"))).toDF("ts", "v"),
+      "array" -> Seq((5L, Seq(1, 2)), (6L, Seq(3))).toDF("ts", "v"),
+      "struct" -> Seq((5L, (1.5, "a")), (6L, (2.5, "b"))).toDF("ts", "v"),
+      "map" -> Seq((5L, Map("a" -> 1)), (6L, Map("b" -> 2))).toDF("ts", "v"))
+      .map { case (name, r) => name -> graft.plans.AsofMerge.asofJoin(l, r, Seq(), "ts", "v") }
+  }
+
+  test("building and explaining keyless as-of frames launches no Spark job, for any value type") {
+    val frames = JobWatch.on(spark) { w =>
+      val built = w.measure(keylessAsofs.map { f => f._2.explain(); f })
+      assert(w.count == 0, s"keyless as-of construction or explain launched jobs:${w.describe}")
+      built
+    }
+    assert(frames.map(_._2.count()) == Seq.fill(frames.size)(2L))
+  }
+
+  test("a map-valued keyless as-of collects with no more jobs than a double-valued one") {
+    val l = Seq(Tuple1(5L), Tuple1(7L)).toDF("ts")
+    def jobs(r: DataFrame): Int = JobWatch.on(spark) { w =>
+      w.measure(graft.plans.AsofMerge.asofJoin(l, r, Seq(), "ts", "v").collect())
+      w.count
+    }
+    val maps = jobs(Seq((5L, Map("a" -> 1)), (6L, Map("b" -> 2))).toDF("ts", "v"))
+    val doubles = jobs(Seq((5L, 1.0), (6L, 2.0)).toDF("ts", "v"))
+    assert(maps <= doubles, s"map-valued collect ran $maps jobs, double-valued $doubles")
+  }
+
   test("ordered scans take their size estimate from the child") {
     val sentinel = spark.sessionState.conf.defaultSizeInBytes
     scans.foreach { case (name, df, _) =>

@@ -1,8 +1,16 @@
 #!/bin/bash
 # Fast local verify loop: compile via sbt, run graft.Verify with a cached
 # classpath, then diff against DuckDB with tools/check.py.
+#
+# A change meant to leave every result as it was can also be checked
+# against its parent's dumps, row for row: run this script in a checkout
+# of each revision with a different OUT, then
+#   python3 tools/diff_dumps.py <parent OUT> <change OUT>
+# which exits non-zero unless both hold the same queries with equal Arrow
+# schemas (nullability included), equal row multisets and an equal
+# oracle_sql.json.
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 SF=${SF:-/root/testdata/sf0.01}
 OUT=${OUT:-/tmp/verify_out}
 sbt -batch compile -error
