@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, GraftPlanBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Project}
-import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution}
+import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.functions.{col, lit}
@@ -50,6 +50,8 @@ case class AsofJoinPlan(
     inclusive: Boolean,
     direction: Int = -1) extends BinaryNode {
   require(leftKeys.size == rightKeys.size, "as-of key arity mismatch")
+  require(leftKeys.nonEmpty,
+    "as-of plan node needs at least one key; a keyless as-of is an OrderedScan")
   require(direction == -1 || direction == 1, "direction must be -1 or +1")
   override def output: Seq[Attribute] =
     left.output ++ rightValues.map(_.withNullability(true))
@@ -77,15 +79,6 @@ object AsofJoinStrategy extends SparkStrategy {
   * runs the per-partition merge: advance the right cursor while its
   * (key, ts) does not pass the current left row, carrying the last
   * same-key value; emit left columns + carry (or NULLs).
-  *
-  * Keyless series (the reference's default single-series shape) declare
-  * [[AllTuples]]: a single merge task, the honest requirement for a
-  * global merge. The API layer never plans this shape:
-  * [[AsofMerge.asofJoinDir]] runs every keyless call, whatever its value
-  * types, as one ranged [[OrderedScan]] with the row-carry kernel
-  * ([[ScanKernel.Carry]]), which has this exec's semantics. AllTuples is
-  * reachable only by constructing [[AsofJoinPlan]] directly, which the
-  * specs do to get the serial reference.
   */
 case class AsofMergeJoinExec(
     leftKeys: Seq[Expression],
@@ -105,8 +98,7 @@ case class AsofMergeJoinExec(
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
 
   override def requiredChildDistribution: Seq[Distribution] =
-    if (leftKeys.isEmpty) AllTuples :: AllTuples :: Nil
-    else ClusteredDistribution(leftKeys) :: ClusteredDistribution(rightKeys) :: Nil
+    ClusteredDistribution(leftKeys) :: ClusteredDistribution(rightKeys) :: Nil
 
   // direction +1 ("succeeding": earliest right ts >= left ts) is the exact
   // mirror: scan ts DESCENDING, so "latest row not past the cursor" becomes
@@ -246,11 +238,10 @@ object AsofMerge {
           "the left frame — pick different outCols (the join would " +
           "silently replace or duplicate them)")
     }
-    // Keyless series (the reference's default single-series shape):
-    // AsofMergeJoinExec would declare AllTuples, ONE merge task. Every
-    // keyless call runs keylessAsof's ranged carry scan instead, whatever
-    // its value types. Name resolution here is case-insensitive, like the
-    // exec path's attr().
+    // Keyless series (the reference's default single-series shape) run
+    // keylessAsof's ranged carry scan, whatever their value types; the
+    // exec needs a key to cluster on. Name resolution here is
+    // case-insensitive, like the exec path's attr().
     if (keys.isEmpty) {
       def resolve(name: String): Option[String] =
         right.schema.fieldNames.find(_.equalsIgnoreCase(name))

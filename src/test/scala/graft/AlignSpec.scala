@@ -98,7 +98,7 @@ class AlignSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("__rv"))
   }
 
-  test("keyless STRING as-of rides dictionary codes with window-form NULL semantics") {
+  test("keyless STRING as-of carry keeps window-form NULL semantics") {
     // NULL right values are SKIPPED (last ignoreNulls), matching the
     // keyed window form — "b" at ts=6 survives the null row at ts=8
     val l = Seq(Tuple1(3L), Tuple1(5L), Tuple1(7L), Tuple1(9L)).toDF("ts")
@@ -151,7 +151,7 @@ class AlignSpec extends AnyFunSuite {
     assert(r.toSeq == Seq((3L, "-"), (5L, "a"), (10L, "b"), (15L, "b")))
   }
 
-  test("keyless carry is exact for int64 beyond 2^53 (hi/lo lanes)") {
+  test("keyless carry is exact for int64 beyond 2^53") {
     // snowflake-scale long values and ns timestamps exceed a Double
     // lane's exact range; both the bare-value and the packed-struct
     // (asofJoinTol) carries must round-trip them bit-exactly
@@ -466,7 +466,7 @@ class AlignSpec extends AnyFunSuite {
     assert(row2.getAs[Long]("win_count") == 0L && row2.isNullAt(row2.fieldIndex("win_sum")))
   }
 
-  test("keyless asofJoinNearest and asofJoinTol carry strings via dictionary codes") {
+  test("keyless asofJoinNearest and asofJoinTol carry string values") {
     val l = Seq(4L, 9L).toDF("ts")
     val r = Seq((1L, "a"), (3L, "b"), (6L, "c"), (10L, "d")).toDF("ts", "v")
     // reference guide example shape: ts 4 → nearest 3 ("b"), ts 9 → 10 ("d")

@@ -113,7 +113,7 @@ class AsofMergeSpec extends AnyFunSuite {
     assert(out == Seq(1.5, null))
   }
 
-  test("keyless as-of carries date and boolean values through the lanes") {
+  test("keyless as-of carries date and boolean values in one carried row") {
     val l = Seq(Tuple1(7L), Tuple1(4L)).toDF("ts")
     val r = Seq((5L, java.sql.Date.valueOf("2021-03-04"), true),
       (3L, java.sql.Date.valueOf("1969-12-25"), false)).toDF("ts", "d", "b")
@@ -127,21 +127,16 @@ class AsofMergeSpec extends AnyFunSuite {
       rows2(1).getBoolean(2) == true)
   }
 
-  /** The serial single-task exec, constructed directly from the plan node
-    * — the ground truth the parallel keyless routings must match.
+  /** The serial single-task merge: the keyed exec over one constant key
+    * added to both sides, so every row lands in one group and one task —
+    * the ground truth the parallel keyless scan must match.
     */
   private def serialKeylessExec(l: DataFrame, r: DataFrame, ts: String,
                                 v: String, direction: Int = -1,
-                                inclusive: Boolean = true): DataFrame = {
-    AsofMerge.install(spark)
-    val lPlan = l.queryExecution.analyzed
-    val rPlan = r.queryExecution.analyzed
-    val node = graft.plans.AsofJoinPlan(lPlan, rPlan, Nil, Nil,
-      lPlan.output.find(_.name == ts).get, rPlan.output.find(_.name == ts).get,
-      Seq(rPlan.output.find(_.name == v).get), inclusive, direction)
-    org.apache.spark.sql.GraftPlanBridge.ofRows(spark, node)
-      .toDF(l.columns :+ "asof_value": _*)
-  }
+                                inclusive: Boolean = true): DataFrame =
+    AsofMerge.asofJoinDir(l.withColumn("__one", lit(0)), r.withColumn("__one", lit(0)),
+      Seq("__one"), ts, Seq(v), Seq("asof_value"), direction, inclusive)
+      .drop("__one")
 
   /** A value as text that tells NaN, -0.0 and byte contents apart, with
     * map entries sorted (`collect()` hands maps back unordered).
@@ -208,7 +203,7 @@ class AsofMergeSpec extends AnyFunSuite {
     assert(got.getString(1) == "1582-10-10" && got.getString(2) == "1582-10-10 01:02:03")
   }
 
-  test("keyless string as-of rides dictionary-coded lanes (no single-task merge)") {
+  test("keyless string as-of runs the carry scan (no single-task merge)") {
     val l = Seq(Tuple1(3L), Tuple1(5L), Tuple1(7L), Tuple1(9L)).toDF("ts")
     val r = Seq((5L, "a"), (6L, "b"), (8L, null: String)).toDF("ts", "v")
     val df = AsofMerge.asofJoin(l, r, Seq(), "ts", "v")
@@ -238,7 +233,7 @@ class AsofMergeSpec extends AnyFunSuite {
     }
   }
 
-  test("keyless dict lanes: random frames WITH NULL values match the serial exec") {
+  test("keyless string carry: random frames WITH NULL values match the serial exec") {
     // the row-carry contract under fire: ~25% NULL-valued right rows on a
     // random frame, all four direction×boundary configs — the dict path
     // must carry (and mask with) NULL rows exactly as the serial exec does
@@ -256,7 +251,7 @@ class AsofMergeSpec extends AnyFunSuite {
     }
   }
 
-  test("keyless mixed value columns: string + decimal ride dict lanes, numeric rides direct") {
+  test("keyless mixed value columns: string, decimal and double carry from one row") {
     val l = Seq(Tuple1(4L), Tuple1(7L)).toDF("ts")
     val r = Seq((3L, "y", BigDecimal("2.50"), 20.0),
       (5L, "x", BigDecimal("1.25"), 10.0)).toDF("ts", "s", "dec", "d")
@@ -270,7 +265,7 @@ class AsofMergeSpec extends AnyFunSuite {
       (7L, "x", new java.math.BigDecimal("1.25").setScale(18), 10.0)))
   }
 
-  test("keyless struct as-of decomposes onto lanes (no single-task merge)") {
+  test("keyless struct as-of carries the whole struct (no single-task merge)") {
     // struct of (double, long, string): double/long ride value lanes,
     // the string field rides dict lanes — all carried from the SAME row
     val l = Seq(Tuple1(3L), Tuple1(5L), Tuple1(7L), Tuple1(9L)).toDF("ts")
@@ -294,7 +289,7 @@ class AsofMergeSpec extends AnyFunSuite {
     assert(rows(df) == rows(serial))
   }
 
-  test("keyless struct lanes: random frames with NULL structs/fields match the serial exec") {
+  test("keyless struct carry: random frames with NULL structs/fields match serial exec") {
     val rnd = new scala.util.Random(17)
     val l = Seq.fill(250)(Tuple1(rnd.nextInt(400).toLong)).toDF("ts")
     val r = Seq.fill(150)(rnd.nextInt(400).toLong).distinct.map { t =>
@@ -314,7 +309,7 @@ class AsofMergeSpec extends AnyFunSuite {
     }
   }
 
-  test("keyless ARRAY as-of rides dictionary codes (no single-task merge)") {
+  test("keyless ARRAY as-of runs the carry scan (no single-task merge)") {
     val l = Seq(Tuple1(3L), Tuple1(7L), Tuple1(9L)).toDF("ts")
     val r = Seq((5L, Seq(1, 2)), (6L, Seq(3)), (8L, null)).toDF("ts", "v")
     val df = AsofMerge.asofJoin(l, r, Seq(), "ts", "v")
@@ -328,7 +323,7 @@ class AsofMergeSpec extends AnyFunSuite {
     assert(rows(df) == rows(serialKeylessExec(l, r, "ts", "v")))
   }
 
-  test("keyless struct-in-struct as-of decomposes with a dict-coded field") {
+  test("keyless struct-in-struct as-of carries the nested struct whole") {
     // outer struct decomposes per-field; its struct FIELD is not lane-able
     // but dict-encodes by value — the last non-map shape off the serial exec
     val l = Seq(Tuple1(3L), Tuple1(7L), Tuple1(9L)).toDF("ts")
@@ -347,7 +342,7 @@ class AsofMergeSpec extends AnyFunSuite {
     assert(rows(df) == rows(serialKeylessExec(l, r, "ts", "v")))
   }
 
-  test("row-id route: DUPLICATE right ts values carry ONE whole tied row (ADVICE r17)") {
+  test("keyless carry: DUPLICATE right ts values carry ONE whole tied row (ADVICE r17)") {
     // ties on the right ts are a legal arbitrary choice, but the carried
     // columns must come from the SAME row — the row-id carry fetches by
     // one id, so a (value, tag) mix across the tied rows would mean the
@@ -398,7 +393,7 @@ class AsofMergeSpec extends AnyFunSuite {
     assert(canon(df) == canon(serial))
   }
 
-  test("keyless map lanes: random frames with NULL/empty maps match the serial exec") {
+  test("keyless map carry: random frames with NULL/empty maps match the serial exec") {
     val rnd = new scala.util.Random(29)
     val l = Seq.fill(200)(Tuple1(rnd.nextInt(300).toLong)).toDF("ts")
     val r = Seq.fill(120)(rnd.nextInt(300).toLong).distinct.map { t =>
@@ -450,7 +445,7 @@ class AsofMergeSpec extends AnyFunSuite {
       s"carried EMPTY inner map must round-trip empty, not null, got $atD")
   }
 
-  test("keyless nested-map lanes: random frames match the serial exec") {
+  test("keyless nested-map carry: random frames match the serial exec") {
     val rnd = new scala.util.Random(31)
     val l = Seq.fill(150)(rnd.nextInt(300).toLong).distinct
       .map(Tuple1(_)).toDF("ts")
@@ -516,7 +511,7 @@ class AsofMergeSpec extends AnyFunSuite {
       s"array-of-maps carry (null element preserved), got $aGot")
   }
 
-  test("deep-map lanes: random depth-3 frames match the serial exec") {
+  test("keyless deep-map carry: random depth-3 frames match the serial exec") {
     val rnd = new scala.util.Random(47)
     val l = Seq.fill(120)(rnd.nextInt(250).toLong).distinct
       .map(Tuple1(_)).toDF("ts")
@@ -619,7 +614,7 @@ class AsofMergeSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("__v0"))
   }
 
-  test("keyless lanes carry int64 beyond 2^53 EXACTLY (hi/lo split)") {
+  test("keyless carry keeps int64 beyond 2^53 EXACTLY") {
     // ns-scale epoch timestamps (~1.7e18) and snowflake-style ids exceed
     // a Double lane's 2^53 integer range; the hi/lo 32-bit lane split
     // must round-trip them bit-exactly — a single-lane carry would be
@@ -645,7 +640,7 @@ class AsofMergeSpec extends AnyFunSuite {
     assert(keep == 900719925474099317L)
   }
 
-  test("keyless tolerance join (timestamp carry lane) matches the window form") {
+  test("keyless tolerance join (carried right ts) matches the window form") {
     val l = Seq(("k", 5L), ("k", 30L), ("k", 21L)).toDF("key", "ts")
     val r = Seq(("k", 4L, 1.0), ("k", 20L, 2.0)).toDF("key", "ts", "v")
     for (tol <- Seq(1L, 5L, 100L)) {

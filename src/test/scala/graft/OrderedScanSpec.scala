@@ -40,7 +40,7 @@ class OrderedScanSpec extends AnyFunSuite {
     }
   }
 
-  test("a keyless map-valued as-of (the row-id route) builds with no Spark job") {
+  test("a keyless map-valued as-of (the carry scan) builds with no Spark job") {
     val l = Seq(Tuple1(5L), Tuple1(7L)).toDF("ts")
     val r = Seq((5L, Map("a" -> 1)), (6L, Map("b" -> 2))).toDF("ts", "v")
     JobWatch.on(spark) { w =>

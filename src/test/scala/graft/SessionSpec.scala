@@ -118,7 +118,7 @@ class SessionSpec extends AnyFunSuite {
     // bucketedTableScan.outputOrdering stays a per-entry setting while
     // BucketedJoinSpec toggles it per test
     val confSets = hits("conf.set(")
-    assert(files(confSets) == Seq("SparkEntry.scala", "SparkEntry.scala", "fuzz/Fuzz.scala"),
+    assert(files(confSets) == Seq("SparkEntry.scala", "SparkEntry.scala"),
       confSets)
     assert(confSets.forall(_._3.contains(
       "conf.set(\"spark.sql.legacy.bucketedTableScan.outputOrdering\", \"true\")")), confSets)

@@ -3,7 +3,7 @@
 # (graft.Guide): the cs_* SQL registry table and the gated-query index.
 # Curated prose outside the GENERATED markers is left untouched.
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 sbt -batch compile -error
 CP="target/scala-2.13/classes:/opt/spark/jars/*"
 java -cp "$CP" graft.Guide registry > /tmp/guide_registry.md

@@ -21,7 +21,7 @@
 # Usage: bash tools/run_bench.sh            # sf0.1
 #        SF=... OUT=... ATTEMPTS=... IDLE_WAIT_SECS=... bash tools/run_bench.sh
 set -eo pipefail
-cd /root/repo
+cd "$(dirname "$0")/.."
 SF=${SF:-/root/testdata/sf0.1}
 OUT=${OUT:-/tmp/bench_last.json}
 ATTEMPTS=${ATTEMPTS:-3}

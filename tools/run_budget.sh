@@ -13,7 +13,7 @@
 # Usage: bash tools/run_budget.sh            # all queries
 #        BUDGET=30 SF=... bash tools/run_budget.sh
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 SF=${SF:-/root/testdata/sf0.1}
 OUT=${OUT:-/tmp/verify_budget_out}
 BUDGET=${BUDGET:-20}

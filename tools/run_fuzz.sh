@@ -14,13 +14,14 @@
 # fuzzcs_<seed>.)
 # The program text for every seed is in $OUT/programs.txt.
 set -eo pipefail
-cd /root/repo
+cd "$(dirname "$0")/.."
 SF=${SF:-/root/testdata/sf0.01}
 OUT=${OUT:-/tmp/fuzz_out}
 N=${N:-200}
 SEED=${SEED:-1}
-sbt -batch compile -error
-CP="target/scala-2.13/classes:/opt/spark/jars/*"
+# graft.fuzz is test-side code: Test/compile builds it into test-classes
+sbt -batch Test/compile -error
+CP="target/scala-2.13/classes:target/scala-2.13/test-classes:/opt/spark/jars/*"
 ADD_OPENS="--add-opens=java.base/java.lang=ALL-UNNAMED --add-opens=java.base/java.lang.invoke=ALL-UNNAMED --add-opens=java.base/java.lang.reflect=ALL-UNNAMED --add-opens=java.base/java.io=ALL-UNNAMED --add-opens=java.base/java.net=ALL-UNNAMED --add-opens=java.base/java.nio=ALL-UNNAMED --add-opens=java.base/java.util=ALL-UNNAMED --add-opens=java.base/java.util.concurrent=ALL-UNNAMED --add-opens=java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens=java.base/sun.nio.ch=ALL-UNNAMED --add-opens=java.base/sun.nio.cs=ALL-UNNAMED --add-opens=java.base/sun.security.action=ALL-UNNAMED --add-opens=java.base/sun.util.calendar=ALL-UNNAMED"
 rm -rf "$OUT"
 SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-8} java $ADD_OPENS -Xmx8g \
