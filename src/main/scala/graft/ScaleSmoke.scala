@@ -358,7 +358,7 @@ object ScaleSmoke {
     // stream-ingest overhead (round 13, VERDICT r12 #6): the same rows
     // landed as K micro-batches through the exactly-once commit-log path
     // vs ONE plain append — the delta / K is the per-batch metadata cost
-    // (pending record, marker retention, commit record, marker delete).
+    // (the commit-log read and the commit record written in the install).
     run("stream ingest: 4 micro-batches vs one batch append") {
       val pA = s"$work/stream_ab_batch.parquet"
       val pB = s"$work/stream_ab_stream.parquet"

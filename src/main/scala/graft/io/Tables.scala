@@ -44,12 +44,26 @@ case class RetiredEntry(name: String, retiredMs: Long)
 case class TsManifest(version: Int, ts: String, files: Seq[TsFileEntry],
                       retired: Seq[RetiredEntry] = Seq.empty)
 
-/** The generation-install commit marker (`<path>.gen.commit` sibling):
-  * written AFTER the new generation is fully staged, deleted after the
-  * manifest installs — its presence means roll FORWARD (finish moving
-  * `newFiles` in, rewrite the manifest retiring `replaced`).
+/** The generation-install commit marker (`<path>.gen.commit` sibling),
+  * the one install of a clustered table ([[Tables.installGeneration]]):
+  * written AFTER the new files are fully staged, deleted after the
+  * install completes — its presence means roll FORWARD (finish moving
+  * `newFiles` in, install the manifest retiring `replaced`, record the
+  * stream commit). `loaded` is the new entries' flag (a rewrite's files
+  * and a fresh table's first batch are the load layout; an append's are
+  * not), `manifest` is false for an append into an ungoverned dir (which
+  * stays manifest-less), and `stream` is the micro-batch the install
+  * commits, if any. A marker written before these fields existed parses
+  * as a rewrite: loaded, manifest-governed, no stream.
   */
-case class GenMarker(ts: String, newFiles: Seq[String], replaced: Seq[String])
+case class GenMarker(ts: String, newFiles: Seq[String], replaced: Seq[String],
+                     loaded: Boolean = true, manifest: Boolean = true,
+                     stream: Option[StreamCommit] = None)
+
+/** One stream's micro-batch commit: `batchId` becomes `streamId`'s
+  * high-water mark in the stream-commit log ([[StreamCommits]]).
+  */
+case class StreamCommit(streamId: String, batchId: Long)
 
 /** TRANSIENT writer-lease contention — another live writer holds (or just
   * took) the lease. Every contention outcome of [[Tables.withWriterLease]]
@@ -62,18 +76,17 @@ case class GenMarker(ts: String, newFiles: Seq[String], replaced: Seq[String])
   */
 class LeaseContentionException(msg: String) extends IllegalStateException(msg)
 
-/** A streaming micro-batch append in flight: written to the stream-commit
-  * sidecar BEFORE the batch's data, cleared after the commit record — its
-  * survival means the attempt crashed, and recovery rolls the partial
-  * batch BACK so the replay re-appends exactly once. Clustered batches
-  * set `markerBased` (the rollback identity is the append marker's
-  * O(batch) file list, `preFiles` unused); the bucketed path (no staged
-  * marker — writes go through the catalog committer) records the
-  * O(bucket-files) pre-batch listing, as did all pre-slim records, which
-  * recovery still honors. The mode is the EXPLICIT flag, never inferred
-  * from an empty listing — a bucketed/legacy batch 0 against an empty
-  * table legitimately has `preFiles == Nil` (json4s leaves an absent
-  * field's Option at None, so legacy records parse as listing-based).
+/** A BUCKETED streaming micro-batch append in flight: written to the
+  * stream-commit sidecar BEFORE the batch's data, cleared after the
+  * commit record — its survival means the attempt crashed, and recovery
+  * rolls the partial batch BACK (deletes every data file not in
+  * `preFiles`, the pre-batch listing) so the replay re-appends exactly
+  * once. A clustered batch writes no pending record: it commits through
+  * its generation marker ([[GenMarker]] `stream`) and rolls forward.
+  * `markerBased` is read only to recognize a previous release's
+  * clustered record, whose rollback identity was an append marker this
+  * release no longer writes or reads — such a record is refused, never
+  * taken as a listing (json4s leaves an absent field's Option at None).
   */
 case class PendingBatch(streamId: String, batchId: Long,
                         preFiles: Seq[String],
@@ -81,19 +94,13 @@ case class PendingBatch(streamId: String, batchId: Long,
 
 /** The stream-ingest commit log (`_graft_stream_commits.json` sidecar in
   * the table dir): highest committed micro-batch id per stream (keyed by
-  * checkpoint location), plus at most one in-flight [[PendingBatch]].
+  * checkpoint location), plus at most one in-flight bucketed
+  * [[PendingBatch]]. A clustered batch's commit lands inside its
+  * generation install, after the manifest; a crash past the marker rolls
+  * both forward, so the replay is skipped.
   */
 case class StreamCommits(committed: Map[String, Long],
                          pending: Option[PendingBatch] = None)
-
-/** An in-flight APPEND's staged batch: the marker (`<path>.append.pending`
-  * sibling) names the batch's files — written after staging, cleared after
-  * the manifest extension. Readers whitelist exactly these names as
-  * in-flight (serving the pre-batch snapshot); a crashed PLAIN append
-  * rolls FORWARD from it (the data was committed), a crashed STREAM batch
-  * rolls BACK by it (the replay re-appends exactly once).
-  */
-case class AppendMarker(ts: String, files: Seq[String])
 
 /** A superseded bucketed-table generation directory grace-retained for
   * in-flight readers after [[Tables.compactBucketedIsolated]]'s location
@@ -1180,8 +1187,8 @@ object Tables {
   }
 
   /** The LIVE generation's data-file names for a manifest-governed table —
-    * the consistency-checked view (grace-retained retired files excluded,
-    * in-flight append batches subtracted), exactly the file set
+    * the consistency-checked view (grace-retained retired files
+    * excluded), exactly the file set
     * [[snapshot]] would read. None for ungoverned paths. Consumers that
     * build per-file structures (e.g. the dedup probe's per-file bloom
     * sidecars, [[graft.streaming.FileBlooms]]) key on these names.
@@ -1231,8 +1238,6 @@ object Tables {
 
   private def genMarkerPath(path: String): Path = new Path(path + ".gen.commit")
   private def genTmpPath(path: String): Path = new Path(path + ".gen.tmp")
-  private def appendMarkerPath(path: String): Path = new Path(path + ".append.pending")
-  private def batchTmpPath(path: String): Path = new Path(path + ".batch.tmp")
 
   /** Staging file count for one append batch: ceil(estBytes /
     * targetBytes), CAPPED by the input partition count (an unknown or
@@ -1284,15 +1289,6 @@ object Tables {
       case a: AdaptiveSparkPlanExec => walk(a)
       case _ => df.queryExecution.toRdd.getNumPartitions
     }
-  }
-
-  private def readAppendMarker(fs: FileSystem, path: String): Option[AppendMarker] = {
-    val p = appendMarkerPath(path)
-    if (!fs.exists(p)) None
-    else Some(scala.util.Try(org.json4s.jackson.Serialization.read[AppendMarker](
-      readSmallText(fs, p))).getOrElse(
-      sys.error(s"unreadable append marker $p — written atomically, so this " +
-        "is external corruption; inspect manually")))
   }
 
   /** Grace window for retired (replaced) data files — how long an
@@ -1358,34 +1354,18 @@ object Tables {
           val listing = fs.listStatus(hp).toSeq
           if (hasPartitionDirs(listing)) return None
           val files = listing.filter(s => s.isFile && isDataFile(s.getPath.getName))
-          // in-flight allowances: a gen install's staged names and an
-          // append's staged batch names — both serve the OLD manifest (the
-          // pre-op snapshot) while the files move in
+          // in-flight allowance: an install's staged names serve the OLD
+          // manifest (the pre-op snapshot) while the files move in. Its
+          // manifest lands only AFTER the moves and rolls FORWARD, so a
+          // manifest that lists them is committed — never a dirty read
           val genNames: Set[String] =
             scala.util.Try(org.json4s.jackson.Serialization.read[GenMarker](
               readSmallText(fs, genMarkerPath(hp.toString)))).toOption
               .map(_.newFiles.toSet).getOrElse(Set.empty)
-          val appendNames: Set[String] =
-            scala.util.Try(org.json4s.jackson.Serialization.read[AppendMarker](
-              readSmallText(fs, appendMarkerPath(hp.toString)))).toOption
-              .map(_.files.toSet).getOrElse(Set.empty)
-          if (manifestConsistent(m, files, genNames ++ appendNames)) {
-            // an IN-FLIGHT append batch's files may already be in the
-            // manifest (the extension lands before a stream batch's
-            // commit record, and a crash in between rolls the batch
-            // BACK) — serving them would be a dirty read that later
-            // vanishes and reappears under new names (ADVICE r12,
-            // medium). Subtract the marker-listed names: the batch
-            // becomes reader-visible when the marker clears, i.e. after
-            // the commit record / the plain append's completion. The gen
-            // marker is the OPPOSITE case — its manifest is written only
-            // AFTER the move, and rolls FORWARD — so its names stay.
-            val live =
-              if (!m.files.exists(e => appendNames(e.name))) m
-              else m.copy(files = m.files.filterNot(e => appendNames(e.name)))
+          if (manifestConsistent(m, files, genNames)) {
             val byName = files.map(s => s.getPath.getName -> s).toMap
-            return Some(LiveSet(hp, live,
-              live.files.map(e => e.name -> byName(e.name)).toMap))
+            return Some(LiveSet(hp, m,
+              m.files.map(e => e.name -> byName(e.name)).toMap))
           }
           val mNow = readManifest(fs, hp)
           if (mNow == mOpt || attempt >= maxRetries) {
@@ -1688,23 +1668,15 @@ object Tables {
     }
   }
 
-  /** The generation install shared by the rewriting ops (full compact,
-    * incremental compact's fold, deleteRange): move the staged tmp dir's
-    * files INTO the live directory under their own (job-unique) names,
-    * then atomically install a manifest whose live set is
-    * `carryLive ++ staged` with `replaced` grace-retained as retired.
-    * Replaced files never move — an in-flight reader that listed the old
-    * generation keeps scanning it until the grace expires (the reader
-    * half of the reference's MURSIW contract); manifest-governed readers
-    * flip to the new generation at the manifest rename. The gen marker is
-    * the roll-forward commit point ([[recoverGen]]).
+  /** The rewrites' install (full compact, incremental compact's fold,
+    * deleteRange): one footer pass over the staged tmp dir's files, then
+    * [[installGeneration]] of `base`'s live set minus `replaced` plus
+    * the staged files, `replaced` grace-retained. Returns the new live
+    * set.
     */
-  private def installGeneration(spark: SparkSession, fs: FileSystem, hp: Path,
-                                tmp: Path, ts: String,
-                                replaced: Seq[String],
-                                carryLive: Seq[TsFileEntry],
-                                carryRetired: Seq[RetiredEntry],
-                                tag: String): Seq[TsFileEntry] = {
+  private def installRewrite(spark: SparkSession, fs: FileSystem, hp: Path,
+                             tmp: Path, base: TsManifest,
+                             replaced: Seq[String], tag: String): Seq[TsFileEntry] = {
     val conf = spark.sparkContext.hadoopConfiguration
     // one footer pass serves manifest stats AND the zero-row drop (the
     // same fold appendBody's staging does): a rewrite that empties a
@@ -1718,11 +1690,11 @@ object Tables {
     // stat-less entry folds away at the table's next non-empty rewrite.
     val stagedListing = fs.listStatus(tmp)
       .filter(s => s.isFile && isDataFile(s.getPath.getName)).toSeq
-    val statusByName = stagedListing.map(s => s.getPath.getName -> s).toMap
-    val scanned = scanEntriesWithRows(conf, ts, stagedListing, loaded = true)
+    val scanned = scanEntriesWithRows(conf, base.ts, stagedListing, loaded = true)
     val (zeros, nonzero) = scanned.partition(_._2.contains(0L))
+    val gone = replaced.toSet
     val kept =
-      if (nonzero.isEmpty && carryLive.isEmpty && zeros.nonEmpty)
+      if (nonzero.isEmpty && base.files.forall(e => gone(e.name)) && zeros.nonEmpty)
         // the anchor's stats are the EMPTY-SET sentinel (min = +∞,
         // max = −∞), which is vacuously correct for every consumer — a
         // range scan always prunes it (MinValue >= fromNs is false), the
@@ -1736,46 +1708,91 @@ object Tables {
           (e.copy(minNs = Some(Long.MaxValue), maxNs = Some(Long.MinValue)), r)
         }
       else nonzero
-    val keptNames = kept.map(_._1.name).toSet
+    val entries = kept.map(_._1)
+    val keptNames = entries.map(_.name).toSet
     zeros.filterNot(z => keptNames(z._1.name)).foreach { case (e, _) =>
       fs.delete(new Path(tmp, e.name), false)
     }
-    val staged = kept.map(e => statusByName(e._1.name))
     // job-unique part names make a collision with an existing file a sign
     // of corruption (the same job wrote both) — stop, never overwrite
     val existing = fs.listStatus(hp).filter(_.isFile)
       .map(_.getPath.getName).toSet
-    staged.foreach { s =>
-      if (existing(s.getPath.getName)) sys.error(
-        s"$tag: staged file ${s.getPath.getName} collides with an existing " +
+    entries.foreach { e =>
+      if (existing(e.name)) sys.error(
+        s"$tag: staged file ${e.name} collides with an existing " +
           s"file in $hp — refusing to install")
     }
-    val entries = kept.map(_._1)
-    writeSmallFileAtomic(fs, genMarkerPath(hp.toString),
-      org.json4s.jackson.Serialization.write(
-        GenMarker(ts, staged.map(_.getPath.getName), replaced)))
-    crashPoint(s"$tag:gen-marker")
-    staged.foreach { s =>
-      if (!fs.rename(s.getPath, new Path(hp, s.getPath.getName)))
-        sys.error(s"$tag: cannot move staged file ${s.getPath} into $hp")
-      crashPoint(s"$tag:gen-moved")
-    }
-    val now = System.currentTimeMillis()
-    writeManifestFile(fs, hp, TsManifest(1, ts, carryLive ++ entries,
-      carryRetired ++ replaced.map(n => RetiredEntry(n, now))))
-    crashPoint(s"$tag:gen-manifest")
-    fs.delete(genMarkerPath(hp.toString), false)
-    fs.delete(tmp, true)
-    carryLive ++ entries
+    installGeneration(fs, hp, tmp, GenMarker(base.ts, entries.map(_.name), replaced),
+      Some(base), entries, tag).fold(Seq.empty[TsFileEntry])(_.files)
   }
 
-  /** Crash recovery for the generation-install protocol, run at entry of
-    * every mutating op (before the legacy swap recoveries): a gen marker
-    * means the new generation was fully staged — roll FORWARD (finish
-    * moving its files in, install the manifest retiring the replaced
-    * set); staging without a marker is uncommitted garbage. Every step is
-    * idempotent, and no step ever deletes a replaced (old-generation)
-    * file — those wait for reclaim past the grace.
+  /** The one install of a clustered table: the rewrites
+    * ([[installRewrite]]) and the appends ([[appendBody]]) all commit
+    * here. The staged files sit in the sibling tmp dir, `entries` are
+    * their manifest entries from the caller's one footer pass (nothing
+    * is listed or scanned again). The gen marker commits them (the
+    * roll-forward point, [[recoverGen]]); a first batch's install then
+    * creates the table dir (`createDir` — so a table exists only from
+    * its first committed file on, never as an empty dir that readers
+    * cannot infer a schema from); the files move INTO the live directory
+    * under their own job-unique names; the
+    * manifest installs atomically ([[nextGeneration]] of `base`; none
+    * when `base` is None — an ungoverned dir stays manifest-less); the
+    * marker's stream commit, if any, advances the commit log (`log`,
+    * when the caller read it under this lease); the marker clears.
+    * Replaced files never move — an in-flight reader that listed the old
+    * generation keeps scanning it until the grace expires (the reader
+    * half of the reference's MURSIW contract, imcs.c:879-905);
+    * manifest-governed readers flip to the new generation at the
+    * manifest rename. Returns the installed manifest.
+    */
+  private def installGeneration(fs: FileSystem, hp: Path, tmp: Path,
+                                marker: GenMarker, base: Option[TsManifest],
+                                entries: Seq[TsFileEntry], tag: String,
+                                log: Option[StreamCommits] = None,
+                                createDir: Boolean = false): Option[TsManifest] = {
+    writeSmallFileAtomic(fs, genMarkerPath(hp.toString),
+      org.json4s.jackson.Serialization.write(marker))
+    crashPoint(s"$tag:gen-marker")
+    if (createDir) fs.mkdirs(hp)
+    entries.foreach { e =>
+      if (!fs.rename(new Path(tmp, e.name), new Path(hp, e.name)))
+        sys.error(s"$tag: cannot move staged file ${e.name} from $tmp into $hp")
+      crashPoint(s"$tag:gen-moved")
+    }
+    val installed = base.map(nextGeneration(_, marker, entries))
+    installed.foreach(writeManifestFile(fs, hp, _))
+    crashPoint(s"$tag:gen-manifest")
+    marker.stream.foreach { sc =>
+      commitStream(fs, hp, sc, log.getOrElse(readStreamCommits(fs, hp)))
+      crashPoint("stream:committed")
+    }
+    fs.delete(genMarkerPath(hp.toString), false)
+    fs.delete(tmp, true)
+    installed
+  }
+
+  /** The manifest a generation install leaves: `m`'s live files minus the
+    * marker's replaced and new names, plus `entries`, with the replaced
+    * files grace-retained from now.
+    */
+  private def nextGeneration(m: TsManifest, gm: GenMarker,
+                             entries: Seq[TsFileEntry]): TsManifest = {
+    val gone = (gm.replaced ++ gm.newFiles).toSet
+    val now = System.currentTimeMillis()
+    TsManifest(1, gm.ts, m.files.filterNot(e => gone(e.name)) ++ entries,
+      m.retired ++ gm.replaced.map(n => RetiredEntry(n, now)))
+  }
+
+  /** Crash recovery for the generation install, run at entry of every
+    * mutating op (before the legacy swap recoveries): a gen marker means
+    * the new files were fully staged — roll FORWARD (finish moving them
+    * in, install the manifest when the marker says one is kept — its
+    * entries from one footer pass with the marker's `loaded` flag —
+    * then record the marker's stream commit); staging without a marker
+    * is uncommitted garbage. Every step is idempotent, and no step ever
+    * deletes a replaced (old-generation) file — those wait for reclaim
+    * past the grace.
     */
   private def recoverGen(spark: SparkSession, fs: FileSystem, path: String): Unit = {
     val hp = new Path(path)
@@ -1786,6 +1803,7 @@ object Tables {
       val gm = scala.util.Try(org.json4s.jackson.Serialization.read[GenMarker](
         readSmallText(fs, marker))).getOrElse(
         sys.error(s"gen recovery: unreadable marker $marker — inspect manually"))
+      if (!fs.exists(hp)) fs.mkdirs(hp) // a first batch killed before its dir
       gm.newFiles.foreach { n =>
         val dst = new Path(hp, n)
         if (!fs.exists(dst)) {
@@ -1795,23 +1813,22 @@ object Tables {
               s"$tmp nor $hp — cannot roll forward; inspect manually")
         }
       }
-      val mOpt = readManifest(fs, hp)
-      val isNew = mOpt.exists(m =>
-        gm.newFiles.forall(n => m.files.exists(_.name == n)) &&
-          gm.replaced.forall(n => !m.files.exists(_.name == n)))
-      if (!isNew) {
-        val listing = fs.listStatus(hp)
-          .filter(s => s.isFile && isDataFile(s.getPath.getName)).toSeq
-        val newSet = gm.newFiles.toSet
-        val entries = scanEntries(spark.sparkContext.hadoopConfiguration, gm.ts,
-          listing.filter(s => newSet(s.getPath.getName)), loaded = true)
-        val carryLive = mOpt.map(_.files.filterNot(e =>
-          gm.replaced.contains(e.name) || newSet(e.name))).getOrElse(Seq.empty)
-        val carryRetired = mOpt.map(_.retired).getOrElse(Seq.empty)
-        val now = System.currentTimeMillis()
-        writeManifestFile(fs, hp, TsManifest(1, gm.ts, carryLive ++ entries,
-          carryRetired ++ gm.replaced.map(n => RetiredEntry(n, now))))
+      if (gm.manifest) {
+        val mOpt = readManifest(fs, hp)
+        val isNew = mOpt.exists(m =>
+          gm.newFiles.forall(n => m.files.exists(_.name == n)) &&
+            gm.replaced.forall(n => !m.files.exists(_.name == n)))
+        if (!isNew) {
+          val newSet = gm.newFiles.toSet
+          val staged = fs.listStatus(hp)
+            .filter(s => s.isFile && newSet(s.getPath.getName)).toSeq
+          val entries = scanEntries(spark.sparkContext.hadoopConfiguration, gm.ts,
+            staged, loaded = gm.loaded)
+          writeManifestFile(fs, hp, nextGeneration(
+            mOpt.getOrElse(TsManifest(1, gm.ts, Seq.empty)), gm, entries))
+        }
       }
+      gm.stream.foreach(commitStream(fs, hp, _, readStreamCommits(fs, hp)))
       fs.delete(marker, false)
       if (fs.exists(tmp)) fs.delete(tmp, true)
     } else if (fs.exists(tmp)) fs.delete(tmp, true)
@@ -1920,14 +1937,12 @@ object Tables {
     if (liveNames.isEmpty) return (0, 0)
     val liveBytes = live.files.map(_.bytes).sum
     val parts = math.max(1L, (liveBytes + targetBytes - 1) / targetBytes).toInt
-    val tmp = genTmpPath(path)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
+    val tmp = genTmpPath(path) // the entry's recoverGen cleared it
     writeClustered(liveFrame(spark, live, liveNames),
       tmp.toString, (keys :+ ts).map(col), parts)
     crashPoint("full:staged")
-    val after = installGeneration(spark, fs, hp, tmp, ts,
-      replaced = liveNames, carryLive = Seq.empty,
-      carryRetired = live.retired, tag = "full")
+    val after = installRewrite(spark, fs, hp, tmp, live.manifest,
+      replaced = liveNames, tag = "full")
     reclaimRetired(fs, hp, retireGraceMs)
     invalidateRead(spark, path)
     (liveNames.length, after.length)
@@ -1986,8 +2001,7 @@ object Tables {
   private def recoverMutations(spark: SparkSession, fs: FileSystem,
                                path: String): Unit = {
     sweepManifestStaging(fs, new Path(path))
-    recoverStreamPending(fs, path)
-    recoverAppend(spark, fs, path)
+    recoverStreamPending(fs, path, clustered = true)
     recoverGen(spark, fs, path)
     recoverCompact(fs, path)
     recoverDelete(fs, path)
@@ -1998,8 +2012,8 @@ object Tables {
     * recovery, then reclaim of grace-expired retired files — any
     * lease-holding op reclaims, so retention never outlives the grace for
     * long. Runs once per op: a body never enters another op's entry,
-    * whose recovery would roll back the caller's own in-flight stream
-    * batch. [[load]] and [[truncate]] replace the whole table and take
+    * whose recovery would sweep the caller's own staging dir.
+    * [[load]] and [[truncate]] replace the whole table and take
     * the lease and recovery without the reclaim.
     */
   private def clusteredOp[T](spark: SparkSession, path: String, op: String)(
@@ -2043,60 +2057,6 @@ object Tables {
         sys.error(s"manifest recovery: cannot roll staged manifest " +
           s"$staging forward to $target")
     } else fs.delete(staging, false)
-  }
-
-  /** Crash recovery for the staged append: a surviving append marker means
-    * the batch's data was fully staged (and possibly partially moved) —
-    * roll FORWARD: finish the moves, extend (or bootstrap) the manifest,
-    * clear the marker. Runs AFTER [[recoverStreamPending]]: a crashed
-    * STREAM batch rolls BACK there (consuming the marker), so only plain
-    * appends reach this roll-forward. Marker-less staging is garbage.
-    */
-  private def recoverAppend(spark: SparkSession, fs: FileSystem,
-                            path: String): Unit = {
-    val hp = new Path(path)
-    val tmp = batchTmpPath(path)
-    readAppendMarker(fs, path) match {
-      case Some(am) =>
-        if (!fs.exists(hp)) fs.mkdirs(hp)
-        am.files.foreach { n =>
-          val dst = new Path(hp, n)
-          if (!fs.exists(dst)) {
-            val src = new Path(tmp, n)
-            if (!fs.exists(src) || !fs.rename(src, dst))
-              sys.error(s"append recovery: staged file $n present in neither " +
-                s"$tmp nor $hp — cannot roll forward; inspect manually")
-          }
-        }
-        readManifest(fs, hp) match {
-          case Some(m) if m.ts == am.ts =>
-            val missing = am.files.filterNot(n => m.files.exists(_.name == n))
-            if (missing.nonEmpty) {
-              val sts = fs.listStatus(hp).filter(s =>
-                s.isFile && missing.contains(s.getPath.getName)).toSeq
-              writeManifestFile(fs, hp, m.copy(files = m.files ++
-                scanEntries(spark.sparkContext.hadoopConfiguration, am.ts,
-                  sts, loaded = false)))
-            }
-          case Some(_) => () // ts-mismatched manifest: leave for the op's own guards
-          case None =>
-            // bootstrap ONLY when the marker's files are the table's only
-            // data files — the fresh-table first batch, mirroring the
-            // non-crash path's (preFiles.isEmpty && mEntry.isEmpty) gate.
-            // An append into an UNGOVERNED dir with pre-existing files
-            // (or a crash after the stale-manifest drop) must stay
-            // ungoverned: adopting foreign files as loaded entries would
-            // invent a tail from content the engine never vetted
-            val live = fs.listStatus(hp)
-              .filter(s => s.isFile && isDataFile(s.getPath.getName))
-              .map(_.getPath.getName).toSet
-            if (live == am.files.toSet) writeManifest(spark, path, am.ts)
-        }
-        fs.delete(appendMarkerPath(path), false)
-        if (fs.exists(tmp)) fs.delete(tmp, true)
-      case None =>
-        if (fs.exists(tmp)) fs.delete(tmp, true) // uncommitted staging
-    }
   }
 
   /** Crash recovery shared by [[compact]] and [[compactIncremental]] —
@@ -2241,17 +2201,14 @@ object Tables {
           // pre-r12 swap renamed them through a staging dir, which broke
           // in-flight readers' paths; zero moves is both the isolation
           // and less rename work)
-          val cold = m.files.filter(_.loaded)
           val bytes = hot.map(_.bytes).sum
           val parts = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-          val tmp = genTmpPath(path)
-          if (fs.exists(tmp)) fs.delete(tmp, true)
+          val tmp = genTmpPath(path) // the entry's recoverGen cleared it
           writeClustered(liveFrame(spark, m, hot.map(_.name)),
             tmp.toString, (keys :+ ts).map(col), parts)
           crashPoint("incr:staged")
-          val after = installGeneration(spark, fs, hp, tmp, ts,
-            replaced = hot.map(_.name), carryLive = cold.map(_.copy(loaded = true)),
-            carryRetired = m.retired, tag = "incr")
+          val after = installRewrite(spark, fs, hp, tmp, m.manifest,
+            replaced = hot.map(_.name), tag = "incr")
           reclaimRetired(fs, hp, retireGraceMs)
           invalidateRead(spark, path)
           (m.files.length, after.length)
@@ -2278,31 +2235,30 @@ object Tables {
     */
   def append(df: DataFrame, path: String, ts: String, from: Column): Unit =
     clusteredOp(df.sparkSession, path, "append") { (fs, hp) =>
-      appendBody(fs, hp, df.filter(col(ts) >= from), path, ts)
-      fs.delete(appendMarkerPath(path), false)
+      appendBody(fs, hp, df.filter(col(ts) >= from), path, ts, None)
       invalidateRead(df.sparkSession, path)
     }
 
-  /** The append protocol up to the manifest extension, run under the
-    * caller's entry ([[append]], [[appendStreamBatch]]); returns the
-    * installed files' names. It leaves the append marker in place: the
-    * marker is the batch's rollback identity,
-    * so a stream batch clears it only after its commit record lands (a
-    * crash in between rolls forward idempotently through
-    * [[recoverAppend]]); a plain append clears it at once.
+  /** The append protocol, run under the caller's entry ([[append]],
+    * [[appendStreamBatch]]): tail check, staging into the gen tmp dir,
+    * one footer pass, then the generation install ([[installGeneration]])
+    * that commits the batch — and `stream`'s batch id with it, added to
+    * the commit log the caller read under this lease. Returns the
+    * installed files' names.
     */
   private def appendBody(fs: FileSystem, hp: Path, incoming: DataFrame,
-                         path: String, ts: String): Seq[String] = {
+                         path: String, ts: String,
+                         stream: Option[(StreamCommit, StreamCommits)]): Seq[String] = {
     val spark = incoming.sparkSession
-    def listing(): Seq[FileStatus] =
-      if (fs.exists(hp))
+    val dirExists = fs.exists(hp)
+    val preFiles =
+      if (dirExists)
         fs.listStatus(hp).filter(s => s.isFile && isDataFile(s.getPath.getName)).toSeq
       else Seq.empty
-    val preFiles = listing()
     // ONE manifest read serves the tail check, the bootstrap decision and
     // the extension below — under the writer lease nothing else can move
     // it (the entry's reclaim may have rewritten it, hence read AFTER)
-    val mEntry = if (fs.exists(hp)) readManifest(fs, hp) else None
+    val mEntry = if (dirExists) readManifest(fs, hp) else None
     // The METADATA tail check is DEFERRED past staging (r18, guide §2.4
     // "remove jobs outright"): the staging footer pass below records each
     // new file's exact min/max ts on the same epoch-ns scale the manifest
@@ -2346,18 +2302,16 @@ object Tables {
             None
         }
       }
-    // STAGE-THEN-MOVE (r12 review): the batch clusters into a sibling
-    // staging dir, the append marker names its files, the files move into
-    // the live dir, the manifest extends, the marker clears. The marker
-    // keeps engine reads atomic through the window (liveEntries whitelists
-    // exactly these names and serves the pre-batch snapshot), lets a
-    // crashed PLAIN append roll FORWARD at the next op's entry, and gives
-    // a crashed STREAM batch an O(batch) rollback record. Clustering
-    // within the batch keeps each new file's ts min/max tight (batches are
-    // ts-disjoint across time by the tail guard above). Also keeps Spark
-    // committer scratch out of the live directory.
-    val tmp = batchTmpPath(path)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
+    // STAGE-THEN-INSTALL: the batch clusters into the sibling gen tmp
+    // dir and commits through the generation install, like every rewrite
+    // — so engine reads stay atomic through the move window (liveEntries
+    // allows the marker's names and serves the pre-batch manifest), and a
+    // crash past the marker rolls the batch FORWARD at the next op's
+    // entry, its stream commit included. Clustering within the batch
+    // keeps each new file's ts min/max tight (batches are ts-disjoint
+    // across time by the tail guard above). Also keeps Spark committer
+    // scratch out of the live directory.
+    val tmp = genTmpPath(path) // the entry's recoverGen cleared it
     // SIZE-DERIVED staging file count (r18, guide §6 "aim for output
     // files in the 128 MB–1 GB range"): the old parts = input partition
     // count wrote one file PER UPSTREAM PARTITION whatever its size — 8
@@ -2376,6 +2330,14 @@ object Tables {
     val estBytes = incoming.queryExecution.optimizedPlan.stats.sizeInBytes
     writeClustered(incoming, tmp.toString, Seq(col(ts)),
       stagedPartCount(inputParts, estBytes, appendTargetBytes))
+    // fresh-table bootstrap: the FIRST batch establishes the manifest
+    // from the staging footer pass, so stream-ingested tables are
+    // manifest-governed from birth — metadata tail checks and rangeScan
+    // file pruning from batch two onward. Its entries are loaded=true
+    // like writeManifest's bootstrap: the first batch IS the established
+    // layout, not a pending fold. Any later batch's are loaded=false (the
+    // set compactIncremental folds).
+    val bootstrap = preFiles.isEmpty && mEntry.isEmpty
     // ONE footer pass serves both needs: manifest stats AND the row-less
     // drop. An empty trigger batch stages a 0-row part file whose
     // stat-less manifest entry would permanently degrade the metadata
@@ -2384,13 +2346,10 @@ object Tables {
     // None) KEEPS the file: dropping possible data on a read error is
     // never allowed; such a file stays stat-less, the conservative
     // pre-existing behavior.
-    val scanned = scanEntriesWithRows(spark.sparkContext.hadoopConfiguration,
+    val entries = scanEntriesWithRows(spark.sparkContext.hadoopConfiguration,
       ts, fs.listStatus(tmp)
         .filter(s => s.isFile && isDataFile(s.getPath.getName)).toSeq,
-      loaded = false)
-    val kept = scanned.filterNot(_._2.contains(0L))
-    val staged = kept.map { case (e, _) => new Path(tmp, e.name) }
-    val entries = kept.map(_._1)
+      loaded = bootstrap).filterNot(_._2.contains(0L)).map(_._1)
     // the deferred metadata tail check (see deferredTailNs above): the
     // staged footers carry exact per-file min(ts) in epoch-ns — their min
     // IS the incoming min the old pre-staging agg job computed (0-row
@@ -2417,6 +2376,19 @@ object Tables {
       }
     }
     crashPoint("append:staged")
+    // a batch with no rows installs nothing (an all-empty first batch
+    // writes NO manifest — an empty governed table has no schema source,
+    // so snapshot would fail on it, ADVICE r12 low; the table bootstraps
+    // at the first batch that carries rows); a stream still commits it
+    if (entries.isEmpty) {
+      fs.delete(tmp, true)
+      stream.foreach { case (sc, log) =>
+        if (!dirExists) fs.mkdirs(hp) // the sidecar needs its dir
+        commitStream(fs, hp, sc, log)
+        crashPoint("stream:committed")
+      }
+      return Nil
+    }
     // the collision refusal must run BEFORE the marker durably commits
     // the batch: after the marker, recovery rolls FORWARD keying on
     // fs.exists(dst) — it cannot tell a pre-existing foreign file from an
@@ -2426,52 +2398,33 @@ object Tables {
     // only the sibling staging dir has been written since) — no second
     // O(files) directory listing needed
     val existingNames = preFiles.map(_.getPath.getName).toSet
-    staged.foreach { f =>
-      if (existingNames(f.getName)) sys.error(
-        s"append: staged file ${f.getName} collides with an " +
+    entries.foreach { e =>
+      if (existingNames(e.name)) sys.error(
+        s"append: staged file ${e.name} collides with an " +
           s"existing file in $hp — refusing to install")
     }
-    writeSmallFileAtomic(fs, appendMarkerPath(path),
-      org.json4s.jackson.Serialization.write(
-        AppendMarker(ts, staged.map(_.getName))))
-    crashPoint("append:marker")
-    if (!fs.exists(hp)) fs.mkdirs(hp)
-    staged.foreach { f =>
-      if (!fs.rename(f, new Path(hp, f.getName)))
-        sys.error(s"append: cannot move staged file $f into $hp")
-      crashPoint("append:moved")
-    }
-    crashPoint("append:written")
-    // fresh-table bootstrap: the FIRST batch establishes the manifest
-    // (REUSING the staging footer pass — writeManifest would re-scan the
-    // same files; names and stats are unchanged by the rename), so
-    // stream-ingested tables are manifest-governed from birth — metadata
-    // tail checks and rangeScan file pruning from batch two onward.
-    // loaded=true like writeManifest's bootstrap: the first batch IS the
-    // established layout, not a pending fold; a fresh table has no
-    // retired set to carry. An all-empty first batch (every staged file
-    // dropped as 0-row) writes NO manifest — an empty governed table has
-    // no schema source, so snapshot would fail on it (ADVICE r12, low);
-    // the table bootstraps at the first batch that carries rows.
-    if (preFiles.isEmpty && mEntry.isEmpty && entries.nonEmpty)
-      writeManifestFile(fs, hp,
-        TsManifest(1, ts, entries.map(_.copy(loaded = true))))
-    // extend the manifest with the batch's files as loaded=false (the set
-    // compactIncremental folds). A manifest that no longer matches the
-    // pre-append listing is stale (foreign writer) — drop it rather than
-    // compound the lie; readers and compact fall back gracefully.
-    else mEntry.filter(_.ts == ts).foreach { m =>
-      if (manifestConsistent(m, preFiles)) {
-        writeManifestFile(fs, hp, m.copy(files = m.files ++ entries))
-      } else if (m.retired.nonEmpty) sys.error(
-        s"append: manifest at $path no longer matches the live listing but " +
-          "grace-retained retired files exist — dropping the manifest would " +
-          "surface them as live duplicates; resolve the foreign modification " +
-          "(or Tables.vacuum) first")
-      else fs.delete(new Path(hp, ManifestName), false)
-    }
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    staged.map(_.getName)
+    // the manifest the install extends: the fresh table's empty one, or
+    // the entry manifest when it matches the pre-append listing. One
+    // that no longer matches is stale (foreign writer) — drop it before
+    // the marker rather than compound the lie (readers and compact fall
+    // back gracefully), unless retired files would then surface as live
+    // duplicates. A manifest of another ts column is left as it is.
+    val base: Option[TsManifest] =
+      if (bootstrap) Some(TsManifest(1, ts, Seq.empty))
+      else mEntry.filter(_.ts == ts).flatMap { m =>
+        if (manifestConsistent(m, preFiles)) Some(m)
+        else if (m.retired.nonEmpty) sys.error(
+          s"append: manifest at $path no longer matches the live listing but " +
+            "grace-retained retired files exist — dropping the manifest would " +
+            "surface them as live duplicates; resolve the foreign modification " +
+            "(or Tables.vacuum) first")
+        else { fs.delete(new Path(hp, ManifestName), false); None }
+      }
+    installGeneration(fs, hp, tmp,
+      GenMarker(ts, entries.map(_.name), Seq.empty, loaded = bootstrap,
+        manifest = base.isDefined, stream = stream.map(_._1)),
+      base, entries, "append", stream.map(_._2), createDir = !dirExists)
+    entries.map(_.name)
   }
 
   // ---- streaming ingest bridge (insert trigger, imcs.c:4617-4740) ------
@@ -2492,88 +2445,70 @@ object Tables {
     writeSmallFileAtomic(fs, new Path(dir, StreamCommitsName),
       org.json4s.jackson.Serialization.write(rec))
 
-  /** Roll back a crashed in-flight stream batch: delete data files not in
-    * the pending record's pre-listing, prune them from the manifest, and
-    * clear the pending marker. Runs at entry of EVERY mutating op (via
-    * [[recoverMutations]]) so maintenance can never fold a half-committed
-    * batch into the layout before its replay decides it.
+  /** Advance `sc.streamId`'s high-water mark in the commit log `rec` to
+    * `sc.batchId` unless it holds it already — idempotent, so the install
+    * and its crash recovery ([[recoverGen]]) share it.
     */
-  private def recoverStreamPending(fs: FileSystem, path: String): Unit = {
+  private def commitStream(fs: FileSystem, dir: Path, sc: StreamCommit,
+                           rec: StreamCommits): Unit =
+    if (!rec.committed.get(sc.streamId).exists(_ >= sc.batchId))
+      writeStreamCommits(fs, dir,
+        rec.copy(committed = rec.committed + (sc.streamId -> sc.batchId)))
+
+  /** Roll back a crashed in-flight BUCKETED stream batch: delete data
+    * files not in the pending record's pre-listing, prune them from the
+    * manifest, and clear the pending record. Runs at entry of EVERY
+    * mutating op (via [[recoverMutations]] and [[bucketedOp]]) so
+    * maintenance can never fold a half-committed batch into the layout
+    * before its replay decides it.
+    *
+    * A clustered table's batches commit through the generation marker
+    * and write no pending record, so one found on a `clustered` table
+    * was left by a previous release. Its listing-based form (a non-empty
+    * pre-listing, no flag) rolls back as before. Its append-marker form
+    * (`markerBased`, or an empty pre-listing, which the flag-less marker
+    * records also wrote) is REFUSED: its rollback identity is a marker
+    * this release does not read, and an empty pre-listing taken as a
+    * listing would delete every data file of the table.
+    */
+  private def recoverStreamPending(fs: FileSystem, path: String,
+                                   clustered: Boolean): Unit = {
     val hp = new Path(path)
     if (!fs.exists(hp) || fs.getFileStatus(hp).isFile) return
     val rec = readStreamCommits(fs, hp)
     rec.pending.foreach { pnd =>
-      // routing: the explicit flag picks the marker-based branch; for
-      // flag-less records, an EMPTY pre-listing WITH a surviving append
-      // marker is the brief flag-less slim format's encoding (it wrote
-      // preFiles=[] meaning "see the marker"; treating it listing-based
-      // would delete EVERY data file as an "extra") — a marker's presence
-      // is unambiguous, since the pre-slim protocol never wrote one and
-      // the bucketed path still doesn't. A flag-less empty pre-listing
-      // with NO marker is a genuinely-empty-table record (bucketed or
-      // legacy batch 0), where the listing-based delete-all is correct.
-      val markerBased = pnd.markerBased.contains(true) ||
-        (pnd.preFiles.isEmpty && fs.exists(appendMarkerPath(path)))
-      if (!markerBased) {
-        // LEGACY + BUCKETED rollback: the pending record carries the
-        // pre-batch listing; anything beyond it is the rolled-back batch.
-        // The manifest prune keys on the RECORD, not on this run's extras
-        // (idempotent across a crash between the deletes and the prune).
-        val pre = pnd.preFiles.toSet
-        val extras = fs.listStatus(hp).filter(s => s.isFile &&
-          isDataFile(s.getPath.getName) && !pre(s.getPath.getName))
-        extras.foreach { s =>
-          // fs.delete returns FALSE (no throw) for a failed delete on the
-          // local FS — both signals must stop the rollback, or the pending
-          // record clears with the batch's data still live (see the
-          // marker branch's comment)
-          if (!fs.delete(s.getPath, false) && fs.exists(s.getPath))
-            sys.error(s"stream rollback: cannot delete ${s.getPath} — " +
-              "refusing to clear the pending record; retry")
-        }
-        crashPoint("stream:rolled-back")
-        readManifest(fs, hp).foreach { m =>
-          if (m.files.exists(e => !pre(e.name)))
-            writeManifestFile(fs, hp,
-              m.copy(files = m.files.filter(e => pre(e.name))))
-        }
-      } else {
-        // CLUSTERED rollback (r12 slim pending — O(batch), not O(table)):
-        // the append marker names the batch's files; delete them wherever
-        // they are (live dir after the move, staging before it), prune
-        // them from the manifest, clear marker + staging
-        val tmp = batchTmpPath(path)
-        val names: Set[String] = readAppendMarker(fs, path)
-          .map(_.files.toSet).getOrElse(Set.empty)
-        // a missing file returns false harmlessly (already rolled back /
-        // never moved) but a FAILED delete must stop the rollback — on the
-        // local FS that failure is ALSO a false return (no exception), so
-        // check return-plus-exists, not just propagate: clearing the
-        // pending record with the batch's data still live would make the
-        // replay duplicate every row
-        names.foreach { n =>
-          val live = new Path(hp, n)
-          if (!fs.delete(live, false) && fs.exists(live))
-            sys.error(s"stream rollback: cannot delete $live — refusing " +
-              "to clear the pending record; retry")
-          if (fs.exists(tmp)) fs.delete(new Path(tmp, n), false)
-        }
-        crashPoint("stream:rolled-back")
-        if (names.nonEmpty) readManifest(fs, hp).foreach { m =>
-          if (m.files.exists(e => names(e.name)))
-            writeManifestFile(fs, hp,
-              m.copy(files = m.files.filterNot(e => names(e.name))))
-        }
-        // same rule for the marker: one that cannot be deleted must not be
-        // left behind a cleared pending record — recoverAppend would roll
-        // the already-rolled-back batch FORWARD and fail on the missing
-        // files, bricking every mutating op (false-return AND exception
-        // both mean failure on this path; absence is fine)
-        val mk = appendMarkerPath(path)
-        if (!fs.delete(mk, false) && fs.exists(mk))
-          sys.error(s"stream rollback: cannot delete append marker $mk — " +
+      if (pnd.markerBased.contains(true) || (clustered && pnd.preFiles.isEmpty))
+        throw new IllegalStateException(
+          s"table $path holds an in-flight stream batch (stream " +
+            s"${pnd.streamId}, batch ${pnd.batchId}) recorded by a previous " +
+            "release's append-marker protocol, which this release cannot " +
+            "roll back; no file was changed. Run one mutating op on the " +
+            "table (e.g. Tables.compactIncremental) with the previous " +
+            "release — its entry rolls the batch back — then resume the " +
+            "stream with this release, which re-appends the batch")
+      // the pending record carries the pre-batch listing; anything beyond
+      // it is the rolled-back batch. The manifest prune keys on the
+      // RECORD, not on this run's extras (idempotent across a crash
+      // between the deletes and the prune).
+      val pre = pnd.preFiles.toSet
+      val extras = fs.listStatus(hp).filter(s => s.isFile &&
+        isDataFile(s.getPath.getName) && !pre(s.getPath.getName))
+      extras.foreach { s =>
+        // a missing file returns false harmlessly (already rolled back)
+        // but a FAILED delete must stop the rollback — on the local FS
+        // that failure is ALSO a false return (no exception), so check
+        // return-plus-exists: clearing the pending record with the
+        // batch's data still live would make the replay duplicate every
+        // row
+        if (!fs.delete(s.getPath, false) && fs.exists(s.getPath))
+          sys.error(s"stream rollback: cannot delete ${s.getPath} — " +
             "refusing to clear the pending record; retry")
-        if (fs.exists(tmp)) fs.delete(tmp, true)
+      }
+      crashPoint("stream:rolled-back")
+      readManifest(fs, hp).foreach { m =>
+        if (m.files.exists(e => !pre(e.name)))
+          writeManifestFile(fs, hp,
+            m.copy(files = m.files.filter(e => pre(e.name))))
       }
       writeStreamCommits(fs, hp, rec.copy(pending = None))
     }
@@ -2585,15 +2520,15 @@ object Tables {
     * ([[graft.streaming.Streams.ingestAppend]] is the writeStream
     * wrapper). Under ONE writer lease: a replayed batch (id ≤ the
     * stream's committed high-water mark, e.g. after checkpoint recovery)
-    * is SKIPPED; otherwise a pending record (with the pre-batch file
-    * listing) commits the attempt, the batch appends through the ordered
-    * -ingest contract + manifest extension [[appendBody]], and the
-    * commit record advances the mark. A crash anywhere replays the batch:
-    * before the pending record nothing happened; after it, recovery rolls
-    * the partial data back and the replay re-appends. `streamId` keys the
-    * commit log — use the checkpoint location (stable across restarts,
-    * unique per query). Returns whether the batch was applied (false =
-    * replay skipped).
+    * is SKIPPED; otherwise the batch appends through the ordered-ingest
+    * contract ([[appendBody]]) and commits in ONE generation install:
+    * its marker carries the batch id, and the commit record lands after
+    * the manifest. A crash before the marker leaves nothing (the replay
+    * re-appends); a crash after it rolls the batch forward, commit
+    * record included, at the next op's entry — the replay is then
+    * skipped. `streamId` keys the commit log — use the checkpoint
+    * location (stable across restarts, unique per query). Returns
+    * whether the batch was applied (false = replay skipped).
     */
   def appendStreamBatch(batch: DataFrame, path: String, ts: String,
                         streamId: String, batchId: Long): Boolean =
@@ -2609,26 +2544,8 @@ object Tables {
       val rec = readStreamCommits(fs, hp)
       if (rec.committed.get(streamId).exists(_ >= batchId)) None
       else {
-        // slim pending (r12 review): the rollback identity is the append
-        // MARKER's O(batch) file list, not an O(table) pre-listing — the
-        // sidecar stays small however many files the table accumulates
-        writeStreamCommits(fs, hp,
-          rec.copy(pending = Some(PendingBatch(streamId, batchId, Seq.empty,
-            markerBased = Some(true)))))
-        crashPoint("stream:pending")
-        // the body leaves the append marker — this batch's rollback
-        // identity — in place, so a crash BEFORE the commit record below
-        // still lets recovery delete exactly the batch's files
-        val files = appendBody(fs, hp, batch, path, ts)
-        crashPoint("stream:appended")
-        writeStreamCommits(fs, hp,
-          StreamCommits(rec.committed + (streamId -> batchId), None))
-        crashPoint("stream:committed")
-        fs.delete(appendMarkerPath(path), false)
-        // invalidate AFTER the marker clears: while it stands it subtracts
-        // the batch's files from the served live set, so a registered view
-        // rebuilt earlier would hold the PRE-batch snapshot and lag the
-        // stream by one batch (r13 review finding #1)
+        val files = appendBody(fs, hp, batch, path, ts,
+          Some(StreamCommit(streamId, batchId) -> rec))
         invalidateRead(batch.sparkSession, path)
         Some(files)
       }
@@ -2637,17 +2554,16 @@ object Tables {
   /** Advance a stream's commit log for a batch the CALLER knows is empty
     * (r18; guide §2.4 "remove jobs outright"): exactly-once semantics with
     * zero data to land need only the committed high-water mark — no
-    * pending record, no append marker, no staging write. The full
-    * [[appendStreamBatch]] on a `limit(0)` frame still pays a Spark write
-    * job (a staged 0-row part file the footer pass then drops), a
-    * same-content manifest rewrite and the marker dance — per batch, on
-    * the landing-dedup ALL-DROP steady state that is the whole protocol
-    * twice over (doc + bucket table). Crash matrix: a crash before the
-    * commit write leaves nothing (the replay re-enters and re-decides an
-    * identical empty batch); after it, the replay skips — the same two
-    * outcomes the heavyweight path has, minus the states that only exist
-    * because files were staged. Entry recovery still runs, so a PRIOR
-    * crashed batch is rolled back before this one commits past it.
+    * staging write. The full [[appendStreamBatch]] on a `limit(0)` frame
+    * still pays a Spark write job (a staged 0-row part file the footer
+    * pass then drops) — per batch, on the landing-dedup ALL-DROP steady
+    * state that is the whole protocol twice over (doc + bucket table).
+    * Crash matrix: a crash before the commit write leaves nothing (the
+    * replay re-enters and re-decides an identical empty batch); after
+    * it, the replay skips — the same two outcomes the heavyweight path
+    * has, minus the states that only exist because files were staged.
+    * Entry recovery still runs, so a PRIOR crashed batch is rolled
+    * forward before this one commits past it.
     */
   def commitEmptyStreamBatch(spark: SparkSession, path: String,
                              streamId: String, batchId: Long): Boolean =
@@ -2662,8 +2578,7 @@ object Tables {
       else {
         if (!fs.exists(hp)) fs.mkdirs(hp) // the sidecar needs its dir
         crashPoint("stream:pending")
-        writeStreamCommits(fs, hp,
-          StreamCommits(rec.committed + (streamId -> batchId), None))
+        commitStream(fs, hp, StreamCommit(streamId, batchId), rec)
         crashPoint("stream:committed")
         true
       }
@@ -2802,20 +2717,19 @@ object Tables {
     val dtTs = scala.util.Try(headSchema(spark, p, liveFiles.head.name)).toOption
       .flatMap(_.fields.find(_.name.equalsIgnoreCase(ts)).map(_.dataType))
     val bounds = dtTs.flatMap(dt => deleteBoundsNs(spark, dt, from, till))
-    val (carried, rewrite) = bounds match {
-      case Some((fromNs, tillNs)) => liveFiles.partition { e =>
+    val rewrite = bounds match {
+      case Some((fromNs, tillNs)) => liveFiles.filterNot { e =>
         (e.minNs, e.maxNs) match {
           case (Some(mn), Some(mx)) => mx < fromNs || mn > tillNs
           case _ => false
         }
       }
-      case None => (Seq.empty[TsFileEntry], liveFiles)
+      case None => liveFiles
     }
     // nothing intersects: the delete is a pure no-op — no rewrite, no
     // generation flip, no manifest churn
     if (rewrite.isEmpty) return
-    val tmp = genTmpPath(path)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
+    val tmp = genTmpPath(path) // the entry's recoverGen cleared it
     // NULL-ts rows are outside every range: without the isNull arm the
     // negated conjunction is NULL under three-valued logic and filter
     // would silently DELETE them. No pre-materialization needed — the
@@ -2824,9 +2738,8 @@ object Tables {
       .filter(col(ts).isNull || !(col(ts) >= from && col(ts) <= till))
       .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     crashPoint("del:staged")
-    installGeneration(spark, fs, p, tmp, ts,
-      replaced = rewrite.map(_.name), carryLive = carried,
-      carryRetired = live.retired, tag = "del")
+    installRewrite(spark, fs, p, tmp, live.manifest,
+      replaced = rewrite.map(_.name), tag = "del")
     reclaimRetired(fs, p, retireGraceMs)
     invalidateRead(spark, path)
     }
@@ -3134,7 +3047,7 @@ object Tables {
       // like truncate/load do (compactBucketedIsolated proceeds under pins)
       if (readerExclusive) requireNoLivePins(fs, loc, op)
       sweepManifestStaging(fs, loc)
-      recoverStreamPending(fs, loc.toString)
+      recoverStreamPending(fs, loc.toString, clustered = false)
       recoverCompact(fs, loc.toString)
       reclaimRetiredDirs(fs, loc, retireGraceMs)
       body(BucketedTable(table, ct, bs, loc, fs))

@@ -647,8 +647,8 @@ object Streams {
     *     and scans plainly instead of risking a task StackOverflowError
     *     (ADVICE r15 #2). Membership is decided by the real join, so
     *     bloom false positives cost I/O, never semantics; a positives
-    *     flood past `graft.dedup.probe.isin.max` (8192 — a saturated
-    *     sidecar, or a genuinely all-colliding batch) likewise drops the
+    *     flood past [[ProbeIsinCap]] (8192 — a saturated sidecar, or
+    *     a genuinely all-colliding batch) likewise drops the
     *     filter and scans plainly, still shuffle-free via (1). The bloom
     *     is what the reference's B-tree point lookups (btree.c:479-589)
     *     map to in a lakehouse layout.
@@ -675,6 +675,11 @@ object Streams {
       .getOrElse(bb.select(cols.map(col): _*).limit(0))
   }
 
+  /** The most bloom-positive bucket values a probe pushes into the
+    * stored scan as an `In` filter; past it the probe scans plainly.
+    */
+  private val ProbeIsinCap = 8192
+
   /** The cap on the batch's bucket rows a probe collects to the driver
     * (`graft.dedup.probe.collect.max`, default 1e6). Past it the probe
     * skips the sidecar check and scans plainly.
@@ -697,8 +702,6 @@ object Streams {
                           how: String): Option[DataFrame] = {
     def probed(stored: DataFrame): DataFrame =
       stored.join(broadcast(side), Seq("band", "bucket"), how)
-    val isinCap = sys.props.get("graft.dedup.probe.isin.max")
-      .flatMap(_.toIntOption).getOrElse(8192)
     // the live view is resolved ONCE (one manifest + listing read) and
     // every stored-side frame below is built from it by Tables.liveFrame:
     // statuses from that listing, schema from the memoized head footer —
@@ -758,7 +761,7 @@ object Streams {
       case Some(pos) if pos.isEmpty =>
         // bloom-cleared: the common no-collision batch reads NOTHING
         None
-      case Some(pos) if pos.length <= isinCap &&
+      case Some(pos) if pos.length <= ProbeIsinCap &&
           pos.length * 2 <= vals.get.length && !orChainHazard(pos.length) =>
         // SELECTIVE positives: the InSet thins what flows into the join.
         // When most of the batch is positive (a re-crawl batch: every
@@ -1349,7 +1352,7 @@ object Streams {
     * stream ids keep the two commit logs separate. An ALL-DROP batch
     * (`freshEmpty`) advances both commit logs WITHOUT staging writes
     * ([[graft.io.Tables.commitEmptyStreamBatch]] — the same exactly-once
-    * transition minus the 0-row write job, marker and manifest rewrite).
+    * transition minus the 0-row write job).
     *
     * The sidecar's new bucket values are the verdict's
     * `survivorBuckets`, taken from the batch rows it already collected —

@@ -208,7 +208,7 @@ class AsofMergeSpec extends AnyFunSuite {
     val r = Seq((5L, "a"), (6L, "b"), (8L, null: String)).toDF("ts", "v")
     val df = AsofMerge.asofJoin(l, r, Seq(), "ts", "v")
     assert(!df.queryExecution.executedPlan.toString.contains("AsofMergeJoin"),
-      "string keyless as-of must ride the dictionary-coded ranged scan")
+      "string keyless as-of must run the ranged carry scan")
     // equality with the SERIAL EXEC on the same inputs — including the
     // row-carry contract: the NULL-valued right ROW at ts=8 masks "b"
     val serial = serialKeylessExec(l, r, "ts", "v")
@@ -235,7 +235,7 @@ class AsofMergeSpec extends AnyFunSuite {
 
   test("keyless string carry: random frames WITH NULL values match the serial exec") {
     // the row-carry contract under fire: ~25% NULL-valued right rows on a
-    // random frame, all four direction×boundary configs — the dict path
+    // random frame, all four direction×boundary configs — the carry scan
     // must carry (and mask with) NULL rows exactly as the serial exec does
     val rnd = new scala.util.Random(13)
     val bl = Seq.fill(250)(Tuple1(rnd.nextInt(400).toLong)).toDF("ts")
@@ -266,17 +266,17 @@ class AsofMergeSpec extends AnyFunSuite {
   }
 
   test("keyless struct as-of carries the whole struct (no single-task merge)") {
-    // struct of (double, long, string): double/long ride value lanes,
-    // the string field rides dict lanes — all carried from the SAME row
+    // struct of (double, long, string): the carry scan carries the whole
+    // struct value — every field from the SAME row
     val l = Seq(Tuple1(3L), Tuple1(5L), Tuple1(7L), Tuple1(9L)).toDF("ts")
     val r = Seq[(Long, (java.lang.Double, java.lang.Long, String))](
-      (5L, (1.5, 1L << 40 | 3L, "a")),     // int64 field past 2^32: hi/lo lanes
+      (5L, (1.5, 1L << 40 | 3L, "a")),     // int64 field past 2^32: carried exactly
       (6L, (null, 2L, null)),              // present struct, NULL fields inside
       (8L, null))                          // NULL struct row — must MASK ts=6
       .toDF("ts", "v")
     val df = AsofMerge.asofJoin(l, r, Seq(), "ts", "v")
     assert(!df.queryExecution.executedPlan.toString.contains("AsofMergeJoin"),
-      "struct keyless as-of must ride the decomposed ranged scan")
+      "struct keyless as-of must run the ranged carry scan")
     val got = df.orderBy("ts").select("asof_value").collect().map(_.get(0))
     assert(got(0) == null, "no match yet")
     assert(got(1) == org.apache.spark.sql.Row(1.5, 1L << 40 | 3L, "a"))
@@ -314,7 +314,7 @@ class AsofMergeSpec extends AnyFunSuite {
     val r = Seq((5L, Seq(1, 2)), (6L, Seq(3)), (8L, null)).toDF("ts", "v")
     val df = AsofMerge.asofJoin(l, r, Seq(), "ts", "v")
     assert(!df.queryExecution.executedPlan.toString.contains("AsofMergeJoin"),
-      "array values group/join by value, so the dict route must plan")
+      "array keyless as-of must run the ranged carry scan")
     val got = df.orderBy("ts").collect()
     assert(got(0).isNullAt(1), "no match yet")
     assert(got(1).getSeq[Int](1) == Seq(3))
@@ -324,8 +324,8 @@ class AsofMergeSpec extends AnyFunSuite {
   }
 
   test("keyless struct-in-struct as-of carries the nested struct whole") {
-    // outer struct decomposes per-field; its struct FIELD is not lane-able
-    // but dict-encodes by value — the last non-map shape off the serial exec
+    // a struct FIELD inside the struct value: the carry scan carries the
+    // outer value whole, nested struct included
     val l = Seq(Tuple1(3L), Tuple1(7L), Tuple1(9L)).toDF("ts")
     val r = Seq(
       (5L, (1.5, (10L, "a"))),
@@ -333,7 +333,7 @@ class AsofMergeSpec extends AnyFunSuite {
       (8L, null.asInstanceOf[(Double, (Long, String))])).toDF("ts", "v")
     val df = AsofMerge.asofJoin(l, r, Seq(), "ts", "v")
     assert(!df.queryExecution.executedPlan.toString.contains("AsofMergeJoin"),
-      "struct-in-struct must decompose (inner struct via dictionary codes)")
+      "struct-in-struct keyless as-of must run the ranged carry scan")
     val got = df.orderBy("ts").select("asof_value").collect()
     assert(got(0).isNullAt(0))
     assert(got(1) == org.apache.spark.sql.Row(
@@ -344,9 +344,9 @@ class AsofMergeSpec extends AnyFunSuite {
 
   test("keyless carry: DUPLICATE right ts values carry ONE whole tied row (ADVICE r17)") {
     // ties on the right ts are a legal arbitrary choice, but the carried
-    // columns must come from the SAME row — the row-id carry fetches by
-    // one id, so a (value, tag) mix across the tied rows would mean the
-    // scan and fetch subtrees disagreed on the numbering
+    // columns must come from the SAME row — the carry scan carries one
+    // whole row, so a (value, tag) mix across the tied rows would mean it
+    // split a tie between columns
     val l = Seq(Tuple1(5L), Tuple1(7L)).toDF("ts")
     val r = Seq(
       (5L, Map("a" -> 1), "rowA"),
@@ -355,7 +355,7 @@ class AsofMergeSpec extends AnyFunSuite {
     val df = AsofMerge.asofJoinDir(l, r, Seq(), "ts",
       Seq("v", "tag"), Seq("ov", "otag"))
     assert(!df.queryExecution.executedPlan.toString.contains("AsofMergeJoin"),
-      "map values must take the row-id route")
+      "map values must run the ranged carry scan")
     val got = df.orderBy("ts").collect()
     val m = got(0).getMap[String, Int](1)
     val tag = got(0).getString(2)
@@ -366,7 +366,7 @@ class AsofMergeSpec extends AnyFunSuite {
       got(1).getString(2) == "rowC")
   }
 
-  test("keyless MAP as-of decomposes to sorted entry arrays (no single-task merge)") {
+  test("keyless MAP as-of runs the carry scan (no single-task merge)") {
     val l = Seq(Tuple1(3L), Tuple1(5L), Tuple1(7L), Tuple1(9L), Tuple1(11L)).toDF("ts")
     val r = Seq(
       (5L, Map("b" -> 3, "a" -> 1)),        // multi-entry: pairing must hold
@@ -375,7 +375,7 @@ class AsofMergeSpec extends AnyFunSuite {
       (10L, Map("z" -> 9))).toDF("ts", "v")
     val df = AsofMerge.asofJoin(l, r, Seq(), "ts", "v")
     assert(!df.queryExecution.executedPlan.toString.contains("AsofMergeJoin"),
-      "map keyless as-of must ride the decomposed entry-array scan")
+      "map keyless as-of must run the ranged carry scan")
     val got = df.orderBy("ts").collect()
     assert(got(0).isNullAt(1), "no match yet")
     assert(got(1).getMap[String, Int](1) == Map("a" -> 1, "b" -> 3))
@@ -416,11 +416,10 @@ class AsofMergeSpec extends AnyFunSuite {
     }
   }
 
-  test("keyless NESTED-map as-of decomposes one level (no single-task merge)") {
-    // map<k, map<k2, v2>>: inner maps flatten elementwise to an
-    // array-of-key-arrays + array-of-value-arrays (null inner map = null
-    // element), the outer to its own sorted key array + presence lane —
-    // all dict-encodable, so the whole column rides the parallel scan
+  test("keyless NESTED-map as-of runs the carry scan (no single-task merge)") {
+    // map<k, map<k2, v2>>: the carry scan carries the whole map value
+    // from its row — NULL inner maps, EMPTY inner maps and a NULL outer
+    // map row each round-trip as they were stored
     val l = Seq(Tuple1(3L), Tuple1(5L), Tuple1(7L), Tuple1(9L), Tuple1(11L)).toDF("ts")
     val r = Seq(
       (5L, Map("a" -> Map("x" -> 1, "y" -> 2), "b" -> Map("z" -> 3))),
@@ -430,7 +429,7 @@ class AsofMergeSpec extends AnyFunSuite {
       .toDF("ts", "v")
     val df = AsofMerge.asofJoin(l, r, Seq(), "ts", "v")
     assert(!df.queryExecution.executedPlan.toString.contains("AsofMergeJoin"),
-      "one-level nested maps must ride the decomposed entry-array scan")
+      "one-level nested maps must run the ranged carry scan")
     val got = df.orderBy("ts").collect()
     assert(got(0).isNullAt(1), "no match yet")
     assert(got(1).getMap[String, Map[String, Int]](1).toMap
@@ -479,18 +478,17 @@ class AsofMergeSpec extends AnyFunSuite {
     }
   }
 
-  test("maps at ANY depth/position ride the parallel scan (deep transcoder)") {
-    // depth-3 maps, maps inside structs, and maps inside arrays all
-    // transcode recursively to map-free canonical structs-of-arrays and
-    // ride the parallel scan — the former AllTuples boundary is closed;
-    // the serial exec is reachable only by direct plan construction
+  test("maps at ANY depth/position run the carry scan") {
+    // depth-3 maps, maps inside structs, and maps inside arrays are all
+    // carried whole by the parallel carry scan; the serial exec is
+    // reachable only by direct plan construction
     val l = Seq(Tuple1(7L)).toDF("ts")
     val r3 = Seq((5L, Map("a" -> Map("x" -> Map("deep" -> 1)))),
       (6L, Map("b" -> Map("y" -> Map("deep" -> 3)))))
       .toDF("ts", "v")
     val d3 = AsofMerge.asofJoin(l, r3, Seq(), "ts", "v")
     assert(!d3.queryExecution.executedPlan.toString.contains("AsofMergeJoin"),
-      "three-level maps must ride the deep transcoder, not the single merge")
+      "three-level maps must run the carry scan, not the single merge")
     assert(d3.head().getMap[String, Map[String, Map[String, Int]]](1)
       .toMap.keySet == Set("b"))
     // map inside a struct
@@ -616,9 +614,9 @@ class AsofMergeSpec extends AnyFunSuite {
 
   test("keyless carry keeps int64 beyond 2^53 EXACTLY") {
     // ns-scale epoch timestamps (~1.7e18) and snowflake-style ids exceed
-    // a Double lane's 2^53 integer range; the hi/lo 32-bit lane split
-    // must round-trip them bit-exactly — a single-lane carry would be
-    // off by up to 128 here and flip the tolerance gate
+    // a Double's 2^53 integer range; the carry scan must round-trip them
+    // bit-exactly — a carry through Double would be off by up to 128
+    // here and flip the tolerance gate
     val base = 1723500000000000000L // ~2024 in epoch ns, > 2^53
     val l = Seq(Tuple1(base + 1000L), Tuple1(base + 5000L)).toDF("ts")
     val r = Seq((base + 999L, 900719925474099317L), (base + 4001L, 33L))
@@ -629,7 +627,7 @@ class AsofMergeSpec extends AnyFunSuite {
     assert(out == Seq((900719925474099317L, base + 999L), (33L, base + 4001L)))
     // and the tolerance gate built on that carry stays exact at the ±1 ns
     // boundary 1.7e18 deep into the long range: staleness is EXACTLY 1 ns
-    // — tol=0 drops the match, tol=1 keeps it (a double-lane carry would
+    // — tol=0 drops the match, tol=1 keeps it (a carry through Double would
     // see staleness 0±128 and flip both ways)
     val l1 = Seq(Tuple1(base + 1000L)).toDF("ts")
     val drop = Align.asofJoinTol(l1, r, Seq(), "ts", "v", lit(0L))

@@ -863,14 +863,16 @@ class StreamIngestSpec extends AnyFunSuite {
     // the claim under test: survivors are a pure function of (batch,
     // pre-batch bucket state), the doc append commits first — so a crash
     // ANYWHERE in the two-append sequence converges on replay with no
-    // duplicate and no lost doc/bucket row. Crash points: the doc
-    // append's pending/appended/committed (occurrences 1-3 of the stream
-    // tags) and the bucket append's (occurrences 4-6).
+    // duplicate and no lost doc/bucket row. Crash points: each durable
+    // step of the doc append's install — marker, move, manifest, commit
+    // record (occurrence 1 of each tag) — and of the bucket append's
+    // (occurrence 2).
     val base = "the five boxing wizards jump quickly over the glass of sparkling water near the pier"
     val other = "entirely unrelated prose describing adaptive query execution and shuffle partition coalescing"
-    for ((tag, nth) <- Seq(("stream:pending", 1), ("stream:appended", 1),
-        ("stream:committed", 1), ("stream:pending", 2), ("stream:appended", 2),
-        ("stream:committed", 2))) {
+    for ((tag, nth) <- Seq(("append:gen-marker", 1), ("append:gen-moved", 1),
+        ("append:gen-manifest", 1), ("stream:committed", 1),
+        ("append:gen-marker", 2), ("append:gen-moved", 2),
+        ("append:gen-manifest", 2), ("stream:committed", 2))) {
       val docs = tmpDir(s"cdoc") + "/docs.parquet"
       val buckets = tmpDir(s"cbkt") + "/buckets.parquet"
       def runBatch(bid: Long, rows: Seq[(Long, Long, String)]): Unit =
@@ -897,6 +899,30 @@ class StreamIngestSpec extends AnyFunSuite {
     }
   }
 
+  test("a first batch killed after its install marker leaves no table dir; the replay converges") {
+    // regression (fresh-seed fuzz find, seed 115579774666952): the bucket
+    // table's FIRST install, killed right after its marker, once left an
+    // empty table dir behind — and the replay's probe of the bucket table
+    // failed to infer a schema from it. The dir is created only after
+    // the marker now, and the next op's entry rolls the batch forward
+    val base = "the five boxing wizards jump quickly over the glass of sparkling water near the pier"
+    val other = "entirely unrelated prose describing adaptive query execution and shuffle partition coalescing"
+    val docs = tmpDir("c0doc") + "/docs.parquet"
+    val buckets = tmpDir("c0bkt") + "/buckets.parquet"
+    def runBatch(): Unit =
+      Streams.dedupIngestBatch(Seq((1L, 100L, base), (2L, 101L, other))
+        .toDF("id", "ts", "text"), docs, buckets, "ts", "ck-first", "id",
+        "text", 5, 8, 2, 0L)
+    assert(withCrash("append:gen-marker", 2)(runBatch()))
+    assert(!new java.io.File(buckets).exists, "no table dir before the first file")
+    runBatch()
+    assert(Tables.snapshot(spark, docs).select("id").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L))
+    assert(Tables.snapshot(spark, buckets).select("id").as[Long].collect().toSet ==
+      Set(1L, 2L))
+    assert(Tables.snapshot(spark, buckets).count() == 16)
+  }
+
   test("embedding dedup ingest: crash at any point replays consistently") {
     // the EMBEDDING variant has one more determinism dependency than the
     // text one: the stored-corpus verify reads doc-table VECTORS, and a
@@ -904,9 +930,10 @@ class StreamIngestSpec extends AnyFunSuite {
     // survivors in docPath at replay time — they must stay inert
     // (candidates come only from the pre-batch BUCKET table)
     def v(xs: Double*): Seq[Double] = xs
-    for ((tag, nth) <- Seq(("stream:pending", 1), ("stream:appended", 1),
-        ("stream:committed", 1), ("stream:pending", 2), ("stream:appended", 2),
-        ("stream:committed", 2))) {
+    for ((tag, nth) <- Seq(("append:gen-marker", 1), ("append:gen-moved", 1),
+        ("append:gen-manifest", 1), ("stream:committed", 1),
+        ("append:gen-marker", 2), ("append:gen-moved", 2),
+        ("append:gen-manifest", 2), ("stream:committed", 2))) {
       val docs = tmpDir("cedoc") + "/docs.parquet"
       val buckets = tmpDir("cebkt") + "/buckets.parquet"
       def runBatch(bid: Long, rows: Seq[(Long, Long, Seq[Double])]): Unit =
@@ -949,6 +976,20 @@ class StreamIngestSpec extends AnyFunSuite {
     assert(e.getMessage.contains("out-of-order"))
   }
 
+  /** The crash-point fuzzes' seed: `fixed` by default (deterministic
+    * CI); `-Dgraft.soak.seed=now` draws a fresh one and `=<n>` replays a
+    * logged one, as in SoakSpec.
+    */
+  private def soakSeed(fixed: Long): Long = {
+    val seed = sys.props.get("graft.soak.seed") match {
+      case Some("now") => System.nanoTime()
+      case Some(v) => v.toLong
+      case None => fixed
+    }
+    info(s"soak seed: $seed")
+    seed
+  }
+
   /** Arm Tables.crashHook to throw at the nth firing of `tag` (same seam
     * as TablesSpec's fuzz); returns whether the injected crash fired.
     */
@@ -967,19 +1008,19 @@ class StreamIngestSpec extends AnyFunSuite {
     finally Tables.crashHook = None
   }
 
-  test("crash between append and commit record: replay rolls back, lands once") {
+  test("crash between append and commit record: the batch rolls forward, lands once") {
     val table = tmpDir("crash1") + "/t.parquet"
     val b0 = (0L until 100L).map(i => (i, i * 1.0)).toDF("ts", "v")
     val b1 = (100L until 160L).map(i => (i, i * 1.0)).toDF("ts", "v")
     assert(Tables.appendStreamBatch(b0, table, "ts", "ck", 0L))
     // crash AFTER the batch's data+manifest landed, BEFORE the commit
-    // record — the no-rollback replay would double every b1 row
-    assert(withCrash("stream:appended", 1) {
+    // record — a replay that re-appended would double every b1 row
+    assert(withCrash("append:gen-manifest", 1) {
       Tables.appendStreamBatch(b1, table, "ts", "ck", 1L)
     })
-    // the replay (what the restarted stream delivers) must roll the
-    // partial attempt back and append exactly once
-    assert(Tables.appendStreamBatch(b1, table, "ts", "ck", 1L))
+    // the replay (what the restarted stream delivers) rolls the attempt
+    // forward at its entry — commit record included — and is skipped
+    assert(!Tables.appendStreamBatch(b1, table, "ts", "ck", 1L))
     val got = Tables.snapshot(spark, table).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1).toSeq
     assert(got == (0L until 160L).map(i => (i, i * 1.0)),
@@ -989,44 +1030,44 @@ class StreamIngestSpec extends AnyFunSuite {
       new java.io.File(table).listFiles.filter(f => f.isFile &&
         f.getName.endsWith(".parquet") && !f.getName.startsWith(".")
         && !f.getName.startsWith("_")).map(_.getName).toSet,
-      "manifest must track exactly the live files after rollback+replay")
+      "manifest must track exactly the live files after roll-forward+replay")
   }
 
   test("crash after the pending record, before any data: replay lands once") {
     val table = tmpDir("crash2") + "/t.parquet"
     val b0 = (0L until 50L).map(i => (i, i * 1.0)).toDF("ts", "v")
-    assert(withCrash("stream:pending", 1) {
+    assert(withCrash("append:staged", 1) {
       Tables.appendStreamBatch(b0, table, "ts", "ck", 0L)
     })
     assert(Tables.appendStreamBatch(b0, table, "ts", "ck", 0L))
     assert(Tables.snapshot(spark, table).count() == 50L)
-    // maintenance after a crashed pending rolls it back BEFORE folding —
-    // a half-committed batch must never be compacted into the layout
+    // maintenance after a batch crashed past its marker rolls it FORWARD
+    // before folding — the batch is committed, commit record included
     val b1 = (50L until 90L).map(i => (i, i * 1.0)).toDF("ts", "v")
-    assert(withCrash("stream:appended", 1) {
+    assert(withCrash("append:gen-manifest", 1) {
       Tables.appendStreamBatch(b1, table, "ts", "ck", 1L)
     })
     Tables.compactIncremental(spark, table, Seq(), "ts")
-    assert(Tables.snapshot(spark, table).count() == 50L,
-      "maintenance must discard the uncommitted batch, not fold it")
-    // the replay then lands it (fresh ids still advance)
-    assert(Tables.appendStreamBatch(b1, table, "ts", "ck", 1L))
+    assert(Tables.snapshot(spark, table).count() == 90L,
+      "maintenance must fold the rolled-forward batch")
+    // the replay is then skipped (the batch id was committed)
+    assert(!Tables.appendStreamBatch(b1, table, "ts", "ck", 1L))
     assert(Tables.snapshot(spark, table).count() == 90L)
   }
 
   test("crash inside the append body (data written, manifest not extended): lands once") {
-    // deeper than stream:appended: the kill happens INSIDE appendBatch,
-    // after the batch's data files committed but before the manifest
-    // extension — the replay's rollback must delete the data files AND
-    // leave the manifest consistent before re-appending
+    // deeper than the manifest: the kill happens INSIDE the install,
+    // after the batch's data files moved in but before the manifest
+    // extension — the replay's entry must roll the batch forward (manifest
+    // AND commit record) and then skip it
     val table = tmpDir("crash3") + "/t.parquet"
     val b0 = (0L until 80L).map(i => (i, i * 1.0)).toDF("ts", "v")
     val b1 = (80L until 120L).map(i => (i, i * 1.0)).toDF("ts", "v")
     assert(Tables.appendStreamBatch(b0, table, "ts", "ck", 0L))
-    assert(withCrash("append:written", 1) {
+    assert(withCrash("append:gen-moved", 1) {
       Tables.appendStreamBatch(b1, table, "ts", "ck", 1L)
     })
-    assert(Tables.appendStreamBatch(b1, table, "ts", "ck", 1L))
+    assert(!Tables.appendStreamBatch(b1, table, "ts", "ck", 1L))
     assert(Tables.snapshot(spark, table).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1).toSeq ==
       (0L until 120L).map(i => (i, i * 1.0)),
@@ -1151,8 +1192,8 @@ class StreamIngestSpec extends AnyFunSuite {
     assert(Tables.appendStreamBatch(b0, table, "ts", "ck", 0L))
     assert(Tables.appendStreamBatch(b0.limit(0), table, "ts", "ck", 1L))
     assert(Tables.snapshot(spark, table).count() == 50L)
-    assert(!new java.io.File(table + ".append.pending").exists)
-    assert(!new java.io.File(table + ".batch.tmp").exists)
+    assert(!new java.io.File(table + ".gen.commit").exists)
+    assert(!new java.io.File(table + ".gen.tmp").exists)
     assert(!Tables.appendStreamBatch(b0.limit(0), table, "ts", "ck", 1L),
       "the empty batch's id must still advance the high-water mark")
     assert(Tables.appendStreamBatch(
@@ -1937,10 +1978,12 @@ class StreamIngestSpec extends AnyFunSuite {
     // sidecar's SUPERSET INVARIANT (every stored bucket value is
     // bloom-positive — the one property whose silent loss admits
     // duplicates forever). Any find: pin the seed as a named regression.
-    val rnd = new scala.util.Random(20260816L)
+    val rnd = new scala.util.Random(soakSeed(20260816L))
     def text(i: Int): String = (0 until 12).map(w => s"f${w}k$i").mkString(" ")
     val tags = Seq("stream:pending" -> 1, "stream:pending" -> 2,
-      "stream:appended" -> 1, "stream:appended" -> 2,
+      "append:gen-marker" -> 1, "append:gen-marker" -> 2,
+      "append:gen-moved" -> 1, "append:gen-moved" -> 2,
+      "append:gen-manifest" -> 1, "append:gen-manifest" -> 2,
       "stream:committed" -> 1, "stream:committed" -> 2,
       "del:staged" -> 1, "del:staged" -> 2, "retire:reclaimed" -> 1)
     for (iter <- 1 to 4) {
@@ -2009,14 +2052,16 @@ class StreamIngestSpec extends AnyFunSuite {
     // table, candidate-id pushdown) and its own crash matrix above is
     // point-interleaves only. Same convergence bar: exact doc and bucket
     // content vs the no-crash twin, superset invariant on the sidecar.
-    val rnd = new scala.util.Random(20260817L)
+    val rnd = new scala.util.Random(soakSeed(20260817L))
     val dim = 8
     def vec(seedId: Int): Seq[Double] = {
       val r = new scala.util.Random(seedId * 7919L)
       Seq.fill(dim)(r.nextGaussian())
     }
     val tags = Seq("stream:pending" -> 1, "stream:pending" -> 2,
-      "stream:appended" -> 1, "stream:appended" -> 2,
+      "append:gen-marker" -> 1, "append:gen-marker" -> 2,
+      "append:gen-moved" -> 1, "append:gen-moved" -> 2,
+      "append:gen-manifest" -> 1, "append:gen-manifest" -> 2,
       "stream:committed" -> 1, "stream:committed" -> 2,
       "del:staged" -> 1, "del:staged" -> 2)
     for (iter <- 1 to 3) {

@@ -573,7 +573,7 @@ class TablesSpec extends AnyFunSuite {
         if (crashLastAppend && i == batches.size - 1) {
           // kill between the data write and the manifest extend: the data
           // is in, the manifest goes stale — recovery must re-establish it
-          assert(withCrash("append:written", 1)(Tables.append(df, pathA, "ts", lit(0L))),
+          assert(withCrash("append:gen-moved", 1)(Tables.append(df, pathA, "ts", lit(0L))),
             s"iter $iter: append crash point must fire")
         } else Tables.append(df, pathA, "ts", lit(0L))
       }
@@ -1626,11 +1626,11 @@ class TablesSpec extends AnyFunSuite {
       assert(Tables.manifest(spark, path).get.retired.nonEmpty)
       // kill the next append AFTER its files moved in, BEFORE the manifest
       // extension — the exact window a concurrent reader can land on
-      assert(withCrash("append:written", 1) {
+      assert(withCrash("append:gen-moved", 1) {
         Tables.append((330L until 360L).map(i => (i, i * 1.0)).toDF("ts", "v"),
           path, "ts", lit(0L))
       })
-      assert(new java.io.File(path + ".append.pending").exists)
+      assert(new java.io.File(path + ".gen.commit").exists)
       // a reader in the window serves the PRE-batch snapshot — no spurious
       // "foreign writer" error, no torn view
       assert(Tables.snapshot(spark, path).count() == 330L,
@@ -1639,7 +1639,7 @@ class TablesSpec extends AnyFunSuite {
       // data — never dropped), clears the marker, extends the manifest
       Tables.append((360L until 370L).map(i => (i, i * 1.0)).toDF("ts", "v"),
         path, "ts", lit(0L))
-      assert(!new java.io.File(path + ".append.pending").exists)
+      assert(!new java.io.File(path + ".gen.commit").exists)
       assert(Tables.snapshot(spark, path).select("ts").as[Long].collect().toSet ==
         (0L until 370L).toSet,
         "crashed append must roll forward losslessly")
@@ -1649,8 +1649,8 @@ class TablesSpec extends AnyFunSuite {
   }
 
   test("append crash at each staged-move point rolls forward losslessly") {
-    for ((tag, i) <- Seq("append:staged", "append:marker", "append:moved",
-      "append:written").zipWithIndex) {
+    for ((tag, i) <- Seq("append:staged", "append:gen-marker", "append:gen-moved",
+      "append:gen-manifest").zipWithIndex) {
       val path = tmp(s"appcrash$i")
       Tables.load((0L until 50L).map(j => (j, j * 1.0)).toDF("ts", "v"),
         path, Seq(), "ts")
@@ -1667,8 +1667,8 @@ class TablesSpec extends AnyFunSuite {
                    else (0L until 70L).toSet
       assert(got == expect, s"$tag: content diverged (got ${got.size})")
       assert(manifestConsistentHere(path), s"$tag: manifest inconsistent")
-      assert(!new java.io.File(path + ".append.pending").exists, s"$tag: marker leaked")
-      assert(!new java.io.File(path + ".batch.tmp").exists, s"$tag: staging leaked")
+      assert(!new java.io.File(path + ".gen.commit").exists, s"$tag: marker leaked")
+      assert(!new java.io.File(path + ".gen.tmp").exists, s"$tag: staging leaked")
     }
   }
 
@@ -1681,7 +1681,7 @@ class TablesSpec extends AnyFunSuite {
     val path = tmp("ungov")
     (0L until 50L).map(i => (i, i * 1.0)).toDF("ts", "v")
       .coalesce(1).write.parquet(path) // plain write: no manifest
-    assert(withCrash("append:written", 1) {
+    assert(withCrash("append:gen-moved", 1) {
       Tables.append((50L until 70L).map(i => (i, i * 1.0)).toDF("ts", "v"),
         path, "ts", lit(0L))
     })
@@ -1693,8 +1693,8 @@ class TablesSpec extends AnyFunSuite {
       (0L until 80L).toSet, "roll-forward must not lose the crashed batch")
     assert(Tables.manifest(spark, path).isEmpty,
       "recovery must not bootstrap a manifest over an ungoverned dir")
-    assert(!new java.io.File(path + ".append.pending").exists)
-    assert(!new java.io.File(path + ".batch.tmp").exists)
+    assert(!new java.io.File(path + ".gen.commit").exists)
+    assert(!new java.io.File(path + ".gen.tmp").exists)
   }
 
   test("live churn: concurrent readers never fail while maintenance runs") {
@@ -1825,6 +1825,44 @@ class TablesSpec extends AnyFunSuite {
       graft.io.PendingBatch("ck", 1L, Seq.empty, markerBased = Some(true)))
     assert(org.json4s.jackson.Serialization
       .read[graft.io.PendingBatch](slim).markerBased.contains(true))
+  }
+
+  test("a previous release's append-marker pending record is refused; no file is deleted") {
+    // a clustered stream batch commits through its generation marker and
+    // writes no pending record; one found on a clustered table was left
+    // by the previous release's append-marker protocol, whose rollback
+    // identity (the append marker) this release does not read. Taking it
+    // as a listing would delete every data file (its pre-listing is
+    // empty), so every clustered op refuses it with remediation text
+    for ((rec, i) <- Seq(
+        """{"streamId":"ck","batchId":2,"preFiles":[],"markerBased":true}""",
+        """{"streamId":"ck","batchId":2,"preFiles":[]}""").zipWithIndex) {
+      val path = tmp(s"oldpending$i")
+      Tables.load((0L until 100L).map(j => (j, j * 1.0)).toDF("ts", "v"),
+        path, Seq(), "ts")
+      assert(Tables.appendStreamBatch((100L until 150L).map(j => (j, j * 1.0))
+        .toDF("ts", "v"), path, "ts", "ck", 0L))
+      assert(Tables.appendStreamBatch((150L until 200L).map(j => (j, j * 1.0))
+        .toDF("ts", "v"), path, "ts", "ck", 1L))
+      java.nio.file.Files.write(
+        new java.io.File(path, "_graft_stream_commits.json").toPath,
+        s"""{"committed":{"ck":1},"pending":$rec}""".getBytes("UTF-8"))
+      val before = dataFiles(path).map(f => (f.getName, f.length)).toSet
+      val next = (200L until 250L).map(j => (j, j * 1.0)).toDF("ts", "v")
+      val ops: Seq[(String, () => Unit)] = Seq(
+        "appendStreamBatch" -> (() => Tables.appendStreamBatch(next, path, "ts", "ck", 2L)),
+        "append" -> (() => Tables.append(next, path, "ts", lit(0L))),
+        "compactIncremental" -> (() => Tables.compactIncremental(spark, path, Seq(), "ts")),
+        "deleteRange" -> (() => Tables.deleteRange(spark, path, "ts", lit(0L), lit(10L))))
+      for ((name, op) <- ops) {
+        val e = intercept[IllegalStateException](op())
+        assert(e.getMessage.contains("previous release") &&
+          e.getMessage.contains("no file was changed"), s"$name: ${e.getMessage}")
+      }
+      assert(dataFiles(path).map(f => (f.getName, f.length)).toSet == before,
+        s"record $i: the refusal must not touch a data file")
+      assert(Tables.snapshot(spark, path).count() == 200L)
+    }
   }
 
   test("truncate and load refuse while a live reader pin exists") {
